@@ -259,7 +259,7 @@ def dedupe_checkpointed(
     from .operators.signatures import with_signatures
     from .operators.minhash import band_buckets
     from .operators.lsh import pairs_from_buckets, pairs_and_overflow
-    from .operators.hamming import hamming_candidate_pairs, verify_hamming
+    from .operators.hamming import hamming_candidate_pairs
     from .operators.winnow import with_fingerprints, refine_oversized
     from .operators.verify import verify_jaccard, verify_lcs
     from .operators.components import connected_components
@@ -298,11 +298,9 @@ def dedupe_checkpointed(
             )
         if "simhash" in channels:
             sh = sigs.filter(F.col("simhash").isNotNull()).select(id_col, "simhash")
-            cand = hamming_candidate_pairs(sh, "simhash", cfg.simhash_hamming_k,
-                                           id_col, cfg, cache_registry=ham_caches)
-            if cfg.simhash_preverify:
-                cand = verify_hamming(cand, sh, "simhash", cfg.simhash_hamming_k, id_col)
-            parts.append(cand)
+            parts.append(hamming_candidate_pairs(
+                sh, "simhash", cfg.simhash_hamming_k, id_col, cfg,
+                cache_registry=ham_caches))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -332,12 +330,9 @@ def dedupe_checkpointed(
         edge_parts.append(
             store.run_stage(
                 "phash_edges",
-                lambda: verify_hamming(
-                    hamming_candidate_pairs(ph, phash_col, cfg.phash_hamming_k,
-                                            id_col, cfg,
-                                            cache_registry=ham_caches),
-                    ph, phash_col, cfg.phash_hamming_k, id_col,
-                ),
+                lambda: hamming_candidate_pairs(
+                    ph, phash_col, cfg.phash_hamming_k, id_col, cfg,
+                    cache_registry=ham_caches),
                 config_sig=csig,
             )
         )

@@ -81,11 +81,14 @@ class DedupConfig:
                                    # loop — the loop costs ~4 shuffles +
                                    # a driver round-trip per iteration
                                    # regardless of size, which dominates
-                                   # small dup graphs. 20M edges ≈ 320 MB
-                                   # of id pairs + the label array in one
-                                   # task — seconds of vectorized numpy,
-                                   # well within executor memory; graphs
-                                   # above it take the distributed loop.
+                                   # small dup graphs. 20M int64-id edges
+                                   # ≈ 1.9 GB of working set in one task
+                                   # — seconds of vectorized numpy;
+                                   # graphs above it, or over the
+                                   # one-task byte budget at their id
+                                   # width (string ids: ~2.8M edges,
+                                   # operators/onetask.py), take the
+                                   # distributed loop.
                                    # DATA-adaptive (edge count, measured
                                    # at runtime), not tuned to any core
                                    # count; identical labels either way.
@@ -118,7 +121,6 @@ class DedupConfig:
                                    # (verify.verify_jaccard_cocount).
                                    # Identical verified output (both are
                                    # exact integer-ratio Jaccard)
-    simhash_preverify: bool = True # exact Hamming filter before Jaccard verify
     persist_shingles: bool = False # caching the shared shingle stage forces
                                    # materialization + blocks per-consumer
                                    # column pruning; recomputing the cheap

@@ -32,19 +32,27 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
+from .onetask import fits_one_task, id_bytes
+
+# ids held per edge by _cc_local_labels: a and b in the Arrow batches,
+# their concatenations, the combined array and np.unique's sorted copy
+# and result — ~6 copies of each of the two ids
+_CC_IDS_PER_EDGE = 12
 
 
 def _cc_local_labels(
     edges: DataFrame, id_col: str, out_col: str
 ) -> DataFrame:
-    """Single-task CC over a small edge set (<= cfg.cc_local_max_edges).
+    """Single-task CC over a small edge set (<= cfg.cc_local_max_edges
+    edges whose estimated working set, _CC_IDS_PER_EDGE id slots per
+    edge, fits one task: onetask.fits_one_task).
 
     The distributed hash-min loop costs ~4 shuffle stages + one driver
     round-trip PER ITERATION regardless of graph size — on a dup graph
     of a few hundred thousand edges that fixed cost dominates the whole
     clustering phase (measured at sf0.1: ~8-14 s of a ~36 s pipeline
     for 122k edges). Below the edge cap the graph fits comfortably in
-    one task (16 B/edge + the factorized label array), so we fold the
+    one task (~96 B/edge with int64 ids), so we fold the
     whole fixpoint into ONE stage: a mapInPandas kernel doing
     vectorized min-label propagation + pointer jumping in numpy.
     Output is IDENTICAL to the loop: (node, min id of its component)
@@ -100,7 +108,8 @@ def connected_components(
 
     Scale-adaptive (guide §1.2 "the distributed algorithm" + §2.4
     "remove shuffles outright"): the edge count picks the execution
-    shape at runtime — small graphs (<= cfg.cc_local_max_edges) run the
+    shape at runtime — small graphs (<= cfg.cc_local_max_edges, and
+    within the one-task memory budget at the id column's width) run the
     exact same min-label fixpoint in ONE task (_cc_local_labels),
     large graphs run the iterative distributed loop below. Both are
     deterministic and produce identical labels.
@@ -131,7 +140,8 @@ def connected_components(
         edges = edges.persist()
         own_persist = True
     n_edges = edges.count()
-    if n_edges <= cfg.cc_local_max_edges:
+    edge_bytes = _CC_IDS_PER_EDGE * id_bytes(edges.schema["a"].dataType)
+    if n_edges <= cfg.cc_local_max_edges and fits_one_task(n_edges, edge_bytes):
         # one stage instead of ~4 shuffles x iterations; the label
         # table is consumed several times downstream, so cut its
         # (single-task) lineage eagerly — through the reliable

@@ -7,10 +7,14 @@ select representative (selector.go:68-238) -> stats. Our plan:
 
   images --(prune: id, caption, phash — NEVER bytes)-->
     [caption channel]  shingle -> MinHash -> LSH bands -> candidate pairs
-    [simhash channel]  tokens -> SimHash -> pigeonhole blocks -> candidates
-    [phash channel]    pigeonhole blocks over stored phash -> candidates
+    [simhash channel]  tokens -> SimHash -> pigeonhole blocks -> pairs
+    [phash channel]    pigeonhole blocks over stored phash -> pairs
     [substring chan.]  winnowing fingerprints -> candidates
-  -> exact verify per channel (Jaccard / Hamming / LCS)  [precision = 1]
+  -> exact verify: Jaccard (caption + simhash candidates) and LCS per
+     candidate; the Hamming channels verify inside their pair expansion
+     (one-task numpy kernel for small inputs, distributed recursion
+     above, hamming.py), so their pairs need no verify pass
+     [precision = 1]
   -> union -> edges
   -> connected components (hash-min + pointer jumping)
   -> representatives (deterministic window)
@@ -45,7 +49,7 @@ from .minhash import with_minhash, band_buckets
 from .signatures import with_signatures
 from .lsh import pairs_from_buckets, pairs_and_overflow
 from .simhash import with_simhash
-from .hamming import hamming_candidate_pairs, verify_hamming, block_buckets
+from .hamming import hamming_candidate_pairs
 from .winnow import with_fingerprints, refine_oversized
 from .verify import (
     verify_jaccard,
@@ -258,18 +262,10 @@ def candidate_edges(
     aux_cached: list[DataFrame] = list(sig_cached)
 
     if simhash_sig is not None:
-        # exact Hamming filter BEFORE the (heavier) Jaccard verify: block
-        # equi-join candidates that agree on one block but are far apart
-        # would otherwise flood the shingle join (observed 27x reduction)
-        cand = hamming_candidate_pairs(
+        cap_candidates.append(hamming_candidate_pairs(
             simhash_sig, "simhash", cfg.simhash_hamming_k, id_col, cfg,
             cache_registry=aux_cached,
-        )
-        if cfg.simhash_preverify:
-            cand = verify_hamming(
-                cand, simhash_sig, "simhash", cfg.simhash_hamming_k, id_col
-            )
-        cap_candidates.append(cand)
+        ))
     jac_cand = None
     if cap_candidates:
         jac_cand = cap_candidates[0]
@@ -308,10 +304,10 @@ def candidate_edges(
             )
 
     if "phash" in channels and phash_col is not None:
-        ph = meta.select(id_col, phash_col)
-        cand = hamming_candidate_pairs(ph, phash_col, cfg.phash_hamming_k,
-                                       id_col, cfg, cache_registry=aux_cached)
-        edge_parts.append(verify_hamming(cand, ph, phash_col, cfg.phash_hamming_k, id_col))
+        edge_parts.append(hamming_candidate_pairs(
+            meta.select(id_col, phash_col), phash_col, cfg.phash_hamming_k,
+            id_col, cfg, cache_registry=aux_cached,
+        ))
 
     if "substring" in channels:
         if cfg.lcs_impl == "ctx":

@@ -16,7 +16,6 @@ variants = {
     "default": base,
     "np": np,
     "np_lcsjvm": replace(np, lcs_impl="jvm"),
-    "np_nopre": replace(np, simhash_preverify=False),
     "np_fpcap256": replace(np, max_fp_bucket_size=256),
     "np2": np,
 }

@@ -10,8 +10,9 @@ equivalence/behavior test here:
      strings (verified-by-construction pairs), and the substring
      channel's edges/components are unchanged vs the verify-everything
      formulation.
-  4. hamming cache_registry: per-level persists are handed to the
-     caller and released by DedupResult.unpersist (round-5 advice #1).
+  4. hamming cache_registry: the distributed path's per-level persists
+     are handed to the caller and released by DedupResult.unpersist
+     (round-5 advice #1); the local one-task path persists nothing.
   5. versioned stores auto-vacuum after commits (round-5 advice #2).
 """
 
@@ -67,6 +68,29 @@ def test_cc_local_matches_distributed_string_ids(spark):
         res = connected_components(edges, id_col="image_id", cfg=cfg)
         out[tag] = sorted((r["image_id"], r["component"]) for r in res.collect())
     assert out["local"] == out["dist"]
+
+
+def test_cc_string_ids_over_byte_budget_take_distributed_loop(spark, monkeypatch):
+    """The one-task CC path is gated on estimated bytes, not only the
+    edge count: under a budget that holds these edges with int64 ids,
+    the same graph with string ids takes the distributed loop, with
+    the same labels."""
+    from distill_spark.operators import components, onetask
+
+    chains = [(i, i + 1) for s in range(0, 40, 5) for i in range(s, s + 4)]
+    longs = spark.createDataFrame(chains, "a long, b long")
+    strs = longs.selectExpr("format_string('n%03d', a) AS a",
+                            "format_string('n%03d', b) AS b")
+    monkeypatch.setattr(onetask, "TASK_BYTES",
+                        len(chains) * components._CC_IDS_PER_EDGE * 8)
+    cfg = DedupConfig(cc_local_max_edges=10**9)
+    connected_components(longs, id_col="image_id", cfg=cfg).collect()
+    assert connected_components.last_iterations == 0
+    got = {r["image_id"]: r["component"] for r in
+           connected_components(strs, id_col="image_id", cfg=cfg).collect()}
+    assert connected_components.last_iterations > 0
+    assert got == {f"n{i:03d}": f"n{i - i % 5:03d}"
+                   for s in range(0, 40, 5) for i in range(s, s + 5)}
 
 
 def test_merged_winnow_fingerprints_identical(spark):
@@ -161,13 +185,18 @@ def test_substring_edges_unchanged_by_subbucket_shortcut(spark):
     res.unpersist()
 
 
-def test_hamming_cache_registry_released(spark):
+def test_hamming_cache_registry_released(spark, monkeypatch):
+    from distill_spark.operators import hamming
     from distill_spark.operators.hamming import hamming_candidate_pairs
 
     rng = random.Random(5)
     rows = [(i, rng.getrandbits(63)) for i in range(500)]
     df = spark.createDataFrame(rows, "id long, phash long")
     reg: list = []
+    hamming_candidate_pairs(df, "phash", 4, id_col="id", cfg=DedupConfig(),
+                            cache_registry=reg).count()
+    assert reg == [], "the local path must register no persisted frame"
+    monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)  # distributed path
     pairs = hamming_candidate_pairs(df, "phash", 4, id_col="id",
                                     cfg=DedupConfig(), cache_registry=reg)
     pairs.count()
@@ -180,10 +209,12 @@ def test_hamming_cache_registry_released(spark):
     assert all(d.storageLevel == StorageLevel.NONE for d in reg)
 
 
-def test_dedupe_releases_hamming_caches(spark):
+def test_dedupe_releases_hamming_caches(spark, monkeypatch):
     from distill_spark.datagen import generate_images
+    from distill_spark.operators import hamming
     from pyspark import StorageLevel
 
+    monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)  # distributed path
     df, _ = generate_images(spark, n=300, seed=4)
     res = dedupe(df, DedupConfig())
     res.assignments.count()

@@ -9,6 +9,7 @@ dup of a planted dup pair inside it — and assert recall 1.0.
 """
 
 import itertools
+import logging
 import random
 import re
 
@@ -18,7 +19,8 @@ from pyspark.sql import functions as F
 
 from distill_spark.config import DedupConfig
 from distill_spark.operators import dedupe
-from distill_spark.operators.hamming import hamming_candidate_pairs, verify_hamming
+from distill_spark.operators import hamming
+from distill_spark.operators.hamming import hamming_candidate_pairs
 
 
 def _signed(v: int) -> int:
@@ -28,12 +30,35 @@ def _signed(v: int) -> int:
 def _brute_hamming(rows, k):
     out = set()
     for (i1, v1), (i2, v2) in itertools.combinations(rows, 2):
+        if i1 == i2 or v1 is None or v2 is None:
+            continue
         if bin((v1 ^ v2) & ((1 << 64) - 1)).count("1") <= k:
             out.add((min(i1, i2), max(i1, i2)))
     return out
 
 
-def test_hamming_exact_under_degenerate_high_bits(spark):
+@pytest.fixture(params=["local", "distributed"])
+def ham_path(request, monkeypatch, caplog):
+    """Runs a test on each hamming_candidate_pairs path; a row cap of 0
+    sends every input to the distributed recursion."""
+    if request.param == "distributed":
+        monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)
+    caplog.set_level(logging.DEBUG, logger="distill_spark")
+    return request.param
+
+
+def _pairs(df, k, cfg, path, caplog):
+    """hamming_candidate_pairs output, unverified, as a set — asserted
+    to hold each pair once and to come from the expected path."""
+    caplog.clear()
+    got = [tuple(r) for r in
+           hamming_candidate_pairs(df, "phash", k, id_col="id", cfg=cfg).collect()]
+    assert f"-> {path} path" in caplog.text
+    assert len(got) == len(set(got)), "a pair was emitted twice"
+    return set(got)
+
+
+def test_hamming_exact_under_degenerate_high_bits(spark, ham_path, caplog):
     """phash < 2^32 leaves high pigeonhole blocks constant: round 1
     collapsed the corpus into one bucket and lost pairs to the star
     fallback. The refinement path must equal brute force exactly."""
@@ -44,12 +69,10 @@ def test_hamming_exact_under_degenerate_high_bits(spark):
         [(i, _signed(v)) for i, v in rows], "id string, phash long"
     )
     cfg = DedupConfig(max_bucket_size=16)  # force every bucket oversized
-    cand = hamming_candidate_pairs(df, "phash", 4, id_col="id", cfg=cfg)
-    got = {tuple(r) for r in verify_hamming(cand, df, "phash", 4, id_col="id").collect()}
-    assert got == _brute_hamming(rows, 4)
+    assert _pairs(df, 4, cfg, ham_path, caplog) == _brute_hamming(rows, 4)
 
 
-def test_hamming_exact_random_values(spark):
+def test_hamming_exact_random_values(spark, ham_path, caplog):
     rng = random.Random(11)
     rows = [(f"r{i:04d}", rng.getrandbits(64)) for i in range(300)]
     rows += [
@@ -60,12 +83,10 @@ def test_hamming_exact_random_values(spark):
         [(i, _signed(v)) for i, v in rows], "id string, phash long"
     )
     cfg = DedupConfig(max_bucket_size=16)
-    cand = hamming_candidate_pairs(df, "phash", 3, id_col="id", cfg=cfg)
-    got = {tuple(r) for r in verify_hamming(cand, df, "phash", 3, id_col="id").collect()}
-    assert got == _brute_hamming(rows, 3)
+    assert _pairs(df, 3, cfg, ham_path, caplog) == _brute_hamming(rows, 3)
 
 
-def test_hamming_exact_property(spark):
+def test_hamming_exact_property(spark, ham_path, caplog):
     """Property-style sweep: random value distributions (clustered,
     low-entropy, adversarial identical crowds) x random k x tiny caps —
     the refinement output must equal brute force every time."""
@@ -89,16 +110,41 @@ def test_hamming_exact_property(spark):
             [(i, _signed(v)) for i, v in rows], "id string, phash long"
         )
         cfg = DedupConfig(max_bucket_size=cap)
-        cand = hamming_candidate_pairs(df, "phash", k, id_col="id", cfg=cfg)
-        got = {
-            tuple(r)
-            for r in verify_hamming(cand, df, "phash", k, id_col="id").collect()
-        }
+        got = _pairs(df, k, cfg, ham_path, caplog)
         want = _brute_hamming(rows, k)
         assert got == want, (
             f"trial={trial} k={k} cap={cap} style={style}: "
             f"missing={sorted(want - got)[:3]} extra={sorted(got - want)[:3]}"
         )
+
+
+@pytest.mark.parametrize(
+    "case", ["k0", "null_values", "long_ids", "all_equal", "repeated_ids"])
+def test_hamming_exact_edge_inputs(spark, case, ham_path, caplog):
+    """Degenerate inputs on both paths: k=0 (identical values only),
+    null values, integral ids, one value shared by every row, and ids
+    that carry several values (no id is paired with itself)."""
+    rng = random.Random(31)
+    k, id_type = 3, "string"
+    vals = [rng.getrandbits(5 if case == "k0" else 12) for _ in range(150)]
+    ids = [f"c{i:03d}" for i in range(150)]
+    if case == "k0":
+        k = 0
+    elif case == "null_values":
+        vals = [None if i % 4 == 0 else v for i, v in enumerate(vals)]
+    elif case == "long_ids":
+        ids, id_type = list(range(150)), "long"
+    elif case == "all_equal":
+        vals = [0x5EED] * 150
+    elif case == "repeated_ids":
+        ids = [f"c{i % 60:03d}" for i in range(150)]
+    rows = list(zip(ids, vals))
+    df = spark.createDataFrame(
+        [(i, None if v is None else _signed(v)) for i, v in rows],
+        f"id {id_type}, phash long",
+    )
+    got = _pairs(df, k, DedupConfig(max_bucket_size=16), ham_path, caplog)
+    assert got == _brute_hamming(rows, k)
 
 
 def test_winnow_oversized_bucket_nondup_hub(spark):
