@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import shutil
 import time
@@ -40,6 +41,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger("distill_spark")
 
 
 def _fingerprint(*parts: str) -> str:
@@ -175,8 +178,9 @@ class CheckpointStore:
             if self.vacuum_keep:
                 try:
                     table.vacuum(keep=self.vacuum_keep)
-                except Exception:
-                    pass  # maintenance must never fail the stage
+                except Exception:  # maintenance must never fail the stage
+                    log.warning("vacuum of checkpoint stage %r failed", stage,
+                                exc_info=True)
             out = table.read()
         else:
             tmp = path + "._tmp"

@@ -40,6 +40,7 @@ phantom self-match pairs)."""
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 from dataclasses import dataclass
@@ -62,6 +63,8 @@ from .operators.verify import jaccard_col
 from .functions.scoring import recency_score, decay_level
 from .functions.sensitivity import sensitivity_level
 from .functions.text import token_estimate
+
+log = logging.getLogger("distill_spark")
 
 MEMORY_SCHEMA = (
     "id string, text string, tags array<string>, source string, "
@@ -285,8 +288,9 @@ class MemoryStore:
         if self._table is not None and self.vacuum_keep:
             try:
                 self._table.vacuum(keep=self.vacuum_keep)
-            except Exception:
-                pass  # maintenance must never fail the mutation
+            except Exception:  # maintenance must never fail the mutation
+                log.warning("vacuum of memory store %r failed", self.path,
+                            exc_info=True)
 
     def _publish(self, df: DataFrame) -> None:
         """Atomic full overwrite, hash-partitioned on bucket."""

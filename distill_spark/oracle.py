@@ -144,6 +144,38 @@ def oracle_edges(pdf: pd.DataFrame, cfg: DedupConfig = DEFAULT) -> set[tuple[str
     return edges
 
 
+def oracle_ingest(
+    batches: list[pd.DataFrame], cfg: DedupConfig = DEFAULT
+) -> dict[str, str]:
+    """image_id -> component after write-time ingest of `batches`
+    (image_id, caption) in order: the id-order greedy of
+    streaming.ingest over exact shingle Jaccard on all pairs. Within a
+    batch, rows go in id order: a row matching any stored (accepted)
+    row takes the smallest such id; else it takes the smallest accepted
+    earlier row of its batch it matches; else it is accepted as its own
+    component and joins the stored rows after its batch. A row with no
+    shingles never matches (the engine gives it no signature)."""
+    stored: dict[str, set] = {}
+    assign: dict[str, str] = {}
+
+    def hits(s: set, rows: dict[str, set]) -> list[str]:
+        return [i for i, o in rows.items()
+                if s and o and jaccard(s, o) >= cfg.jaccard_threshold]
+
+    for pdf in batches:
+        sh = {i: shingle_set(c, cfg) for i, c in zip(pdf["image_id"], pdf["caption"])}
+        accepted: dict[str, set] = {}
+        for rid in sorted(sh):
+            match = hits(sh[rid], stored) or hits(sh[rid], accepted)
+            if match:
+                assign[rid] = min(match)
+            else:
+                assign[rid] = rid
+                accepted[rid] = sh[rid]
+        stored.update(accepted)
+    return assign
+
+
 def oracle_components(
     pdf: pd.DataFrame, cfg: DedupConfig = DEFAULT
 ) -> tuple[dict[str, str], set[tuple[str, str]]]:

@@ -37,6 +37,7 @@ in parallel, no driver loop over sessions.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import uuid
@@ -51,6 +52,8 @@ from .storeio import guarded_collect, publish_dir, recover_dir
 from .operators.signatures import with_signatures
 from .operators.minhash import band_buckets
 from .operators.verify import jaccard_col
+
+log = logging.getLogger("distill_spark")
 
 ENTRY_SCHEMA = (
     "id string, session_id string, role string, content string, "
@@ -325,8 +328,9 @@ class SessionStore:
             if self.vacuum_keep:
                 try:
                     self._table.vacuum(keep=self.vacuum_keep)
-                except Exception:
-                    pass  # maintenance must never fail the mutation
+                except Exception:  # maintenance must never fail the mutation
+                    log.warning("vacuum of session store %r failed", self.path,
+                                exc_info=True)
             return
         # crash-safe atomic swap with startup recovery (storeio): a crash
         # between the two renames leaves entries at `._old`, restored by

@@ -10,14 +10,20 @@ watermarked windowing.
 
 Incremental contract per micro-batch:
   1. signatures of the incoming batch (map-side Arrow pass)
-  2. LSH band join of batch signatures vs the ACCUMULATED signature
-     state PLUS a band self-join WITHIN the batch (two near-identical
-     rows arriving in one micro-batch must still dedupe — round-1 only
-     compared new-vs-stored; ADVICE)
-  3. exact Jaccard verify -> dup rows dropped (assigned to the
-     existing representative, or to the earlier-accepted batch row for
-     intra-batch dups — the same id-order greedy as the write-time
-     store), novel rows appended to state
+  2. ONE LSH band join of the batch's buckets against the ACCUMULATED
+     signature state's buckets (tagged old) UNION the batch's own
+     buckets (tagged intra, kept where the other id is smaller): two
+     near-identical rows arriving in one micro-batch must still dedupe.
+     Shingles attach once, keyed by (id, side); exact Jaccard verify;
+     ONE driver collect of the verified (n, o, old) edges.
+  3. id-order greedy on the driver -> dup rows dropped (assigned to
+     the smallest matched stored id, or to the earliest accepted batch
+     row for intra-batch dups — the same greedy as the write-time
+     store), novel rows appended to state. The state holds signatures
+     of accepted rows only, and an accepted row is its own component,
+     so a stored match's component is its id: assignments/ is never
+     read back. Both outputs come from one broadcast join of the
+     edge-involved ids onto the batch signatures (map-only writes).
   4. metrics row per batch (ingest stats analog, pipeline.go:48-72)
 
 Atomicity (round-2 fix): each batch's outputs are written to a
@@ -34,11 +40,13 @@ transaction.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +57,9 @@ from ..operators.minhash import band_buckets
 from ..operators.verify import jaccard_col
 
 _SIG_SCHEMA = "image_id string, shingles array<bigint>, minhash array<bigint>"
+_EDGE_SCHEMA = "image_id string, component string, rejected boolean"
+
+log = logging.getLogger("distill_spark")
 
 
 class DedupeState:
@@ -68,12 +79,18 @@ class DedupeState:
         p = self._p("_batches.json")
         if not os.path.exists(p):
             return set()
-        return set(json.load(open(p)))
+        with open(p) as f:
+            return set(json.load(f))
 
     def _commit_batch(self, batch_id: int) -> None:
+        """Durable ledger update: the new file is on disk before the
+        rename makes it the ledger (the exactly-once replay guard)."""
         done = self.committed_batches() | {batch_id}
         tmp = self._p("_batches.json.tmp")
-        json.dump(sorted(done), open(tmp, "w"))
+        with open(tmp, "w") as f:
+            json.dump(sorted(done), f)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._p("_batches.json"))
 
     def _batch_dir(self, name: str, batch_id: int) -> str:
@@ -85,7 +102,9 @@ class DedupeState:
             d.startswith("batch=") for d in os.listdir(p)
         ):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.option("basePath", p).parquet(p).drop("batch")
+        # known schema: no inference job over the parquet footers
+        return (self.spark.read.schema(schema).option("basePath", p)
+                .parquet(p).drop("batch"))
 
     def signatures(self) -> DataFrame:
         return self._read("signatures", _SIG_SCHEMA)
@@ -137,76 +156,57 @@ def incremental_dedupe_batch(
     sigs = sigs.persist()
     n_in = sigs.count()
 
+    # ONE band join of the batch against (stored rows, old) UNION (batch
+    # rows, intra; kept only where o < n), ONE shingle attach keyed by
+    # (id, side) so an id in both the batch and the state attaches once
+    # per side, ONE collect of the verified (n, o, old) edges
     stored = state.signatures()
-    bb_new = band_buckets(sigs.filter(F.col("minhash").isNotNull()),
-                          "minhash", "image_id", cfg)
-    bb_old = band_buckets(stored.filter(F.col("minhash").isNotNull()),
-                          "minhash", "image_id", cfg)
-
-    def _verify(cand, left_sigs, right_sigs, lcol, rcol):
-        return (
-            cand.join(left_sigs.select(F.col("image_id").alias(lcol),
-                                       F.col("shingles").alias("sh_n")), lcol)
-            .join(right_sigs.select(F.col("image_id").alias(rcol),
-                                    F.col("shingles").alias("sh_o")), rcol)
-            .withColumn("jaccard", jaccard_col(F.col("sh_n"), F.col("sh_o")))
-            .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-        )
-
-    cand_old = (
-        bb_new.select(F.col("image_id").alias("new_id"), "bucket")
-        .join(bb_old.select(F.col("image_id").alias("old_id"), "bucket"),
-              ["bucket"])
-        .select("new_id", "old_id")
-        .dropDuplicates(["new_id", "old_id"])
+    bb_n = band_buckets(sigs.filter(F.col("minhash").isNotNull()),
+                        "minhash", "image_id", cfg)
+    bb_o = band_buckets(stored.filter(F.col("minhash").isNotNull()),
+                        "minhash", "image_id", cfg)
+    cand = (
+        bb_n.withColumnRenamed("image_id", "n")
+        .join(bb_o.withColumn("old", F.lit(True))
+              .unionByName(bb_n.withColumn("old", F.lit(False)))
+              .withColumnRenamed("image_id", "o"), "bucket")
+        .filter(F.col("old") | (F.col("o") < F.col("n")))
+        .select("n", "o", "old")
+        .dropDuplicates()
     )
-    verified_old = _verify(cand_old, sigs, stored, "new_id", "old_id")
-
-    # intra-batch: band self-join, id order (a earlier than b)
-    cand_intra = (
-        bb_new.select(F.col("image_id").alias("b"), "bucket")
-        .join(bb_new.select(F.col("image_id").alias("a"), "bucket"),
-              ["bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    verified_intra = _verify(cand_intra, sigs, sigs, "b", "a")
-
-    # components of matched stored rows (min per new id)
-    old_assign = state.assignments()
-    vs_stored = (
-        verified_old.join(
-            old_assign.select(F.col("image_id").alias("old_id"), "component"),
-            "old_id",
-        )
-        .groupBy("new_id")
-        .agg(F.min("component").alias("component"))
+    sides = stored.withColumn("old", F.lit(True)).unionByName(
+        sigs.withColumn("old", F.lit(False)))
+    verified = (
+        cand.join(sigs.select(F.col("image_id").alias("n"),
+                              F.col("shingles").alias("sh_n")), "n")
+        .join(sides.select(F.col("image_id").alias("o"), "old",
+                           F.col("shingles").alias("sh_o")), ["o", "old"])
+        .filter(jaccard_col(F.col("sh_n"), F.col("sh_o")) >= cfg.jaccard_threshold)
+        .select("n", "o", "old")
     )
     gmax = int(cfg.extra.get("dup_edges_max", 1_000_000))
-    stored_comp = {
-        r["new_id"]: r["component"]
-        for r in guarded_collect(vs_stored, gmax,
-                                 "incremental dedup edges (batch vs stored)")
-    }
-    intra_edges = sorted(
-        (r["b"], r["a"])
-        for r in guarded_collect(verified_intra.select("a", "b"), gmax,
-                                 "incremental dedup edges (intra-batch)")
-    )
+
+    # Only accepted rows are written to signatures/, and an accepted
+    # row's component is its own id (comp[rid] = rid below; free rows
+    # get component = image_id). So a stored match's component is the
+    # matched stored id, and a batch row's component is the min of the
+    # stored ids it matches -- no read of assignments/ is needed.
+    stored_comp: dict[str, str] = {}
     by_b: dict[str, list[str]] = {}
-    for b, a in intra_edges:
-        by_b.setdefault(b, []).append(a)
+    for n, o, old in guarded_collect(verified, gmax, "incremental dedup edges"):
+        if old:
+            stored_comp[n] = min(stored_comp.get(n, o), o)
+        else:
+            by_b.setdefault(n, []).append(o)
 
     # id-order greedy (same semantics as MemoryStore.store_batch): a row
     # is a dup of stored (component = matched min) or of the earliest
     # ACCEPTED smaller batch row (component = that row's component).
     # Only EDGE-INVOLVED ids reach the driver (output-bound); the
     # edge-free majority stays distributed as (id, id) novel rows.
-    edge_ids = set(stored_comp)
-    for b, a in intra_edges:
-        edge_ids.add(a)
-        edge_ids.add(b)
+    edge_ids = set(stored_comp) | set(by_b)
+    for a_list in by_b.values():
+        edge_ids.update(a_list)
     comp: dict[str, str] = {}
     rejected: set[str] = set()
     for rid in sorted(edge_ids):
@@ -225,29 +225,23 @@ def incremental_dedupe_batch(
         else:
             comp[rid] = rid
 
-    spark = state.spark
-    if comp:
-        edge_assign = spark.createDataFrame(
-            [(k, v) for k, v in comp.items()], "image_id string, component string"
-        )
-        edge_df = spark.createDataFrame(
-            [(i,) for i in sorted(edge_ids)], "image_id string"
-        )
-    else:
-        edge_assign = spark.createDataFrame([], "image_id string, component string")
-        edge_df = spark.createDataFrame([], "image_id string")
-    free = sigs.join(edge_df, "image_id", "left_anti")
-    assign_df = free.select(
-        "image_id", F.col("image_id").alias("component")
-    ).unionByName(edge_assign)
-    if rejected:
-        rej_df = spark.createDataFrame(
-            [(i,) for i in sorted(rejected)], "image_id string"
-        )
-        novel_sigs = sigs.join(rej_df, "image_id", "left_anti")
-    else:
-        novel_sigs = sigs
+    # map-only publish: the edge-involved ids go to the JVM as one Arrow
+    # frame, broadcast onto the persisted batch signatures; both outputs
+    # come from that one join
+    edge_df = state.spark.createDataFrame(
+        pd.DataFrame({"image_id": list(comp), "component": list(comp.values()),
+                      "rejected": [i in rejected for i in comp]}),
+        _EDGE_SCHEMA,
+    )
+    tagged = sigs.join(F.broadcast(edge_df), "image_id", "left")
+    assign_df = tagged.select(
+        "image_id", F.coalesce("component", "image_id").alias("component"))
+    novel_sigs = tagged.filter(~F.coalesce("rejected", F.lit(False))).select(
+        "image_id", "shingles", "minhash")
     n_dups = len(rejected)
+    log.debug("ingest batch %s: rows_in=%d stored_matches=%d intra_edges=%d "
+              "duplicates=%d", batch_id, n_in, len(stored_comp),
+              sum(map(len, by_b.values())), n_dups)
 
     state._publish_batch(batch_id, novel_sigs, assign_df)
     state._commit_batch(batch_id)

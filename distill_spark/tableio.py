@@ -19,10 +19,13 @@ Semantics:
 
   * COPY-ON-WRITE. Mutations write NEW files, then a NEW manifest, then
     swap LATEST. Existing files are never modified or deleted by a
-    writer — a reader that pinned version N keeps a consistent view for
-    as long as it needs it, *through* any number of concurrent
-    publishes/appends/partition-rewrites (the plain dir-overwrite
-    backend cannot do this: its readers race the rename).
+    writer — a reader that pinned version N keeps a consistent view
+    *through* concurrent publishes/appends/partition-rewrites (the plain
+    dir-overwrite backend cannot do this: its readers race the rename)
+    until vacuum() drops version N. The stores auto-vacuum after each
+    commit with `vacuum_keep` (8 by default), so a pinned reader's lazy
+    frame survives the next `vacuum_keep - 1` commits, not indefinitely;
+    collect or checkpoint it before more commits land.
   * ATOMIC per operation. A crash before the LATEST swap leaves the
     table at the previous version; orphaned data files are invisible
     (readers only see manifest-listed files) and reaped by vacuum().

@@ -12,6 +12,7 @@ Reference analog: the session DDL
 reads never observe a half-applied mutation).
 """
 
+import logging
 import os
 
 import pytest
@@ -19,7 +20,9 @@ import pytest
 from distill_spark.checkpoint import CheckpointStore, dedupe_checkpointed
 from distill_spark.config import DedupConfig
 from distill_spark.datagen import generate_images
+from distill_spark.memory import MemoryStore
 from distill_spark.session_store import SessionStore
+from distill_spark.tableio import VersionedTable
 
 CFG = DedupConfig()
 
@@ -147,3 +150,42 @@ def test_checkpoint_reader_isolated_from_rerun(spark, tmp_path):
         "stage_x", lambda: spark.range(50).withColumnRenamed("id", "v"),
         config_sig="b",
     ).count() == 50
+
+
+# ---------------------------------------------------------- maintenance
+
+def _mutate_checkpoint(spark, path):
+    store = CheckpointStore(path, spark, backend="versioned")
+    store.run_stage("stage_v", lambda: spark.range(3), config_sig="a")
+    return CheckpointStore(path, spark, backend="versioned").run_stage(
+        "stage_v", lambda: spark.range(0), config_sig="a").count()
+
+
+def _mutate_memory(spark, path):
+    store = MemoryStore(spark, path, backend="versioned")
+    store.store_batch(spark.createDataFrame(
+        [(f"m{i}", f"memory {i} about distinct topic token{i} words")
+         for i in range(3)], "id string, text string"))
+    return store.snapshot().count()
+
+
+def _mutate_session(spark, path):
+    ss = SessionStore(spark, path, backend="versioned")
+    sid = ss.create("s1", max_tokens=100_000)
+    ss.push(sid, _push_rows("v", 3))
+    return ss.entries(sid).count()
+
+
+@pytest.mark.parametrize("mutate", [_mutate_checkpoint, _mutate_memory, _mutate_session],
+                         ids=["checkpoint", "memory", "session"])
+def test_failed_vacuum_is_logged_and_mutation_commits(spark, tmp_path, monkeypatch,
+                                                      caplog, mutate):
+    def broken(self, keep=2):
+        raise OSError("vacuum failed")
+
+    monkeypatch.setattr(VersionedTable, "vacuum", broken)
+    caplog.set_level(logging.WARNING, logger="distill_spark")
+    assert mutate(spark, str(tmp_path / "store")) == 3
+    warned = [r for r in caplog.records
+              if r.name == "distill_spark" and "vacuum" in r.getMessage()]
+    assert warned and warned[0].exc_info is not None
