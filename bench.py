@@ -27,11 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SEED = 42
-# Repeats per timed query; reported value = min. Single draws on this
-# box swing ±25-77% at IDENTICAL plans/bytes (scripts/bench_variance.py:
-# CPU time flat 146-156s while task run time spans 503-1019s — tasks
-# blocked off-CPU on Python-worker/scheduler contention, not doing more
-# work), so the floor is the only stable estimator of the plan's cost.
+# Repeats per timed query; reported value = min. Single draws swing
+# ±25-77% at IDENTICAL plans/bytes (CPU time flat while task run time
+# doubles — tasks blocked off-CPU on Python-worker/scheduler
+# contention, not doing more work; BENCH.md round 5), so the floor is
+# the only stable estimator of the plan's cost.
 REPEATS = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
 
 
@@ -91,19 +91,9 @@ def main() -> None:
 
     images = spark.read.parquet(path)
 
+    cfg = DedupConfig()
     # warm the JVM/codegen on a small slice so the headline measures steady
-    # state, not first-JIT (the 128-agg MinHash stage pays ~10s once)
-    # A/B knobs for the plan-shape experiments (scripts/bench_protocol_ab.py):
-    # the official run leaves these unset -> DedupConfig defaults.
-    cfg_kw = {}
-    if os.environ.get("DISTILL_SCALE_MODE"):
-        cfg_kw["scale_mode"] = os.environ["DISTILL_SCALE_MODE"]
-    if os.environ.get("DISTILL_JACCARD_VERIFY"):
-        cfg_kw["jaccard_verify_impl"] = os.environ["DISTILL_JACCARD_VERIFY"]
-    if os.environ.get("DISTILL_LANE_BITS"):
-        cfg_kw["minhash_lane_bits"] = int(os.environ["DISTILL_LANE_BITS"])
-    cfg = DedupConfig(**cfg_kw)
-
+    # state, not first-JIT and Python-worker spawn (paid once per JVM)
     warm = images.limit(2000).cache()
     warm.count()
     dedupe(warm, cfg).assignments.count()

@@ -343,7 +343,7 @@ def dedupe_checkpointed(
     if "substring" in channels:
         def lcs_fn():
             fp = with_fingerprints(meta.select(id_col, caption_col), caption_col,
-                                   "fp", cfg, impl=cfg.winnow_impl)
+                                   "fp", cfg)
             fpx = fp.select(id_col, F.explode("fp").alias("fingerprint"))
             small_cand, overflow = pairs_and_overflow(
                 fpx, ["fingerprint"], id_col, cfg, cap=cfg.max_fp_bucket_size
@@ -359,7 +359,7 @@ def dedupe_checkpointed(
             # (refine_oversized, round 6) — verified by construction,
             # so only the small-bucket candidates attach captions
             verified = verify_lcs(small_cand, meta.select(id_col, caption_col),
-                                  cfg, caption_col, id_col, impl=cfg.lcs_impl)
+                                  cfg, caption_col, id_col)
             return verified.unionByName(sub_cand).dropDuplicates(["a", "b"])
 
         edge_parts.append(store.run_stage("lcs_edges", lcs_fn, config_sig=csig))

@@ -65,7 +65,6 @@ class DedupConfig:
                                    # biases toward small hashes) create many
                                    # mid-size buckets whose all-pairs sum
                                    # explodes quadratically
-    salt_partitions: int = 0       # >0: extra repartition salt for verify
 
     # --- representative selection (reference pkg/contextlab/selector.py
     #     strategies score|centroid|length|hybrid; ours adds min_id) ---
@@ -98,35 +97,6 @@ class DedupConfig:
                                    # of localCheckpoint(); needs checkpoint_dir
     checkpoint_dir: str | None = None  # HDFS/S3 dir for reliable checkpoints
 
-    # --- execution toggles (A/B-able) ---
-    sig_impl: str = "numpy"        # "numpy" (one-pass Arrow UDF, no shuffle)
-                                   # | "jvm" (explode + agg formulation)
-    lcs_impl: str = "exact"        # "exact" (pandas) | "jvm" (arrays_overlap)
-    winnow_impl: str = "numpy"     # "numpy" | "jvm"
-    int_ids: bool = True           # hash string ids to int64 (xxhash64) at
-                                   # pipeline ingest: every candidate/verify/
-                                   # CC exchange shuffles 8 B longs instead of
-                                   # strings; originals are joined back at the
-                                   # end and components are relabeled to the
-                                   # min ORIGINAL id, so outputs are identical.
-                                   # Collision risk N^2/2^65 false merges
-                                   # (~3e-8 at 1M rows) — the same budget the
-                                   # engine already accepts for hashed shingles
-    jaccard_verify_impl: str = "attach"  # "attach": join shingle arrays
-                                   # onto both pair sides (round-3 shape);
-                                   # "cocount": |A∩B| co-counted from the
-                                   # exploded member (id, shingle) table,
-                                   # |A∪B| from per-doc sizes — verify
-                                   # joins ship 8 B rows, never arrays
-                                   # (verify.verify_jaccard_cocount).
-                                   # Identical verified output (both are
-                                   # exact integer-ratio Jaccard)
-    persist_shingles: bool = False # caching the shared shingle stage forces
-                                   # materialization + blocks per-consumer
-                                   # column pruning; recomputing the cheap
-                                   # tokenize/shingle pass is faster (A/B:
-                                   # 122s -> 75s at 100k rows, local[32])
-
     # --- scale-adaptive planning (round 4) ---
     # "wide": slim per-column signature caches + member semi-join before
     #         the verify attaches + eager localCheckpoint of the
@@ -150,6 +120,11 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.num_perm % self.bands != 0:
             raise ValueError("num_perm must be divisible by bands")
+
+    @property
+    def lcs_impl(self) -> str:
+        # kept for the traced benchmark sequence until a benchmark change drops it
+        return "exact"
 
     @property
     def rows_per_band(self) -> int:

@@ -25,16 +25,19 @@ analog of the reference's goroutine pool.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field, fields, asdict
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.runner import run_pipeline, PipelineOptions, PipelineRunResult
+
+log = logging.getLogger("distill_spark")
 
 QUEUED = "queued"
 PROCESSING = "processing"
@@ -248,7 +251,13 @@ class JobProcessor:
             cfg_d = od.pop("dedup_cfg", None) or {}
             opts = PipelineOptions(**od)
             if cfg_d:  # restore the submitted dedup config, not the default
-                opts.dedup_cfg = DedupConfig(**cfg_d)
+                known = {f.name for f in fields(DedupConfig)}
+                stale = sorted(set(cfg_d) - known)
+                if stale:  # a job ledgered by an older DedupConfig
+                    log.warning("job %s: dropping unknown dedup_cfg keys %s",
+                                job_id, stale)
+                opts.dedup_cfg = DedupConfig(
+                    **{k: v for k, v in cfg_d.items() if k in known})
         try:
             inp = self.spark.read.parquet(os.path.join(jd, "input"))
             res: PipelineRunResult = run_pipeline(

@@ -1,11 +1,9 @@
-from .shingle import with_tokens, with_shingles
 from .signatures import with_signatures
 from .winnow import with_fingerprints
 from .rerank import mmr_rerank, diversity_score, coverage_score
 from .graph import degree_stats, top_hubs, blast_radius
-from .minhash import with_minhash, band_buckets
+from .minhash import band_buckets
 from .lsh import pairs_from_buckets
-from .simhash import with_simhash
 from .hamming import hamming_candidate_pairs, verify_hamming
 from .verify import verify_jaccard, verify_lcs
 from .components import connected_components
@@ -13,8 +11,6 @@ from .select import representatives, cluster_stats
 from .pipeline import dedupe, DedupResult
 
 __all__ = [
-    "with_tokens",
-    "with_shingles",
     "with_signatures",
     "with_fingerprints",
     "mmr_rerank",
@@ -23,10 +19,8 @@ __all__ = [
     "degree_stats",
     "top_hubs",
     "blast_radius",
-    "with_minhash",
     "band_buckets",
     "pairs_from_buckets",
-    "with_simhash",
     "hamming_candidate_pairs",
     "verify_hamming",
     "verify_jaccard",

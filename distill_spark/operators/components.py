@@ -222,9 +222,9 @@ def connected_components(
         if changed == 0:
             break
 
-    # observability for scale probes (scripts/shuffle_phases.py): how
-    # many hash-min+jump rounds this graph needed — the serial floor of
-    # the pipeline at any cluster size
+    # observability for scale probes: how many hash-min+jump rounds
+    # this graph needed — the serial floor of the pipeline at any
+    # cluster size
     connected_components.last_iterations = iters
 
     result = labels.select(F.col("node").alias(id_col), F.col("label").alias(out_col))

@@ -120,8 +120,6 @@ def pairs_from_buckets(
             .select(F.col("_min").alias("a"), F.col(id_col).alias("b"))
         )
         pairs = small_pairs.unionByName(star)
-    if cfg.salt_partitions:
-        pairs = pairs.repartition(cfg.salt_partitions, "a", "b")
     return pairs.dropDuplicates(["a", "b"]) if dedup else pairs
 
 
@@ -154,95 +152,6 @@ def pairs_and_overflow(
     )
     overflow = sized.filter(F.col("_sz") > cap).drop("_sz")
     return pairs, overflow
-
-
-def ctx_verified_pairs(
-    fpx: DataFrame,
-    id_col: str = "image_id",
-    cfg: DedupConfig = DEFAULT,
-    cap: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Expand winnowing-fingerprint buckets into pairs and VERIFY them
-    inside the expansion task from the packed byte contexts
-    (winnow.with_fingerprint_ctx) — no caption ever attaches to a pair.
-
-    fpx: (id, fingerprint, l, r, known). Returns
-
-      verified  (a, b)  — pairs PROVEN to share an exact common
-                          substring of >= lcs_min_len bytes around the
-                          shared k-gram (char-exact for the pure-ASCII
-                          rows `known` guarantees)
-      unknown   (a, b)  — pairs where either side lacks usable context
-                          (non-ASCII doc or repeated k-gram); the caller
-                          exact-verifies these few against raw captions
-      overflow  member rows of oversized buckets, for refine_oversized
-
-    Verification math (whole-stage codegen, two XORs + compares per
-    member pair): a pair sharing fingerprint f shares that exact k-gram
-    (the engine's accepted ~2^-64 hash budget); an exact common run of
-    >= L = K + span bytes containing it exists iff
-
-        common_suffix(left contexts) + common_prefix(right contexts)
-            >= span        (span = L - K)
-
-    with contexts big-endian-packed so common-prefix-bytes is a CASE
-    over XOR magnitude, length-clamped via the packed lengths. A pair
-    REJECTED in one bucket can still pass in another (each shared
-    fingerprint is independent evidence); recall holds because the
-    winnowing theorem guarantees SOME shared selected fingerprint lies
-    inside any qualifying common run, and that bucket's contexts (or
-    the unknown fallback) certify it."""
-    if cap is None:
-        cap = cfg.max_fp_bucket_size
-    span = cfg.lcs_min_len - cfg.winnow_kgram
-    mask48 = (1 << 48) - 1
-
-    def _cpb(xor_col: str) -> str:
-        """common-prefix-bytes of two span-byte big-endian packs."""
-        cases = " ".join(
-            f"WHEN {xor_col} < {1 << (8 * (span - k))} THEN {k}"
-            for k in range(span, 0, -1)
-        )
-        return f"(CASE WHEN {xor_col} = 0 THEN {span} {cases} ELSE 0 END)"
-
-    w = Window.partitionBy("fingerprint")
-    sized = fpx.withColumn("_sz", F.count(F.lit(1)).over(w))
-    small = sized.filter((F.col("_sz") >= 2) & (F.col("_sz") <= cap))
-    grouped = small.groupBy("fingerprint").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(id_col).alias("i"), "l", "r", "known"))
-        ).alias("_ms")
-    )
-    # expand member pairs WITH verdict: 2 = pass, 1 = needs exact verify
-    pair_expr = F.expr(
-        f"""
-        flatten(transform(_ms, (x, i) ->
-          transform(slice(_ms, i + 2, size(_ms) - i - 1), y ->
-            struct(x.i AS a, y.i AS b,
-              CASE WHEN x.known AND y.known THEN
-                CASE WHEN
-                  least({_cpb("((x.l ^ y.l) & %d)" % mask48)},
-                        shiftrightunsigned(x.l, 48),
-                        shiftrightunsigned(y.l, 48))
-                  +
-                  least({_cpb("((x.r ^ y.r) & %d)" % mask48)},
-                        shiftrightunsigned(x.r, 48),
-                        shiftrightunsigned(y.r, 48))
-                  >= {span} THEN 2 ELSE 0 END
-              ELSE 1 END AS v))))
-        """
-    )
-    expanded = (
-        grouped.select(F.explode(pair_expr).alias("p"))
-        .select("p.a", "p.b", "p.v")
-        .filter(F.col("v") > 0)
-    )
-    verified = expanded.filter(F.col("v") == 2).select("a", "b") \
-        .dropDuplicates(["a", "b"])
-    unknown = expanded.filter(F.col("v") == 1).select("a", "b") \
-        .dropDuplicates(["a", "b"])
-    overflow = sized.filter(F.col("_sz") > cap).select(id_col, "fingerprint")
-    return verified, unknown, overflow
 
 
 def bucket_stats(buckets: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -1,13 +1,10 @@
-"""MinHash signatures + LSH band bucketing — entirely JVM-side.
+"""MinHash permutation parameters + LSH band bucketing.
 
 Replaces the reference's O(N^2) pairwise distance matrix
 (/root/reference/pkg/contextlab/cluster.go:217-242) as the candidate
-generator. Design choice (Spark-first): instead of a pandas UDF
-computing signatures per row, we EXPLODE shingles and compute the
-num_perm universal-hash permutations as `min()` AGGREGATES —
-map-side partial aggregation (partial min per partition) means the
-shuffle carries one row per (image, perm-block), all inside
-whole-stage codegen, zero Python.
+generator. The signatures themselves are computed in the one Arrow pass
+of signatures.py; this module owns the hash family they use and turns
+signatures into band buckets.
 
 Universal hash: h_i(x) = (a_i * x32 + b_i) mod P with
 P = 4294967311 (prime > 2^32), x32 = shingle & 0xFFFFFFFF,
@@ -20,12 +17,10 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
 
 _P = 4294967311  # prime > 2^32
-_MASK32 = 0xFFFFFFFF
 
 
 def permutation_params(cfg: DedupConfig = DEFAULT) -> tuple[list[int], list[int]]:
@@ -33,46 +28,6 @@ def permutation_params(cfg: DedupConfig = DEFAULT) -> tuple[list[int], list[int]
     a = rng.integers(1, 1 << 30, size=cfg.num_perm).tolist()
     b = rng.integers(0, _P, size=cfg.num_perm).tolist()
     return a, b
-
-
-def with_minhash(
-    df: DataFrame,
-    shingle_col: str = "shingles",
-    id_col: str = "image_id",
-    out: str = "minhash",
-    cfg: DedupConfig = DEFAULT,
-) -> DataFrame:
-    """(id, shingles) -> (id, minhash: array<bigint>[num_perm]).
-
-    Rows with empty shingle sets get no signature (dropped here; they can
-    only be exact-dups of other empties, handled by the exact channel).
-    """
-    a, b = permutation_params(cfg)
-    exploded = df.select(
-        F.col(id_col),
-        F.explode(shingle_col).alias("sh"),
-    ).withColumn("x32", F.col("sh").bitwiseAND(F.lit(_MASK32)))
-    aggs = [
-        F.min((F.col("x32") * F.lit(a[i]) + F.lit(b[i])) % F.lit(_P)).alias(f"mh_{i}")
-        for i in range(cfg.num_perm)
-    ]
-    sig = exploded.groupBy(id_col).agg(*aggs)
-    # min is aggregated in the full 64-bit domain; the STORED lane is
-    # then truncated per cfg.minhash_lane_bits to the low 32 bits with
-    # an explicit signed wrap (ANSI-safe; bit-identical to the numpy
-    # uint32-view in signatures.py). Banding tests lane equality only,
-    # so truncation can only merge buckets (verify removes the extras).
-    def lane(c):
-        if cfg.minhash_lane_bits != 32:
-            return c
-        low = c.bitwiseAND(F.lit(0xFFFFFFFF))
-        return (
-            F.when(low >= F.lit(1 << 31), low - F.lit(1 << 32)).otherwise(low)
-        ).cast("int")
-    return sig.select(
-        id_col,
-        F.array(*[lane(F.col(f"mh_{i}")) for i in range(cfg.num_perm)]).alias(out),
-    )
 
 
 def band_buckets(

@@ -44,19 +44,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
-from .shingle import with_tokens, with_shingles
-from .minhash import with_minhash, band_buckets
+from .minhash import band_buckets
 from .signatures import with_signatures
 from .lsh import pairs_from_buckets, pairs_and_overflow
-from .simhash import with_simhash
 from .hamming import hamming_candidate_pairs
 from .winnow import with_fingerprints, refine_oversized
-from .verify import (
-    verify_jaccard,
-    verify_jaccard_cocount,
-    verify_lcs,
-    conflict_band,
-)
+from .verify import verify_jaccard, verify_lcs, conflict_band
 from .components import connected_components
 from .select import representatives, cluster_stats
 
@@ -95,28 +88,27 @@ def candidate_edges(
     caption_col: str = "caption",
     phash_col: str | None = "phash",
     channels: tuple[str, ...] = ("minhash", "simhash", "phash", "substring"),
-) -> tuple[DataFrame, DataFrame]:
-    """meta(id, caption[, phash]) -> (verified edges(a,b), jaccard candidates).
+) -> tuple[DataFrame, DataFrame, DataFrame | None, list[DataFrame]]:
+    """meta(id, caption[, phash]) -> (verified edges(a,b), jaccard
+    candidates, shingles(id, shingles), persisted internals).
 
     Returns the union of exact-verified edges from all enabled channels,
-    plus the raw caption-channel candidate set (for conflict banding).
+    the raw caption-channel candidate set and the signature pass's
+    shingle frame (both for conflict banding; shingles is None when no
+    caption channel runs), and every frame persisted on the way (for
+    DedupResult.unpersist).
     """
     need_caption_channels = {"minhash", "simhash"} & set(channels)
     # scale-adaptive plan shape (config.scale_mode): "wide" amortizes
     # eager materialization barriers + member semi-joins across real
     # executors; "narrow" is the fewer-round-trip round-3 shape.
-    # auto = wide only on a NON-local master. Round 4 gated on
-    # defaultParallelism >= 16, but the round-5 interleaved fresh-JVM
-    # A/B under the official bench protocol (scripts/bench_protocol_ab
-    # .py, BENCH.md round 5) showed wide losing at local[32] too —
-    # every extra serial materialization job is a driver round-trip on
-    # a shared memory bus, so on a single box "more threads" never buys
-    # back the barriers. On a multi-executor cluster the semi-join
-    # restriction is what keeps the verify attach off the network, so
-    # wide stays the cluster default.
-    # `local[N]` / `local` only — NOT `local-cluster[...]`, which runs
-    # real executors with network shuffle and should take the wide
-    # shape (round-5 advice #5)
+    # auto = wide only on a NON-local master: on a single box every
+    # extra serial materialization job is a driver round-trip on a
+    # shared memory bus (BENCH.md round 5), while on a multi-executor
+    # cluster the semi-join restriction is what keeps the verify attach
+    # off the network. `local[N]` / `local` only — NOT
+    # `local-cluster[...]`, which runs real executors with network
+    # shuffle and should take the wide shape.
     import re as _re
 
     master = meta.sparkSession.sparkContext.master
@@ -125,22 +117,23 @@ def candidate_edges(
         and _re.match(r"local(\[|$)", master) is None
     )
 
-    # fold the substring channel's winnowing fingerprints into the one
-    # signature pass (round 6): one Arrow caption scan instead of two
-    merge_winnow = (
-        "substring" in channels
-        and cfg.lcs_impl != "ctx"
-        and cfg.winnow_impl == "numpy"
-    )
-    if cfg.sig_impl == "numpy" and need_caption_channels:
+    # aux_cached collects EVERY persisted internal (signature caches +
+    # the hamming per-level refinement frames) so DedupResult.unpersist
+    # can release them — long-lived sessions calling dedupe() repeatedly
+    # no longer leak cached frames (round-5 advice #1)
+    aux_cached: list[DataFrame] = []
+    shingled = minhash_sig = simhash_sig = fps_src = None
+    if need_caption_channels:
         # one vectorized Arrow pass computes shingles + minhash + simhash
-        # (+ winnowing fingerprints) with shared tokenization/lowercasing,
-        # entirely map-side (no shuffle)
+        # (+ the substring channel's winnowing fingerprints, so there is
+        # one caption scan instead of two) with shared tokenization/
+        # lowercasing, entirely map-side (no shuffle)
         parts = ["shingles"]
         if "minhash" in channels:
             parts.append("minhash")
         if "simhash" in channels:
             parts.append("simhash")
+        merge_winnow = "substring" in channels
         if merge_winnow:
             parts.append("winnow")
         sigs = with_signatures(meta, caption_col, id_col, cfg, parts=tuple(parts))
@@ -161,7 +154,6 @@ def candidate_edges(
             # partition on first scan), so no separate sigs.count()
             shingled = sigs.select(id_col, "shingles").persist()
             shingled.count()
-            minhash_sig = None
             if "minhash" in channels:
                 minhash_sig = (
                     sigs.filter(F.col("minhash").isNotNull())
@@ -173,11 +165,15 @@ def candidate_edges(
                 .select(id_col, "simhash").persist()
             )
             simhash_sig.count()
-            fps_src = None
             if merge_winnow:
                 fps_src = sigs.select(id_col, "fps").persist()
                 fps_src.count()
             sigs.unpersist()
+            # the split caches own the data
+            aux_cached.extend(
+                df for df in (shingled, minhash_sig, simhash_sig, fps_src)
+                if df is not None
+            )
         else:
             # narrow mode, or no simhash channel: serve all consumers
             # off ONE eagerly-materialized signature frame. This is a
@@ -196,6 +192,7 @@ def candidate_edges(
             # Truncating the lineage to an RDD scan restores exchange
             # reuse for every downstream shuffle in the pipeline.
             sigs = sigs.localCheckpoint(eager=True)
+            aux_cached.append(sigs)
             fps_src = sigs if merge_winnow else None
             shingled = sigs.select(id_col, "shingles")
             minhash_sig = (
@@ -208,44 +205,9 @@ def candidate_edges(
                 if "simhash" in channels
                 else None
             )
-    else:
-        from .shingle import tokens_col, shingles_col
-
-        fps_src = None
-        base = (
-            meta.select(id_col, caption_col)
-            .withColumn("tokens", tokens_col(caption_col, cfg))
-            .withColumn("shingles", shingles_col(F.col("tokens"), cfg))
-            .select(id_col, "tokens", "shingles")
-        )
-        if cfg.persist_shingles:
-            base = base.persist()
-        shingled = base.select(id_col, "shingles")
-        minhash_sig = (
-            with_minhash(base, "shingles", id_col, "minhash", cfg)
-            if "minhash" in channels
-            else None
-        )
-        simhash_sig = (
-            with_simhash(base.select(id_col, "tokens"), "tokens", id_col, "simhash", cfg)
-            if "simhash" in channels
-            else None
-        )
 
     edge_parts: list[DataFrame] = []
     cap_candidates: list[DataFrame] = []
-    sig_cached: list[DataFrame] = []
-    if cfg.sig_impl == "numpy" and need_caption_channels:
-        if wide and "simhash" in channels:  # split caches own the data
-            sig_cached.extend(
-                df for df in (shingled, minhash_sig, simhash_sig)
-                if df is not None
-            )
-            if fps_src is not None:
-                sig_cached.append(fps_src)
-        else:
-            sig_cached.append(sigs)
-
     if minhash_sig is not None:
         buckets = band_buckets(minhash_sig, "minhash", id_col, cfg)
         # dedup=False: jac_cand dropDuplicates one step below already
@@ -254,13 +216,6 @@ def candidate_edges(
         cap_candidates.append(
             pairs_from_buckets(buckets, ["bucket"], id_col, cfg, dedup=False)
         )
-
-    # aux_cached collects EVERY persisted internal (signature caches +
-    # the hamming per-level refinement frames) so DedupResult.unpersist
-    # can release them — long-lived sessions calling dedupe() repeatedly
-    # no longer leak cached frames (round-5 advice #1)
-    aux_cached: list[DataFrame] = list(sig_cached)
-
     if simhash_sig is not None:
         cap_candidates.append(hamming_candidate_pairs(
             simhash_sig, "simhash", cfg.simhash_hamming_k, id_col, cfg,
@@ -271,37 +226,28 @@ def candidate_edges(
         jac_cand = cap_candidates[0]
         for c in cap_candidates[1:]:
             jac_cand = jac_cand.unionByName(c)
-        # eagerly materialized via localCheckpoint: the verify attach
-        # consumes the pair frame three times (member semi-join + both
-        # joins). A lazy persist is NOT enough — AQE launches the
-        # consumer subtrees concurrently and each raced to build the
-        # cache, re-running the whole candidate DAG per consumer
-        # (measured: the 32M-row bucket exchange executed 6x instead of
-        # 2x); and even persist+count proved evictable mid-query at 1M
-        # rows. localCheckpoint truncates the lineage, so consumers can
-        # only ever scan the (tiny) materialized pair blocks. On a real
-        # cluster an executor loss during the candidate phase then fails
-        # the job loudly instead of recomputing — acceptable for a
-        # frame this small; cfg.cc_reliable_checkpoint covers the
-        # long-lived CC state.
+        # wide mode: eagerly materialized via localCheckpoint, because
+        # the semi-join verify attach consumes the pair frame three
+        # times (member semi-join + both joins). A lazy persist is NOT
+        # enough — AQE launches the consumer subtrees concurrently and
+        # each raced to build the cache, re-running the whole candidate
+        # DAG per consumer (measured: the 32M-row bucket exchange
+        # executed 6x instead of 2x); and even persist+count proved
+        # evictable mid-query at 1M rows. localCheckpoint truncates the
+        # lineage, so consumers can only ever scan the (tiny)
+        # materialized pair blocks. On a real cluster an executor loss
+        # during the candidate phase then fails the job loudly instead
+        # of recomputing — acceptable for a frame this small;
+        # cfg.cc_reliable_checkpoint covers the long-lived CC state.
         jac_cand = jac_cand.dropDuplicates(["a", "b"])
-        cocount = cfg.jaccard_verify_impl == "cocount"
-        if wide or cocount:  # cocount consumes pairs 4x — must be eager
+        if wide:
             jac_cand = jac_cand.localCheckpoint(eager=True)
-        if cocount:
-            edge_parts.append(
-                verify_jaccard_cocount(
-                    jac_cand, shingled.select(id_col, "shingles"),
-                    cfg.jaccard_threshold, "shingles", id_col,
-                )
+        edge_parts.append(
+            verify_jaccard(
+                jac_cand, shingled, cfg.jaccard_threshold, "shingles",
+                id_col, semijoin=wide,
             )
-        else:
-            edge_parts.append(
-                verify_jaccard(
-                    jac_cand, shingled.select(id_col, "shingles"),
-                    cfg.jaccard_threshold, "shingles", id_col, semijoin=wide,
-                )
-            )
+        )
 
     if "phash" in channels and phash_col is not None:
         edge_parts.append(hamming_candidate_pairs(
@@ -310,97 +256,48 @@ def candidate_edges(
         ))
 
     if "substring" in channels:
-        if cfg.lcs_impl == "ctx":
-            # round-4 path: verification INSIDE the bucket expansion from
-            # packed byte contexts (winnow.with_fingerprint_ctx /
-            # lsh.ctx_verified_pairs) — captions never attach to pairs.
-            # Oversized buckets refine to star-safe full-window
-            # sub-buckets whose pairs are verified BY CONSTRUCTION (every
-            # member contains the same exact L-char window); only the
-            # rare `unknown` pairs (non-ASCII doc or repeated k-gram)
-            # take the exact caption verify.
-            from .winnow import with_fingerprint_ctx
-            from .lsh import ctx_verified_pairs
-
-            fpx = with_fingerprint_ctx(
-                meta.select(id_col, caption_col), caption_col, cfg, id_col
-            )
-            verified, unknown, overflow = ctx_verified_pairs(
-                fpx, id_col, cfg, cap=cfg.max_fp_bucket_size
-            )
-            refined = refine_oversized(
-                overflow, meta.select(id_col, caption_col), cfg, id_col, caption_col
-            )
-            sub_pairs = pairs_from_buckets(
-                refined, ["fingerprint", "subfp"], id_col, cfg,
-                cap=cfg.max_fp_bucket_size, oversize="star",
-            )
-            # sub_pairs share the LITERAL L-char window string (round-6
-            # refine_oversized: the sub-bucket key is the window itself,
-            # not a hash) — string equality IS the LCS predicate, so
-            # these pairs are exactly verified by construction and go
-            # straight to the edge set; only the rare `unknown` pairs
-            # still attach captions for the exact verify.
-            edge_parts.append(sub_pairs)
-            unknown = unknown.localCheckpoint(eager=True)  # see jac_cand
-            # semijoin=wide: `unknown` is eagerly materialized above, so
-            # the triple-consume contract holds — in wide (cluster) mode
-            # the caption attach must stay restricted to candidate
-            # members, like the sibling verify below (round-5 advice #4)
-            fallback_edges = verify_lcs(
-                unknown, meta.select(id_col, caption_col), cfg, caption_col,
-                id_col, impl="exact", semijoin=wide,
-            )
-            edge_parts.append(verified.unionByName(fallback_edges))
+        if fps_src is not None:
+            # fingerprints already computed by the one-pass signature
+            # stage (merge_winnow) — explode off the cache instead of
+            # running a second Arrow caption scan
+            fpx = fps_src.select(id_col, F.explode("fps").alias("fingerprint"))
         else:
-            if fps_src is not None:
-                # fingerprints already computed by the one-pass signature
-                # stage (merge_winnow) — explode off the cache instead of
-                # running a second Arrow caption scan
-                fpx = fps_src.select(
-                    id_col, F.explode("fps").alias("fingerprint")
-                )
-            else:
-                fp = with_fingerprints(meta.select(id_col, caption_col),
-                                       caption_col, "fp", cfg,
-                                       impl=cfg.winnow_impl)
-                fpx = fp.select(id_col, F.explode("fp").alias("fingerprint"))
-            # recall-preserving skew handling: small buckets all-pairs;
-            # oversized buckets (popular boilerplate fingerprints) refine to
-            # full-L-char-window sub-buckets where star topology is provably
-            # safe (winnow.refine_oversized docstring) — no silent pair loss
-            small_cand, overflow = pairs_and_overflow(
-                fpx, ["fingerprint"], id_col, cfg, cap=cfg.max_fp_bucket_size
-            )
-            refined = refine_oversized(
-                overflow, meta.select(id_col, caption_col), cfg, id_col, caption_col
-            )
-            sub_cand = pairs_from_buckets(
-                refined, ["fingerprint", "subfp"], id_col, cfg,
-                cap=cfg.max_fp_bucket_size, oversize="star",
-            )
-            # round-6 (verdict item #1, the winnow/LCS verify attach):
-            # sub_cand pairs share the LITERAL L-char window string —
-            # refine_oversized now emits the window itself as the
-            # sub-bucket key, so string equality IS the LCS predicate
-            # and these pairs are exactly verified by construction.
-            # They go straight to the edge set; the caption attach +
-            # Arrow LCS stage now runs ONLY on the small-bucket
-            # candidates (where a shared k-gram < L chars is genuinely
-            # weaker evidence than the predicate). Dup-dense corpora
-            # concentrate pairs in oversized buckets, which is exactly
-            # where the 10M probe's 45 GB verify attach came from.
-            edge_parts.append(sub_cand)
-            cand = small_cand
-            # eagerly materialized for the same multi-consumer reuse
-            # reasons as jac_cand above
-            if wide:
-                cand = cand.localCheckpoint(eager=True)
-            edge_parts.append(
-                verify_lcs(cand, meta.select(id_col, caption_col), cfg,
-                           caption_col, id_col, impl=cfg.lcs_impl,
-                           semijoin=wide)
-            )
+            fp = with_fingerprints(meta.select(id_col, caption_col),
+                                   caption_col, "fp", cfg)
+            fpx = fp.select(id_col, F.explode("fp").alias("fingerprint"))
+        # recall-preserving skew handling: small buckets all-pairs;
+        # oversized buckets (popular boilerplate fingerprints) refine to
+        # full-L-char-window sub-buckets where star topology is provably
+        # safe (winnow.refine_oversized docstring) — no silent pair loss
+        small_cand, overflow = pairs_and_overflow(
+            fpx, ["fingerprint"], id_col, cfg, cap=cfg.max_fp_bucket_size
+        )
+        refined = refine_oversized(
+            overflow, meta.select(id_col, caption_col), cfg, id_col, caption_col
+        )
+        sub_cand = pairs_from_buckets(
+            refined, ["fingerprint", "subfp"], id_col, cfg,
+            cap=cfg.max_fp_bucket_size, oversize="star",
+        )
+        # sub_cand pairs share the LITERAL L-char window string
+        # (refine_oversized emits the window itself as the sub-bucket
+        # key), so string equality IS the LCS predicate and these pairs
+        # are exactly verified by construction. They go straight to the
+        # edge set; the caption attach + Arrow LCS stage runs ONLY on
+        # the small-bucket candidates (where a shared k-gram < L chars
+        # is genuinely weaker evidence than the predicate). Dup-dense
+        # corpora concentrate pairs in oversized buckets, which is
+        # exactly where the 10M probe's 45 GB verify attach came from.
+        edge_parts.append(sub_cand)
+        cand = small_cand
+        # eagerly materialized for the same multi-consumer reuse
+        # reasons as jac_cand above
+        if wide:
+            cand = cand.localCheckpoint(eager=True)
+        edge_parts.append(
+            verify_lcs(cand, meta.select(id_col, caption_col), cfg,
+                       caption_col, id_col, semijoin=wide)
+        )
 
     if not edge_parts:
         raise ValueError("no channels enabled")
@@ -408,11 +305,12 @@ def candidate_edges(
     for e in edge_parts[1:]:
         edges = edges.unionByName(e)
     edges = edges.dropDuplicates(["a", "b"])
-    id_sql_type = meta.schema[id_col].dataType.simpleString()
-    empty_pairs = meta.sparkSession.createDataFrame(
-        [], f"a {id_sql_type}, b {id_sql_type}"
-    )
-    return edges, (jac_cand if jac_cand is not None else empty_pairs), aux_cached
+    if jac_cand is None:
+        id_sql_type = meta.schema[id_col].dataType.simpleString()
+        jac_cand = meta.sparkSession.createDataFrame(
+            [], f"a {id_sql_type}, b {id_sql_type}"
+        )
+    return edges, jac_cand, shingled, aux_cached
 
 
 def dedupe(
@@ -437,19 +335,19 @@ def dedupe(
     # is DERIVABLE — nothing to materialize — and only the (small,
     # dup-population-sized) edge-touching assignments are mapped back
     # with joins; the singleton majority gets its component via one
-    # broadcastable left join. Outputs are bit-identical to the string
-    # path: the edge SET is order-independent (recall-1 channels are
+    # broadcastable left join. Outputs match running on the original
+    # ids: the edge SET is order-independent (recall-1 channels are
     # set-exact; the LSH channel's band union rescues any star-capped
-    # bucket) and components are relabeled to the min ORIGINAL id.
-    use_int = (
-        cfg.int_ids
-        and isinstance(meta.schema[id_col].dataType, T.StringType)
-    )
+    # bucket) and components are relabeled to the min ORIGINAL id. A
+    # hash collision falsely merges two ids with probability ~N^2/2^65
+    # (~3e-8 at 1M rows), the budget the engine already accepts for
+    # hashed shingles. Integral ids are used as they are.
+    use_int = isinstance(meta.schema[id_col].dataType, T.StringType)
     meta_i = (
         meta.withColumn(id_col, F.xxhash64(F.col(id_col))) if use_int else meta
     )
 
-    edges_i, jac_cand, aux_cached = candidate_edges(
+    edges_i, jac_cand, shingled, aux_cached = candidate_edges(
         meta_i, cfg, id_col, caption_col, phash_col, channels
     )
     # edges feed CC (which materializes them via checkpoint) AND are part of
@@ -505,8 +403,10 @@ def dedupe(
 
     conflicts = None
     if with_conflicts:
-        shingled = with_shingles(meta_i.select(id_col, caption_col), caption_col, "shingles", cfg)
-        conflicts = conflict_band(jac_cand, shingled.select(id_col, "shingles"), cfg, "shingles", id_col)
+        if shingled is None:  # no caption channel ran a signature pass
+            shingled = with_signatures(meta_i, caption_col, id_col, cfg,
+                                       parts=("shingles",))
+        conflicts = conflict_band(jac_cand, shingled, cfg, "shingles", id_col)
         if use_int:
             conflicts = (
                 conflicts.join(

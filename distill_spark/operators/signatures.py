@@ -23,8 +23,7 @@ results across runs and parallelism levels) and IDENTICAL to round 1:
   token/shingle hash  polynomial rolling hash over utf-8 bytes
                       (base = FNV prime, uint64 wrap)
   minhash_i           min over shingles of (a_i * x32 + b_i) mod P,
-                      P = 4294967311 (same universal-hash family as the
-                      JVM variant in minhash.py)
+                      P = 4294967311 (minhash.permutation_params)
   simhash             Charikar sign-sum over token-hash bits
 
 Reference analog: the 4-way-unrolled single-pass distance kernels
@@ -308,8 +307,7 @@ def with_signatures(
                     mins = np.minimum.reduceat(vals, bounds, axis=1)
                     # min is taken in the FULL 64-bit domain first; only
                     # the stored lane is truncated (lane32: low 32 bits,
-                    # signed reinterpret — matches the JVM cast-to-int
-                    # wrap in minhash.with_minhash)
+                    # signed reinterpret)
                     if lane32:
                         out_lanes = mins.astype(np.uint32).view(np.int32)
                     else:
@@ -352,7 +350,7 @@ def with_signatures(
             if want_fp:
                 # winnowing fingerprints, batch-segmented over the same
                 # (already lowercased) captions — identical values to
-                # winnow._with_fingerprints_numpy (same byte-space
+                # winnow.with_fingerprints (same byte-space
                 # polynomial gram hash, same window minima, distinct):
                 # folding them into THIS pass removes a second full
                 # Arrow caption scan from the pipeline (guide §4.1:

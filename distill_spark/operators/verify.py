@@ -81,64 +81,6 @@ def verify_jaccard(
     return out.select("a", "b", "jaccard") if keep_score else out.select("a", "b")
 
 
-def verify_jaccard_cocount(
-    pairs: DataFrame,
-    shingled: DataFrame,
-    threshold: float,
-    shingle_col: str = "shingles",
-    id_col: str = "image_id",
-    keep_score: bool = False,
-) -> DataFrame:
-    """Exact Jaccard verify WITHOUT attaching shingle arrays to pairs
-    (round-4 advice — the shuffled-signature-bytes lever): |A∩B| is a
-    CO-COUNT over the exploded (id, shingle) table restricted to
-    candidate members, and |A∪B| = |A| + |B| − |A∩B| from per-doc
-    sizes — every verify join ships 8-byte keys + counts, never a
-    1–2 KB shingle array per pair side.
-
-    Formulation: pairs ⋈ a-side membership (one row per shingle of a),
-    then an equi-join on (b, shingle) against the membership table
-    counts exactly the intersection. This stays linear in
-    Σ_pairs |A| — the alternative membership self-join on the shingle
-    key explodes quadratically on hot shingles (boilerplate n-grams),
-    which is the same skew class the LSH bucket caps exist to kill.
-
-    Scores are EXACTLY the integer ratio |A∩B|/|A∪B| — bit-identical
-    to jaccard_col's array_intersect/array_union on the same sets
-    (both sets are distinct by construction).
-
-    CONTRACT: `pairs` is consumed four times — pass a materialized
-    (localCheckpoint / parquet-backed) frame.
-    """
-    members = (
-        pairs.select(F.explode(F.array("a", "b")).alias(id_col)).distinct()
-    )
-    feats = shingled.join(members, id_col, "left_semi")
-    sizes = feats.select(id_col, F.size(F.col(shingle_col)).alias("_sz"))
-    mship = feats.select(id_col, F.explode(shingle_col).alias("_sh"))
-    pa = pairs.join(mship.select(F.col(id_col).alias("a"), "_sh"), "a")
-    inter = (
-        pa.join(mship.select(F.col(id_col).alias("b"), "_sh"), ["b", "_sh"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("_i"))
-    )
-    out = (
-        pairs
-        .join(sizes.select(F.col(id_col).alias("a"), F.col("_sz").alias("_sa")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("_sz").alias("_sb")), "b")
-        .join(inter, ["a", "b"], "left")
-        .withColumn("_i", F.coalesce(F.col("_i"), F.lit(0)))
-        .withColumn("_u", F.col("_sa") + F.col("_sb") - F.col("_i"))
-        .withColumn(
-            "jaccard",
-            F.when(F.col("_u") > 0, F.col("_i") / F.col("_u")).otherwise(F.lit(1.0)),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return (out.select("a", "b", "jaccard") if keep_score
-            else out.select("a", "b"))
-
-
 def conflict_band(
     pairs: DataFrame,
     shingled: DataFrame,
@@ -164,30 +106,6 @@ def conflict_band(
     )
 
 
-def window_hashes(
-    captions: DataFrame,
-    cfg: DedupConfig = DEFAULT,
-    caption_col: str = "caption",
-    id_col: str = "image_id",
-    out: str = "winhash",
-) -> DataFrame:
-    """Per doc: xxhash64 of every lcs_min_len-char window (JVM-side).
-
-    A pair shares an exact common substring of length >= L iff their
-    window-hash arrays overlap (exact modulo xxhash64 collisions —
-    the same accepted risk as hashing shingles; ~N^2/2^64).
-    """
-    L = cfg.lcs_min_len
-    c = f"lower(coalesce({caption_col}, ''))" if cfg.lowercase else f"coalesce({caption_col}, '')"
-    expr = (
-        f"CASE WHEN length({c}) >= {L} THEN "
-        f"array_distinct(transform(sequence(0, length({c}) - {L}), "
-        f"i -> xxhash64(substring({c}, i + 1, {L})))) "
-        f"ELSE cast(array() as array<bigint>) END"
-    )
-    return captions.select(id_col, F.expr(expr).alias(out))
-
-
 def verify_lcs(
     pairs: DataFrame,
     captions: DataFrame,
@@ -199,38 +117,12 @@ def verify_lcs(
 ) -> DataFrame:
     """Keep (a, b) sharing an exact common substring of >= lcs_min_len chars.
 
-    impl="exact" (default): join raw captions to the pairs and check
-    window-set membership in an Arrow-batched pandas stage. Shuffles
-    ~300 B of caption per pair side vs ~2.4 KB of precomputed window
-    hashes for the JVM variant, and C-speed str hashing beats Spark's
-    interpreted arrays_overlap on higher-order arrays (~3x observed).
-
-    impl="jvm": per-doc window-hash arrays + arrays_overlap, no Python.
+    Joins raw captions to the pairs and checks window-set membership in
+    an Arrow-batched pandas stage, O(|a|+|b|) per pair.
     """
-    if impl == "jvm":
-        pair_ids = pairs.select(F.col("a").alias(id_col)).unionByName(
-            pairs.select(F.col("b").alias(id_col))
-        ).distinct()
-        wh = window_hashes(
-            captions.join(pair_ids, id_col, "left_semi"), cfg, caption_col, id_col
-        )
-        attached = _attach(pairs, wh, id_col, "winhash")
-        return attached.filter(
-            F.arrays_overlap(F.col("_winhash_a"), F.col("_winhash_b"))
-        ).select("a", "b")
-    return verify_lcs_exact(pairs, captions, cfg, caption_col, id_col,
-                            semijoin=semijoin)
-
-
-def verify_lcs_exact(
-    pairs: DataFrame,
-    captions: DataFrame,
-    cfg: DedupConfig = DEFAULT,
-    caption_col: str = "caption",
-    id_col: str = "image_id",
-    semijoin: bool = False,
-) -> DataFrame:
-    """Exact-string variant (Arrow-batched pandas; O(|a|+|b|) per pair)."""
+    # `impl` kept for the traced benchmark sequence until a benchmark change drops it
+    if impl != "exact":
+        raise ValueError(f"verify_lcs: unknown impl {impl!r} (only 'exact')")
     cap = captions.select(id_col, F.col(caption_col).alias("cap"))
     attached = _attach(pairs, cap, id_col, "cap", semijoin=semijoin)
     min_len, lower = cfg.lcs_min_len, cfg.lowercase

@@ -8,8 +8,8 @@ fingerprint — so fingerprint-bucket candidates have recall 1.0 for the
 `lcs_min_len = window + kgram - 1` predicate; exact LCS verification
 (verify.py) then makes precision exact.
 
-Implemented with sequence/transform/slice/array_min/substring/xxhash64
-— higher-order Catalyst expressions, zero Python.
+Implemented as Arrow-batched numpy over utf-8 bytes (with_fingerprints,
+and folded into the one signature pass in signatures.py).
 """
 
 from __future__ import annotations
@@ -29,33 +29,16 @@ def with_fingerprints(
     col: str = "caption",
     out: str = "fingerprints",
     cfg: DedupConfig = DEFAULT,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Add array<bigint> of distinct winnowing fingerprints of `col`.
 
-    impl="numpy" (default): Arrow-batched mapInPandas; per row, k-gram
-    hashes via a vectorized polynomial rolling hash over utf-8 bytes and
-    window minima via sliding_window_view — ~5x faster than the JVM
-    higher-order-function variant because Catalyst evaluates lambda
-    arrays interpreted, outside whole-stage codegen. Byte-space k-grams
-    keep the guarantee: a common substring of >= lcs_min_len CHARS spans
-    >= lcs_min_len BYTES, so it still shares a fingerprint.
-
-    impl="jvm": pure Catalyst expressions (no Python at all); used as a
-    cross-check and where Python workers are undesirable.
-
-    The two impls use different hash functions — candidates differ but
-    both satisfy the winnowing recall guarantee; verification makes the
-    final edge set identical.
+    Arrow-batched mapInPandas; per row, k-gram hashes via a vectorized
+    polynomial rolling hash over utf-8 bytes and window minima via
+    sliding_window_view. Byte-space k-grams keep the guarantee: a
+    common substring of >= lcs_min_len CHARS spans >= lcs_min_len
+    BYTES, so it still shares a fingerprint. Values are identical to
+    the `fps` part of signatures.with_signatures.
     """
-    if impl == "numpy":
-        return _with_fingerprints_numpy(df, col, out, cfg)
-    return _with_fingerprints_jvm(df, col, out, cfg)
-
-
-def _with_fingerprints_numpy(
-    df: DataFrame, col: str, out: str, cfg: DedupConfig
-) -> DataFrame:
     K, W, L = cfg.winnow_kgram, cfg.winnow_window, cfg.lcs_min_len
     lower = cfg.lowercase
     from pyspark.sql import types as T
@@ -92,242 +75,6 @@ def _with_fingerprints_numpy(
             yield res
 
     return df.mapInPandas(batch, schema=schema)
-
-
-_CTX_SPAN = 6  # lcs_min_len - winnow_kgram with the default config
-_CTX_MASK48 = (1 << 48) - 1
-
-
-def with_fingerprint_ctx(
-    df: DataFrame,
-    col: str = "caption",
-    cfg: DedupConfig = DEFAULT,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Winnowing fingerprints WITH verification context, exploded:
-    one row per (id, fingerprint) with
-
-      l, r   : the (L-K) bytes before / after the k-gram occurrence,
-               packed into one int64 each — big-endian with the byte
-               NEAREST the k-gram most significant (left context stored
-               reversed), actual length in bits 48-51, missing bytes 0
-      known  : true iff the doc is pure ASCII (after lowercasing) AND
-               the fingerprint value occurs at exactly ONE position —
-               then `l`/`r` fully determine LCS verification for any
-               pair sharing this fingerprint (see lsh.ctx_verified_pairs)
-
-    This moves substring verification INSIDE the bucket-expansion task
-    (BENCH.md finding #5, now for the winnow channel): a candidate pair
-    sharing fingerprint f shares that exact k-gram (same accepted
-    ~2^-64 hash budget as every other hashed key), so an exact common
-    substring of >= L = K + (L-K) chars containing it exists iff the
-    byte contexts extend it by (L-K) combined — pure int64 compares in
-    whole-stage codegen instead of shipping two captions per pair into
-    an Arrow LCS stage. Rows with known=false (non-ASCII, where
-    byte-runs != char-runs, or repeated k-grams) fall back to the exact
-    caption verify — output is char-exact either way.
-
-    Fingerprint values are IDENTICAL to _with_fingerprints_numpy (same
-    polynomial gram hash, same window minima), so refine_oversized and
-    the bucket split behave exactly as before.
-
-    Fully batch-segmented (signatures.py pattern): one sliding-window
-    hash pass over the whole Arrow batch's concatenated bytes, window
-    minima via per-caption segment bounds, membership/multiplicity via
-    one lexsort — no per-caption numpy calls, no per-row Python lists.
-    """
-    K, W, L = cfg.winnow_kgram, cfg.winnow_window, cfg.lcs_min_len
-    span = L - K
-    if span <= 0 or span > 6:
-        raise ValueError("ctx impl needs 0 < lcs_min_len - winnow_kgram <= 6")
-    lower = cfg.lowercase
-    from pyspark.sql import types as T
-
-    # the Arrow boundary carries ONE row per doc (parallel arrays); the
-    # per-fingerprint explode happens JVM-side via arrays_zip — shipping
-    # exploded rows out of Python measured ~25% slower end-to-end
-    schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("fps", T.ArrayType(T.LongType())),
-            T.StructField("ls", T.ArrayType(T.LongType())),
-            T.StructField("rs", T.ArrayType(T.LongType())),
-            T.StructField("kn", T.ArrayType(T.BooleanType())),
-        ]
-    )
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B = np.uint64(1099511628211)
-        pw = B ** np.arange(K - 1, -1, -1, dtype=np.uint64)
-        SH = (np.uint64(1) << (np.uint64(8) * np.arange(5, -1, -1, dtype=np.uint64)))[
-            6 - span:
-        ].astype(np.uint64)  # big-endian byte shifts for `span` bytes
-        for pdf in it:
-            n = len(pdf)
-            caps = [(c or "") for c in pdf[col]]
-            if lower:
-                caps = [c.lower() for c in caps]
-            enc = [c.encode("utf-8") for c in caps]
-            # docs shorter than L chars cannot contain an L-char substring
-            ok_doc = np.array(
-                [len(c) >= L and len(e) >= K + W - 1 for c, e in zip(caps, enc)]
-            )
-            blens = np.array([len(e) if o else 0 for e, o in zip(enc, ok_doc)],
-                             dtype=np.int64)
-            empty_i = np.empty(0, dtype=np.int64)
-            empty_b = np.empty(0, dtype=bool)
-            if not blens.sum():
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col],
-                     "fps": [empty_i] * n, "ls": [empty_i] * n,
-                     "rs": [empty_i] * n, "kn": [empty_b] * n}
-                )
-                continue
-            bflat = np.frombuffer(
-                b"".join(e for e, o in zip(enc, ok_doc) if o), dtype=np.uint8
-            ).astype(np.uint64)
-            lens = blens[ok_doc.nonzero()[0]]
-            owners_all = np.flatnonzero(ok_doc)  # caption index per segment
-            starts = np.zeros(len(lens) + 1, dtype=np.int64)
-            starts[1:] = np.cumsum(lens)
-
-            # ---- gram hashes over the flat bytes; valid iff in-caption
-            gh_all = (
-                np.lib.stride_tricks.sliding_window_view(bflat, K) * pw
-            ).sum(axis=1)
-            n_g = lens - K + 1  # >= W for every kept doc
-            g_starts = np.zeros(len(lens) + 1, dtype=np.int64)
-            g_starts[1:] = np.cumsum(n_g)
-            tot_g = int(g_starts[-1])
-            # flat index of each valid gram in gh_all
-            g_idx = np.repeat(starts[:-1], n_g) + (
-                np.arange(tot_g) - np.repeat(g_starts[:-1], n_g)
-            )
-            ghc = gh_all[g_idx]  # valid grams, caption-concatenated
-            g_owner = np.repeat(np.arange(len(lens)), n_g)
-
-            # ---- window minima per caption (windows of W grams)
-            n_w = n_g - W + 1
-            w_starts = np.zeros(len(lens) + 1, dtype=np.int64)
-            w_starts[1:] = np.cumsum(n_w)
-            tot_w = int(w_starts[-1])
-            mins_all = np.lib.stride_tricks.sliding_window_view(ghc, W).min(axis=1)
-            w_idx = np.repeat(g_starts[:-1], n_w) + (
-                np.arange(tot_w) - np.repeat(w_starts[:-1], n_w)
-            )
-            minc = mins_all[w_idx]
-            m_owner = np.repeat(np.arange(len(lens)), n_w)
-
-            # ---- selected = per-caption distinct window minima
-            order = np.lexsort((minc, m_owner))
-            ms, mo = minc[order], m_owner[order]
-            keep = np.ones(len(ms), dtype=bool)
-            keep[1:] = (ms[1:] != ms[:-1]) | (mo[1:] != mo[:-1])
-            sel_val, sel_own = ms[keep], mo[keep]
-
-            # ---- per-caption membership: positions p with ghc[p] selected
-            # (rank values batch-wide so (owner, rank) packs into int64)
-            uniq = np.unique(np.concatenate([ghc, sel_val]))
-            g_rank = np.searchsorted(uniq, ghc)
-            s_rank = np.searchsorted(uniq, sel_val)
-            MUL = np.int64(len(uniq) + 1)
-            g_key = g_owner * MUL + g_rank
-            s_key = np.sort(sel_own * MUL + s_rank)
-            pos_mask = s_key[
-                np.clip(np.searchsorted(s_key, g_key), 0, len(s_key) - 1)
-            ] == g_key
-            pos = np.flatnonzero(pos_mask)  # indices into ghc/g_owner/g_idx
-
-            # ---- multiplicity: a (caption, value) selected at >1 position
-            # cannot be verified from one context pair -> known = false
-            pk = g_key[pos]
-            order2 = np.argsort(pk, kind="stable")
-            pk_s = pk[order2]
-            first = np.ones(len(pk_s), dtype=bool)
-            first[1:] = pk_s[1:] != pk_s[:-1]
-            grp = np.cumsum(first) - 1
-            gcounts = np.bincount(grp)
-            single = (gcounts == 1)[grp]  # aligned with pk_s/order2
-            keep_rows = order2[first]     # one row per (caption, value)
-            # emit one row per (caption, value): the first occurrence
-            emit = pos[keep_rows]
-            emit_single = single[first]
-            emit_owner = g_owner[emit]
-
-            # ---- pack the +-span byte contexts of the emitted occurrences
-            pg = g_idx[emit]  # gram position in bflat
-            seg_lo = starts[emit_owner]
-            seg_hi = starts[emit_owner + 1]
-            l_len = np.minimum(pg - seg_lo, span)
-            r_len = np.minimum(seg_hi - (pg + K), span)
-            padded = np.concatenate(
-                [np.zeros(span, dtype=np.uint64), bflat,
-                 np.zeros(span, dtype=np.uint64)]
-            )
-            lwin = np.lib.stride_tricks.sliding_window_view(padded, span)[pg]
-            # left context reversed: byte nearest the gram most significant
-            lrev = lwin[:, ::-1]
-            lmask = np.arange(span)[None, :] < l_len[:, None]
-            l_enc = (lrev * lmask * SH[None, :]).sum(axis=1) | (
-                l_len.astype(np.uint64) << np.uint64(48)
-            )
-            rwin = np.lib.stride_tricks.sliding_window_view(padded, span)[
-                pg + K + span
-            ]
-            rmask = np.arange(span)[None, :] < r_len[:, None]
-            r_enc = (rwin * rmask * SH[None, :]).sum(axis=1) | (
-                r_len.astype(np.uint64) << np.uint64(48)
-            )
-
-            # ---- ascii flag per caption (on the lowercased bytes)
-            ascii_flags = np.logical_and.reduceat(bflat < 128, starts[:-1])
-            known = emit_single & ascii_flags[emit_owner]
-
-            # ---- per-doc array slices (emit_owner is non-decreasing:
-            # rows were produced in (owner, value) sort order)
-            fp_vals = ghc[emit].astype(np.int64)
-            l_vals = l_enc.astype(np.int64)
-            r_vals = r_enc.astype(np.int64)
-            counts = np.bincount(emit_owner, minlength=len(lens))
-            bounds = np.zeros(len(lens) + 1, dtype=np.int64)
-            bounds[1:] = np.cumsum(counts)
-            # map back to the ORIGINAL row order (incl. skipped docs)
-            per_doc_fp = [empty_i] * n
-            per_doc_l = [empty_i] * n
-            per_doc_r = [empty_i] * n
-            per_doc_k = [empty_b] * n
-            for seg, orig in enumerate(owners_all):
-                s0, s1 = bounds[seg], bounds[seg + 1]
-                per_doc_fp[orig] = fp_vals[s0:s1]
-                per_doc_l[orig] = l_vals[s0:s1]
-                per_doc_r[orig] = r_vals[s0:s1]
-                per_doc_k[orig] = known[s0:s1]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "fps": per_doc_fp,
-                    "ls": per_doc_l,
-                    "rs": per_doc_r,
-                    "kn": per_doc_k,
-                }
-            )
-
-    exploded = (
-        df.select(id_col, col)
-        .mapInPandas(batch, schema=schema)
-        .select(
-            id_col,
-            F.explode(F.arrays_zip("fps", "ls", "rs", "kn")).alias("z"),
-        )
-        .select(
-            id_col,
-            F.col("z.fps").alias("fingerprint"),
-            F.col("z.ls").alias("l"),
-            F.col("z.rs").alias("r"),
-            F.col("z.kn").alias("known"),
-        )
-    )
-    return exploded
 
 
 def refine_oversized(
@@ -461,37 +208,3 @@ def refine_oversized(
         .mapInPandas(batch, schema=schema)
     )
 
-
-def _with_fingerprints_jvm(
-    df: DataFrame, col: str, out: str, cfg: DedupConfig
-) -> DataFrame:
-    """Add array<bigint> of distinct winnowing fingerprints of `col`.
-
-    Strings shorter than lcs_min_len produce an empty array (they cannot
-    contain a qualifying substring). The k-gram hash array is bound as a
-    lambda variable (let1) so Catalyst evaluates it ONCE per row —
-    projecting it as a plain intermediate column lets CollapseProject
-    inline it into every window of the winnowing lambda (observed 100x
-    slowdown).
-    """
-    k = cfg.winnow_kgram
-    w = cfg.winnow_window
-    c = f"lower(coalesce({col}, ''))" if cfg.lowercase else f"coalesce({col}, '')"
-    grams = F.expr(
-        f"CASE WHEN length({c}) >= {cfg.lcs_min_len} THEN "
-        f"transform(sequence(0, length({c}) - {k}), i -> xxhash64(substring({c}, i + 1, {k}))) "
-        f"ELSE cast(array() as array<bigint>) END"
-    )
-
-    def winnow(g):
-        mins = F.transform(
-            F.sequence(F.lit(0), F.size(g) - w),
-            lambda j: F.array_min(F.slice(g, j + 1, w)),
-        )
-        return F.when(F.size(g) >= w, F.array_distinct(mins)).otherwise(
-            F.array().cast("array<bigint>")
-        )
-
-    from ..functions.util import let1
-
-    return df.withColumn(out, let1(grams, winnow))

@@ -1,57 +1,26 @@
-"""Round-4: the in-expansion context verifier for the substring channel
-(winnow.with_fingerprint_ctx + lsh.ctx_verified_pairs, cfg.lcs_impl
-= "ctx").
+"""Substring (LCS) channel boundary cases on the exact caption verify:
 
-Equivalence contract vs the exact caption verify:
-  * identical CONNECTED COMPONENTS (the north-rule output), with the
-    ctx edge set a SUBSET of the exact one (a pair whose only shared
-    selected fingerprint sits in an oversized hot bucket connects via
-    the star hub instead of a direct edge — same clusters);
-  * boundary-exact: common run of exactly lcs_min_len passes, one char
-    less fails, including runs at caption start/end;
-  * non-ASCII docs and repeated k-grams take the exact fallback, so
-    char semantics hold there too.
+  * boundary-exact: a common run of exactly lcs_min_len chars passes,
+    one char less fails, including runs at caption start/end;
+  * non-ASCII docs and repeated k-grams keep char semantics: a run of
+    >= L bytes but < L chars is not a dup.
 """
-
-from dataclasses import replace
 
 import random
 
-import pytest
-from pyspark.sql import functions as F
-
 from distill_spark.config import DedupConfig
 from distill_spark.operators import dedupe
-from distill_spark.operators.winnow import with_fingerprints, with_fingerprint_ctx
 
 CFG = DedupConfig()
 L = CFG.lcs_min_len
 
 
-def _sub_edges(spark, rows, impl):
+def _sub_comps(spark, rows):
     df = spark.createDataFrame(rows, "image_id string, caption string")
-    cfg = replace(CFG, lcs_impl=impl)
-    r = dedupe(df, cfg, channels=("substring",), phash_col=None)
+    r = dedupe(df, CFG, channels=("substring",), phash_col=None)
     comps = {x["image_id"]: x["component"] for x in r.assignments.collect()}
-    edges = {(x["a"], x["b"]) for x in r.edges.collect()}
     r.unpersist()
-    return comps, edges
-
-
-def test_fingerprint_sets_identical(spark):
-    rng = random.Random(5)
-    words = ["".join(rng.choice("abcdefghij") for _ in range(6)) for _ in range(50)]
-    rows = [(i, " ".join(rng.choice(words) for _ in range(rng.randint(2, 40))))
-            for i in range(300)]
-    rows += [(300, "héllo wörld " * 5), (301, ""), (302, None), (303, "short"),
-             (304, "zz " + "samegram" * 3 + " xx " + "samegram" * 3)]
-    df = spark.createDataFrame(rows, "image_id long, caption string")
-    old = {(r["image_id"], f)
-           for r in with_fingerprints(df, "caption", "fp", CFG).collect()
-           for f in (r["fp"] or [])}
-    new = {(r["image_id"], r["fingerprint"])
-           for r in with_fingerprint_ctx(df, "caption", CFG, "image_id").collect()}
-    assert old == new
+    return comps
 
 
 def test_boundary_runs_exact_length(spark):
@@ -71,13 +40,12 @@ def test_boundary_runs_exact_length(spark):
         ("f1", rnd(30) + run_fail + rnd(30)),
         ("f2", rnd(32) + run_fail + rnd(28)),      # L-1 shared -> NOT dup
     ]
-    # make the two groups' non-shared parts unrelated (they are random)
-    for impl in ("exact", "ctx"):
-        comps, edges = _sub_edges(spark, rows, impl)
-        assert comps["p1"] == comps["p2"], impl
-        assert comps["s1"] == comps["s2"], impl
-        assert comps["f1"] != comps["f2"], impl
-        assert comps["p1"] != comps["s1"], impl
+    # the two groups' non-shared parts are random, so unrelated
+    comps = _sub_comps(spark, rows)
+    assert comps["p1"] == comps["p2"]
+    assert comps["s1"] == comps["s2"]
+    assert comps["f1"] != comps["f2"]
+    assert comps["p1"] != comps["s1"]
 
 
 def test_unicode_and_repeats_fall_back_exact(spark):
@@ -91,45 +59,17 @@ def test_unicode_and_repeats_fall_back_exact(spark):
     rows = [
         ("u1", "héllo wörld " + shared + " ünïcode tail here"),
         ("u2", "öther stärt " + shared + " different ünïcode"),
-        # repeated k-gram doc (multi-occurrence -> known=false) that IS
-        # a genuine dup of r2 via the shared run
+        # a doc repeating the run (every k-gram of it occurs twice)
+        # that IS a genuine dup of r2 via the shared run
         ("r1", shared + " xx " + shared),
         ("r2", "prefix junk words " + shared + " suffix junk"),
         # multibyte run that is >= L BYTES but < L CHARS must NOT match
         ("m1", "aaa " + "é" * (L - 4) + " zzz unrelated tail one"),
         ("m2", "bbb " + "é" * (L - 4) + " qqq unrelated tail two"),
     ]
-    e_comps, e_edges = _sub_edges(spark, rows, "exact")
-    c_comps, c_edges = _sub_edges(spark, rows, "ctx")
-    # components must be IDENTICAL between impls
-    canon_e = {k: sorted(x for x in e_comps if e_comps[x] == v)[0]
-               for k, v in e_comps.items()}
-    canon_c = {k: sorted(x for x in c_comps if c_comps[x] == v)[0]
-               for k, v in c_comps.items()}
-    assert canon_e == canon_c
-    assert c_comps["u1"] == c_comps["u2"]
-    assert c_comps["r1"] == c_comps["r2"]
+    comps = _sub_comps(spark, rows)
+    assert comps["u1"] == comps["u2"]
+    assert comps["r1"] == comps["r2"]
     # é is 2 bytes: L-4 of them is >= L bytes but < L chars — char
-    # semantics must reject (both impls)
-    assert c_comps["m1"] != c_comps["m2"]
-
-
-def test_pipeline_equivalence_components(spark):
-    from distill_spark.datagen import generate_images
-
-    df, _ = generate_images(spark, n=1500, seed=9)
-    meta = df.select("image_id", "caption", "phash").cache()
-    meta.count()
-    r_exact = dedupe(meta, replace(CFG, lcs_impl="exact"))
-    e_edges = {(r["a"], r["b"]) for r in r_exact.edges.collect()}
-    e_assign = {(r["image_id"], r["component"])
-                for r in r_exact.assignments.collect()}
-    r_exact.unpersist()
-    r_ctx = dedupe(meta, replace(CFG, lcs_impl="ctx"))
-    c_edges = {(r["a"], r["b"]) for r in r_ctx.edges.collect()}
-    c_assign = {(r["image_id"], r["component"])
-                for r in r_ctx.assignments.collect()}
-    r_ctx.unpersist()
-    meta.unpersist()
-    assert c_assign == e_assign
-    assert c_edges <= e_edges
+    # semantics must reject
+    assert comps["m1"] != comps["m2"]

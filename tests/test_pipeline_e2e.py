@@ -137,33 +137,97 @@ def test_cc_reliable_checkpoint_flag(spark, tmp_path):
 
 
 def test_int_ids_output_identical_to_string_path(spark):
-    """cfg.int_ids=True (hash ids to int64 for every exchange) must
-    produce the SAME clusters as the string-id path: identical
-    assignments (components labeled by min ORIGINAL id) and identical
-    representatives. The raw edge SETS may differ by a few pairs —
-    bucket capping explores candidates in id order, and hash order
-    picks different (but exactly-verified, equally true) subsets with
-    the same transitive closure — so edges are checked for
-    component-consistency, not set equality."""
-    df, _ = generate_images(spark, n=400, seed=9)
-    a = dedupe(df, DedupConfig(int_ids=True))
-    b = dedupe(df, DedupConfig(int_ids=False))
+    """String ids are hashed to int64 for every exchange and mapped back;
+    integral ids run as they are. The same rows under either id type
+    must give the same partition of ids. The integer ids here are the
+    string ids' sort ranks, so component labels (min id) and
+    representatives must map across too."""
+    pdf, _ = generate_images_pdf(n=400, seed=9)
+    pdf = pdf[["image_id", "caption", "phash"]]
+    rank = {sid: i for i, sid in enumerate(sorted(pdf["image_id"]))}
+    ipdf = pdf.assign(image_id=pdf["image_id"].map(rank).astype("int64"))
+    a = dedupe(spark.createDataFrame(pdf))
+    b = dedupe(spark.createDataFrame(ipdf))
     try:
-        asg_a = {r["image_id"]: r["component"] for r in a.assignments.collect()}
-        asg_b = {r["image_id"]: r["component"] for r in b.assignments.collect()}
-        assert asg_a == asg_b
-        rep_a = sorted(r["image_id"] for r in a.representatives.collect())
-        rep_b = sorted(r["image_id"] for r in b.representatives.collect())
-        assert rep_a == rep_b
-        ed_a = [(r["a"], r["b"]) for r in a.edges.collect()]
-        assert ed_a, "int path must emit edges"
+        asg_s = {rank[r["image_id"]]: rank[r["component"]]
+                 for r in a.assignments.collect()}
+        asg_i = {r["image_id"]: r["component"] for r in b.assignments.collect()}
+
+        def partition(asg):
+            groups: dict = {}
+            for i, c in asg.items():
+                groups.setdefault(c, set()).add(i)
+            return {frozenset(g) for g in groups.values()}
+
+        assert len(asg_s) == len(pdf)
+        assert partition(asg_s) == partition(asg_i)
+        assert any(len(g) > 1 for g in partition(asg_i))
+        assert asg_s == asg_i
+        rep_s = sorted(rank[r["image_id"]] for r in a.representatives.collect())
+        rep_i = sorted(r["image_id"] for r in b.representatives.collect())
+        assert rep_s == rep_i
         # every mapped-back edge connects two members of one component
         # and is normalized a < b in ORIGINAL id order
-        for x, y in ed_a:
-            assert x < y and asg_a[x] == asg_a[y]
+        ed_s = [(r["a"], r["b"]) for r in a.edges.collect()]
+        assert ed_s, "string-id path must emit edges"
+        for x, y in ed_s:
+            assert x < y and asg_s[rank[x]] == asg_s[rank[y]]
     finally:
         a.unpersist()
         b.unpersist()
+
+
+def test_conflicts_band_matches_oracle(spark):
+    """dedupe(with_conflicts=True): conflict rows are caption pairs whose
+    exact shingle Jaccard lies in [conflict_jaccard, jaccard_threshold),
+    reported on the original string ids with a < b."""
+    import random
+
+    from distill_spark.oracle import jaccard, shingle_set
+
+    rng = random.Random(17)
+    used: set = set()
+
+    def words(n):
+        out = []
+        while len(out) < n:
+            w = "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(7))
+            if w not in used:
+                used.add(w)
+                out.append(w)
+        return out
+
+    rows, in_band, out_band = [], [], []
+    # 20-token captions (18 shingles); the partner keeps the first m
+    # tokens and replaces the rest: J = (m-2) / (36 - (m-2)). Conflicts
+    # come from the caption-channel candidates, so the in-band pairs
+    # sit at J 0.57-0.64, where the LSH S-curve gives P >= 0.97.
+    for g, m in enumerate((16, 16, 16, 15, 15, 19, 12, 10)):
+        base, tail = words(20), words(20 - m)
+        a, b = f"g{g:02d}a", f"g{g:02d}b"
+        rows += [(b, " ".join(base)), (a, " ".join(base[:m] + tail))]
+        j = jaccard(shingle_set(rows[-2][1]), shingle_set(rows[-1][1]))
+        (in_band if CFG.conflict_jaccard <= j < CFG.jaccard_threshold
+         else out_band).append((a, b))
+    rows += [(f"z{i:02d}", " ".join(words(12))) for i in range(30)]
+    caps = dict(rows)
+    df = spark.createDataFrame(
+        [(i, c, rng.getrandbits(63)) for i, c in rows],
+        "image_id string, caption string, phash long",
+    )
+    assert len(in_band) == 5 and len(out_band) == 3  # the fixture's shape
+
+    r = dedupe(df, CFG, with_conflicts=True)
+    try:
+        got = {(x["a"], x["b"]): x["jaccard"] for x in r.conflicts.collect()}
+    finally:
+        r.unpersist()
+    for (a, b), j in got.items():
+        assert a < b
+        assert j == jaccard(shingle_set(caps[a]), shingle_set(caps[b]))
+        assert CFG.conflict_jaccard <= j < CFG.jaccard_threshold
+    assert set(in_band) <= set(got)
+    assert not set(out_band) & set(got)
 
 
 def test_scale_modes_output_identical(spark):

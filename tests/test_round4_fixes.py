@@ -141,6 +141,38 @@ def test_restarted_job_keeps_submitted_dedup_cfg(spark, tmp_path):
     assert proc2.get(job.id).status == COMPLETED
 
 
+def test_restart_drops_retired_dedup_cfg_keys(spark, tmp_path, caplog):
+    """A job ledgered by an older DedupConfig (fields since removed)
+    still runs after a restart; the dropped keys are logged."""
+    import logging
+
+    p = str(tmp_path / "jobs")
+    proc = JobProcessor(spark, p)
+    job = proc.submit(
+        spark.createDataFrame(
+            [("a", "the quick brown fox jumps over the lazy dog by the river"),
+             ("b", "a totally different caption about joins and shuffles")],
+            "image_id string, caption string",
+        ),
+        PipelineOptions(compress_enabled=False,
+                        dedup_cfg=DedupConfig(jaccard_threshold=0.95)),
+    )
+    ledger = os.path.join(p, "_jobs.jsonl")
+    with open(ledger) as f:
+        rows = [json.loads(line) for line in f]
+    for r in rows:
+        r["options"]["dedup_cfg"].update(sig_impl="numpy", persist_shingles=False)
+    with open(ledger, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+
+    proc2 = JobProcessor(spark, p)
+    with caplog.at_level(logging.WARNING, logger="distill_spark"):
+        assert proc2.process_next() == job.id
+    assert proc2.get(job.id).status == COMPLETED
+    msgs = [r.getMessage() for r in caplog.records if r.name == "distill_spark"]
+    assert any("sig_impl" in m and "persist_shingles" in m for m in msgs), msgs
+
+
 def test_submit_reserves_slot_atomically(spark, tmp_path):
     proc = JobProcessor(spark, str(tmp_path / "jobs"), queue_size=1)
     df = spark.createDataFrame([("a", "some caption text")],

@@ -9,10 +9,7 @@
      exact count + a BOUNDED id sample — no unbounded driver collect.
   4. Public verify_jaccard/verify_lcs default semijoin=False (the
      triple-consume semijoin contract is opt-in for materialized pairs).
-  5. verify_jaccard_cocount is bit-identical to the attach-based
-     verify_jaccard (same survivors, same scores), including
-     threshold-edge pairs.
-  6. minhash_lane_bits=32 yields the same final dedup clusters as the
+  5. minhash_lane_bits=32 yields the same final dedup clusters as the
      full 64-bit lanes (banding tests lane equality only; truncation
      can only add candidates, which exact verify removes).
 """
@@ -124,49 +121,6 @@ def test_verify_semijoin_default_off():
     assert inspect.signature(verify_lcs).parameters["semijoin"].default is False
 
 
-def test_cocount_verify_matches_attach(spark):
-    from distill_spark.operators.shingle import with_shingles
-    from distill_spark.operators.verify import (
-        verify_jaccard,
-        verify_jaccard_cocount,
-    )
-
-    cfg = DedupConfig()
-    rows = []
-    base = ("the quick brown fox jumps over the lazy dog near the old "
-            "stone bridge by the river bank at dawn")
-    for i in range(40):
-        rows.append((f"d{i}", base + f" variant token{i}"))
-        # near-dup partner for every 4th doc
-        if i % 4 == 0:
-            rows.append((f"d{i}x", base + f" variant token{i} extra"))
-    # a disjoint doc that pairs below threshold
-    rows.append(("z0", "completely different words entirely unrelated "
-                       "content about quantum chromodynamics lattice"))
-    df = spark.createDataFrame(rows, "image_id string, caption string")
-    sh = with_shingles(df, "caption", "shingles", cfg).select(
-        "image_id", "shingles"
-    ).cache()
-    sh.count()
-    ids = [r["image_id"] for r in df.select("image_id").collect()]
-    # all-pairs candidates (small n) exercises survivors AND rejects
-    pairs = spark.createDataFrame(
-        [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]],
-        "a string, b string",
-    ).localCheckpoint(eager=True)
-
-    att = verify_jaccard(pairs, sh, cfg.jaccard_threshold,
-                         keep_score=True).collect()
-    coc = verify_jaccard_cocount(pairs, sh, cfg.jaccard_threshold,
-                                 keep_score=True).collect()
-    att_m = {(r["a"], r["b"]): r["jaccard"] for r in att}
-    coc_m = {(r["a"], r["b"]): r["jaccard"] for r in coc}
-    assert set(att_m) == set(coc_m)
-    for k in att_m:
-        assert att_m[k] == coc_m[k], (k, att_m[k], coc_m[k])
-    assert len(att_m) >= 10  # the fixture actually produced survivors
-
-
 def test_lane32_clusters_match_lane64(spark):
     from distill_spark.datagen import generate_images
     from distill_spark.operators import dedupe
@@ -174,10 +128,8 @@ def test_lane32_clusters_match_lane64(spark):
     df, _ = generate_images(spark, n=300, seed=7)
     df = df.select("image_id", "caption", "phash").cache()
     df.count()
-    a32 = dedupe(df, replace(DedupConfig(), minhash_lane_bits=32,
-                             jaccard_verify_impl="cocount")).assignments
-    a64 = dedupe(df, replace(DedupConfig(), minhash_lane_bits=64,
-                             jaccard_verify_impl="attach")).assignments
+    a32 = dedupe(df, replace(DedupConfig(), minhash_lane_bits=32)).assignments
+    a64 = dedupe(df, replace(DedupConfig(), minhash_lane_bits=64)).assignments
     m32 = {r["image_id"]: r["component"] for r in a32.collect()}
     m64 = {r["image_id"]: r["component"] for r in a64.collect()}
     assert m32 == m64
