@@ -20,8 +20,8 @@ Layout:
   operators/            the dedup pipeline stages (each DataFrame->DataFrame)
   functions/            scalar/columnar function library (text, scoring,
                         sensitivity, hashing, vectors)
-  checkpoint.py         stage ledger + parquet checkpoint store (Iceberg
-                        writer gated behind import-try; jars not in image)
+  checkpoint.py         stage ledger + parquet checkpoint store (maps
+                        onto Iceberg tables on a cluster)
   storeio.py            crash-safe atomic parquet-dir publish/append/
                         partition-replace + guarded driver collects
   memory.py             bucket-partitioned memory store (write-time dedup,

@@ -14,8 +14,8 @@ Reference analogs (file:line into /root/reference):
 Backend: parquet directories + an atomically-replaced JSONL ledger.
 On a cluster with Iceberg jars this maps 1:1 onto Iceberg tables
 (`df.writeTo(table).createOrReplace()` + a status table; snapshot ids
-become the lineage fingerprint) — the jars are not in this image, so
-the Iceberg writer is gated behind an import-try (see IcebergBackend).
+become the lineage fingerprint). The Iceberg jars are not bundled, so
+only the parquet backend is implemented.
 
 Ledger row per completed stage:
   {stage, status, rows, n_partitions, partition_rows (lineage),
@@ -42,6 +42,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .config import DedupConfig
+from .operators.pipeline import CHANNELS, DedupResult, Stage, run_dedup_graph
+
 log = logging.getLogger("distill_spark")
 
 
@@ -62,10 +65,15 @@ def input_signature(df: DataFrame) -> str:
     try:
         parts.append(str(df.semanticHash()))
     except Exception:
-        pass
+        log.warning("input_signature: semanticHash() failed; the checkpoint "
+                    "input fingerprint covers only the source files",
+                    exc_info=True)
     try:
         files = sorted(df.inputFiles())
     except Exception:
+        log.warning("input_signature: inputFiles() failed; the checkpoint "
+                    "input fingerprint covers only the plan hash",
+                    exc_info=True)
         files = []
     parts.append(f"nfiles={len(files)}")
     for f in files[:1000]:
@@ -217,25 +225,6 @@ class CheckpointStore:
         return out
 
 
-class IcebergBackend:
-    """Iceberg-backed variant (cluster deployments). The jars are not in
-    this sandbox image, so construction fails soft with instructions."""
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        try:
-            spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
-        except Exception as ex:  # pragma: no cover - no iceberg jars in image
-            raise ImportError(
-                "Iceberg catalog unavailable (add iceberg-spark-runtime jars "
-                "and spark.sql.catalog.* config); use CheckpointStore "
-                "(parquet) in this environment"
-            ) from ex
-        self.spark, self.catalog, self.namespace = spark, catalog, namespace
-
-    def write(self, df: DataFrame, table: str) -> None:  # pragma: no cover
-        df.writeTo(f"{self.catalog}.{self.namespace}.{table}").createOrReplace()
-
-
 def dedupe_checkpointed(
     images: DataFrame,
     store: CheckpointStore,
@@ -243,169 +232,42 @@ def dedupe_checkpointed(
     id_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str | None = "phash",
-    channels: tuple[str, ...] = ("minhash", "simhash", "phash", "substring"),
+    channels: tuple[str, ...] = CHANNELS,
     data_sig: str | None = None,
-):
-    """Staged, resumable dedupe: each stage checkpoints through `store`.
+) -> DedupResult:
+    """Staged, resumable dedupe: the same stage graph as `dedupe()`
+    (operators.pipeline.dedup_stages), each stage computed or loaded
+    through `store.run_stage`, so a run resumes after its last completed
+    stage. Stage parquet holds the ids the channels run on (int64 hashes
+    of string ids); assignments and representatives hold original ids.
 
-    Stage graph (deps drive fingerprint invalidation):
-      input -> signatures -> jaccard_candidates -> jaccard_edges
-      input -> phash_edges
-      input -> lcs_edges
-      {jaccard,phash,lcs}_edges -> edges -> assignments -> representatives
-
-    Root fingerprints fold in the INPUT DATA identity (data_sig, default
+    A stage's fingerprint folds in those of the stages it reads, so
+    invalidating an early stage invalidates everything downstream. Root
+    fingerprints fold in the INPUT DATA identity (data_sig, default
     derived by input_signature()), so re-running against a different
     `images` table invalidates the chain instead of silently returning
     stale stage output.
     """
-    from .config import DedupConfig
-    from .operators.signatures import with_signatures
-    from .operators.minhash import band_buckets
-    from .operators.lsh import pairs_from_buckets, pairs_and_overflow
-    from .operators.hamming import hamming_candidate_pairs
-    from .operators.winnow import with_fingerprints, refine_oversized
-    from .operators.verify import verify_jaccard, verify_lcs
-    from .operators.components import connected_components
-    from .operators.select import representatives as select_reps
-    from .operators.select import cluster_stats
-
     cfg = cfg or DedupConfig()
     csig = json.dumps(
         {k: v for k, v in cfg.__dict__.items() if not k.startswith("_")},
         sort_keys=True, default=str,
     ) + f"|channels={sorted(channels)}|data={data_sig or input_signature(images)}"
+    ham_caches: list[DataFrame] = []
 
-    cols = [id_col, caption_col] + ([phash_col] if phash_col else [])
-    meta = images.select(*cols)
-    # per-level hamming refinement persists; released after the edge
-    # stages are parquet-backed (round-5 advice #1)
-    ham_caches: list = []
+    def on_disk(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
+        df = store.run_stage(stage.name, compute, config_sig=csig,
+                             deps=list(stage.deps))
+        if stage.name == "edges":
+            # the Hamming refinement caches fed the edge stages, which
+            # are parquet-backed now
+            for cached in ham_caches:
+                try:
+                    cached.unpersist()
+                except Exception:
+                    log.debug("unpersist of a Hamming cache failed",
+                              exc_info=True)
+        return df
 
-    sigs = store.run_stage(
-        "signatures",
-        lambda: with_signatures(meta, caption_col, id_col, cfg,
-                                parts=("shingles", "minhash", "simhash")),
-        config_sig=csig,
-    )
-
-    def jac_cand_fn():
-        parts = []
-        if "minhash" in channels:
-            buckets = band_buckets(
-                sigs.filter(F.col("minhash").isNotNull()).select(id_col, "minhash"),
-                "minhash", id_col, cfg,
-            )
-            # dedup=False: the unioned stream is deduplicated once below
-            parts.append(
-                pairs_from_buckets(buckets, ["bucket"], id_col, cfg, dedup=False)
-            )
-        if "simhash" in channels:
-            sh = sigs.filter(F.col("simhash").isNotNull()).select(id_col, "simhash")
-            parts.append(hamming_candidate_pairs(
-                sh, "simhash", cfg.simhash_hamming_k, id_col, cfg,
-                cache_registry=ham_caches))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.dropDuplicates(["a", "b"])
-
-    edge_parts = []
-    if {"minhash", "simhash"} & set(channels):
-        jac_cand = store.run_stage(
-            "jaccard_candidates", jac_cand_fn, config_sig=csig, deps=["signatures"]
-        )
-        edge_parts.append(
-            store.run_stage(
-                "jaccard_edges",
-                lambda: verify_jaccard(
-                    jac_cand, sigs.select(id_col, "shingles"),
-                    cfg.jaccard_threshold, "shingles", id_col,
-                    # jac_cand is parquet-backed (run_stage), so the
-                    # triple-consume semijoin contract holds here
-                    semijoin=True,
-                ),
-                config_sig=csig,
-                deps=["signatures", "jaccard_candidates"],
-            )
-        )
-    if "phash" in channels and phash_col:
-        ph = meta.select(id_col, phash_col)
-        edge_parts.append(
-            store.run_stage(
-                "phash_edges",
-                lambda: hamming_candidate_pairs(
-                    ph, phash_col, cfg.phash_hamming_k, id_col, cfg,
-                    cache_registry=ham_caches),
-                config_sig=csig,
-            )
-        )
-    if "substring" in channels:
-        def lcs_fn():
-            fp = with_fingerprints(meta.select(id_col, caption_col), caption_col,
-                                   "fp", cfg)
-            fpx = fp.select(id_col, F.explode("fp").alias("fingerprint"))
-            small_cand, overflow = pairs_and_overflow(
-                fpx, ["fingerprint"], id_col, cfg, cap=cfg.max_fp_bucket_size
-            )
-            refined = refine_oversized(
-                overflow, meta.select(id_col, caption_col), cfg, id_col, caption_col
-            )
-            sub_cand = pairs_from_buckets(
-                refined, ["fingerprint", "subfp"], id_col, cfg,
-                cap=cfg.max_fp_bucket_size, oversize="star",
-            )
-            # sub_cand pairs share the literal L-char window string
-            # (refine_oversized, round 6) — verified by construction,
-            # so only the small-bucket candidates attach captions
-            verified = verify_lcs(small_cand, meta.select(id_col, caption_col),
-                                  cfg, caption_col, id_col)
-            return verified.unionByName(sub_cand).dropDuplicates(["a", "b"])
-
-        edge_parts.append(store.run_stage("lcs_edges", lcs_fn, config_sig=csig))
-
-    edge_stage_names = [
-        s for s, on in (
-            ("jaccard_edges", bool({"minhash", "simhash"} & set(channels))),
-            ("phash_edges", "phash" in channels and phash_col),
-            ("lcs_edges", "substring" in channels),
-        ) if on
-    ]
-
-    def edges_fn():
-        out = edge_parts[0]
-        for p in edge_parts[1:]:
-            out = out.unionByName(p)
-        return out.dropDuplicates(["a", "b"])
-
-    edges = store.run_stage("edges", edges_fn, config_sig=csig, deps=edge_stage_names)
-    for df in ham_caches:  # edge stages are parquet-backed now
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-    assignments = store.run_stage(
-        "assignments",
-        lambda: connected_components(edges, nodes=meta.select(id_col), id_col=id_col, cfg=cfg),
-        config_sig=csig,
-        deps=["edges"],
-    )
-
-    reps = store.run_stage(
-        "representatives",
-        lambda: select_reps(assignments, images=meta, strategy=cfg.rep_strategy,
-                            id_col=id_col, caption_col=caption_col),
-        config_sig=csig,
-        deps=["assignments"],
-    )
-
-    from .operators.pipeline import DedupResult
-
-    return DedupResult(
-        assignments=assignments,
-        representatives=reps,
-        edges=edges,
-        conflicts=None,
-        stats=cluster_stats(assignments),
-    )
+    return run_dedup_graph(images, cfg, on_disk, ham_caches, id_col,
+                           caption_col, phash_col, channels)

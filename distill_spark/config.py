@@ -97,24 +97,6 @@ class DedupConfig:
                                    # of localCheckpoint(); needs checkpoint_dir
     checkpoint_dir: str | None = None  # HDFS/S3 dir for reliable checkpoints
 
-    # --- scale-adaptive planning (round 4) ---
-    # "wide": slim per-column signature caches + member semi-join before
-    #         the verify attaches + eager localCheckpoint of the
-    #         multi-consumer candidate frames. Right at high parallelism
-    #         (real clusters, local[16+]): the eager materialization
-    #         barriers amortize and the attach becomes O(members).
-    # "narrow": one fat signature cache, no semi-join, broadcast-reused
-    #         candidate frames (round-3 shape). Right on a single box at
-    #         ANY thread count, where the extra serial job round-trips
-    #         and materialization passes cost more than they save
-    #         (round-4: +18-26% wall at local[4]; round-5 interleaved
-    #         bench-protocol A/B: wide also loses at local[32] —
-    #         BENCH.md round 5).
-    # "auto": "wide" iff the master is NOT local[*] (real executors
-    #         amortize the barriers and the semi-join keeps the verify
-    #         attach off the network; a single box never does).
-    scale_mode: str = "auto"
-
     extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:

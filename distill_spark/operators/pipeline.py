@@ -19,6 +19,11 @@ select representative (selector.go:68-238) -> stats. Our plan:
   -> connected components (hash-min + pointer jumping)
   -> representatives (deterministic window)
 
+The plan is written once, as an ordered list of named stages
+(`dedup_stages`), and run two ways: `dedupe()` builds each stage in
+place, and `checkpoint.dedupe_checkpointed()` sends each one through a
+CheckpointStore so a run resumes after its last completed stage.
+
 Recall budget: phash + substring channels are recall-1.0 by
 construction AT ANY BUCKET-SIZE DISTRIBUTION — oversized pigeonhole
 blocks recurse on remaining bits (hamming.py) and oversized winnowing
@@ -38,279 +43,301 @@ risk (c)).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DedupConfig, DEFAULT
 from .minhash import band_buckets
 from .signatures import with_signatures
 from .lsh import pairs_from_buckets, pairs_and_overflow
 from .hamming import hamming_candidate_pairs
-from .winnow import with_fingerprints, refine_oversized
+from .winnow import refine_oversized
 from .verify import verify_jaccard, verify_lcs, conflict_band
 from .components import connected_components
 from .select import representatives, cluster_stats
+
+log = logging.getLogger("distill_spark")
+
+CHANNELS = ("minhash", "simhash", "phash", "substring")
 
 
 @dataclass
 class DedupResult:
     assignments: DataFrame      # (image_id, component)
     representatives: DataFrame  # one row per component
-    edges: DataFrame            # verified dup pairs (a, b)
+    edges: DataFrame            # a spanning set of the verified dup pairs
+                                # (a, b); star hubs follow hashed-id order
     conflicts: DataFrame | None # band pairs (a, b, jaccard)
     stats: DataFrame            # 1-row counts/reduction
-    cached: DataFrame | None = None  # the persisted internal edge frame
+    cached: DataFrame | None = None  # the edges stage (int64 ids for
+                                # string-id inputs)
     aux_cached: tuple = ()      # other persisted internals (signatures,
-                                # candidate-pair frames)
+                                # Hamming refinement caches)
 
     def unpersist(self) -> None:
-        """Release the caches dedupe() created (edges + signature +
-        candidate stages); long sessions running many dedupe() calls
-        should call this. Note: eagerly localCheckpoint-ed internals
-        (the narrow-mode signature frame, candidate pair frames) are
-        block-backed RDDs, not catalog caches — their blocks are freed
-        by Spark's ContextCleaner once this result object is dropped;
-        unpersist() is a no-op for them by design."""
+        """Release the caches dedupe() created (edges, signatures and the
+        Hamming refinement caches); long sessions running many dedupe()
+        calls should call this. The signature frame is an eager
+        localCheckpoint, a block-backed RDD rather than a catalog cache:
+        Spark's ContextCleaner frees its blocks once this result object
+        is dropped, and unpersist() is a no-op for it."""
         for df in (self.cached, self.edges, *self.aux_cached):
             if df is not None:
                 try:
                     df.unpersist()
                 except Exception:
-                    pass
+                    log.debug("unpersist of a dedupe() frame failed",
+                              exc_info=True)
 
 
-def candidate_edges(
+@dataclass(frozen=True)
+class Stage:
+    """One named node of the dedup stage graph: `fn` takes the frames of
+    the `deps` stages, in order, and returns this stage's frame."""
+    name: str
+    deps: tuple[str, ...]
+    fn: Callable[..., DataFrame]
+
+
+def _distinct_pairs(frames) -> DataFrame:
+    """Union of (a, b) pair frames, each pair once."""
+    return reduce(lambda x, y: x.unionByName(y), frames).dropDuplicates(["a", "b"])
+
+
+def _original_ids(pairs: DataFrame, idmap: DataFrame, id_col: str,
+                  *keep: str) -> DataFrame:
+    """Map an int64-id pair frame (a, b, *keep) back to original ids."""
+    return (
+        pairs.join(
+            idmap.select(F.col("__iid").alias("a"), F.col(id_col).alias("__sa")), "a"
+        )
+        .join(
+            idmap.select(F.col("__iid").alias("b"), F.col(id_col).alias("__sb")), "b"
+        )
+        .select(
+            F.least("__sa", "__sb").alias("a"),
+            F.greatest("__sa", "__sb").alias("b"),
+            *keep,
+        )
+    )
+
+
+def dedup_stages(
     meta: DataFrame,
-    cfg: DedupConfig = DEFAULT,
+    meta_i: DataFrame,
+    idmap: DataFrame | None,
+    cfg: DedupConfig,
+    id_col: str,
+    caption_col: str,
+    phash_col: str | None,
+    channels: tuple[str, ...],
+    rep_strategy: str,
+    cache_registry: list[DataFrame],
+) -> list[Stage]:
+    """The dedup stage graph, in run order:
+
+      signatures -> jaccard_candidates -> jaccard_edges
+      phash_edges
+      signatures -> lcs_edges
+      {jaccard,phash,lcs}_edges -> edges -> assignments -> representatives
+
+    `meta` holds the original ids, `meta_i` the ids the channels run on
+    (int64 hashes of string ids) and `idmap` maps one to the other (None
+    for integral ids). Hamming refinement caches are appended to
+    `cache_registry` for the runner to release."""
+    caption_channels = tuple(c for c in ("minhash", "simhash") if c in channels)
+    substring = "substring" in channels
+    stages: list[Stage] = []
+
+    if caption_channels or substring:
+        # one vectorized Arrow pass computes shingles + minhash + simhash
+        # and the substring channel's winnowing fingerprints, with shared
+        # tokenization/lowercasing, entirely map-side (no shuffle)
+        parts = ("shingles",) + caption_channels if caption_channels else ()
+        if substring:
+            parts += ("winnow",)
+        stages.append(Stage("signatures", (), lambda: with_signatures(
+            meta_i, caption_col, id_col, cfg, parts=parts)))
+
+    if caption_channels:
+        def jaccard_candidates(sigs: DataFrame) -> DataFrame:
+            cands = []
+            if "minhash" in channels:
+                buckets = band_buckets(
+                    sigs.filter(F.col("minhash").isNotNull()).select(id_col, "minhash"),
+                    "minhash", id_col, cfg,
+                )
+                # dedup=False: the unioned candidate stream is
+                # deduplicated once below — one pair shuffle, not two
+                cands.append(
+                    pairs_from_buckets(buckets, ["bucket"], id_col, cfg, dedup=False)
+                )
+            if "simhash" in channels:
+                cands.append(hamming_candidate_pairs(
+                    sigs.filter(F.col("simhash").isNotNull()).select(id_col, "simhash"),
+                    "simhash", cfg.simhash_hamming_k, id_col, cfg,
+                    cache_registry=cache_registry,
+                ))
+            return _distinct_pairs(cands)
+
+        stages.append(Stage("jaccard_candidates", ("signatures",), jaccard_candidates))
+        stages.append(Stage(
+            "jaccard_edges", ("signatures", "jaccard_candidates"),
+            lambda sigs, cand: verify_jaccard(
+                cand, sigs.select(id_col, "shingles"), cfg.jaccard_threshold,
+                "shingles", id_col,
+            ),
+        ))
+
+    if "phash" in channels and phash_col is not None:
+        # the Hamming channels verify inside their pair expansion
+        stages.append(Stage("phash_edges", (), lambda: hamming_candidate_pairs(
+            meta_i.select(id_col, phash_col), phash_col, cfg.phash_hamming_k,
+            id_col, cfg, cache_registry=cache_registry,
+        )))
+
+    if substring:
+        def lcs_edges(sigs: DataFrame) -> DataFrame:
+            fpx = sigs.select(id_col, F.explode("fps").alias("fingerprint"))
+            captions = meta_i.select(id_col, caption_col)
+            # recall-preserving skew handling: small buckets all-pairs;
+            # oversized buckets (popular boilerplate fingerprints) refine
+            # to full-L-char-window sub-buckets where star topology is
+            # provably safe (winnow.refine_oversized docstring)
+            small_cand, overflow = pairs_and_overflow(
+                fpx, ["fingerprint"], id_col, cfg, cap=cfg.max_fp_bucket_size
+            )
+            refined = refine_oversized(overflow, captions, cfg, id_col, caption_col)
+            sub_cand = pairs_from_buckets(
+                refined, ["fingerprint", "subfp"], id_col, cfg,
+                cap=cfg.max_fp_bucket_size, oversize="star",
+            )
+            # sub_cand pairs share the LITERAL L-char window string
+            # (refine_oversized emits the window itself as the sub-bucket
+            # key), so string equality IS the LCS predicate and these
+            # pairs are exactly verified by construction. The caption
+            # attach + Arrow LCS stage runs ONLY on the small-bucket
+            # candidates (where a shared k-gram < L chars is genuinely
+            # weaker evidence than the predicate).
+            return sub_cand.unionByName(
+                verify_lcs(small_cand, captions, cfg, caption_col, id_col)
+            )
+
+        stages.append(Stage("lcs_edges", ("signatures",), lcs_edges))
+
+    edge_stages = tuple(s.name for s in stages if s.name.endswith("_edges"))
+    if not edge_stages:
+        raise ValueError("no channels enabled")
+    stages.append(Stage("edges", edge_stages, lambda *parts: _distinct_pairs(parts)))
+
+    def assignments(edges: DataFrame) -> DataFrame:
+        if idmap is None:
+            return connected_components(
+                edges, nodes=meta.select(id_col), id_col=id_col, cfg=cfg
+            )
+        # CC over edge-touching nodes only, in int space; only the
+        # (small, dup-population-sized) edge-touching assignments are
+        # mapped back with joins, and the singleton majority gets its
+        # component via one broadcastable left join
+        cc = connected_components(edges, nodes=None, id_col="__iid",
+                                  out_col="__icomp", cfg=cfg).join(idmap, "__iid")
+        names = cc.groupBy("__icomp").agg(F.min(id_col).alias("__comp_name"))
+        edge_assign = cc.join(names, "__icomp").select(
+            id_col, F.col("__comp_name").alias("component")
+        )
+        return (
+            meta.select(id_col)
+            .join(edge_assign, id_col, "left")
+            .select(id_col, F.coalesce("component", F.col(id_col)).alias("component"))
+        )
+
+    stages.append(Stage("assignments", ("edges",), assignments))
+    stages.append(Stage("representatives", ("assignments",), lambda a: representatives(
+        a, images=meta, strategy=rep_strategy, id_col=id_col, caption_col=caption_col,
+    )))
+    return stages
+
+
+def run_dedup_graph(
+    images: DataFrame,
+    cfg: DedupConfig,
+    materialize: Callable[[Stage, Callable[[], DataFrame]], DataFrame],
+    cache_registry: list[DataFrame],
     id_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str | None = "phash",
-    channels: tuple[str, ...] = ("minhash", "simhash", "phash", "substring"),
-) -> tuple[DataFrame, DataFrame, DataFrame | None, list[DataFrame]]:
-    """meta(id, caption[, phash]) -> (verified edges(a,b), jaccard
-    candidates, shingles(id, shingles), persisted internals).
+    channels: tuple[str, ...] = CHANNELS,
+    rep_strategy: str | None = None,
+    with_conflicts: bool = False,
+) -> DedupResult:
+    """Run `dedup_stages` in order and assemble the DedupResult. Each
+    stage's frame is `materialize(stage, compute)`, where compute()
+    builds the stage from its dependencies' frames.
 
-    Returns the union of exact-verified edges from all enabled channels,
-    the raw caption-channel candidate set and the signature pass's
-    shingle frame (both for conflict banding; shingles is None when no
-    caption channel runs), and every frame persisted on the way (for
-    DedupResult.unpersist).
-    """
-    need_caption_channels = {"minhash", "simhash"} & set(channels)
-    # scale-adaptive plan shape (config.scale_mode): "wide" amortizes
-    # eager materialization barriers + member semi-joins across real
-    # executors; "narrow" is the fewer-round-trip round-3 shape.
-    # auto = wide only on a NON-local master: on a single box every
-    # extra serial materialization job is a driver round-trip on a
-    # shared memory bus (BENCH.md round 5), while on a multi-executor
-    # cluster the semi-join restriction is what keeps the verify attach
-    # off the network. `local[N]` / `local` only — NOT
-    # `local-cluster[...]`, which runs real executors with network
-    # shuffle and should take the wide shape.
-    import re as _re
+    Contract: assignments and representatives do not depend on the id
+    mapping — components are labeled by their min ORIGINAL id. `edges`
+    is a spanning set of the verified pairs, not every verified pair:
+    oversized winnow sub-buckets and LSH buckets expand as stars around
+    the bucket-min id, and for string ids that is the min int64 hash, so
+    which pairs appear follows the hashed-id order."""
+    # column-pruning discipline: only (id, caption, phash) go downstream
+    cols = [id_col, caption_col] + ([phash_col] if phash_col else [])
+    meta = images.select(*cols)
 
-    master = meta.sparkSession.sparkContext.master
-    wide = cfg.scale_mode == "wide" or (
-        cfg.scale_mode == "auto"
-        and _re.match(r"local(\[|$)", master) is None
+    # shuffle-bytes discipline: hash string ids to int64 at ingest so
+    # every exchange in the candidate/verify/CC stages moves 8 B longs,
+    # not strings. xxhash64 is deterministic, so the id map is DERIVABLE
+    # — nothing to materialize. A hash collision falsely merges two ids
+    # with probability ~N^2/2^65 (~3e-8 at 1M rows), the budget the
+    # engine already accepts for hashed shingles. Integral ids are used
+    # as they are.
+    if isinstance(meta.schema[id_col].dataType, T.StringType):
+        meta_i = meta.withColumn(id_col, F.xxhash64(F.col(id_col)))
+        idmap = meta.select(id_col, F.xxhash64(F.col(id_col)).alias("__iid"))
+    else:
+        meta_i, idmap = meta, None
+
+    out: dict[str, DataFrame] = {}
+    for stage in dedup_stages(
+        meta, meta_i, idmap, cfg, id_col, caption_col, phash_col, channels,
+        rep_strategy or cfg.rep_strategy, cache_registry,
+    ):
+        out[stage.name] = materialize(
+            stage, lambda s=stage: s.fn(*(out[d] for d in s.deps))
+        )
+
+    edges_i, assignments = out["edges"], out["assignments"]
+    conflicts = None
+    if with_conflicts:
+        if "jaccard_candidates" in out:
+            jac_cand = out["jaccard_candidates"]
+            shingled = out["signatures"].select(id_col, "shingles")
+        else:  # no caption channel ran: empty candidates, own shingle pass
+            id_sql_type = meta_i.schema[id_col].dataType.simpleString()
+            jac_cand = meta.sparkSession.createDataFrame(
+                [], f"a {id_sql_type}, b {id_sql_type}"
+            )
+            shingled = with_signatures(meta_i, caption_col, id_col, cfg,
+                                       parts=("shingles",))
+        conflicts = conflict_band(jac_cand, shingled, cfg, "shingles", id_col)
+        if idmap is not None:
+            conflicts = _original_ids(conflicts, idmap, id_col, "jaccard")
+
+    return DedupResult(
+        assignments=assignments,
+        representatives=out["representatives"],
+        edges=edges_i if idmap is None else _original_ids(edges_i, idmap, id_col),
+        conflicts=conflicts,
+        stats=cluster_stats(assignments),
+        cached=edges_i,
+        aux_cached=tuple(cache_registry),
     )
-
-    # aux_cached collects EVERY persisted internal (signature caches +
-    # the hamming per-level refinement frames) so DedupResult.unpersist
-    # can release them — long-lived sessions calling dedupe() repeatedly
-    # no longer leak cached frames (round-5 advice #1)
-    aux_cached: list[DataFrame] = []
-    shingled = minhash_sig = simhash_sig = fps_src = None
-    if need_caption_channels:
-        # one vectorized Arrow pass computes shingles + minhash + simhash
-        # (+ the substring channel's winnowing fingerprints, so there is
-        # one caption scan instead of two) with shared tokenization/
-        # lowercasing, entirely map-side (no shuffle)
-        parts = ["shingles"]
-        if "minhash" in channels:
-            parts.append("minhash")
-        if "simhash" in channels:
-            parts.append("simhash")
-        merge_winnow = "substring" in channels
-        if merge_winnow:
-            parts.append("winnow")
-        sigs = with_signatures(meta, caption_col, id_col, cfg, parts=tuple(parts))
-        # the signature pass is the expensive stage and feeds many
-        # consumers (banding x2 branches, ~11 reads by the recursive
-        # simhash pigeonhole, jaccard verify x3). Round-4 bandwidth fix:
-        # materialize the fat frame ONCE, then split it into SLIM
-        # per-column persisted frames and drop the fat cache — each
-        # consumer scan then moves only the bytes of its own column
-        # (the 24 B/row simhash reads stop dragging the ~2 KB/row
-        # shingle+minhash payload through the memory bus on every one
-        # of the ~16 downstream cache scans; measured 38.9 -> ~8 GB of
-        # input traffic at 1M rows).
-        if wide and "simhash" in channels:
-            sigs = sigs.persist()
-            # the first slim count materializes the fat cache as a side
-            # effect (an InMemoryRelation stores whole rows per
-            # partition on first scan), so no separate sigs.count()
-            shingled = sigs.select(id_col, "shingles").persist()
-            shingled.count()
-            if "minhash" in channels:
-                minhash_sig = (
-                    sigs.filter(F.col("minhash").isNotNull())
-                    .select(id_col, "minhash").persist()
-                )
-                minhash_sig.count()
-            simhash_sig = (
-                sigs.filter(F.col("simhash").isNotNull())
-                .select(id_col, "simhash").persist()
-            )
-            simhash_sig.count()
-            if merge_winnow:
-                fps_src = sigs.select(id_col, "fps").persist()
-                fps_src.count()
-            sigs.unpersist()
-            # the split caches own the data
-            aux_cached.extend(
-                df for df in (shingled, minhash_sig, simhash_sig, fps_src)
-                if df is not None
-            )
-        else:
-            # narrow mode, or no simhash channel: serve all consumers
-            # off ONE eagerly-materialized signature frame. This is a
-            # localCheckpoint, not persist+count, for two reasons found
-            # in the round-6 stage timelines: (a) a lazy persist's ~5
-            # independent AQE consumer subtrees race to build the cache
-            # and each re-runs the full Arrow signature scan (five
-            # concurrent copies of the same 22-task stage, ~23 s of the
-            # sf0.1 wall); (b) far worse, AQE NEVER reuses an exchange
-            # whose lineage contains a Python map node — mapInPandas
-            # does not canonicalize, so two branches consuming the same
-            # bucket exchange each re-executed it EVEN THROUGH a
-            # materialized cache (minimal repro: a window-sized union
-            # over a cached mapInPandas source runs its 15 MB exchange
-            # once per branch; over a localCheckpoint it runs once).
-            # Truncating the lineage to an RDD scan restores exchange
-            # reuse for every downstream shuffle in the pipeline.
-            sigs = sigs.localCheckpoint(eager=True)
-            aux_cached.append(sigs)
-            fps_src = sigs if merge_winnow else None
-            shingled = sigs.select(id_col, "shingles")
-            minhash_sig = (
-                sigs.filter(F.col("minhash").isNotNull()).select(id_col, "minhash")
-                if "minhash" in channels
-                else None
-            )
-            simhash_sig = (
-                sigs.filter(F.col("simhash").isNotNull()).select(id_col, "simhash")
-                if "simhash" in channels
-                else None
-            )
-
-    edge_parts: list[DataFrame] = []
-    cap_candidates: list[DataFrame] = []
-    if minhash_sig is not None:
-        buckets = band_buckets(minhash_sig, "minhash", id_col, cfg)
-        # dedup=False: jac_cand dropDuplicates one step below already
-        # deduplicates the unioned candidate stream — one pair shuffle
-        # instead of two (guide §2.4)
-        cap_candidates.append(
-            pairs_from_buckets(buckets, ["bucket"], id_col, cfg, dedup=False)
-        )
-    if simhash_sig is not None:
-        cap_candidates.append(hamming_candidate_pairs(
-            simhash_sig, "simhash", cfg.simhash_hamming_k, id_col, cfg,
-            cache_registry=aux_cached,
-        ))
-    jac_cand = None
-    if cap_candidates:
-        jac_cand = cap_candidates[0]
-        for c in cap_candidates[1:]:
-            jac_cand = jac_cand.unionByName(c)
-        # wide mode: eagerly materialized via localCheckpoint, because
-        # the semi-join verify attach consumes the pair frame three
-        # times (member semi-join + both joins). A lazy persist is NOT
-        # enough — AQE launches the consumer subtrees concurrently and
-        # each raced to build the cache, re-running the whole candidate
-        # DAG per consumer (measured: the 32M-row bucket exchange
-        # executed 6x instead of 2x); and even persist+count proved
-        # evictable mid-query at 1M rows. localCheckpoint truncates the
-        # lineage, so consumers can only ever scan the (tiny)
-        # materialized pair blocks. On a real cluster an executor loss
-        # during the candidate phase then fails the job loudly instead
-        # of recomputing — acceptable for a frame this small;
-        # cfg.cc_reliable_checkpoint covers the long-lived CC state.
-        jac_cand = jac_cand.dropDuplicates(["a", "b"])
-        if wide:
-            jac_cand = jac_cand.localCheckpoint(eager=True)
-        edge_parts.append(
-            verify_jaccard(
-                jac_cand, shingled, cfg.jaccard_threshold, "shingles",
-                id_col, semijoin=wide,
-            )
-        )
-
-    if "phash" in channels and phash_col is not None:
-        edge_parts.append(hamming_candidate_pairs(
-            meta.select(id_col, phash_col), phash_col, cfg.phash_hamming_k,
-            id_col, cfg, cache_registry=aux_cached,
-        ))
-
-    if "substring" in channels:
-        if fps_src is not None:
-            # fingerprints already computed by the one-pass signature
-            # stage (merge_winnow) — explode off the cache instead of
-            # running a second Arrow caption scan
-            fpx = fps_src.select(id_col, F.explode("fps").alias("fingerprint"))
-        else:
-            fp = with_fingerprints(meta.select(id_col, caption_col),
-                                   caption_col, "fp", cfg)
-            fpx = fp.select(id_col, F.explode("fp").alias("fingerprint"))
-        # recall-preserving skew handling: small buckets all-pairs;
-        # oversized buckets (popular boilerplate fingerprints) refine to
-        # full-L-char-window sub-buckets where star topology is provably
-        # safe (winnow.refine_oversized docstring) — no silent pair loss
-        small_cand, overflow = pairs_and_overflow(
-            fpx, ["fingerprint"], id_col, cfg, cap=cfg.max_fp_bucket_size
-        )
-        refined = refine_oversized(
-            overflow, meta.select(id_col, caption_col), cfg, id_col, caption_col
-        )
-        sub_cand = pairs_from_buckets(
-            refined, ["fingerprint", "subfp"], id_col, cfg,
-            cap=cfg.max_fp_bucket_size, oversize="star",
-        )
-        # sub_cand pairs share the LITERAL L-char window string
-        # (refine_oversized emits the window itself as the sub-bucket
-        # key), so string equality IS the LCS predicate and these pairs
-        # are exactly verified by construction. They go straight to the
-        # edge set; the caption attach + Arrow LCS stage runs ONLY on
-        # the small-bucket candidates (where a shared k-gram < L chars
-        # is genuinely weaker evidence than the predicate). Dup-dense
-        # corpora concentrate pairs in oversized buckets, which is
-        # exactly where the 10M probe's 45 GB verify attach came from.
-        edge_parts.append(sub_cand)
-        cand = small_cand
-        # eagerly materialized for the same multi-consumer reuse
-        # reasons as jac_cand above
-        if wide:
-            cand = cand.localCheckpoint(eager=True)
-        edge_parts.append(
-            verify_lcs(cand, meta.select(id_col, caption_col), cfg,
-                       caption_col, id_col, semijoin=wide)
-        )
-
-    if not edge_parts:
-        raise ValueError("no channels enabled")
-    edges = edge_parts[0]
-    for e in edge_parts[1:]:
-        edges = edges.unionByName(e)
-    edges = edges.dropDuplicates(["a", "b"])
-    if jac_cand is None:
-        id_sql_type = meta.schema[id_col].dataType.simpleString()
-        jac_cand = meta.sparkSession.createDataFrame(
-            [], f"a {id_sql_type}, b {id_sql_type}"
-        )
-    return edges, jac_cand, shingled, aux_cached
 
 
 def dedupe(
@@ -319,115 +346,40 @@ def dedupe(
     id_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str | None = "phash",
-    channels: tuple[str, ...] = ("minhash", "simhash", "phash", "substring"),
+    channels: tuple[str, ...] = CHANNELS,
     rep_strategy: str | None = None,
     with_conflicts: bool = False,
 ) -> DedupResult:
-    from pyspark.sql import types as T
+    """The dedup stage graph built in place: `signatures` is an eager
+    localCheckpoint, `edges` is persisted, every other stage stays lazy.
+    See run_dedup_graph for the output contract."""
+    cache_registry: list[DataFrame] = []
 
-    # column-pruning discipline: only (id, caption, phash) go downstream
-    cols = [id_col, caption_col] + ([phash_col] if phash_col else [])
-    meta = images.select(*cols)
+    def in_place(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
+        df = compute()
+        if stage.name == "signatures":
+            # the signature frame feeds many consumers (banding, the
+            # recursive simhash pigeonhole, jaccard verify, winnowing).
+            # localCheckpoint, not persist+count, for two reasons found
+            # in the round-6 stage timelines: (a) a lazy persist's ~5
+            # independent AQE consumer subtrees race to build the cache
+            # and each re-runs the full Arrow signature scan; (b) far
+            # worse, AQE NEVER reuses an exchange whose lineage contains
+            # a Python map node — mapInPandas does not canonicalize, so
+            # two branches consuming the same bucket exchange each
+            # re-executed it EVEN THROUGH a materialized cache.
+            # Truncating the lineage to an RDD scan restores exchange
+            # reuse for every downstream shuffle in the pipeline.
+            df = df.localCheckpoint(eager=True)
+            cache_registry.append(df)
+        elif stage.name == "edges":
+            # edges feed CC (which materializes them) AND are part of the
+            # result — persist so user actions on result.edges don't
+            # re-run the whole candidate+verify DAG
+            df = df.persist()
+        return df
 
-    # shuffle-bytes discipline (round 3): hash string ids to int64 at
-    # ingest so every exchange in the candidate/verify/CC stages moves
-    # 8 B longs, not strings. xxhash64 is deterministic, so the id map
-    # is DERIVABLE — nothing to materialize — and only the (small,
-    # dup-population-sized) edge-touching assignments are mapped back
-    # with joins; the singleton majority gets its component via one
-    # broadcastable left join. Outputs match running on the original
-    # ids: the edge SET is order-independent (recall-1 channels are
-    # set-exact; the LSH channel's band union rescues any star-capped
-    # bucket) and components are relabeled to the min ORIGINAL id. A
-    # hash collision falsely merges two ids with probability ~N^2/2^65
-    # (~3e-8 at 1M rows), the budget the engine already accepts for
-    # hashed shingles. Integral ids are used as they are.
-    use_int = isinstance(meta.schema[id_col].dataType, T.StringType)
-    meta_i = (
-        meta.withColumn(id_col, F.xxhash64(F.col(id_col))) if use_int else meta
-    )
-
-    edges_i, jac_cand, shingled, aux_cached = candidate_edges(
-        meta_i, cfg, id_col, caption_col, phash_col, channels
-    )
-    # edges feed CC (which materializes them via checkpoint) AND are part of
-    # the result — persist so user actions on result.edges don't re-run the
-    # whole candidate+verify DAG.
-    edges_i = edges_i.persist()
-
-    if use_int:
-        idmap = meta.select(id_col, F.xxhash64(F.col(id_col)).alias("__iid"))
-        # CC over edge-touching nodes only, in int space
-        cc_edge = connected_components(edges_i, nodes=None, id_col="__iid",
-                                       out_col="__icomp", cfg=cfg)
-        cc_s = cc_edge.join(idmap, "__iid")
-        comp_names = cc_s.groupBy("__icomp").agg(
-            F.min(id_col).alias("__comp_name")
-        )
-        edge_assign = cc_s.join(comp_names, "__icomp").select(
-            id_col, F.col("__comp_name").alias("component")
-        )
-        assignments = (
-            meta.select(id_col)
-            .join(edge_assign, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("component", F.col(id_col)).alias("component"),
-            )
-        )
-        edges = (
-            edges_i.join(
-                idmap.select(F.col("__iid").alias("a"), F.col(id_col).alias("__sa")), "a"
-            )
-            .join(
-                idmap.select(F.col("__iid").alias("b"), F.col(id_col).alias("__sb")), "b"
-            )
-            .select(
-                F.least("__sa", "__sb").alias("a"),
-                F.greatest("__sa", "__sb").alias("b"),
-            )
-        )
-    else:
-        assignments = connected_components(
-            edges_i, nodes=meta.select(id_col), id_col=id_col, cfg=cfg
-        )
-        edges = edges_i
-
-    reps = representatives(
-        assignments,
-        images=meta,
-        strategy=rep_strategy or cfg.rep_strategy,
-        id_col=id_col,
-        caption_col=caption_col,
-    )
-
-    conflicts = None
-    if with_conflicts:
-        if shingled is None:  # no caption channel ran a signature pass
-            shingled = with_signatures(meta_i, caption_col, id_col, cfg,
-                                       parts=("shingles",))
-        conflicts = conflict_band(jac_cand, shingled, cfg, "shingles", id_col)
-        if use_int:
-            conflicts = (
-                conflicts.join(
-                    idmap.select(F.col("__iid").alias("a"), F.col(id_col).alias("__sa")), "a"
-                )
-                .join(
-                    idmap.select(F.col("__iid").alias("b"), F.col(id_col).alias("__sb")), "b"
-                )
-                .select(
-                    F.least("__sa", "__sb").alias("a"),
-                    F.greatest("__sa", "__sb").alias("b"),
-                    "jaccard",
-                )
-            )
-
-    return DedupResult(
-        assignments=assignments,
-        representatives=reps,
-        edges=edges,
-        conflicts=conflicts,
-        stats=cluster_stats(assignments),
-        cached=edges_i,
-        aux_cached=tuple(aux_cached),
+    return run_dedup_graph(
+        images, cfg, in_place, cache_registry, id_col, caption_col, phash_col,
+        channels, rep_strategy, with_conflicts,
     )

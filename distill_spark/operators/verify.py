@@ -25,31 +25,10 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig, DEFAULT
 
 
-def _attach(pairs: DataFrame, feats: DataFrame, id_col: str, col: str,
-            semijoin: bool = False) -> DataFrame:
-    """Join the per-id feature column onto both pair sides.
-
-    semijoin=True (the "wide" scale mode): the feature table is first
-    SEMI-JOINED to the candidate members (distinct ids appearing in
-    pairs) — candidates touch only the dup population, so the attach
-    cost becomes O(members), not O(corpus); at real-corpus dup
-    densities the restricted frame broadcasts and the per-pair feature
-    payload leaves the shuffle entirely. The caller MUST pass an
-    eagerly-materialized (localCheckpoint / parquet-backed) `pairs`
-    frame — it is consumed three times, so a lazy frame would re-run
-    its whole candidate DAG 3x. That contract is why the PUBLIC
-    default is False (round-4 advice): only the wide pipeline path,
-    which materializes pairs first, opts in.
-
-    semijoin=False (the default / "narrow" mode): plain two-sided
-    attach; the pair frame is consumed twice and AQE's broadcast reuse
-    materializes it once — fewer serial job round-trips, which wins at
-    low parallelism (see config.scale_mode)."""
-    if semijoin:
-        members = (
-            pairs.select(F.explode(F.array("a", "b")).alias(id_col)).distinct()
-        )  # one explode, not a 2-branch union: pairs' lineage runs once
-        feats = feats.join(members, id_col, "left_semi")
+def _attach(pairs: DataFrame, feats: DataFrame, id_col: str, col: str) -> DataFrame:
+    """Join the per-id feature column onto both pair sides; the pair
+    frame is consumed twice and AQE's broadcast reuse materializes it
+    once."""
     fa = feats.select(F.col(id_col).alias("a"), F.col(col).alias(f"_{col}_a"))
     fb = feats.select(F.col(id_col).alias("b"), F.col(col).alias(f"_{col}_b"))
     return pairs.join(fa, "a").join(fb, "b")
@@ -70,13 +49,12 @@ def verify_jaccard(
     keep_score: bool = False,
     semijoin: bool = False,
 ) -> DataFrame:
-    """Keep (a, b) with exact shingle-set Jaccard >= threshold.
-
-    semijoin=True requires `pairs` to be eagerly materialized (see
-    _attach) — opt in only when you have checkpointed/persisted it."""
+    """Keep (a, b) with exact shingle-set Jaccard >= threshold."""
+    # `semijoin` kept for the traced benchmark sequence until a benchmark change drops it
+    if semijoin:
+        raise ValueError("verify_jaccard: semijoin must be False")
     j = jaccard_col(F.col(f"_{shingle_col}_a"), F.col(f"_{shingle_col}_b"))
-    out = _attach(pairs, shingled, id_col, shingle_col,
-                  semijoin=semijoin).withColumn("jaccard", j)
+    out = _attach(pairs, shingled, id_col, shingle_col).withColumn("jaccard", j)
     out = out.filter(F.col("jaccard") >= threshold)
     return out.select("a", "b", "jaccard") if keep_score else out.select("a", "b")
 
@@ -123,8 +101,11 @@ def verify_lcs(
     # `impl` kept for the traced benchmark sequence until a benchmark change drops it
     if impl != "exact":
         raise ValueError(f"verify_lcs: unknown impl {impl!r} (only 'exact')")
+    # `semijoin` kept for the traced benchmark sequence until a benchmark change drops it
+    if semijoin:
+        raise ValueError("verify_lcs: semijoin must be False")
     cap = captions.select(id_col, F.col(caption_col).alias("cap"))
-    attached = _attach(pairs, cap, id_col, "cap", semijoin=semijoin)
+    attached = _attach(pairs, cap, id_col, "cap")
     min_len, lower = cfg.lcs_min_len, cfg.lowercase
 
     def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -3,8 +3,8 @@
 collects.
 
 Three write primitives over a plain-filesystem parquet directory — on a
-cluster each maps 1:1 onto an Iceberg operation (the jars are not in
-this image, see checkpoint.IcebergBackend):
+cluster each maps 1:1 onto an Iceberg operation (the Iceberg jars are
+not bundled):
 
   publish_dir        full overwrite        -> CREATE OR REPLACE
   append_dir         file move-in append   -> transactional APPEND

@@ -7,14 +7,17 @@ completed status drives skip-on-resume.
 """
 
 import json
+import logging
 import os
 import shutil
 
 import pytest
 
-from distill_spark.checkpoint import CheckpointStore, dedupe_checkpointed
+from distill_spark.checkpoint import (CheckpointStore, dedupe_checkpointed,
+                                      input_signature)
 from distill_spark.config import DedupConfig
 from distill_spark.datagen import generate_images
+from distill_spark.operators import dedupe
 
 CFG = DedupConfig()
 ALL_STAGES = [
@@ -95,3 +98,66 @@ def test_config_change_invalidates_downstream(spark, images, tmp_path):
     dedupe_checkpointed(images, store2, cfg2).assignments.count()
     assert "jaccard_edges" in store2.computed, "changed config must recompute"
     assert not store2.hits, "config signature covers every stage"
+
+
+def _outputs(res):
+    return (
+        sorted((r["image_id"], r["component"]) for r in res.assignments.collect()),
+        sorted(tuple(r) for r in res.representatives.collect()),
+        sorted((r["a"], r["b"]) for r in res.edges.collect()),
+    )
+
+
+def test_checkpointed_matches_dedupe(spark, tmp_path):
+    """dedupe() and dedupe_checkpointed() run one stage graph: the same
+    assignments, representatives and edge set (star hubs included) on
+    string ids, and the same assignments on the rows re-keyed by integer
+    ids."""
+    df, _ = generate_images(spark, n=800, seed=21)
+    meta = df.select("image_id", "caption", "phash").cache()
+    meta.count()
+    plain = dedupe(meta)
+    try:
+        want = _outputs(plain)
+    finally:
+        plain.unpersist()
+    got = _outputs(dedupe_checkpointed(
+        meta, CheckpointStore(str(tmp_path / "s"), spark), CFG))
+    assert got[0] == want[0]
+    assert got[1] == want[1]
+    assert want[2], "fixture must produce edges"
+    assert got[2] == want[2]
+
+    rank = {r["image_id"]: i for i, r in
+            enumerate(meta.select("image_id").orderBy("image_id").collect())}
+    ipdf = meta.toPandas()
+    ipdf["image_id"] = ipdf["image_id"].map(rank).astype("int64")
+    imeta = spark.createDataFrame(ipdf).cache()
+    imeta.count()
+    plain = dedupe(imeta)
+    try:
+        want_i = _outputs(plain)[0]
+    finally:
+        plain.unpersist()
+    got_i = _outputs(dedupe_checkpointed(
+        imeta, CheckpointStore(str(tmp_path / "i"), spark), CFG))[0]
+    assert got_i == want_i
+    assert got_i == sorted((rank[i], rank[c]) for i, c in want[0])
+    imeta.unpersist()
+    meta.unpersist()
+
+
+def test_input_signature_warns_when_plan_hash_fails(spark, monkeypatch, caplog):
+    """A frame whose semanticHash() fails still gets a fingerprint, but
+    the degradation is logged rather than silent."""
+    df = spark.createDataFrame([(1, "a")], "id long, caption string")
+
+    def boom(self):
+        raise RuntimeError("no plan hash")
+
+    monkeypatch.setattr(type(df), "semanticHash", boom)
+    with caplog.at_level(logging.WARNING, logger="distill_spark"):
+        sig = input_signature(df)
+    assert sig
+    assert any("semanticHash" in r.getMessage() and r.levelno == logging.WARNING
+               for r in caplog.records)

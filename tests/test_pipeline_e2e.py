@@ -228,29 +228,3 @@ def test_conflicts_band_matches_oracle(spark):
         assert CFG.conflict_jaccard <= j < CFG.jaccard_threshold
     assert set(in_band) <= set(got)
     assert not set(out_band) & set(got)
-
-
-def test_scale_modes_output_identical(spark):
-    """Round-4: the "wide" plan shape (slim sig caches + member
-    semi-join + eager candidate checkpoints) and the "narrow" shape
-    (round-3: fat cache, broadcast-reused candidates) are pure physical
-    re-plans — assignments and edges must be identical."""
-    from dataclasses import replace
-
-    from distill_spark.config import DedupConfig
-    from distill_spark.datagen import generate_images
-    from distill_spark.operators import dedupe
-
-    df, _ = generate_images(spark, n=800, seed=21)
-    meta = df.select("image_id", "caption", "phash").cache()
-    meta.count()
-    out = {}
-    for mode in ("narrow", "wide"):
-        r = dedupe(meta, replace(DedupConfig(), scale_mode=mode))
-        out[mode] = (
-            {(x["image_id"], x["component"]) for x in r.assignments.collect()},
-            {(x["a"], x["b"]) for x in r.edges.collect()},
-        )
-        r.unpersist()
-    meta.unpersist()
-    assert out["wide"] == out["narrow"]
