@@ -40,7 +40,7 @@ from distill_spark.functions.vectors import (
     embedding_near_dup_pairs,
 )
 from distill_spark.operators import dedupe
-from distill_spark.operators.hamming import hamming_candidate_pairs, verify_hamming, hamming_dist
+from distill_spark.operators.hamming import hamming_candidate_pairs, hamming_dist
 
 # ---------------------------------------------------------------- helpers
 
@@ -466,15 +466,15 @@ def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_phash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming-ball join via pigeonhole blocks + exact verify — equals
-    brute force exactly (recall 1.0 by construction), so SQL-checkable."""
+    """Hamming-ball join via pigeonhole blocks, each pair verified where
+    it is generated — equals brute force exactly (recall 1.0 by
+    construction), so SQL-checkable."""
     ph = _phash_table(spark, sf_dir)
-    cand = hamming_candidate_pairs(ph, "phash", 4, id_col="id")
-    verified = verify_hamming(cand, ph, "phash", 4, id_col="id")
+    pairs = hamming_candidate_pairs(ph, "phash", 4, id_col="id")
     va = ph.select(F.col("id").alias("a"), F.col("phash").alias("pa"))
     vb = ph.select(F.col("id").alias("b"), F.col("phash").alias("pb"))
     return (
-        verified.join(va, "a")
+        pairs.join(va, "a")
         .join(vb, "b")
         .select("a", "b", hamming_dist(F.col("pa"), F.col("pb")).cast("long").alias("dist"))
     )

@@ -4,9 +4,8 @@ Reference: pkg/memory/store.go + pkg/memory/sqlite.go in
 /root/reference. The reference probes EVERY new entry against ALL
 stored embeddings with an early-exit linear scan
 (sqlite.go:243-279 — the author's own TODO asks for an ANN index);
-we replace it with the canonical Spark formulation: a batched
-MinHash-LSH anti-join of the incoming batch against the stored
-signature table. Semantics preserved:
+we replace it with the engine's batched write-time probe
+(operators/probe.py) at the conflict floor. Semantics preserved:
 
   dup        similarity >= dup threshold -> do not insert; touch the
              existing entry (access_count++, last_referenced)
@@ -51,14 +50,13 @@ from pyspark.sql import functions as F
 from .config import DedupConfig
 from .storeio import (
     append_dir,
-    guarded_collect,
     has_data,
     publish_dir,
     recover_dir,
     replace_partitions,
 )
 from .operators.signatures import with_signatures
-from .operators.minhash import band_buckets
+from .operators.probe import greedy_accept, probe_edges
 from .operators.verify import jaccard_col
 from .functions.scoring import recency_score, decay_level
 from .functions.sensitivity import sensitivity_level
@@ -226,9 +224,6 @@ class MemoryStore:
 
         return sorted({xxhash64_py(i) % self.n_buckets for i in set(ids)})
 
-    def _guard_max(self) -> int:
-        return int(self.cfg.extra.get("dup_edges_max", 1_000_000))
-
     def conflicts(self) -> DataFrame:
         """Persisted conflict-pair log (reference keeps conflicts in the
         store result with NewID backfilled, sqlite.go:209-213; we also
@@ -337,40 +332,6 @@ class MemoryStore:
         replace_partitions(df, self._data_path(), "bucket", buckets)
 
     # --------------------------------------------------------------- store
-    def _pairs_from_sigs(self, sig_new: DataFrame, sig_old: DataFrame,
-                         a_col: str = "new_id", b_col: str = "existing_id",
-                         anti_reflexive: bool = False) -> DataFrame:
-        """(a, b, jaccard) candidate pairs via LSH band join between two
-        signature tables (id, shingles, minhash). No signature is ever
-        recomputed here — callers pass persisted or batch-computed sigs."""
-        cfg = self.cfg
-        bb_new = band_buckets(sig_new.filter(F.col("minhash").isNotNull()), "minhash", "id", cfg)
-        bb_old = band_buckets(sig_old.filter(F.col("minhash").isNotNull()), "minhash", "id", cfg)
-        cond = ["bucket"]
-        cand = (
-            bb_new.select(F.col("id").alias(a_col), "bucket")
-            .join(bb_old.select(F.col("id").alias(b_col), "bucket"), cond)
-            .select(a_col, b_col)
-        )
-        if anti_reflexive:
-            cand = cand.filter(F.col(a_col) > F.col(b_col))
-        cand = cand.dropDuplicates([a_col, b_col])
-        sa = sig_new.select(F.col("id").alias(a_col), F.col("shingles").alias("sh_a"))
-        sb = sig_old.select(F.col("id").alias(b_col), F.col("shingles").alias("sh_b"))
-        return (
-            cand.join(sa, a_col).join(sb, b_col)
-            .withColumn("jaccard", jaccard_col(F.col("sh_a"), F.col("sh_b")))
-            .select(a_col, b_col, "jaccard")
-        )
-
-    def _similar_pairs(self, new: DataFrame, existing: DataFrame) -> DataFrame:
-        """(new_id, existing_id, jaccard) of a raw batch vs stored rows
-        (stored signatures are read, not recomputed)."""
-        sig_new = with_signatures(new.select("id", "text"), "text", "id", self.cfg,
-                                  parts=("shingles", "minhash"))
-        sig_old = existing.select("id", "shingles", "minhash")
-        return self._pairs_from_sigs(sig_new, sig_old)
-
     def store_batch(self, entries: DataFrame, now: F.Column | None = None) -> StoreResult:
         """entries(id, text, tags?, source?, session?, expires_at?).
 
@@ -380,12 +341,12 @@ class MemoryStore:
         touched (stored matches only). The intra-batch pass mirrors the
         reference's per-row probe order (sqlite.go:243-279: earlier rows
         of a batch are already stored when later rows check) with id
-        order as the deterministic stand-in for arrival order.
-        Everything is one batch of joins — no per-row probing; only the
-        (small, output-bound, loudly-guarded) dup/conflict edge lists
-        are collected for the order-dependent greedy — and they are
-        collected BEFORE the store directory mutates, so the returned
-        result never depends on a lazy plan over the swapped path.
+        order as the deterministic stand-in for arrival order; a stored
+        match takes precedence (`duplicates` lists all of a row's stored
+        matches, else the one batch row it matched). It is one write-time
+        probe (operators/probe.py), whose edge list is collected BEFORE
+        the store directory mutates, so the returned result never
+        depends on a lazy plan over the swapped path.
 
         I/O: pure inserts APPEND files (nothing read or rewritten);
         dup-touch updates rewrite only the bucket partitions holding the
@@ -399,48 +360,24 @@ class MemoryStore:
 
         sig_new = with_signatures(entries.select("id", "text"), "text", "id",
                                   self.cfg, parts=("shingles", "minhash")).persist()
-        sig_old = live.select("id", "shingles", "minhash")
-        pairs = self._pairs_from_sigs(sig_new, sig_old)
-        gmax = self._guard_max()
-        # materialize vs-stored edges NOW (store path not yet mutated)
-        pair_rows = guarded_collect(
-            pairs.filter(F.col("jaccard") >= self.conflict_jaccard),
-            gmax, "store_batch dup/conflict edges",
-        )
-        dup_rows = [r for r in pair_rows if r["jaccard"] >= self.dup_jaccard]
-        conflict_rows = [r for r in pair_rows if r["jaccard"] < self.dup_jaccard]
+        # materialize the edges NOW (store path not yet mutated): one
+        # probe at the conflict floor serves dups and conflicts
+        edges = probe_edges(sig_new, live, self.cfg, self.conflict_jaccard,
+                            "store_batch dup/conflict edges")
+        dup_edges = [e for e in edges if e.jaccard >= self.dup_jaccard]
+        conflict_rows = [e for e in edges if e.old and e.jaccard < self.dup_jaccard]
+        rejected = greedy_accept(dup_edges)
+        vs_stored = {e.n for e in dup_edges if e.old}
+        dup_rows = [e for e in dup_edges
+                    if e.old or (e.n not in vs_stored and rejected.get(e.n) == e.o)]
 
-        # intra-batch dedup: greedy in id order over the (small) dup-edge
-        # list — b is rejected iff it near-dups an earlier row that was
-        # itself ACCEPTED (chains: a~b, b~c, a!~c => a, c kept, b dropped)
-        intra = (
-            self._pairs_from_sigs(sig_new, sig_new, "b", "a", anti_reflexive=True)
-            .filter(F.col("jaccard") >= self.dup_jaccard)
-            .select("a", "b", "jaccard")
-        )
-        rejected_vs_stored = {r["new_id"] for r in dup_rows}
-        intra_edges = sorted(
-            (r["a"], r["b"], r["jaccard"])
-            for r in guarded_collect(intra, gmax, "store_batch intra-batch dup edges")
-        )
-        rejected_intra: dict[str, tuple[str, float]] = {}
-        by_b: dict[str, list[tuple[str, float]]] = {}
-        for a, b, j in intra_edges:
-            by_b.setdefault(b, []).append((a, j))
-        for b in sorted(by_b):
-            for a, j in sorted(by_b[b]):
-                if a not in rejected_vs_stored and a not in rejected_intra:
-                    rejected_intra[b] = (a, j)
-                    break
-
-        all_rejected = rejected_vs_stored | set(rejected_intra)
-        if not all_rejected:
+        if not rejected:
             to_insert = entries
-        elif len(all_rejected) <= 1000:
-            to_insert = entries.filter(~F.col("id").isin(list(all_rejected)))
+        elif len(rejected) <= 1000:
+            to_insert = entries.filter(~F.col("id").isin(list(rejected)))
         else:
             rej_df = self.spark.createDataFrame(
-                [(i,) for i in all_rejected], "id string"
+                [(i,) for i in rejected], "id string"
             )
             to_insert = entries.join(rej_df, "id", "left_anti")
 
@@ -473,12 +410,12 @@ class MemoryStore:
         # sqlite.go:209-213); built from the collected rows, so replaying
         # the plan can never read post-mutation state
         conf_local = self.spark.createDataFrame(
-            [(r["new_id"], r["existing_id"], float(r["jaccard"])) for r in conflict_rows],
+            [(e.n, e.o, float(e.jaccard)) for e in conflict_rows],
             "new_id string, existing_id string, jaccard double",
         ).withColumn("detected_at", now)
         conf_local.write.mode("append").parquet(os.path.join(self.path, "conflicts"))
 
-        touched_ids = sorted({r["existing_id"] for r in dup_rows})
+        touched_ids = sorted({e.o for e in dup_rows if e.old})
         if touched_ids:
             # dup-touch: rewrite ONLY the buckets holding touched rows
             buckets = self._buckets_of(touched_ids)
@@ -507,13 +444,12 @@ class MemoryStore:
         self._append(inserted)
 
         dup_local = self.spark.createDataFrame(
-            [(r["new_id"], r["existing_id"], float(r["jaccard"])) for r in dup_rows]
-            + [(b, a, float(j)) for b, (a, j) in rejected_intra.items()],
+            [(e.n, e.o, float(e.jaccard)) for e in dup_rows],
             "new_id string, existing_id string, jaccard double",
         )
         if self._handlers:
             self._emit_df("store", inserted.select("id"))
-            self._emit("duplicate", sorted(all_rejected))
+            self._emit("duplicate", sorted(rejected))
             inserted.unpersist()
         result = StoreResult(
             stored=inserted,

@@ -22,10 +22,10 @@ Reference: /root/reference/pkg/session/sqlite.go
   content_hash = FNV-1a 64          :692-705
 
 Spark shape: entries persist as a parquet directory (atomic publish;
-Iceberg on clusters). The dedup probe is an LSH band join of the
-incoming batch against the session's PERSISTED signatures (replacing
-the reference's linear scan); only the (output-bound) dup-edge list is
-collected for the order-dependent accept/reject greedy. Budget
+Iceberg on clusters). The dedup probe is the engine's write-time probe
+(operators/probe.py) of the incoming batch against the session's
+PERSISTED signatures and itself, replacing the reference's linear scan.
+Budget
 enforcement is sequential BY DESIGN (the reference escalates one entry
 at a time and re-checks the running total), and a session is small
 (reference TODO: <1K entries) — so it runs per-session inside ONE
@@ -49,9 +49,8 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .storeio import guarded_collect, publish_dir, recover_dir
+from .operators.probe import greedy_accept, probe_edges
 from .operators.signatures import with_signatures
-from .operators.minhash import band_buckets
-from .operators.verify import jaccard_col
 
 log = logging.getLogger("distill_spark")
 
@@ -514,79 +513,24 @@ class SessionStore:
         """Order-dependent accept/reject: entry i is rejected iff it
         near-dups a stored entry or an earlier ACCEPTED entry of this
         batch (the reference stores entries as it iterates, so later
-        entries see earlier accepted ones). Dup edges come from an LSH
-        band join; only the edge lists are collected."""
+        entries see earlier accepted ones). One write-time probe
+        (operators/probe.py) over zero-padded position ids, whose string
+        order is arrival order; only the edge list is collected."""
         if not batch:
             return []
+        ids = [f"{i:012d}" for i in range(len(batch))]
         bdf = self.spark.createDataFrame(
-            [(str(i), e["content"]) for i, e in enumerate(batch)],
-            "bid string, content string",
+            [(i, e["content"]) for i, e in zip(ids, batch)],
+            "id string, content string",
         )
-        sig_new = with_signatures(bdf, "content", "bid", self.cfg,
+        sig_new = with_signatures(bdf, "content", "id", self.cfg,
                                   parts=("shingles", "minhash")).persist()
-        thr = sess.dedup_jaccard
-
-        def _pairs(sa, sb, acol, bcol, anti=False):
-            ba = band_buckets(sa.filter(F.col("minhash").isNotNull()),
-                              "minhash", "id_", self.cfg)
-            bb = band_buckets(sb.filter(F.col("minhash").isNotNull()),
-                              "minhash", "id_", self.cfg)
-            cand = (
-                ba.select(F.col("id_").alias(acol), "bucket")
-                .join(bb.select(F.col("id_").alias(bcol), "bucket"),
-                      ["bucket"])
-                .select(acol, bcol).dropDuplicates([acol, bcol])
-            )
-            if anti:
-                cand = cand.filter(
-                    F.col(acol).cast("int") > F.col(bcol).cast("int")
-                )
-            j = (
-                cand.join(sa.select(F.col("id_").alias(acol),
-                                    F.col("shingles").alias("sh_a")), acol)
-                .join(sb.select(F.col("id_").alias(bcol),
-                                F.col("shingles").alias("sh_b")), bcol)
-                .withColumn("jacc", jaccard_col(F.col("sh_a"), F.col("sh_b")))
-                .filter(F.col("jacc") >= thr)
-                .select(acol, bcol)
-            )
-            return j
-
-        sn = sig_new.select(F.col("bid").alias("id_"), "shingles", "minhash")
-        so = stored.select(F.col("id").alias("id_"), "shingles", "minhash")
-        gmax = int(self.cfg.extra.get("dup_edges_max", 1_000_000))
-        vs_stored = {
-            r["bid"]
-            for r in guarded_collect(
-                _pairs(sn, so, "bid", "sid").select("bid").distinct(),
-                gmax, "session push dedup edges (batch vs stored)",
-            )
-        }
-        intra = [
-            (int(r["b"]), int(r["a"]))
-            for r in guarded_collect(
-                _pairs(sn, sn, "b", "a", anti=True), gmax,
-                "session push dedup edges (intra-batch)",
-            )
-        ]
+        rejected = greedy_accept(probe_edges(
+            sig_new, stored, self.cfg, sess.dedup_jaccard,
+            "session push dedup edges"))
         sig_new.unpersist()
-        by_b: dict[int, list[int]] = {}
-        for b, a in intra:
-            by_b.setdefault(b, []).append(a)
-        accepted: list[dict] = []
-        rejected: set[int] = set()
-        for i, e in enumerate(batch):
-            if str(i) in vs_stored:
-                rejected.add(i)
-                result.deduplicated += 1
-                continue
-            if any(a not in rejected and str(a) not in vs_stored
-                   for a in sorted(by_b.get(i, []))):
-                rejected.add(i)
-                result.deduplicated += 1
-                continue
-            accepted.append(e)
-        return accepted
+        result.deduplicated += len(rejected)
+        return [e for i, e in zip(ids, batch) if i not in rejected]
 
     def _dedup_batch_cos(self, batch: list[dict], stored: DataFrame,
                          sess: SessionConfig, result: PushResult) -> list[dict]:

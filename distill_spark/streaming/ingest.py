@@ -10,20 +10,13 @@ watermarked windowing.
 
 Incremental contract per micro-batch:
   1. signatures of the incoming batch (map-side Arrow pass)
-  2. ONE LSH band join of the batch's buckets against the ACCUMULATED
-     signature state's buckets (tagged old) UNION the batch's own
-     buckets (tagged intra, kept where the other id is smaller): two
-     near-identical rows arriving in one micro-batch must still dedupe.
-     Shingles attach once, keyed by (id, side); exact Jaccard verify;
-     ONE driver collect of the verified (n, o, old) edges.
-  3. id-order greedy on the driver -> dup rows dropped (assigned to
-     the smallest matched stored id, or to the earliest accepted batch
-     row for intra-batch dups — the same greedy as the write-time
-     store), novel rows appended to state. The state holds signatures
-     of accepted rows only, and an accepted row is its own component,
-     so a stored match's component is its id: assignments/ is never
+  2. the write-time probe (operators/probe.py) of the batch against the
+     ACCUMULATED signature state and itself: one band join, one collect.
+  3. its id-order greedy -> dup rows dropped, novel rows appended to
+     state. The state holds accepted rows only, each its own component,
+     so a dup's component is the row it matched: assignments/ is never
      read back. Both outputs come from one broadcast join of the
-     edge-involved ids onto the batch signatures (map-only writes).
+     rejected ids onto the batch signatures (map-only writes).
   4. metrics row per batch (ingest stats analog, pipeline.go:48-72)
 
 Atomicity (round-2 fix): each batch's outputs are written to a
@@ -51,13 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
-from ..storeio import guarded_collect
+from ..operators.probe import greedy_accept, probe_edges
 from ..operators.signatures import with_signatures
-from ..operators.minhash import band_buckets
-from ..operators.verify import jaccard_col
 
 _SIG_SCHEMA = "image_id string, shingles array<bigint>, minhash array<bigint>"
-_EDGE_SCHEMA = "image_id string, component string, rejected boolean"
+_ASSIGN_SCHEMA = "image_id string, component string"
 
 log = logging.getLogger("distill_spark")
 
@@ -110,7 +101,7 @@ class DedupeState:
         return self._read("signatures", _SIG_SCHEMA)
 
     def assignments(self) -> DataFrame:
-        return self._read("assignments", "image_id string, component string")
+        return self._read("assignments", _ASSIGN_SCHEMA)
 
     def _stage(self, df: DataFrame) -> str:
         tmp = self._p("_staging_" + uuid.uuid4().hex[:8])
@@ -156,92 +147,28 @@ def incremental_dedupe_batch(
     sigs = sigs.persist()
     n_in = sigs.count()
 
-    # ONE band join of the batch against (stored rows, old) UNION (batch
-    # rows, intra; kept only where o < n), ONE shingle attach keyed by
-    # (id, side) so an id in both the batch and the state attaches once
-    # per side, ONE collect of the verified (n, o, old) edges
-    stored = state.signatures()
-    bb_n = band_buckets(sigs.filter(F.col("minhash").isNotNull()),
-                        "minhash", "image_id", cfg)
-    bb_o = band_buckets(stored.filter(F.col("minhash").isNotNull()),
-                        "minhash", "image_id", cfg)
-    cand = (
-        bb_n.withColumnRenamed("image_id", "n")
-        .join(bb_o.withColumn("old", F.lit(True))
-              .unionByName(bb_n.withColumn("old", F.lit(False)))
-              .withColumnRenamed("image_id", "o"), "bucket")
-        .filter(F.col("old") | (F.col("o") < F.col("n")))
-        .select("n", "o", "old")
-        .dropDuplicates()
+    edges = probe_edges(
+        sigs.withColumnRenamed("image_id", "id"),
+        state.signatures().withColumnRenamed("image_id", "id"),
+        cfg, cfg.jaccard_threshold, "incremental dedup edges",
     )
-    sides = stored.withColumn("old", F.lit(True)).unionByName(
-        sigs.withColumn("old", F.lit(False)))
-    verified = (
-        cand.join(sigs.select(F.col("image_id").alias("n"),
-                              F.col("shingles").alias("sh_n")), "n")
-        .join(sides.select(F.col("image_id").alias("o"), "old",
-                           F.col("shingles").alias("sh_o")), ["o", "old"])
-        .filter(jaccard_col(F.col("sh_n"), F.col("sh_o")) >= cfg.jaccard_threshold)
-        .select("n", "o", "old")
+    comp = greedy_accept(edges)  # rejected id -> component (module doc, 3.)
+
+    # map-only publish: the rejected ids go to the JVM as one Arrow
+    # frame, broadcast onto the persisted batch signatures
+    rej_df = state.spark.createDataFrame(
+        pd.DataFrame({"image_id": list(comp), "component": list(comp.values())}),
+        _ASSIGN_SCHEMA,
     )
-    gmax = int(cfg.extra.get("dup_edges_max", 1_000_000))
-
-    # Only accepted rows are written to signatures/, and an accepted
-    # row's component is its own id (comp[rid] = rid below; free rows
-    # get component = image_id). So a stored match's component is the
-    # matched stored id, and a batch row's component is the min of the
-    # stored ids it matches -- no read of assignments/ is needed.
-    stored_comp: dict[str, str] = {}
-    by_b: dict[str, list[str]] = {}
-    for n, o, old in guarded_collect(verified, gmax, "incremental dedup edges"):
-        if old:
-            stored_comp[n] = min(stored_comp.get(n, o), o)
-        else:
-            by_b.setdefault(n, []).append(o)
-
-    # id-order greedy (same semantics as MemoryStore.store_batch): a row
-    # is a dup of stored (component = matched min) or of the earliest
-    # ACCEPTED smaller batch row (component = that row's component).
-    # Only EDGE-INVOLVED ids reach the driver (output-bound); the
-    # edge-free majority stays distributed as (id, id) novel rows.
-    edge_ids = set(stored_comp) | set(by_b)
-    for a_list in by_b.values():
-        edge_ids.update(a_list)
-    comp: dict[str, str] = {}
-    rejected: set[str] = set()
-    for rid in sorted(edge_ids):
-        if rid in stored_comp:
-            comp[rid] = stored_comp[rid]
-            rejected.add(rid)
-            continue
-        hit = None
-        for a in sorted(by_b.get(rid, [])):
-            if a in edge_ids and a not in rejected:
-                hit = a
-                break
-        if hit is not None:
-            comp[rid] = comp.get(hit, hit)
-            rejected.add(rid)
-        else:
-            comp[rid] = rid
-
-    # map-only publish: the edge-involved ids go to the JVM as one Arrow
-    # frame, broadcast onto the persisted batch signatures; both outputs
-    # come from that one join
-    edge_df = state.spark.createDataFrame(
-        pd.DataFrame({"image_id": list(comp), "component": list(comp.values()),
-                      "rejected": [i in rejected for i in comp]}),
-        _EDGE_SCHEMA,
-    )
-    tagged = sigs.join(F.broadcast(edge_df), "image_id", "left")
+    tagged = sigs.join(F.broadcast(rej_df), "image_id", "left")
     assign_df = tagged.select(
         "image_id", F.coalesce("component", "image_id").alias("component"))
-    novel_sigs = tagged.filter(~F.coalesce("rejected", F.lit(False))).select(
+    novel_sigs = tagged.filter(F.col("component").isNull()).select(
         "image_id", "shingles", "minhash")
-    n_dups = len(rejected)
+    n_dups = len(comp)
     log.debug("ingest batch %s: rows_in=%d stored_matches=%d intra_edges=%d "
-              "duplicates=%d", batch_id, n_in, len(stored_comp),
-              sum(map(len, by_b.values())), n_dups)
+              "duplicates=%d", batch_id, n_in, len({r.n for r in edges if r.old}),
+              sum(not r.old for r in edges), n_dups)
 
     state._publish_batch(batch_id, novel_sigs, assign_df)
     state._commit_batch(batch_id)

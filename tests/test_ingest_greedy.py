@@ -1,8 +1,10 @@
-"""Write-time ingest pinned to a driver-side reference.
+"""Write-time dedup pinned to a driver-side reference.
 
-Three micro-batches through incremental_dedupe_batch must leave the
-same assignments as oracle.oracle_ingest (the id-order greedy over
-exact shingle Jaccard on all pairs). The table holds the cases the
+Three micro-batches through each caller of the write-time probe
+(incremental_dedupe_batch, MemoryStore.store_batch, SessionStore.push
+in id order) must reject the rows oracle.oracle_ingest rejects (the
+id-order greedy over exact shingle Jaccard on all pairs); ingest must
+leave the same assignments. The table holds the cases the
 greedy decides: an intra-batch chain, a row matching two stored rows,
 a row matching both a stored row and an earlier batch row, and empty
 captions. Planted dups sit at Jaccard >= 0.76, where band recall
@@ -18,9 +20,12 @@ import logging
 import os
 
 import pandas as pd
+import pytest
 
 from distill_spark.config import DedupConfig
+from distill_spark.memory import MemoryStore
 from distill_spark.oracle import jaccard, oracle_ingest, shingle_set
+from distill_spark.session_store import SessionStore
 from distill_spark.streaming.ingest import DedupeState, incremental_dedupe_batch
 
 THR = DedupConfig().jaccard_threshold
@@ -74,11 +79,9 @@ def test_table_holds_the_planted_cases():
         assert _j(*far) < THR
 
 
-def test_ingest_matches_greedy_reference(spark, tmp_path, caplog):
+def _run_ingest(spark, tmp_path, pdfs, caplog):
     caplog.set_level(logging.DEBUG, logger="distill_spark")
     state = DedupeState(spark, str(tmp_path / "st"), DedupConfig())
-    pdfs = [pd.DataFrame([(i, " ".join(t)) for i, t in rows],
-                         columns=["image_id", "caption"]) for rows in BATCHES]
     for b, pdf in enumerate(pdfs):
         m = incremental_dedupe_batch(state, spark.createDataFrame(pdf), b)
         assert m["status"] == "complete" and m["rows_in"] == len(pdf)
@@ -89,19 +92,62 @@ def test_ingest_matches_greedy_reference(spark, tmp_path, caplog):
     assert len(lines) == len(pdfs) and "rows_in=6 " in lines[0]
 
     got = {r["image_id"]: r["component"] for r in state.assignments().collect()}
-    want = oracle_ingest(pdfs)
-    assert got == want
-    assert (want["a2"], want["a3"]) == ("a1", "a3")   # chain far end kept
-    assert want["p0"] == "p1"                         # min stored id
-    assert (want["t1"], want["t2"]) == ("t1", "s3")   # stored beats batch
-    assert want["a4"] == "a1"
-    assert (want["e0"], want["e1"]) == ("e0", "e1")   # no signature
+    assert got == oracle_ingest(pdfs)
 
     # invariant: the signature state holds exactly the accepted rows,
     # each its own component
     stored = [r["image_id"] for r in state.signatures().select("image_id").collect()]
     assert sorted(stored) == sorted(i for i, c in got.items() if i == c)
     assert all(got[i] == i for i in stored)
+    return {i: c for i, c in got.items() if i != c}
+
+
+def _run_memory(spark, tmp_path, pdfs, caplog):
+    store = MemoryStore(spark, str(tmp_path / "mem"), DedupConfig(),
+                        dup_jaccard=THR, conflict_jaccard=THR)
+    rejected = {}
+    for pdf in pdfs:
+        res = store.store_batch(spark.createDataFrame(
+            pdf.rename(columns={"image_id": "id", "caption": "text"})))
+        for d in res.duplicates.collect():
+            n, o = d["new_id"], d["existing_id"]
+            rejected[n] = min(rejected.get(n, o), o)
+    return rejected
+
+
+def _run_session(spark, tmp_path, pdfs, caplog):
+    store = SessionStore(spark, str(tmp_path / "sess"), DedupConfig())
+    store.create("s", max_tokens=10**6, dedup_jaccard=THR)
+    pushed = []
+    for pdf in pdfs:
+        rows = sorted(zip(pdf["image_id"], pdf["caption"]))
+        store.push("s", [{"content": c} for _, c in rows])
+        pushed += [(i, c) for i, c in rows if c]  # push skips empty content
+    kept = {r["original_content"] for r in store.entries("s").collect()}
+    return {i: None for i, c in pushed if c not in kept}
+
+
+@pytest.mark.parametrize("caller", ["ingest", "memory", "session"])
+def test_ingest_matches_greedy_reference(spark, tmp_path, caplog, caller):
+    """Every caller of the write-time probe rejects the rows the greedy
+    reference rejects, each onto the row the reference names where the
+    caller reports it."""
+    pdfs = [pd.DataFrame([(i, " ".join(t)) for i, t in rows],
+                         columns=["image_id", "caption"]) for rows in BATCHES]
+    run = {"ingest": _run_ingest, "memory": _run_memory,
+           "session": _run_session}[caller]
+    got = run(spark, tmp_path, pdfs, caplog)
+
+    want = oracle_ingest(pdfs)
+    assert (want["a2"], want["a3"]) == ("a1", "a3")   # chain far end kept
+    assert want["p0"] == "p1"                         # min stored id
+    assert (want["t1"], want["t2"]) == ("t1", "s3")   # stored beats batch
+    assert want["a4"] == "a1"
+    assert (want["e0"], want["e1"]) == ("e0", "e1")   # no signature
+    want_rejected = {i: c for i, c in want.items() if i != c}
+    if caller == "session":  # push reports counts, not matched rows
+        want_rejected = dict.fromkeys(want_rejected)
+    assert got == want_rejected
 
 
 def test_batch_ledger_is_synced_before_rename(spark, tmp_path, monkeypatch):

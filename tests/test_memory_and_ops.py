@@ -50,6 +50,31 @@ def test_write_time_dedup_and_conflict(spark, store):
     assert r3.stored.count() == 1
 
 
+def test_stored_match_takes_precedence_over_batch_match(spark, store):
+    """x2 matches stored s0 and the earlier accepted batch row x1: it is
+    a dup of s0 only, as in ingest and oracle_ingest. A row rejected
+    only within the batch still reports the accepted row it matched."""
+    from distill_spark.oracle import jaccard, shingle_set
+
+    s0 = [f"w{i}" for i in range(40)]
+    x2 = s0[:32] + [f"t{i}" for i in range(8)]
+    x1 = [f"h{i}" for i in range(8)] + x2[8:]
+    x3 = x1[:32] + [f"u{i}" for i in range(8)]
+
+    def j(a, b):
+        return jaccard(shingle_set(" ".join(a)), shingle_set(" ".join(b)))
+
+    assert j(x2, s0) >= 0.5 and j(x2, x1) >= 0.5 and j(x3, x1) >= 0.5
+    assert j(x1, s0) < 0.5 and j(x3, s0) < 0.5 and j(x3, x2) < 0.5
+
+    store.store_batch(_entries(spark, [("s0", " ".join(s0))]))
+    r = store.store_batch(_entries(spark, [(i, " ".join(t)) for i, t in
+                                           [("x1", x1), ("x2", x2), ("x3", x3)]]))
+    assert {(d["new_id"], d["existing_id"]) for d in r.duplicates.collect()} \
+        == {("x2", "s0"), ("x3", "x1")}
+    assert sorted(x["id"] for x in r.stored.collect()) == ["x1"]
+
+
 def test_recall_relevance_and_budget(spark, store):
     store.store_batch(_entries(spark, [("m1", BASE), ("m2", FAR)]))
     got = store.recall("quick brown fox jumps over the lazy dog", k=2)
