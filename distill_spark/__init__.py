@@ -20,10 +20,11 @@ Layout:
   operators/            the dedup pipeline stages (each DataFrame->DataFrame)
   functions/            scalar/columnar function library (text, scoring,
                         sensitivity, hashing, vectors)
-  checkpoint.py         stage ledger + parquet checkpoint store (maps
-                        onto Iceberg tables on a cluster)
-  storeio.py            crash-safe atomic parquet-dir publish/append/
-                        partition-replace + guarded driver collects
+  tableio.py            versioned-manifest parquet table: the one table
+                        layer under the stores (copy-on-write snapshots,
+                        atomic commits, vacuum, legacy-layout migration;
+                        Iceberg tables on a cluster)
+  checkpoint.py         stage ledger + one versioned table per stage
   memory.py             bucket-partitioned memory store (write-time dedup,
                         recall, lifecycle) — partial-partition mutations
   session_store.py      session store (push-dedup, budget escalation,

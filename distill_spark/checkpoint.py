@@ -11,11 +11,18 @@ Reference analogs (file:line into /root/reference):
   frozen cache prefix skipping stable work
       pkg/cache/prefix.go:40-69
 
-Backend: parquet directories + an atomically-replaced JSONL ledger.
-On a cluster with Iceberg jars this maps 1:1 onto Iceberg tables
-(`df.writeTo(table).createOrReplace()` + a status table; snapshot ids
-become the lineage fingerprint). The Iceberg jars are not bundled, so
-only the parquet backend is implemented.
+Storage: one versioned table per stage (tableio.VersionedTable, the
+offline stand-in for an Iceberg table; a re-run publishes a new
+snapshot, so a reader's plan over a stage survives it) + an
+atomically-replaced JSONL ledger. On a cluster with Iceberg jars this
+maps 1:1 onto Iceberg tables (`df.writeTo(table).createOrReplace()` + a
+status table; snapshot ids become the lineage fingerprint). A stage
+directory written by the older dir-overwrite layout is migrated as
+version 1 on first touch (tableio.open_table), so its resume stays a
+cache hit. `vacuum_keep` auto-vacuums each stage after its publish: a
+stage frame handed out survives `vacuum_keep - 1` further publishes of
+that stage; after that its action fails (file gone) rather than
+returning other rows.
 
 Ledger row per completed stage:
   {stage, status, rows, n_partitions, partition_rows (lineage),
@@ -34,7 +41,6 @@ import hashlib
 import json
 import logging
 import os
-import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Callable
@@ -44,6 +50,7 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .operators.pipeline import CHANNELS, DedupResult, Stage, run_dedup_graph
+from .tableio import auto_vacuum, open_table
 
 log = logging.getLogger("distill_spark")
 
@@ -93,16 +100,10 @@ class CheckpointStore:
     ledger: dict[str, dict] = field(default_factory=dict)
     hits: list[str] = field(default_factory=list)     # stages loaded from disk
     computed: list[str] = field(default_factory=list) # stages computed this run
-    backend: str = "dirs"  # "versioned": each stage is a VersionedTable
-                           # (snapshot-isolated — a reader's plan over a
-                           # stage survives a concurrent re-run's publish;
-                           # the dir-overwrite layout's readers race the
-                           # os.replace). Legacy dir-layout stages are
-                           # migrated as version 1 on first touch.
-    vacuum_keep: int | None = 8  # versioned backend: auto-vacuum each
-                           # stage after publish, retaining the newest N
-                           # versions (copy-on-write snapshots otherwise
-                           # accumulate per re-run; round-5 advice #2)
+    vacuum_keep: int | None = 8  # auto-vacuum each stage after publish,
+                           # retaining the newest N versions (copy-on-write
+                           # snapshots otherwise accumulate per re-run;
+                           # round-5 advice #2)
 
     def __post_init__(self) -> None:
         os.makedirs(self.base_path, exist_ok=True)
@@ -118,27 +119,6 @@ class CheckpointStore:
 
     def _stage_path(self, stage: str) -> str:
         return os.path.join(self.base_path, stage)
-
-    def _stage_table(self, stage: str):
-        """VersionedTable for a stage (backend="versioned"), migrating a
-        pre-existing dir-layout stage's parquet as version 1 so resumes
-        written by the old backend stay cache hits."""
-        from .tableio import VersionedTable, foreign_parquet_files
-
-        path = self._stage_path(stage)
-        legacy = foreign_parquet_files(path)
-        table = VersionedTable(self.spark, path)
-        if legacy:
-            if table.current_version() != 0:
-                raise RuntimeError(
-                    f"checkpoint stage at {path} has BOTH a versioned "
-                    f"manifest and {len(legacy)} non-versioned parquet "
-                    f"files (e.g. {legacy[0]}); resolve manually"
-                )
-            table.publish(self.spark.read.parquet(*legacy))
-            for f in legacy:
-                os.remove(f)
-        return table
 
     def _flush_ledger(self) -> None:
         tmp = self._ledger_path() + ".tmp"
@@ -162,43 +142,21 @@ class CheckpointStore:
         """Compute-or-load a stage. fn() must return a DataFrame."""
         deps = deps or []
         fp = self.stage_fingerprint(stage, config_sig, deps)
-        path = self._stage_path(stage)
-        table = self._stage_table(stage) if self.backend == "versioned" else None
-        have_data = (
-            table.current_version() > 0 if table is not None
-            else os.path.exists(path)
-        )
+        table = open_table(self.spark, self._stage_path(stage))
         row = self.ledger.get(stage)
         if (
             row is not None
             and row.get("status") == "complete"
             and row.get("input_fingerprint") == fp
-            and have_data
+            and table.current_version() > 0
         ):
             self.hits.append(stage)
-            return (table.read() if table is not None
-                    else self.spark.read.parquet(path))
+            return table.read()
 
         t0 = time.time()
-        df = fn()
-        if table is not None:
-            table.publish(df)
-            if self.vacuum_keep:
-                try:
-                    table.vacuum(keep=self.vacuum_keep)
-                except Exception:  # maintenance must never fail the stage
-                    log.warning("vacuum of checkpoint stage %r failed", stage,
-                                exc_info=True)
-            out = table.read()
-        else:
-            tmp = path + "._tmp"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            df.write.mode("overwrite").parquet(tmp)
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            os.replace(tmp, path)  # atomic publish: complete or absent
-            out = self.spark.read.parquet(path)
+        table.publish(fn())
+        auto_vacuum(table, self.vacuum_keep)
+        out = table.read()
         # per-partition lineage: row count per output file/partition
         part_rows = [
             [r["p"], r["n"]]

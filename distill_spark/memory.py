@@ -25,44 +25,36 @@ Similarity here is caption/text shingle Jaccard (the engine's exact
 text predicate); an embedding-cosine variant plugs in through
 functions.vectors.
 
-Storage (round-3 scale hygiene): a parquet directory HASH-PARTITIONED
-on `bucket = pmod(xxhash64(id), n_buckets)`. Mutations (dup-touch,
-expire, supersede, forget, decay) rewrite ONLY the bucket partitions
-holding touched rows (storeio.replace_partitions — the parquet-dir
-analog of Iceberg MERGE INTO); pure inserts append files without
-reading anything. recall() is a distributed TakeOrdered top-k, never a
-single-task global sort. Every DataFrame surfaced in a result or
-written to a log is materialized BEFORE the store directory mutates,
-so cache eviction can never re-derive a result from post-mutation
-state (round-2 ADVICE: lazy plans over a swapped path produced
-phantom self-match pairs)."""
+Storage: a versioned table (tableio.VersionedTable, the offline
+Iceberg stand-in) HASH-PARTITIONED on
+`bucket = pmod(xxhash64(id), n_buckets)`. Every mutation commits a new
+copy-on-write snapshot. Dup-touch, expire, supersede, forget and decay
+replace ONLY the files of the buckets holding touched rows (Iceberg
+MERGE INTO); pure inserts append files without reading anything; a
+mutation that touches nothing commits nothing. The conflict log is a
+second versioned table, appended only when a batch has conflicts.
+recall() is a distributed TakeOrdered top-k, never a single-task
+global sort. Every DataFrame surfaced in a result or written to a log
+is materialized BEFORE the store mutates, so cache eviction can never
+re-derive a result from post-mutation state (round-2 ADVICE: lazy plans
+over a swapped path produced phantom self-match pairs)."""
 
 from __future__ import annotations
 
-import logging
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .storeio import (
-    append_dir,
-    has_data,
-    publish_dir,
-    recover_dir,
-    replace_partitions,
-)
 from .operators.signatures import with_signatures
 from .operators.probe import greedy_accept, probe_edges
 from .operators.verify import jaccard_col
+from .tableio import auto_vacuum, open_table
 from .functions.scoring import recency_score, decay_level
 from .functions.sensitivity import sensitivity_level
 from .functions.text import token_estimate
-
-log = logging.getLogger("distill_spark")
 
 MEMORY_SCHEMA = (
     "id string, text string, tags array<string>, source string, "
@@ -73,6 +65,9 @@ MEMORY_SCHEMA = (
     # hygiene): recall()/store_batch() read them instead of recomputing
     # MinHash/shingles for the whole store on every operation
     "shingles array<bigint>, minhash array<bigint>"
+)
+CONFLICT_SCHEMA = (
+    "new_id string, existing_id string, jaccard double, detected_at timestamp"
 )
 
 
@@ -87,7 +82,7 @@ class MemoryStore:
     def __init__(self, spark: SparkSession, path: str, cfg: DedupConfig | None = None,
                  dup_jaccard: float = 0.85, conflict_jaccard: float = 0.5,
                  n_buckets: int = 16, embedding_provider=None,
-                 backend: str = "dirs", vacuum_keep: int | None = 8):
+                 vacuum_keep: int | None = 8):
         """embedding_provider (embedding.EmbeddingProvider, optional):
         when set, every stored row also persists an `embedding` column
         computed by the provider, and recall() scores similarity as
@@ -98,20 +93,19 @@ class MemoryStore:
         shingle channel either way (its thresholds are calibrated
         there).
 
-        vacuum_keep (versioned backend): auto-vacuum after each commit,
-        retaining the newest N versions — without it every mutation's
-        copy-on-write snapshot accumulates forever, O(commits x table
-        size) disk (round-5 advice #2). Readers pinned to one of the
-        retained versions keep snapshot isolation; None disables (call
-        vacuum() manually).
+        Rows live in a copy-on-write versioned table
+        (tableio.VersionedTable): each mutation commits a new SNAPSHOT,
+        so a frame handed out earlier (snapshot(), recall(), stats(),
+        StoreResult.stored) keeps reading the version it was planned on.
+        A store directory written by the older dir-overwrite layout is
+        migrated as version 1 on open (tableio.open_table).
 
-        backend: "dirs" (default) — the atomic parquet-directory layout
-        (storeio); "versioned" — the copy-on-write versioned-manifest
-        table (tableio.VersionedTable): mutations commit a new SNAPSHOT,
-        so concurrent readers pinned to an older version keep a
-        consistent view through any rewrite — the property the
-        dir-overwrite layout cannot provide (its readers race the
-        rename). The Iceberg/Delta seam, sandbox-feasible."""
+        vacuum_keep: auto-vacuum after each commit, retaining the newest
+        N versions — without it every mutation's snapshot accumulates
+        forever, O(commits x table size) disk (round-5 advice #2). A
+        frame handed out survives `vacuum_keep - 1` further commits;
+        after that its action fails (file gone) rather than returning
+        other rows. None disables (call vacuum() manually)."""
         self.spark, self.path = spark, path
         # persisted-signature stores pin FULL 64-bit minhash lanes:
         # their sig columns are written as array<bigint> and must stay
@@ -121,26 +115,14 @@ class MemoryStore:
         self.dup_jaccard, self.conflict_jaccard = dup_jaccard, conflict_jaccard
         self.n_buckets = n_buckets
         self.embedding_provider = embedding_provider
-        self.backend = backend
         self.vacuum_keep = vacuum_keep
-        os.makedirs(path, exist_ok=True)
-        if backend == "versioned":
-            from .tableio import VersionedTable
-
-            self._table = VersionedTable(
-                spark, self._data_path(), partition_by="bucket",
-                stats_col="id",  # file-level id ranges in the manifest:
-                # merge()/point lookups can skip key-disjoint files
-            )
-            # opening a pre-existing dirs-layout store as "versioned"
-            # must not silently show an empty store (the manifest lists
-            # no files): migrate the legacy rows as version 1 — the same
-            # silent-data-hiding class the legacy flat-append migration
-            # in _append() guards against (round-4 advice)
-            self._migrate_legacy_to_versioned()
-        else:
-            self._table = None
-            recover_dir(self._data_path())  # heal a crash from a prior run
+        self._table = open_table(
+            spark, self._data_path(), partition_by="bucket",
+            stats_col="id",  # file-level id ranges in the manifest:
+            # merge()/point lookups can skip key-disjoint files
+            legacy_rows=self._legacy_rows,
+        )
+        self._conflicts = open_table(spark, os.path.join(path, "conflicts"))
         # lifecycle event handlers (reference OnLifecycleEvent,
         # sqlite.go:724-736): called synchronously, registration order
         self._handlers: list = []
@@ -181,36 +163,16 @@ class MemoryStore:
     def _data_path(self) -> str:
         return os.path.join(self.path, "memories")
 
-    def _migrate_legacy_to_versioned(self) -> None:
-        from .tableio import foreign_parquet_files
-
-        legacy = foreign_parquet_files(self._data_path())
-        if not legacy:
-            return
-        if self._table.current_version() != 0:
-            # both layouts populated: a half-done migration or mixed
-            # backend use — refuse loudly rather than pick one silently
-            raise RuntimeError(
-                f"store at {self.path} has BOTH a versioned manifest and "
-                f"{len(legacy)} non-versioned parquet files (e.g. "
-                f"{legacy[0]}); resolve manually (vacuum + remove legacy "
-                "files, or reopen with backend='dirs')"
-            )
-        # read via the dirs logic (recover + mergeSchema + legacy-column
-        # derivation), publish as version 1, then drop the legacy files
-        table, self._table = self._table, None
-        try:
-            rows = self._raw()
-        finally:
-            self._table = table
-        self._table.publish(rows)
-        for f in legacy:
-            os.remove(f)
-        p = self._data_path()
-        for name in os.listdir(p):  # now-empty bucket=N/ dirs
-            full = os.path.join(p, name)
-            if name.startswith("bucket=") and os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
+    def _legacy_rows(self, df: DataFrame) -> DataFrame:
+        """Rows of a dir-layout store, migrated once on open: derive the
+        signatures very old rows lack, and the bucket a flat layout lacks."""
+        if "minhash" not in df.columns:
+            sigs = with_signatures(df.select("id", "text"), "text", "id",
+                                   self.cfg, parts=("shingles", "minhash"))
+            df = df.join(sigs, "id", "left")
+        if "bucket" not in df.columns:
+            df = df.withColumn("bucket", self._bucket_expr())
+        return df
 
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.xxhash64(F.col("id")), F.lit(self.n_buckets)).cast("int")
@@ -228,13 +190,7 @@ class MemoryStore:
         """Persisted conflict-pair log (reference keeps conflicts in the
         store result with NewID backfilled, sqlite.go:209-213; we also
         persist them so conflict review survives the session)."""
-        p = os.path.join(self.path, "conflicts")
-        if not os.path.exists(p):
-            return self.spark.createDataFrame(
-                [], "new_id string, existing_id string, jaccard double, "
-                    "detected_at timestamp"
-            )
-        return self.spark.read.parquet(p)
+        return self._conflicts.read(schema=CONFLICT_SCHEMA)
 
     def _schema(self) -> str:
         if self.embedding_provider is not None:
@@ -243,93 +199,26 @@ class MemoryStore:
 
     def _raw(self) -> DataFrame:
         """Store rows WITH the bucket partition column (internal)."""
-        p = self._data_path()
-        if self._table is not None:
-            if not self._table.files():
-                return self.spark.createDataFrame([], self._schema()) \
-                    .withColumn("bucket", self._bucket_expr())
-            return self._table.read()
-        recover_dir(p)
-        if not has_data(p):
-            return self.spark.createDataFrame([], self._schema()) \
-                .withColumn("bucket", self._bucket_expr())
-        # mergeSchema: files written before a schema-extending feature was
-        # enabled (e.g. the embedding column) sit beside newer files; the
-        # default single-footer inference would nondeterministically hide
-        # the column and recall would silently fall back to sim=0
-        df = self.spark.read.option("mergeSchema", "true").parquet(p)
-        if "minhash" not in df.columns:  # legacy store: derive once on read
-            sigs = with_signatures(df.select("id", "text"), "text", "id",
-                                   self.cfg, parts=("shingles", "minhash"))
-            df = df.join(sigs, "id", "left")
+        df = self._table.read(schema=self._schema() + ", bucket int")
+        # a provider enabled on a store written without one: rows read
+        # the column as null until appends bring it into the schema
         if self.embedding_provider is not None and "embedding" not in df.columns:
             df = df.withColumn("embedding", F.lit(None).cast("array<float>"))
-        if "bucket" not in df.columns:  # legacy unpartitioned layout
-            df = df.withColumn("bucket", self._bucket_expr())
         return df
-
-    def _is_partitioned(self) -> bool:
-        if self._table is not None:
-            return True  # the versioned table is always bucket-partitioned
-        p = self._data_path()
-        return os.path.isdir(p) and any(
-            name.startswith("bucket=") for name in os.listdir(p)
-        )
 
     def snapshot(self) -> DataFrame:
         return self._raw().drop("bucket")
 
-    def _maybe_vacuum(self) -> None:
-        if self._table is not None and self.vacuum_keep:
-            try:
-                self._table.vacuum(keep=self.vacuum_keep)
-            except Exception:  # maintenance must never fail the mutation
-                log.warning("vacuum of memory store %r failed", self.path,
-                            exc_info=True)
-
-    def _publish(self, df: DataFrame) -> None:
-        """Atomic full overwrite, hash-partitioned on bucket."""
-        if "bucket" not in df.columns:
-            df = df.withColumn("bucket", self._bucket_expr())
-        if self._table is not None:
-            self._table.publish(df)
-            self._maybe_vacuum()
-            return
-        publish_dir(df, self._data_path(), partition_by="bucket")
-
     def _append(self, df: DataFrame) -> None:
-        if "bucket" not in df.columns:
-            df = df.withColumn("bucket", self._bucket_expr())
-        if self._table is not None:
-            self._table.append(df)
-            self._maybe_vacuum()
-            return
-        if has_data(self._data_path()) and not self._is_partitioned():
-            # Legacy flat layout: appending bucket=N/ subdirs beside flat
-            # parquet files makes Spark's partition discovery silently
-            # drop one of the two layouts (observed: the entire
-            # pre-existing store vanished from snapshot()). Migrate the
-            # legacy store to the partitioned layout in the same publish.
-            self._publish(self._raw().unionByName(df, allowMissingColumns=True))
-            return
-        append_dir(df, self._data_path(), partition_by="bucket")
+        """Append new rows (no bucket column yet); nothing read or rewritten."""
+        self._table.append(df.withColumn("bucket", self._bucket_expr()))
+        auto_vacuum(self._table, self.vacuum_keep)
 
     def _replace_buckets(self, df: DataFrame, buckets: list[int]) -> None:
-        """Rewrite only the given bucket partitions with df's rows (df =
-        the full new content of those buckets). Falls back to a full
-        publish on a legacy unpartitioned store."""
-        if self._table is not None:
-            if "bucket" not in df.columns:
-                df = df.withColumn("bucket", self._bucket_expr())
-            self._table.replace_partitions(df, buckets)
-            return
-        if not self._is_partitioned() and has_data(self._data_path()):
-            untouched = self._raw().filter(~F.col("bucket").isin(buckets))
-            self._publish(untouched.unionByName(df))
-            return
-        if "bucket" not in df.columns:
-            df = df.withColumn("bucket", self._bucket_expr())
-        replace_partitions(df, self._data_path(), "bucket", buckets)
+        """Replace only the given buckets' files with df's rows (df = the
+        full new content of those buckets, bucket column included)."""
+        self._table.replace_partitions(df, buckets)
+        auto_vacuum(self._table, self.vacuum_keep)
 
     # --------------------------------------------------------------- store
     def store_batch(self, entries: DataFrame, now: F.Column | None = None) -> StoreResult:
@@ -345,8 +234,8 @@ class MemoryStore:
         match takes precedence (`duplicates` lists all of a row's stored
         matches, else the one batch row it matched). It is one write-time
         probe (operators/probe.py), whose edge list is collected BEFORE
-        the store directory mutates, so the returned result never
-        depends on a lazy plan over the swapped path.
+        the store mutates, so the returned result never depends on a
+        lazy plan over post-mutation state.
 
         I/O: pure inserts APPEND files (nothing read or rewritten);
         dup-touch updates rewrite only the bucket partitions holding the
@@ -413,7 +302,9 @@ class MemoryStore:
             [(e.n, e.o, float(e.jaccard)) for e in conflict_rows],
             "new_id string, existing_id string, jaccard double",
         ).withColumn("detected_at", now)
-        conf_local.write.mode("append").parquet(os.path.join(self.path, "conflicts"))
+        if conflict_rows:
+            self._conflicts.append(conf_local)
+            auto_vacuum(self._conflicts, self.vacuum_keep)
 
         touched_ids = sorted({e.o for e in dup_rows if e.old})
         if touched_ids:
@@ -434,7 +325,7 @@ class MemoryStore:
                 .drop("_hit")
             )
             self._replace_buckets(updated, buckets)
-        # inserts always APPEND (bucket-partitioned file move-in).
+        # inserts always APPEND (new bucket-partitioned files).
         # With handlers attached the plan is executed again for the
         # store event (count + bounded id sample) — persist around the
         # append+emit so an attached embedding_provider computes

@@ -11,9 +11,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..storeio import guarded_collect
 from .minhash import band_buckets
 from .verify import jaccard_col
+
+
+def guarded_collect(df: DataFrame, max_rows: int, what: str) -> list:
+    """Collect with a loud failure instead of a silent driver OOM
+    (pattern from operators/rerank.py): fetch max_rows+1 and raise if
+    the limit is hit. For output-bound edge lists that are small in any
+    sane input but unbounded in theory."""
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"{what} produced more than {max_rows} rows for a driver-side "
+            "collect; this edge list is expected to be output-bound and "
+            "small — raise the guard only if the batch genuinely contains "
+            "that many duplicate edges"
+        )
+    return rows
 
 
 def probe_edges(new: DataFrame, stored: DataFrame, cfg: DedupConfig,

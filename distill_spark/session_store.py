@@ -21,9 +21,10 @@ Reference: /root/reference/pkg/session/sqlite.go
   estimateTokens = (len+3)/4        :740-742
   content_hash = FNV-1a 64          :692-705
 
-Spark shape: entries persist as a parquet directory (atomic publish;
-Iceberg on clusters). The dedup probe is the engine's write-time probe
-(operators/probe.py) of the incoming batch against the session's
+Spark shape: entries persist as a versioned table
+(tableio.VersionedTable; Iceberg on clusters), one copy-on-write
+snapshot per push or delete. The dedup probe is the engine's write-time
+probe (operators/probe.py) of the incoming batch against the session's
 PERSISTED signatures and itself, replacing the reference's linear scan.
 Budget
 enforcement is sequential BY DESIGN (the reference escalates one entry
@@ -37,7 +38,6 @@ in parallel, no driver loop over sessions.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import re
 import uuid
@@ -48,11 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .storeio import guarded_collect, publish_dir, recover_dir
-from .operators.probe import greedy_accept, probe_edges
+from .operators.probe import greedy_accept, guarded_collect, probe_edges
 from .operators.signatures import with_signatures
-
-log = logging.getLogger("distill_spark")
+from .tableio import auto_vacuum, open_table
 
 ENTRY_SCHEMA = (
     "id string, session_id string, role string, content string, "
@@ -227,7 +225,7 @@ class SessionStore:
                  default_dedup_jaccard: float = 0.85,
                  default_preserve_recent: int = 10,
                  embedding_provider=None, dedup_cosine: float = 0.95,
-                 backend: str = "dirs", vacuum_keep: int | None = 8):
+                 vacuum_keep: int | None = 8):
         """embedding_provider (embedding.EmbeddingProvider, optional):
         when set, entries persist an `embedding` column and the push
         dedup probe becomes embedding cosine >= dedup_cosine — the
@@ -236,10 +234,18 @@ class SessionStore:
         TODO <1K entries; the collect is loudly guarded). Without a
         provider the LSH shingle probe is the network-free default.
 
-        vacuum_keep (versioned backend): auto-vacuum after each commit,
-        retaining the newest N versions — the per-push copy-on-write
-        snapshots otherwise accumulate O(pushes x table size) disk
-        (round-5 advice #2). None disables."""
+        Entries live in a copy-on-write versioned table
+        (tableio.VersionedTable): a context() or entries() frame planned
+        before a push/delete keeps reading the pre-mutation rows. An
+        entries directory written by the older dir-overwrite layout is
+        migrated as version 1 on open (tableio.open_table).
+
+        vacuum_keep: auto-vacuum after each commit, retaining the newest
+        N versions — the per-push snapshots otherwise accumulate
+        O(pushes x table size) disk (round-5 advice #2). A frame handed
+        out survives `vacuum_keep - 1` further commits; after that its
+        action fails (file gone) rather than returning other rows. None
+        disables."""
         self.spark, self.path = spark, path
         self.vacuum_keep = vacuum_keep
         # 64-bit lanes: persisted array<bigint> sigs (see MemoryStore)
@@ -249,31 +255,8 @@ class SessionStore:
                          default_preserve_recent)
         self.embedding_provider = embedding_provider
         self.dedup_cosine = dedup_cosine
-        os.makedirs(path, exist_ok=True)
-        if backend not in ("dirs", "versioned"):
-            raise ValueError(f"unknown backend {backend!r}")
-        if backend == "versioned":
-            # snapshot-isolated entries: a context() plan built before a
-            # push/delete still collects the pre-mutation rows (the
-            # dir-overwrite layout's readers race the rename). Same
-            # seam + legacy migration as MemoryStore.
-            from .tableio import VersionedTable, foreign_parquet_files
-
-            legacy = foreign_parquet_files(self._entries_path())
-            self._table = VersionedTable(spark, self._entries_path(),
-                                         stats_col="seq")
-            if legacy:
-                if self._table.current_version() != 0:
-                    raise RuntimeError(
-                        f"session store at {path} has BOTH a versioned "
-                        f"manifest and {len(legacy)} non-versioned parquet "
-                        f"files (e.g. {legacy[0]}); resolve manually"
-                    )
-                self._table.publish(spark.read.parquet(*legacy))
-                for f in legacy:
-                    os.remove(f)
-        else:
-            self._table = None
+        self._table = open_table(spark, self._entries_path(),
+                                 stats_col="seq")
         self._sessions: dict[str, SessionConfig] = {}
         self._load_sessions()
 
@@ -303,15 +286,7 @@ class SessionStore:
         return ENTRY_SCHEMA
 
     def entries(self, session_id: str | None = None) -> DataFrame:
-        p = self._entries_path()
-        if self._table is not None:
-            df = self._table.read(schema=self._entry_schema())
-        else:
-            recover_dir(p)
-            if not os.path.exists(p):
-                df = self.spark.createDataFrame([], self._entry_schema())
-            else:
-                df = self.spark.read.parquet(p)
+        df = self._table.read(schema=self._entry_schema())
         if self.embedding_provider is not None and "embedding" not in df.columns:
             df = df.withColumn("embedding", F.lit(None).cast("array<float>"))
         if session_id is not None:
@@ -319,22 +294,11 @@ class SessionStore:
         return df
 
     def _publish(self, df: DataFrame) -> None:
-        if self._table is not None:
-            # copy-on-write: the new version's files are written fresh;
-            # df may lazily read the current version's files (never
-            # deleted by a writer), so no pre-materialization needed
-            self._table.publish(df)
-            if self.vacuum_keep:
-                try:
-                    self._table.vacuum(keep=self.vacuum_keep)
-                except Exception:  # maintenance must never fail the mutation
-                    log.warning("vacuum of session store %r failed", self.path,
-                                exc_info=True)
-            return
-        # crash-safe atomic swap with startup recovery (storeio): a crash
-        # between the two renames leaves entries at `._old`, restored by
-        # recover_dir on the next read/publish
-        publish_dir(df, self._entries_path())
+        # copy-on-write: the new version's files are written fresh; df
+        # may lazily read the current version's files (never deleted by
+        # a writer), so no pre-materialization needed
+        self._table.publish(df)
+        auto_vacuum(self._table, self.vacuum_keep)
 
     # ---------------------------------------------------------------- API
     def create(self, session_id: str | None = None, max_tokens: int | None = None,

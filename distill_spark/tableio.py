@@ -1,6 +1,7 @@
 """Versioned-manifest parquet table: snapshot isolation on a plain
 filesystem — the offline stand-in for the Iceberg/Delta layer SURVEY
-§1.1 promises under the stateful stores.
+§1.1 promises under the stateful stores. It is the one table layer
+under MemoryStore, SessionStore and CheckpointStore (`open_table`).
 
 Reference analog: the SQLite schema/migration layer the reference keeps
 under its memory store (/root/reference/pkg/memory/sqlite.go:67-114) —
@@ -20,18 +21,22 @@ Semantics:
   * COPY-ON-WRITE. Mutations write NEW files, then a NEW manifest, then
     swap LATEST. Existing files are never modified or deleted by a
     writer — a reader that pinned version N keeps a consistent view
-    *through* concurrent publishes/appends/partition-rewrites (the plain
-    dir-overwrite backend cannot do this: its readers race the rename)
-    until vacuum() drops version N. The stores auto-vacuum after each
-    commit with `vacuum_keep` (8 by default), so a pinned reader's lazy
-    frame survives the next `vacuum_keep - 1` commits, not indefinitely;
-    collect or checkpoint it before more commits land.
+    *through* concurrent publishes/appends/partition-rewrites until
+    vacuum() drops version N. The stores auto-vacuum after each commit
+    with `vacuum_keep` (8 by default), so a pinned reader's lazy frame
+    survives the next `vacuum_keep - 1` commits, not indefinitely; after
+    that its action fails (file gone) instead of returning other rows.
+    Collect or checkpoint it before more commits land.
   * ATOMIC per operation. A crash before the LATEST swap leaves the
     table at the previous version; orphaned data files are invisible
     (readers only see manifest-listed files) and reaped by vacuum().
   * TIME TRAVEL. read(version=N) reads any retained manifest.
   * vacuum(keep) drops manifests older than the last `keep` versions
     and any data file no retained manifest references.
+  * NO LISTING JOB. A read hands Spark the manifest's file list and
+    plans it with in-process file status calls; Spark's parallel
+    listing job (above 32 paths) would only re-discover files the
+    manifest already names.
 
 Single-writer by contract (like the stores it backs); version_check on
 commit makes a lost-update race loud instead of silent.
@@ -40,12 +45,19 @@ commit makes a lost-update race loud instead of silent.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
+
+log = logging.getLogger("distill_spark")
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_listing_lock = threading.Lock()
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -76,6 +88,21 @@ def _merge_schemas(old: StructType | None, new: StructType) -> StructType | None
         elif prev.dataType != f.dataType:
             return None
     return StructType(out)
+
+
+def _read_files(spark: SparkSession, reader, paths: list[str]) -> DataFrame:
+    """reader.parquet(*paths) with Spark's file listing kept in this
+    process: the paths are data files named by a manifest (or found by a
+    walk), so a parallel-listing job would only stat them again. The
+    threshold is raised for the plan construction alone; the lock keeps
+    concurrent reads from restoring each other's value."""
+    with _listing_lock:
+        prev = spark.conf.get(_LISTING_THRESHOLD)
+        spark.conf.set(_LISTING_THRESHOLD, str(max(len(paths), int(prev))))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
 def _file_stats(path: str, column: str) -> dict:
@@ -175,6 +202,11 @@ class VersionedTable:
             reader = reader.option("basePath", self._ddir())
         return reader
 
+    def _scan(self, man: dict, rels) -> DataFrame:
+        """DataFrame over exactly the data files `rels` of manifest `man`."""
+        paths = [os.path.join(self._ddir(), rel) for rel in sorted(rels)]
+        return _read_files(self.spark, self._reader_for(man), paths)
+
     def read(self, schema: str | None = None,
              version: int | None = None) -> DataFrame:
         """DataFrame over the PINNED file list of `version` (default:
@@ -192,8 +224,7 @@ class VersionedTable:
             if schema is None:
                 raise ValueError("empty table and no schema given")
             return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self._ddir(), rel) for rel in sorted(files)]
-        return self._reader_for(man).parquet(*paths)
+        return self._scan(man, files)
 
     def row_count(self, version: int | None = None) -> int | None:
         """Exact row count from manifest stats alone (no file reads) —
@@ -300,10 +331,15 @@ class VersionedTable:
                             schema=_nullable(df.schema))
 
     def append(self, df: DataFrame) -> int:
-        """Transactional append: next version = current files + df's."""
+        """Transactional append: next version = current files + df's. An
+        append that stages no rows commits nothing (returns the current
+        version)."""
         v = self.current_version()
+        staged = self._stage_files(df)
+        if not staged:
+            return v
         files = dict(self._manifest(v)["files"])
-        files.update(self._stage_files(df))
+        files.update(staged)
         return self._commit(files, v, schema=self._next_schema(v, df))
 
     def merge(self, df: DataFrame, key: str) -> int:
@@ -350,9 +386,7 @@ class VersionedTable:
                 pass
             candidates.add(rel)
         if candidates:
-            paths = [os.path.join(self._ddir(), rel)
-                     for rel in sorted(candidates)]
-            existing = self._reader_for(man).parquet(*paths)
+            existing = self._scan(man, candidates)
             kept = existing.join(df.select(key).distinct(), on=key,
                                  how="left_anti")
             new_rows = kept.unionByName(df, allowMissingColumns=True)
@@ -419,9 +453,9 @@ class VersionedTable:
 def foreign_parquet_files(root: str) -> list[str]:
     """Parquet files under `root` that are NOT part of a VersionedTable
     layout (whose own files live under data/, manifests under _v/) —
-    i.e. rows a pre-existing dir-layout store left behind. Opening such
-    a path as a versioned table must migrate these, never silently
-    hide them (the manifest lists no files ⇒ the store looks empty)."""
+    i.e. rows a pre-existing dir-layout store left behind. open_table
+    migrates these, never silently hides them (the manifest lists no
+    files ⇒ the store looks empty)."""
     found: list[str] = []
     if not os.path.isdir(root):
         return found
@@ -434,3 +468,58 @@ def foreign_parquet_files(root: str) -> list[str]:
         found.extend(os.path.join(cur, f) for f in files
                      if f.endswith(".parquet"))
     return found
+
+
+def open_table(spark: SparkSession, path: str,
+               partition_by: str | None = None,
+               stats_col: str | None = None,
+               legacy_rows=None) -> VersionedTable:
+    """The VersionedTable at `path`, adopting as version 1 any parquet a
+    pre-existing dir-layout store left there (foreign_parquet_files):
+    opening such a path must never silently show an empty table.
+
+    The legacy files are read with mergeSchema (files written before a
+    column existed sit beside newer ones) and basePath=`path`, so
+    `col=value` directory values (e.g. bucket=N) survive as a column.
+    `legacy_rows(df) -> df`, when given, brings those rows to the
+    current schema before the publish; it runs on this path only. The
+    legacy files and their directories are removed after the commit, so
+    a second open does not re-migrate. A path holding both a manifest
+    and foreign files (a half-done migration) is refused loudly."""
+    legacy = foreign_parquet_files(path)
+    table = VersionedTable(spark, path, partition_by=partition_by,
+                           stats_col=stats_col)
+    if not legacy:
+        return table
+    if table.current_version() != 0:
+        raise RuntimeError(
+            f"table at {path} has BOTH a versioned manifest and "
+            f"{len(legacy)} non-versioned parquet files (e.g. {legacy[0]}); "
+            "resolve manually"
+        )
+    reader = spark.read.option("mergeSchema", "true").option("basePath", path)
+    rows = _read_files(spark, reader, legacy)
+    if legacy_rows is not None:
+        rows = legacy_rows(rows)
+    table.publish(rows)
+    tops = set()
+    for f in legacy:
+        os.remove(f)
+        top = os.path.relpath(f, path).split(os.sep)[0]
+        if top != os.path.basename(f):
+            tops.add(top)
+    for top in tops:  # the now-empty legacy partition dirs
+        shutil.rmtree(os.path.join(path, top), ignore_errors=True)
+    return table
+
+
+def auto_vacuum(table: VersionedTable, keep: int | None) -> None:
+    """The stores' post-commit maintenance: vacuum(keep) unless keep is
+    None/0. A failure is logged on `distill_spark`, never raised — the
+    mutation it follows has already committed."""
+    if not keep:
+        return
+    try:
+        table.vacuum(keep=keep)
+    except Exception:
+        log.warning("vacuum of table %r failed", table.path, exc_info=True)

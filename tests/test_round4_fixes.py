@@ -1,9 +1,9 @@
 """Round-4 ADVICE regressions:
 
-  * HIGH — appending to a LEGACY (flat, unpartitioned) memory store must
-    migrate it to the bucket-partitioned layout, not drop bucket=N/ dirs
-    beside flat files (Spark partition discovery then silently hides one
-    of the two layouts — the whole pre-existing store vanished);
+  * HIGH — opening a LEGACY (flat, unpartitioned) memory store must
+    migrate its rows into the bucket-partitioned table, never hide them
+    (layering bucket=N/ dirs beside flat files once made the whole
+    pre-existing store vanish);
   * enabling an embedding provider on an existing store must not hide the
     new column behind single-footer schema inference (mergeSchema);
   * a job re-queued after a driver restart reruns with the SUBMITTED
@@ -62,18 +62,20 @@ def test_buckets_of_no_spark_job(spark, tmp_path):
 
 
 def test_legacy_flat_store_append_migrates(spark, tmp_path):
-    """ADVICE high: insert into a legacy flat store must keep old rows."""
-    path = str(tmp_path / "mem")
-    store = MemoryStore(spark, path, n_buckets=8)
-    # hand-build a LEGACY layout: flat parquet files, no bucket= dirs
-    legacy = spark.createDataFrame(
-        [("m1", "alpha beta gamma delta epsilon zeta")], "id string, text string"
-    )
-    from distill_spark.operators.signatures import with_signatures
+    """ADVICE high: a legacy flat store keeps its rows through the
+    migration on open and the inserts after it. The rows predate
+    persisted signatures: the migration derives them, so a near-copy
+    of a legacy row is still rejected."""
+    from distill_spark.tableio import foreign_parquet_files
 
-    sigs = with_signatures(legacy, "text", "id", store.cfg,
-                           parts=("shingles", "minhash"))
-    full = legacy.join(sigs, "id").select(
+    path = str(tmp_path / "mem")
+    # hand-build a LEGACY layout: flat parquet files, no bucket= dirs,
+    # no shingles/minhash columns
+    legacy = spark.createDataFrame(
+        [("m1", "alpha beta gamma delta epsilon zeta eta theta iota")],
+        "id string, text string",
+    )
+    full = legacy.select(
         "id", "text",
         F.array().cast("array<string>").alias("tags"),
         F.lit(None).cast("string").alias("source"),
@@ -86,16 +88,28 @@ def test_legacy_flat_store_append_migrates(spark, tmp_path):
         F.lit(None).cast("string").alias("superseded_by"),
         F.lit(0).cast("long").alias("sensitivity"),
         F.lit(0).cast("long").alias("decay_level"),
-        "shingles", "minhash",
     )
-    full.write.mode("overwrite").parquet(store._data_path())
-    assert not store._is_partitioned()
-    assert {r["id"] for r in store.snapshot().select("id").collect()} == {"m1"}
+    full.write.mode("overwrite").parquet(os.path.join(path, "memories"))
 
-    store.store_batch(_entries(spark, [("m2", "totally unrelated new text here")]))
+    store = MemoryStore(spark, path, n_buckets=8)
+    assert store._table.current_version() == 1
+    assert not foreign_parquet_files(store._data_path())  # migrated, not layered
+    snap = store._raw().collect()
+    assert [r["id"] for r in snap] == ["m1"]
+    assert snap[0]["minhash"] and snap[0]["bucket"] == store._buckets_of(["m1"])[0]
+
+    res = store.store_batch(_entries(spark, [
+        ("m2", "totally unrelated new text here"),
+        ("m3", "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+    ]))
+    assert [(r["new_id"], r["existing_id"]) for r in res.duplicates.collect()] \
+        == [("m3", "m1")]
     ids = {r["id"] for r in store.snapshot().select("id").collect()}
     assert ids == {"m1", "m2"}, f"legacy rows lost: {ids}"
-    assert store._is_partitioned()  # migrated, not layered
+    # a second open does not re-migrate
+    again = MemoryStore(spark, path, n_buckets=8)
+    assert again._table.current_version() == store._table.current_version()
+    assert again.snapshot().count() == 2
 
 
 def test_embedding_column_visible_after_enabling_provider(spark, tmp_path):

@@ -1,8 +1,8 @@
 """Round-5 fixes (VERDICT/ADVICE round 4):
 
-  1. MemoryStore(backend="versioned") on a path holding an existing
-     dirs-layout store must MIGRATE the legacy rows (not silently show
-     an empty store), and refuse loudly on a mixed layout.
+  1. MemoryStore on a path holding an existing dirs-layout store
+     (memories/bucket=N/) must MIGRATE the legacy rows (not silently
+     show an empty store), and refuse loudly on a mixed layout.
   2. VersionedTable: a crashed/failed staged write must not leave
      _stage_* dirs forever; vacuum() reaps strays.
   3. Lifecycle events for batch-derived subjects (store/decay) carry an
@@ -35,18 +35,22 @@ def _texts(n, tag="alpha"):
 
 def test_versioned_backend_migrates_legacy_dirs_store(spark, tmp_path):
     p = str(tmp_path / "store")
-    legacy = MemoryStore(spark, p, backend="dirs")
-    batch = spark.createDataFrame(_texts(6), "id string, text string")
-    legacy.store_batch(batch)
-    assert legacy.snapshot().count() == 6
+    # hand-build the legacy dirs layout: memories/bucket=N/part-*.parquet
+    src = MemoryStore(spark, str(tmp_path / "src"), n_buckets=4)
+    src.store_batch(spark.createDataFrame(_texts(6), "id string, text string"))
+    want = sorted(tuple(r) for r in src._raw().collect())
+    src._raw().write.partitionBy("bucket").parquet(os.path.join(p, "memories"))
+    assert any(n.startswith("bucket=") for n in os.listdir(os.path.join(p, "memories")))
 
-    # reopening as versioned must SEE the rows (migrated as version 1)
-    vstore = MemoryStore(spark, p, backend="versioned")
+    # opening must SEE every row, bucket values included (version 1)
+    vstore = MemoryStore(spark, p, n_buckets=4)
     assert vstore._table.current_version() == 1
-    got = {r["id"] for r in vstore.snapshot().select("id").collect()}
-    assert got == {f"m{i}" for i in range(6)}
+    assert sorted(tuple(r) for r in vstore._raw().select(*src._raw().columns)
+                  .collect()) == want
+    assert not any(n.startswith("bucket=")
+                   for n in os.listdir(os.path.join(p, "memories")))
     # legacy files are gone: a second open does not re-migrate
-    vstore2 = MemoryStore(spark, p, backend="versioned")
+    vstore2 = MemoryStore(spark, p, n_buckets=4)
     assert vstore2._table.current_version() == 1
     assert vstore2.snapshot().count() == 6
     # and mutations keep working on the migrated table
@@ -56,7 +60,7 @@ def test_versioned_backend_migrates_legacy_dirs_store(spark, tmp_path):
 
 def test_versioned_backend_refuses_mixed_layout(spark, tmp_path):
     p = str(tmp_path / "store")
-    vstore = MemoryStore(spark, p, backend="versioned")
+    vstore = MemoryStore(spark, p)
     vstore.store_batch(
         spark.createDataFrame(_texts(3), "id string, text string")
     )
@@ -65,7 +69,7 @@ def test_versioned_backend_refuses_mixed_layout(spark, tmp_path):
     spark.createDataFrame([("x", 1)], "id string, v long").toPandas() \
         .to_parquet(stray)
     with pytest.raises(RuntimeError, match="BOTH a versioned manifest"):
-        MemoryStore(spark, p, backend="versioned")
+        MemoryStore(spark, p)
 
 
 def test_stage_dir_cleaned_on_failed_write_and_vacuum(spark, tmp_path):

@@ -230,8 +230,7 @@ def test_versioned_stores_auto_vacuum(spark, tmp_path):
 
     from distill_spark.memory import MemoryStore
 
-    store = MemoryStore(spark, str(tmp_path / "mem"), backend="versioned",
-                        vacuum_keep=2)
+    store = MemoryStore(spark, str(tmp_path / "mem"), vacuum_keep=2)
     for i in range(4):
         batch = spark.createDataFrame(
             [(f"m{i}_{j}", f"text {i} {j} unique payload") for j in range(3)],

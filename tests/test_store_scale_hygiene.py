@@ -1,11 +1,14 @@
 """Round-3 scale hygiene for the stateful stores (VERDICT r2 item 3):
 
-  * mutations rewrite ONLY touched bucket partitions (untouched
-    partition files keep their exact paths, sizes, and mtimes);
+  * mutations rewrite ONLY touched bucket partitions: consecutive
+    manifests (VersionedTable.files()) differ only in files of the
+    touched buckets, a pure insert keeps every earlier file, and a
+    mutation that touches nothing commits no new version;
   * recall() is a distributed TakeOrdered top-k, not a global rank
     window funnelling every row through one task;
-  * publish is crash-safe: a crash between the two renames (live dir
-    at `._old`, nothing live) is healed on the next read/publish;
+  * a commit that dies after its files are staged leaves every store
+    at its previous version; the retry commits and vacuum() reaps the
+    orphaned files;
   * store_batch results are materialized BEFORE the store directory
     mutates — evicting every cached plan after the call must not
     change them (round-2 ADVICE: phantom self-match pairs).
@@ -16,9 +19,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from distill_spark.checkpoint import CheckpointStore
 from distill_spark.memory import MemoryStore
 from distill_spark.session_store import SessionStore
-from distill_spark import storeio
+from distill_spark.tableio import VersionedTable
 
 
 @pytest.fixture()
@@ -43,86 +47,65 @@ def _texts(n):
     ]
 
 
-def _file_state(root):
-    """{relpath: (size, mtime_ns)} for every parquet file under root."""
-    out = {}
-    for r, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(".")]
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(r, f)
-                st = os.stat(p)
-                out[os.path.relpath(p, root)] = (st.st_size, st.st_mtime_ns)
-    return out
+def _changed_buckets(table, mutate):
+    """Run mutate(); assert it committed exactly one version and return
+    the buckets whose files differ between that version and the one
+    before it."""
+    v = table.current_version()
+    mutate()
+    assert table.current_version() == v + 1
+    before, after = table.files(v), table.files()
+    return {int(info["part"]) for rel, info in before.items() if rel not in after} \
+        | {int(info["part"]) for rel, info in after.items() if rel not in before}
 
 
 def test_mutations_rewrite_only_touched_buckets(spark, store):
     rows = _texts(60)
     store.store_batch(_entries(spark, rows))
-    root = store._data_path()
-    assert any(n.startswith("bucket=") for n in os.listdir(root))
+    table = store._table
+    assert len({info["part"] for info in table.files().values()}) > 1
 
-    # --- expire one id: only its bucket partition may change
+    # --- expire one id: only its bucket's files may change
     target = "m0007"
-    [b] = store._buckets_of([target])
-    before = _file_state(root)
-    store.expire([target])
-    after = _file_state(root)
-    changed_buckets = {
-        p.split(os.sep)[0]
-        for p in (set(before) ^ set(after))
-        | {p for p in before if p in after and before[p] != after[p]}
-    }
-    assert changed_buckets == {f"bucket={b}"}
+    assert _changed_buckets(table, lambda: store.expire([target])) \
+        == set(store._buckets_of([target]))
     snap = {r["id"]: r for r in store.snapshot().collect()}
     assert snap[target]["expired"] and len(snap) == 60
 
     # --- supersede: same single-bucket property
-    [b2] = store._buckets_of(["m0011"])
-    before = _file_state(root)
-    store.supersede("m0011", "m0001")
-    after = _file_state(root)
-    changed_buckets = {
-        p.split(os.sep)[0]
-        for p in (set(before) ^ set(after))
-        | {p for p in before if p in after and before[p] != after[p]}
-    }
-    assert changed_buckets == {f"bucket={b2}"}
+    assert _changed_buckets(table, lambda: store.supersede("m0011", "m0001")) \
+        == set(store._buckets_of(["m0011"]))
     snap = {r["id"]: r for r in store.snapshot().collect()}
     assert snap["m0011"]["superseded_by"] == "m0001"
 
     # --- forget two ids: exactly their buckets change, rows gone
     victims = ["m0002", "m0042"]
-    vb = {f"bucket={x}" for x in store._buckets_of(victims)}
-    before = _file_state(root)
-    removed = store.forget(ids=victims)
-    after = _file_state(root)
-    changed_buckets = {
-        p.split(os.sep)[0]
-        for p in (set(before) ^ set(after))
-        | {p for p in before if p in after and before[p] != after[p]}
-    }
-    assert removed == 2 and changed_buckets == vb
+    removed = []
+    assert _changed_buckets(
+        table, lambda: removed.append(store.forget(ids=victims))
+    ) == set(store._buckets_of(victims))
+    assert removed == [2]
     ids = {r["id"] for r in store.snapshot().collect()}
     assert not (set(victims) & ids) and len(ids) == 58
 
-    # --- forget matching nothing: zero file churn
-    before = _file_state(root)
+    # --- forget matching nothing: no new version
+    v = table.current_version()
     assert store.forget(ids=["nope"]) == 0
-    assert _file_state(root) == before
+    assert table.current_version() == v
 
 
 def test_pure_insert_appends_without_rewriting(spark, store):
     rows = _texts(40)
     store.store_batch(_entries(spark, rows[:20]))
-    root = store._data_path()
-    before = _file_state(root)
+    table = store._table
+    v = table.current_version()
+    before = table.files()
     store.store_batch(_entries(spark, rows[20:]))
-    after = _file_state(root)
-    # every pre-existing file survived untouched; only additions happened
-    for p, st in before.items():
-        assert after.get(p) == st, f"pre-existing file rewritten: {p}"
-    assert len(after) > len(before)
+    # one append commit: every earlier file kept, new files added
+    assert table.current_version() == v + 1
+    after = table.files()
+    assert set(before) < set(after)
+    assert all(after[rel] == info for rel, info in before.items())
     assert store.snapshot().count() == 40
 
 
@@ -167,69 +150,84 @@ def test_store_batch_results_survive_cache_eviction(spark, store):
     assert {r["id"] for r in res.stored.collect()} == {"m3"}
 
 
-def test_publish_crash_recovery(spark, tmp_path, store):
-    rows = _texts(10)
-    store.store_batch(_entries(spark, rows))
-    p = store._data_path()
-    # simulate a crash between the two renames of publish_dir: live dir
-    # moved aside, replacement never landed
-    os.rename(p, p + "._old")
-    assert not os.path.exists(p)
-    assert store.snapshot().count() == 10  # reader healed it
-    assert os.path.exists(p)
-
-    # stale staging dirs from a crashed write must not wedge a publish
-    os.makedirs(p + "._tmpdead", exist_ok=True)
-    store.expire(["m0003"])
-    assert not os.path.exists(p + "._tmpdead")
-    snap = {r["id"]: r for r in store.snapshot().collect()}
-    assert snap["m0003"]["expired"]
-
-
-def test_session_store_publish_crash_recovery(spark, tmp_path):
-    ss = SessionStore(spark, str(tmp_path / "sess"))
-    sid = ss.create("s1", max_tokens=10_000)
-    ss.push(sid, [{"content": "alpha beta gamma delta epsilon zeta eta theta"}])
-    p = ss._entries_path()
-    os.rename(p, p + "._old")
-    out, stats = ss.context(sid)
-    assert stats["total_entries"] == 1 and os.path.exists(p)
-
-
 def test_run_decay_touches_only_changed_buckets(spark, store):
     now = F.to_timestamp(F.lit("2026-01-01 00:00:00"))
     old = F.to_timestamp(F.lit("2025-12-29 00:00:00"))   # 72h -> level 1
     rows_new = _texts(20)
     store.store_batch(_entries(spark, rows_new[:10]), now=old)
     store.store_batch(_entries(spark, rows_new[10:]), now=now)
-    root = store._data_path()
-    events = store.run_decay(now=now).collect()
+    events = []
+    changed = _changed_buckets(
+        store._table, lambda: events.extend(store.run_decay(now=now).collect()))
     decayed_ids = {r["id"] for r in events}
     assert decayed_ids == {i for i, _ in rows_new[:10]}
     assert all(r["new_level"] == 1 for r in events)
-    # second run: nothing changes, zero file churn
-    before = _file_state(root)
+    assert changed == set(store._buckets_of(decayed_ids))
+    # second run: nothing changes, no new version
+    v = store._table.current_version()
     assert store.run_decay(now=now).count() == 0
-    assert _file_state(root) == before
+    assert store._table.current_version() == v
 
 
-def test_replace_partitions_crash_heal(spark, tmp_path):
-    """A crash between the two renames of a partition swap leaves the
-    bucket as a '._old-*' trash dir; the next recover_dir (called by
-    every reader/primitive) must restore it."""
-    import shutil
+# ------------------------------------------------- failed-commit safety
 
-    p = str(tmp_path / "rp")
-    df = spark.createDataFrame([(i, i % 4) for i in range(40)], "id long, bucket int")
-    storeio.publish_dir(df, p, partition_by="bucket")
-    # simulate: live bucket moved to trash, replacement never landed
-    os.rename(os.path.join(p, "bucket=2"), os.path.join(p, "._old-bucket=2-dead01"))
-    assert not os.path.exists(os.path.join(p, "bucket=2"))
-    storeio.recover_dir(p)
-    assert os.path.exists(os.path.join(p, "bucket=2"))
-    assert spark.read.parquet(p).count() == 40
-    # stale trash WITH a live partner is cleared, live wins
-    shutil.copytree(os.path.join(p, "bucket=1"), os.path.join(p, "._old-bucket=1-dead02"))
-    storeio.recover_dir(p)
-    assert not os.path.exists(os.path.join(p, "._old-bucket=1-dead02"))
-    assert spark.read.parquet(p).count() == 40
+def _memory_case(spark, path):
+    store = MemoryStore(spark, path, n_buckets=4, vacuum_keep=None)
+    store.store_batch(_entries(spark, _texts(10)))
+    return (store._table,
+            lambda: sorted((r["id"], r["expired"])
+                           for r in store.snapshot().collect()),
+            lambda: store.expire(["m0003"]))
+
+
+def _session_case(spark, path):
+    ss = SessionStore(spark, path, vacuum_keep=None)
+    sid = ss.create("s1", max_tokens=10_000)
+    ss.push(sid, [{"content": "alpha beta gamma delta epsilon zeta eta theta"}])
+    return (ss._table,
+            lambda: sorted(r["content"] for r in ss.entries(sid).collect()),
+            lambda: ss.push(sid, [{"content": "an unrelated second entry "
+                                              "about shuffle partitions"}]))
+
+
+def _checkpoint_case(spark, path):
+    cp = CheckpointStore(path, spark, vacuum_keep=None)
+    cp.run_stage("stage_x", lambda: spark.range(5), config_sig="a")
+    table = VersionedTable(spark, cp._stage_path("stage_x"))
+    return (table,
+            lambda: sorted(r["id"] for r in table.read().collect()),
+            lambda: cp.run_stage("stage_x", lambda: spark.range(5, 12),
+                                 config_sig="b"))
+
+
+@pytest.mark.parametrize("case", [_memory_case, _session_case, _checkpoint_case],
+                         ids=["memory", "session", "checkpoint"])
+def test_failed_commit_keeps_previous_version(spark, tmp_path, monkeypatch, case):
+    """A commit that dies after its files are staged (the table-layer
+    crash point: data files written, manifest not swapped)."""
+    table, read, mutate = case(spark, str(tmp_path / "store"))
+    v, before = table.current_version(), read()
+
+    def crash(self, *args, **kwargs):
+        raise OSError("commit died")
+
+    with monkeypatch.context() as m:
+        m.setattr(VersionedTable, "_commit", crash)
+        with pytest.raises(OSError, match="commit died"):
+            mutate()
+    # the store still reads the previous version
+    assert table.current_version() == v and read() == before
+    on_disk = set()
+    for root, _, names in os.walk(table._ddir()):
+        on_disk |= {os.path.relpath(os.path.join(root, n), table._ddir())
+                    for n in names if n.endswith(".parquet")}
+    orphans = on_disk - set(table.files())
+    assert orphans, "the failed commit staged no files"
+
+    # the next mutation commits; vacuum() reaps the orphans only
+    mutate()
+    assert table.current_version() == v + 1 and read() != before
+    deleted = table.vacuum(keep=2)
+    assert orphans <= set(deleted)
+    assert not any(os.path.exists(os.path.join(table._ddir(), o)) for o in orphans)
+    assert table.current_version() == v + 1 and read() != before

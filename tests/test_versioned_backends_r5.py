@@ -1,10 +1,8 @@
-"""Versioned (snapshot-isolated) backend under the SESSION store and the
-CHECKPOINT stage store — VERDICT round-4 "What's missing" #1: the
-MemoryStore already rode tableio.VersionedTable; the session store and
-the checkpoint ledger still used the dir-overwrite layout whose readers
-race mutations. Same contract tests the memory store passes
-(test_versioned_table.py): lifecycle green on backend="versioned",
-legacy-layout migration, and a reader pinned before a mutation still
+"""The versioned (snapshot-isolated) table under the SESSION store and the
+CHECKPOINT stage store — VERDICT round-4 "What's missing" #1. Same
+contract tests the memory store passes (test_versioned_table.py):
+lifecycle, migration of a hand-built legacy dir layout (flat entries/,
+flat stage directories), and a reader pinned before a mutation still
 collecting the pre-mutation rows afterwards.
 
 Reference analog: the session DDL
@@ -14,6 +12,7 @@ reads never observe a half-applied mutation).
 
 import logging
 import os
+import shutil
 
 import pytest
 
@@ -36,7 +35,7 @@ def _push_rows(tag, n):
 # --------------------------------------------------------------- session
 
 def test_session_lifecycle_on_versioned_backend(spark, tmp_path):
-    ss = SessionStore(spark, str(tmp_path / "s"), backend="versioned")
+    ss = SessionStore(spark, str(tmp_path / "s"))
     sid = ss.create("s1", max_tokens=100_000)
     r = ss.push(sid, _push_rows("a", 4))
     assert r.accepted == 4
@@ -52,22 +51,31 @@ def test_session_lifecycle_on_versioned_backend(spark, tmp_path):
 
 
 def test_session_versioned_migrates_legacy_dirs_store(spark, tmp_path):
+    # hand-build the legacy layout: flat entries/ parquet + sessions.json
+    src = SessionStore(spark, str(tmp_path / "src"))
+    sid = src.create("s1", max_tokens=100_000)
+    src.push(sid, _push_rows("b", 3))
     p = str(tmp_path / "s")
-    legacy = SessionStore(spark, p, backend="dirs")
-    sid = legacy.create("s1", max_tokens=100_000)
-    legacy.push(sid, _push_rows("b", 3))
+    src.entries().write.parquet(os.path.join(p, "entries"))
+    shutil.copy(src._sessions_path(), os.path.join(p, "sessions.json"))
 
-    vss = SessionStore(spark, p, backend="versioned")
+    vss = SessionStore(spark, p)
     assert vss._table.current_version() == 1
-    _, stats = vss.context(sid)
+    out, stats = vss.context(sid)
     assert stats["total_entries"] == 3
+    assert sorted(r["content"] for r in out.collect()) \
+        == sorted(r["content"] for r in src.entries(sid).collect())
     # legacy files gone; a reopen does not re-migrate
-    assert SessionStore(spark, p, backend="versioned") \
-        ._table.current_version() == 1
+    assert SessionStore(spark, p)._table.current_version() == 1
+
+    # a stray flat file beside the manifest layout is refused loudly
+    src.entries().write.mode("append").parquet(os.path.join(p, "entries"))
+    with pytest.raises(RuntimeError, match="BOTH a versioned manifest"):
+        SessionStore(spark, p)
 
 
 def test_session_reader_isolated_from_push_and_delete(spark, tmp_path):
-    ss = SessionStore(spark, str(tmp_path / "s"), backend="versioned")
+    ss = SessionStore(spark, str(tmp_path / "s"))
     sid = ss.create("s1", max_tokens=100_000)
     ss.push(sid, _push_rows("c", 3))
 
@@ -95,14 +103,14 @@ def images(spark):
 
 def test_checkpoint_versioned_run_and_resume(spark, images, tmp_path):
     path = str(tmp_path / "cp")
-    s1 = CheckpointStore(path, spark, backend="versioned")
+    s1 = CheckpointStore(path, spark)
     a1 = sorted(
         (r["image_id"], r["component"])
         for r in dedupe_checkpointed(images, s1, CFG).assignments.collect()
     )
     assert s1.computed and not s1.hits
 
-    s2 = CheckpointStore(path, spark, backend="versioned")
+    s2 = CheckpointStore(path, spark)
     a2 = sorted(
         (r["image_id"], r["component"])
         for r in dedupe_checkpointed(images, s2, CFG).assignments.collect()
@@ -112,26 +120,44 @@ def test_checkpoint_versioned_run_and_resume(spark, images, tmp_path):
 
 
 def test_checkpoint_versioned_migrates_dirs_stages(spark, images, tmp_path):
-    path = str(tmp_path / "cp")
-    s1 = CheckpointStore(path, spark)  # legacy dirs backend
+    src = str(tmp_path / "src")
+    s1 = CheckpointStore(src, spark)
     a1 = sorted(
         (r["image_id"], r["component"])
         for r in dedupe_checkpointed(images, s1, CFG).assignments.collect()
     )
-    # reopen versioned: stages migrate to v1 manifests and stay HITS
-    s2 = CheckpointStore(path, spark, backend="versioned")
+    # hand-build the legacy layout: one flat parquet directory per stage
+    # beside the same ledger
+    path = str(tmp_path / "cp")
+    for stage in s1.computed:
+        VersionedTable(spark, os.path.join(src, stage)).read() \
+            .write.parquet(os.path.join(path, stage))
+    shutil.copy(os.path.join(src, "_ledger.jsonl"), path)
+
+    # stages migrate to v1 manifests and stay HITS
+    s2 = CheckpointStore(path, spark)
     a2 = sorted(
         (r["image_id"], r["component"])
         for r in dedupe_checkpointed(images, s2, CFG).assignments.collect()
     )
     assert a2 == a1
     assert s2.hits == s1.computed and not s2.computed
-    assert os.path.isdir(os.path.join(path, "assignments", "_v"))
+    tables = [VersionedTable(spark, os.path.join(path, st)) for st in s1.computed]
+    assert all(t.current_version() == 1 for t in tables)
+    # a second run does not re-migrate
+    s3 = CheckpointStore(path, spark)
+    dedupe_checkpointed(images, s3, CFG).assignments.count()
+    assert s3.hits == s1.computed
+    assert all(t.current_version() == 1 for t in tables)
+    # a flat file beside a stage's manifest layout is refused loudly
+    spark.range(3).write.parquet(os.path.join(path, "assignments", "stray"))
+    with pytest.raises(RuntimeError, match="BOTH a versioned manifest"):
+        dedupe_checkpointed(images, CheckpointStore(path, spark), CFG)
 
 
 def test_checkpoint_reader_isolated_from_rerun(spark, tmp_path):
     path = str(tmp_path / "cp")
-    store = CheckpointStore(path, spark, backend="versioned")
+    store = CheckpointStore(path, spark)
     df1 = store.run_stage(
         "stage_x", lambda: spark.range(5).withColumnRenamed("id", "v"),
         config_sig="a",
@@ -140,7 +166,7 @@ def test_checkpoint_reader_isolated_from_rerun(spark, tmp_path):
 
     # config change forces a recompute -> new version published while
     # the old plan is still held
-    store2 = CheckpointStore(path, spark, backend="versioned")
+    store2 = CheckpointStore(path, spark)
     store2.run_stage(
         "stage_x", lambda: spark.range(50).withColumnRenamed("id", "v"),
         config_sig="b",
@@ -155,14 +181,14 @@ def test_checkpoint_reader_isolated_from_rerun(spark, tmp_path):
 # ---------------------------------------------------------- maintenance
 
 def _mutate_checkpoint(spark, path):
-    store = CheckpointStore(path, spark, backend="versioned")
+    store = CheckpointStore(path, spark)
     store.run_stage("stage_v", lambda: spark.range(3), config_sig="a")
-    return CheckpointStore(path, spark, backend="versioned").run_stage(
+    return CheckpointStore(path, spark).run_stage(
         "stage_v", lambda: spark.range(0), config_sig="a").count()
 
 
 def _mutate_memory(spark, path):
-    store = MemoryStore(spark, path, backend="versioned")
+    store = MemoryStore(spark, path)
     store.store_batch(spark.createDataFrame(
         [(f"m{i}", f"memory {i} about distinct topic token{i} words")
          for i in range(3)], "id string, text string"))
@@ -170,7 +196,7 @@ def _mutate_memory(spark, path):
 
 
 def _mutate_session(spark, path):
-    ss = SessionStore(spark, path, backend="versioned")
+    ss = SessionStore(spark, path)
     sid = ss.create("s1", max_tokens=100_000)
     ss.push(sid, _push_rows("v", 3))
     return ss.entries(sid).count()

@@ -4,9 +4,14 @@ sandbox-feasible Iceberg/Delta seam under the stateful stores
 
 Key property tested: SNAPSHOT ISOLATION — a reader that built its plan
 before a mutation keeps a consistent view through publishes, appends,
-partition rewrites, even a full overwrite. The dir-overwrite backend
-cannot pass that test (its files are renamed/deleted under the plan).
+partition rewrites, even a full overwrite, for the `vacuum_keep - 1`
+commits the stores retain it. The dir-overwrite layout the stores used
+before could not pass that test (its files were renamed/deleted under
+the plan). A read plans its scan without a Spark listing job.
 """
+
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +32,8 @@ def test_publish_append_replace_and_time_travel(spark, tmp_path):
     t.publish(_df(spark, [("a", 1), ("b", 2)]))
     assert t.current_version() == 1
     t.append(_df(spark, [("c", 3)]))
+    assert t.current_version() == 2
+    assert t.append(_df(spark, [("c", 3)]).limit(0)) == 2  # nothing staged
     assert t.current_version() == 2
     got = {r["id"]: r["v"] for r in t.read().collect()}
     assert got == {"a": 1, "b": 2, "c": 3}
@@ -90,7 +97,7 @@ def _entries(spark, rows):
 @pytest.fixture()
 def vstore(spark, tmp_path):
     return MemoryStore(spark, str(tmp_path / "mem"), dup_jaccard=0.5,
-                       conflict_jaccard=0.2, n_buckets=4, backend="versioned")
+                       conflict_jaccard=0.2, n_buckets=4)
 
 
 def test_memory_store_lifecycle_on_versioned_backend(spark, vstore):
@@ -120,7 +127,7 @@ def test_memory_store_lifecycle_on_versioned_backend(spark, vstore):
 
 
 def test_memory_store_reader_isolated_from_mutation(spark, vstore):
-    """The test the dir-overwrite backend cannot pass: a snapshot plan
+    """The test a dir-overwrite layout cannot pass: a snapshot plan
     built BEFORE a bucket rewrite + append still collects the
     pre-mutation content afterwards."""
     vstore.store_batch(_entries(spark, [
@@ -199,3 +206,61 @@ def test_manifest_schema_type_conflict_falls_back(spark, tmp_path):
     t.publish(spark.createDataFrame([("a", 1)], "id string, v long"))
     t.append(spark.createDataFrame([("b", "two")], "id string, v string"))
     assert json.load(open(t._manifest_path(2)))["schema"] is None
+
+
+def test_read_of_many_files_starts_no_job(spark, tmp_path):
+    """Above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    explicit paths, Spark plans a read with a parallel-listing job; the
+    manifest already names every file, so read() must not start one."""
+    t = VersionedTable(spark, str(tmp_path / "many"))
+    t.publish(spark.range(400).repartition(40))
+    assert len(t.files()) > 32
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("vt-read-plan", "VersionedTable.read plan")
+    try:
+        df = t.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(tracker.getJobIdsForGroup("vt-read-plan")) == []
+    assert df.count() == 400
+
+    # the threshold is raised for the plan alone: concurrent reads leave
+    # the session's value as they found it
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        workers = [threading.Thread(target=lambda: [t.read() for _ in range(3)])
+                   for _ in range(8)]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(w.is_alive() for w in workers)
+    assert spark.conf.get(key) == before
+
+
+def test_snapshot_frame_lives_vacuum_keep_minus_one_commits(spark, tmp_path):
+    """The retention window the store docstrings state: a frame handed
+    out survives vacuum_keep - 1 further commits; after more, its action
+    fails instead of returning other rows or an empty frame."""
+    keep = 3
+    store = MemoryStore(spark, str(tmp_path / "mem"), n_buckets=1,
+                        vacuum_keep=keep)
+    rows = [(f"m{i}", f"memory {i} about distinct topic token{i} words")
+            for i in range(keep + 1)]
+    store.store_batch(_entries(spark, rows))
+    frame = store.snapshot().select("id", "expired")
+    want = sorted((i, False) for i, _ in rows)
+    # with one bucket every expire replaces every file of the table
+    for i in range(keep - 1):
+        store.expire([f"m{i}"])
+        assert sorted(tuple(r) for r in frame.collect()) == want
+    store.expire([f"m{keep - 1}"])
+    with pytest.raises(Exception, match="(?i)not exist|FileNotFound"):
+        frame.collect()
