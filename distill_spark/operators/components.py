@@ -24,6 +24,7 @@ directly buys scaling efficiency at high parallelism.
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -33,6 +34,8 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
 from .onetask import fits_one_task, id_bytes
+
+log = logging.getLogger("distill_spark")
 
 # ids held per edge by _cc_local_labels: a and b in the Arrow batches,
 # their concatenations, the combined array and np.unique's sorted copy
@@ -148,6 +151,8 @@ def connected_components(
         # checkpoint when the caller configured one
         labels = _ckpt(_cc_local_labels(edges, id_col, out_col))
         connected_components.last_iterations = 0
+        log.debug("connected_components: %d edges -> local path, 0 iterations",
+                  n_edges)
         if own_persist:
             edges.unpersist()
         result = labels
@@ -226,6 +231,8 @@ def connected_components(
     # this graph needed — the serial floor of the pipeline at any
     # cluster size
     connected_components.last_iterations = iters
+    log.debug("connected_components: %d edges -> distributed path, %d iterations",
+              n_edges, iters)
 
     result = labels.select(F.col("node").alias(id_col), F.col("label").alias(out_col))
     if nodes is not None:

@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
 from .lsh import _allpairs_expr
-from .onetask import fits_one_task, id_bytes
+from .onetask import CHUNK, fits_one_task, id_bytes, range_pairs, runs
 
 log = logging.getLogger("distill_spark")
 
@@ -76,7 +76,6 @@ LOCAL_MAX_ROWS = 250_000
 # Local-kernel bytes per input row on top of its 4 id slots (see
 # _local_pairs for the breakdown).
 _ROW_BYTES = 400
-_CHUNK = 1 << 20  # pairs per chunk the local kernel generates / yields
 _U = np.uint64
 
 
@@ -202,7 +201,7 @@ def _refined_value_pairs(
             F.sort_array(F.collect_list("val")).alias("_ids")
         )
         level_pairs.append(
-            grouped.select(F.explode(_allpairs_expr(None)).alias("p"))
+            grouped.select(F.explode(_allpairs_expr()).alias("p"))
             .select(F.col("p.a").alias("va"), F.col("p.b").alias("vb"))
             .filter(hamming_dist(F.col("va"), F.col("vb")) <= k)
         )
@@ -220,37 +219,6 @@ def _refined_value_pairs(
     for p in level_pairs[1:]:
         out = out.unionByName(p)
     return out.unionByName(term).dropDuplicates(["va", "vb"])
-
-
-def _range_pairs(
-    left: np.ndarray, lo: np.ndarray, cnt: np.ndarray, chunk: int = _CHUNK
-) -> Iterator[tuple[np.ndarray, np.ndarray]]:
-    """For every row r the pairs (left[r], lo[r] + t), t < cnt[r], as
-    (left, right) arrays in chunks of about `chunk` pairs. A row is
-    never split, so a chunk holds at most chunk + max(cnt) pairs."""
-    keep = cnt > 0
-    left, lo, cnt = left[keep], lo[keep], cnt[keep]
-    if not len(cnt):
-        return
-    end = np.cumsum(cnt)
-    cuts = np.searchsorted(end, np.arange(chunk, end[-1], chunk), side="right")
-    bounds = np.unique(np.concatenate(([0], cuts, [len(cnt)])))
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        c = cnt[s:e]
-        first = np.repeat(np.cumsum(c) - c, c)
-        yield (np.repeat(left[s:e], c),
-               np.repeat(lo[s:e], c) + np.arange(first.size) - first)
-
-
-def _runs(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per position of sorted `keys`: the index, size and end (one past
-    its last position) of its run of equal keys."""
-    new = np.ones(len(keys), dtype=bool)
-    new[1:] = keys[1:] != keys[:-1]
-    starts = np.flatnonzero(new)
-    ends = np.append(starts[1:], len(keys))
-    run = np.cumsum(new) - 1
-    return run, (ends - starts)[run], ends[run]
 
 
 def _value_pairs(u: np.ndarray, k: int, cap: int, max_levels: int) -> np.ndarray:
@@ -275,11 +243,11 @@ def _value_pairs(u: np.ndarray, k: int, cap: int, max_levels: int) -> np.ndarray
             # w <= 32 for k >= 1, so it fits 64 bits
             key = (gid << _U(w)) | ((rv >> _U(off)) & _U((1 << w) - 1))
             order = np.argsort(key)
-            run, size, end = _runs(key[order])
+            run, size, end = runs(key[order])
             # all pairs inside each bucket at or under the cap (every
             # bucket at the last level); runs of one yield none
             pos = np.flatnonzero((size <= cap) | last)
-            emit(idx[order], _range_pairs(pos, pos + 1, end[pos] - pos - 1))
+            emit(idx[order], range_pairs(pos, pos + 1, end[pos] - pos - 1))
             big = size > cap
             if last or not big.any():
                 continue
@@ -305,7 +273,7 @@ def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame
     (value, id) rows sorted by value, expands each identical-value
     group to all its id pairs, runs _value_pairs over the distinct
     values and expands every verified value pair to its id pairs.
-    Pairs leave in chunks of ~_CHUNK rows, so a hot identical-value
+    Pairs leave in chunks of ~CHUNK rows, so a hot identical-value
     group streams out. When every id carries one value (an id column
     that is a key) each id pair arises once by construction; otherwise
     the pair codes are deduplicated in the task, holding the output.
@@ -315,7 +283,7 @@ def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame
     and result) plus _ROW_BYTES = 400 B: ~72 B of int64 value and code
     arrays, and ~80 B per refinement level for the scan's keys, sort
     order, run bookkeeping and next-level slices, up to max_levels + 1
-    levels. On top: the pair chunks (~10 arrays of _CHUNK int64, ~80
+    levels. On top: the pair chunks (~10 arrays of CHUNK int64, ~80
     MB) and 8 B per verified value pair. Measured: the value-pair scan
     over 250k distinct random values at k=4 peaks at ~107 MB."""
     id_type = ids.schema["_hid"].dataType.simpleString()
@@ -339,14 +307,14 @@ def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame
 
         def position_pairs():
             pos = np.arange(len(vrow))
-            yield from _range_pairs(pos, pos + 1, gstart[vrow] + gsize[vrow] - pos - 1)
+            yield from range_pairs(pos, pos + 1, gstart[vrow] + gsize[vrow] - pos - 1)
             if k == 0:
                 return
             va, vb = np.divmod(_value_pairs(uval.view(np.uint64), k, cap,
                                             max_levels), nval)
             # rows = (value pair, member of va's group) x vb's group
-            for q, lp in _range_pairs(np.arange(len(va)), gstart[va], gsize[va]):
-                yield from _range_pairs(lp, gstart[vb[q]], gsize[vb[q]])
+            for q, lp in range_pairs(np.arange(len(va)), gstart[va], gsize[va]):
+                yield from range_pairs(lp, gstart[vb[q]], gsize[vb[q]])
 
         def code_pairs():
             for lp, rp in position_pairs():
@@ -359,8 +327,8 @@ def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame
             if not codes:
                 return
             codes = np.unique(np.concatenate(codes))
-            chunks = (np.divmod(codes[s:s + _CHUNK], nid)
-                      for s in range(0, len(codes), _CHUNK))
+            chunks = (np.divmod(codes[s:s + CHUNK], nid)
+                      for s in range(0, len(codes), CHUNK))
         for a, b in chunks:
             yield pd.DataFrame({"a": uid[a], "b": uid[b]})
 

@@ -1,69 +1,227 @@
-"""Candidate-pair generation from bucket tables, with explicit skew
-handling.
+"""Candidate pairs from bucket tables, with explicit skew handling.
 
-Input: any (id, bucket-key...) table — MinHash band buckets, SimHash
-pigeonhole blocks, or winnowing fingerprints. Output: distinct
-candidate pairs (a, b) with a < b.
+Input: any (id, bucket key) table: MinHash band buckets, winnowing
+fingerprints and their refined (fingerprint, window) sub-buckets, or
+hyperplane-LSH (table, bucket) keys. A key is one or more columns of
+any type; ids are of any orderable type. Output: candidate pairs
+(a, b) with a < b. Rows with a null id take no part: they neither pair
+nor count toward their bucket's size.
 
-ONE shuffle: groupBy(bucket).collect_list(id) aggregates members, then
-pairs are expanded JVM-side from the sorted member array. (The earlier
-window-count + self-join formulation shuffled the bucket table three
-times; at 10^6 rows x 32 bands that is ~100M shuffled rows vs ~32M
-here.)
+The cap rule: a bucket of 2 to `cap` members expands to all its pairs.
+What happens above the cap is chosen per channel by its recall
+contract (north rule: "salted repartitioning breaks hot LSH buckets"):
 
-Skew strategy (north rule: "salted repartitioning breaks hot LSH
-buckets") — two modes, chosen per channel by its recall contract:
+  * pairs_from_buckets (star fallback): an oversized bucket emits a
+    STAR, every member vs the bucket's min id. PRECONDITION for using
+    star: either (a) the channel is probabilistic and other buckets
+    rescue missed pairs (MinHash bands — a pair missed in one oversized
+    band has 31 more bands), or (b) every pair inside the bucket is
+    guaranteed to pass exact verification (so hub-spoke edges survive
+    and connected components still merge the bucket). Star is NOT
+    valid for recall-guaranteed channels whose bucket members may fail
+    pairwise verification (raw winnowing fingerprints) — those use
+    pairs_and_overflow + channel refinement.
 
-  * pairs_from_buckets (star fallback): buckets <= cap expand all-pairs;
-    oversized buckets emit a STAR (every member vs the bucket's min id).
-    PRECONDITION for using star: either (a) the channel is probabilistic
-    and other buckets rescue missed pairs (MinHash bands — a pair missed
-    in one oversized band has 31 more bands), or (b) every pair inside
-    the bucket is guaranteed to pass exact verification (so hub-spoke
-    edges survive and connected components still merge the bucket). Star
-    is NOT valid for recall-guaranteed channels whose bucket members may
-    fail pairwise verification (pigeonhole Hamming blocks, raw winnowing
-    fingerprints) — those use pairs_and_overflow + channel refinement.
+  * pairs_and_overflow: the member rows of an oversized bucket are
+    RETURNED, with the input's columns, so the channel can refine them
+    on more signature bits (winnow.refine_oversized full-window
+    sub-fingerprints) without losing pairs.
 
-  * pairs_and_overflow: buckets <= cap expand all-pairs; oversized
-    buckets are RETURNED as member rows so the channel can refine them
-    on additional signature bits (hamming.py recursive pigeonhole,
-    winnow.py full-window sub-fingerprints) without losing pairs.
+Two execution paths, picked at runtime by ONE count of the non-null-id
+rows, observed while the input is checkpointed (as in
+hamming.hamming_candidate_pairs):
 
-Known bound: a single small bucket's member list must fit in one task
-(~12 B/id x cap). Oversized buckets are never collected into one list
-under pairs_and_overflow (they stay as rows). bucket_stats() feeds the
-metrics ledger for monitoring.
+  * LOCAL (rows <= LOCAL_MAX_ROWS and the working set fits one task,
+    onetask.fits_one_task): one coalesce(1).mapInPandas task sorts the
+    rows by (key, id), scans runs of equal keys and applies the cap
+    rule in numpy (_pair_kernel). A pair several buckets share (an id
+    pair in several bands) leaves the task once. pairs_and_overflow
+    returns its oversized rows from a second one-task pass over the
+    same checkpoint (_overflow_kernel). No shuffle.
+  * DISTRIBUTED (above the cap): one window exchange sizes the buckets;
+    small buckets collect_list + explode their sorted member arrays,
+    and star pairs are emitted row-wise from the same window's min id,
+    so an oversized bucket is never collected into one task's list.
+
+Both paths return the same pair set.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import logging
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
+from . import onetask
+from .onetask import CHUNK, fits_one_task, id_bytes, range_pairs, runs
+
+log = logging.getLogger("distill_spark")
+
+# Inputs of at most this many non-null-id rows run the one-task kernel;
+# above it the kernel's serial sort and scan outgrow the distributed
+# path's fixed per-stage cost. The kernel over band-like rows (int64
+# ids and keys, 32 rows per id, buckets of 8 ids) on one core: 0.14 s
+# at 256k rows, 1.1 s at 2M, 5.2 s at 8M, peaking at 163-245 B per row
+# (tracemalloc), within the 248 B per row the gate below assumes.
+LOCAL_MAX_ROWS = 2_000_000
+# Kernel bytes per input row on top of 3 slots per column (see
+# _pair_kernel for the breakdown).
+_ROW_BYTES = 200
+# Bytes per pair while a stripe of pairs is deduplicated: the pair
+# codes, their concatenation, np.unique's sorted copy and result.
+_PAIR_BYTES = 40
 
 
-def _allpairs_expr(cap: int | None) -> F.Column:
-    """Expand sorted member array `_ids` into distinct ordered pairs.
-    cap=None: always all-pairs. Else: star topology above cap (see
-    module docstring for the star precondition)."""
-    allp = """
+def _allpairs_expr() -> F.Column:
+    """Expand the sorted member array `_ids` into the ordered pairs
+    (x, y) of every element x and each element after it."""
+    return F.expr(
+        """
         flatten(transform(_ids, (x, i) ->
           transform(slice(_ids, i + 2, size(_ids) - i - 1),
                     y -> struct(x AS a, y AS b))))
-    """
-    if cap is None:
-        return F.expr(allp)
-    return F.expr(
-        f"""
-        CASE WHEN size(_ids) <= {cap} THEN {allp}
-        ELSE
-          transform(slice(_ids, 2, size(_ids) - 1),
-                    y -> struct(element_at(_ids, 1) AS a, y AS b))
-        END
         """
     )
+
+
+def _key_codes(cols: list[np.ndarray]) -> np.ndarray:
+    """One int64 code per row, equal exactly where every key column is
+    equal (a null equals a null, as in a Spark grouping)."""
+    code = np.zeros(len(cols[0]), np.int64)
+    for col in cols:
+        c, u = pd.factorize(col)  # null -> -1
+        code = pd.factorize(code * (len(u) + 1) + c + 1)[0]
+    return code
+
+
+def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
+                 budget: int):
+    """mapInPandas function: every (id, key...) row of the input in one
+    task -> each distinct pair (a, b), a <= b, of the cap rule.
+
+    Ids are factorized in sort order (code order is id order) and the
+    rows sorted by (key code, id code), so each bucket is a run of
+    sorted ids. A row of a bucket of at most `cap` rows pairs with every
+    later row of its run; with `star`, every other row of an oversized
+    bucket pairs with the run's first (min) id. The pair count is taken
+    from those run sizes before any pair is built, and pairs are
+    deduplicated in stripes of left ids of about `budget` pairs each
+    (one stripe unless the pairs outgrow the budget), then leave in
+    frames of CHUNK pairs.
+
+    Memory per input row, about 3 slots per column (onetask.id_bytes:
+    the Arrow batch, the concatenated frame, factorize's uniques) plus
+    _ROW_BYTES = 200 B: ~24 int64 arrays for codes, sort order, run
+    bookkeeping and pair sources. On top: one stripe, _PAIR_BYTES per
+    pair, and the frame being yielded."""
+
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [pdf for pdf in it if len(pdf)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        del parts
+        icode, uid = pd.factorize(pdf[id_col].to_numpy(), sort=True)
+        kc = _key_codes([pdf[k].to_numpy() for k in key_cols])
+        del pdf
+        nid = len(uid)
+        order = np.argsort(kc * nid + icode)
+        sid = icode[order]
+        _, size, end = runs(kc[order])
+        del icode, kc, order
+        pos = np.arange(len(sid))
+        # pair sources: row r yields (left[r], sid[lo[r] + t]), t < cnt[r]
+        small = size <= cap
+        left, lo, cnt = sid[small], pos[small] + 1, (end - pos - 1)[small]
+        if star:
+            hub = sid[end - size]
+            spoke = ~small & (sid != hub)
+            left = np.concatenate([left, hub[spoke]])
+            lo = np.concatenate([lo, pos[spoke]])
+            cnt = np.concatenate([cnt, np.ones(int(spoke.sum()), np.int64)])
+        # pairs per left id, cumulated: stripe cuts keep each stripe
+        # within budget + the pairs of its first id
+        cum = np.bincount(left, weights=cnt, minlength=nid).cumsum()
+        if cum[-1] == 0:
+            return
+        cuts = np.searchsorted(cum, np.arange(budget, cum[-1], budget), side="right")
+        bounds = np.unique(np.concatenate(([0], cuts, [nid])))
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            m = (left >= s) & (left < e)
+            codes = [a * nid + sid[rp] for a, rp in range_pairs(left[m], lo[m], cnt[m])]
+            if not codes:
+                continue
+            codes = np.unique(np.concatenate(codes))
+            for c in range(0, len(codes), CHUNK):
+                a, b = np.divmod(codes[c:c + CHUNK], nid)
+                yield pd.DataFrame({"a": uid[a], "b": uid[b]})
+
+    return kernel
+
+
+def _overflow_kernel(key_cols: list[str], cap: int):
+    """mapInArrow function: every row of the input in one task -> the
+    rows of buckets above `cap`, their columns passed through as they
+    are."""
+
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = [b for b in it if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        kc = _key_codes([tbl.column(k).to_numpy() for k in key_cols])
+        big = np.bincount(kc)[kc] > cap
+        yield from tbl.filter(pa.array(big)).to_batches(max_chunksize=CHUNK)
+
+    return kernel
+
+
+def _observed(buckets: DataFrame, key_cols: list[str], id_col: str,
+              what: str) -> tuple[DataFrame, bool]:
+    """The non-null-id rows, checkpointed with their count observed in
+    the same job, and whether that count picks the local path."""
+    obs = Observation()
+    rows_df = (
+        buckets.filter(F.col(id_col).isNotNull())
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint(eager=True)
+    )
+    rows = obs.get["rows"]
+    row_bytes = 3 * sum(id_bytes(f.dataType) for f in rows_df.schema.fields) + _ROW_BYTES
+    # the rows may take half the task budget; the other half holds the
+    # stripe of pairs being deduplicated (_pair_kernel)
+    local = rows <= LOCAL_MAX_ROWS and fits_one_task(rows, 2 * row_bytes)
+    log.debug("%s(%s): %d rows -> %s path", what, ", ".join(key_cols), rows,
+              "local" if local else "distributed")
+    return rows_df, local
+
+
+def _local_pairs(rows_df: DataFrame, key_cols: list[str], id_col: str,
+                 cap: int, star: bool) -> DataFrame:
+    """_pair_kernel over the checkpointed rows in one task."""
+    id_type = rows_df.schema[id_col].dataType.simpleString()
+    budget = onetask.TASK_BYTES // (2 * _PAIR_BYTES)
+    return rows_df.select(id_col, *key_cols).coalesce(1).mapInPandas(
+        _pair_kernel(key_cols, id_col, cap, star, budget),
+        schema=f"a {id_type}, b {id_type}",
+    )
+
+
+def _small_pairs(sized: DataFrame, key_cols: list[str], id_col: str,
+                 cap: int) -> DataFrame:
+    """All pairs of the buckets of 2 to cap rows of a `_sz`-sized frame."""
+    grouped = (
+        sized.filter((F.col("_sz") >= 2) & (F.col("_sz") <= cap))
+        .groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("_ids"))
+    )
+    return grouped.select(F.explode(_allpairs_expr()).alias("p")).select("p.a", "p.b")
 
 
 def pairs_from_buckets(
@@ -75,51 +233,37 @@ def pairs_from_buckets(
     oversize: str = "star",
     dedup: bool = True,
 ) -> DataFrame:
-    """-> DataFrame[a, b] (same type as id_col), a < b; distinct unless
-    dedup=False.
+    """-> DataFrame[a, b] (same type as id_col), a < b: all pairs of
+    buckets of at most `cap` (default cfg.max_bucket_size) rows and a
+    star on the min id of every larger bucket (see the precondition in
+    the module docstring); distinct unless dedup=False.
 
-    dedup=False skips the final dropDuplicates exchange — for callers
-    that union several candidate streams and deduplicate ONCE after the
-    union (guide §2.4: two dedups one step apart shuffle the same pairs
-    twice).
+    dedup=False lets the distributed path skip its final dropDuplicates
+    exchange — for callers that union several candidate streams and
+    deduplicate ONCE after the union (guide §2.4: two dedups one step
+    apart shuffle the same pairs twice). The local path always returns
+    each pair once.
 
-    oversize: "star" (default — see precondition in module docstring) or
-    "allpairs" (ignore the cap; exact but quadratic per bucket).
-
-    Oversized buckets are NEVER collected into a per-bucket list: star
-    pairs are emitted row-wise from one (size, min) window pass, so a
-    10^6-member hot bucket costs 10^6 rows across tasks, not one
-    10^6-element array in one task (round-1 straggler).
-    """
+    oversize: only "star" is accepted (kept while perfbench/tracing.py
+    passes it)."""
+    if oversize != "star":
+        raise ValueError(f"oversize must be 'star', got {oversize!r}")
     if cap is None:
         cap = cfg.max_bucket_size
-    if oversize == "allpairs":
-        grouped = (
-            buckets.groupBy(*key_cols)
-            .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("_ids"))
-            .filter(F.size("_ids") > 1)
-        )
-        pairs = grouped.select(F.explode(_allpairs_expr(None)).alias("p")).select(
-            "p.a", "p.b"
-        )
-    else:
-        w = Window.partitionBy(*key_cols)
-        sized = buckets.withColumn("_sz", F.count(F.lit(1)).over(w)).withColumn(
-            "_min", F.min(F.col(id_col)).over(w)
-        )
-        small = sized.filter((F.col("_sz") >= 2) & (F.col("_sz") <= cap))
-        grouped = small.groupBy(*key_cols).agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("_ids")
-        )
-        small_pairs = grouped.select(
-            F.explode(_allpairs_expr(None)).alias("p")
-        ).select("p.a", "p.b")
-        star = (
-            sized.filter(F.col("_sz") > cap)
-            .filter(F.col(id_col) != F.col("_min"))
-            .select(F.col("_min").alias("a"), F.col(id_col).alias("b"))
-        )
-        pairs = small_pairs.unionByName(star)
+    rows_df, local = _observed(buckets.select(id_col, *key_cols), key_cols,
+                               id_col, "pairs_from_buckets")
+    if local:
+        return _local_pairs(rows_df, key_cols, id_col, cap, star=True)
+    w = Window.partitionBy(*key_cols)
+    sized = rows_df.withColumn("_sz", F.count(F.lit(1)).over(w)).withColumn(
+        "_min", F.min(F.col(id_col)).over(w)
+    )
+    star = (
+        sized.filter(F.col("_sz") > cap)
+        .filter(F.col(id_col) != F.col("_min"))
+        .select(F.col("_min").alias("a"), F.col(id_col).alias("b"))
+    )
+    pairs = _small_pairs(sized, key_cols, id_col, cap).unionByName(star)
     return pairs.dropDuplicates(["a", "b"]) if dedup else pairs
 
 
@@ -130,38 +274,22 @@ def pairs_and_overflow(
     cfg: DedupConfig = DEFAULT,
     cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Split buckets by size: (all-pairs of buckets <= cap, member rows
-    of oversized buckets). Oversized members keep the original columns
-    so the caller can refine them on more signature bits — no pair is
-    silently dropped. Both outputs derive from ONE window exchange
-    (Catalyst reuses it when they meet in the same query tree), and
-    oversized buckets are never collected into a single task's list.
-    """
+    """Split buckets by size: (each pair of the buckets of at most `cap`
+    rows once, the member rows of larger buckets). Oversized members
+    keep the input's columns so the caller can refine them on more
+    signature bits — no pair is silently dropped. Both outputs read
+    one checkpoint of the input; on the distributed path they also
+    share one window exchange."""
     if cap is None:
         cap = cfg.max_bucket_size
+    rows_df, local = _observed(buckets, key_cols, id_col, "pairs_and_overflow")
+    if local:
+        overflow = rows_df.coalesce(1).mapInArrow(
+            _overflow_kernel(key_cols, cap), rows_df.schema
+        )
+        return _local_pairs(rows_df, key_cols, id_col, cap, star=False), overflow
     w = Window.partitionBy(*key_cols)
-    sized = buckets.withColumn("_sz", F.count(F.lit(1)).over(w))
-    small = sized.filter((F.col("_sz") >= 2) & (F.col("_sz") <= cap))
-    grouped = small.groupBy(*key_cols).agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("_ids")
-    )
-    pairs = (
-        grouped.select(F.explode(_allpairs_expr(None)).alias("p"))
-        .select("p.a", "p.b")
-        .dropDuplicates(["a", "b"])
-    )
+    sized = rows_df.withColumn("_sz", F.count(F.lit(1)).over(w))
+    pairs = _small_pairs(sized, key_cols, id_col, cap).dropDuplicates(["a", "b"])
     overflow = sized.filter(F.col("_sz") > cap).drop("_sz")
     return pairs, overflow
-
-
-def bucket_stats(buckets: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Collision metrics: how skewed is the bucket table?"""
-    sizes = buckets.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("bucket_size"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("bucket_size").alias("max_bucket"),
-        F.expr("percentile_approx(bucket_size, 0.99)").alias("p99_bucket"),
-        F.sum(
-            F.col("bucket_size") * (F.col("bucket_size") - 1) / 2
-        ).alias("candidate_pairs_upper_bound"),
-    )

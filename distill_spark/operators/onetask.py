@@ -1,17 +1,24 @@
-"""Memory gate shared by the single-task fast paths.
+"""Memory gate and numpy helpers shared by the single-task fast paths.
 
-Connected components (`components._cc_local_labels`) and the Hamming
-channel (`hamming._local_pairs`) each fold a small input into ONE
-mapInPandas task. Each path states its working set as bytes per input
-row, in units of `id_bytes` for the id columns it holds, and takes the
-one-task shape only while rows x bytes-per-row stays within TASK_BYTES.
+Connected components (`components._cc_local_labels`), the Hamming
+channel (`hamming._local_pairs`) and bucket-pair expansion
+(`lsh._pair_kernel`) each fold a small input into ONE mapInPandas task.
+Each path states its working set as bytes per input row, in units of
+`id_bytes` for the id columns it holds, and takes the one-task shape
+only while rows x bytes-per-row stays within TASK_BYTES. The pair
+kernels sort rows by a bucket key, scan runs of equal keys (`runs`) and
+expand each run's pairs in bounded chunks (`range_pairs`).
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
 from pyspark.sql import types as T
 
 TASK_BYTES = 2 << 30  # working-set budget of one Python worker task
+CHUNK = 1 << 20  # pairs per chunk a pair kernel generates / yields
 
 
 def id_bytes(dtype: T.DataType) -> int:
@@ -24,3 +31,34 @@ def id_bytes(dtype: T.DataType) -> int:
 def fits_one_task(rows: int, row_bytes: int) -> bool:
     """True when `rows` rows of `row_bytes` each fit one task's budget."""
     return rows * row_bytes <= TASK_BYTES
+
+
+def range_pairs(
+    left: np.ndarray, lo: np.ndarray, cnt: np.ndarray, chunk: int = CHUNK
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """For every row r the pairs (left[r], lo[r] + t), t < cnt[r], as
+    (left, right) arrays in chunks of about `chunk` pairs. A row is
+    never split, so a chunk holds at most chunk + max(cnt) pairs."""
+    keep = cnt > 0
+    left, lo, cnt = left[keep], lo[keep], cnt[keep]
+    if not len(cnt):
+        return
+    end = np.cumsum(cnt)
+    cuts = np.searchsorted(end, np.arange(chunk, end[-1], chunk), side="right")
+    bounds = np.unique(np.concatenate(([0], cuts, [len(cnt)])))
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        c = cnt[s:e]
+        first = np.repeat(np.cumsum(c) - c, c)
+        yield (np.repeat(left[s:e], c),
+               np.repeat(lo[s:e], c) + np.arange(first.size) - first)
+
+
+def runs(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per position of sorted `keys`: the index, size and end (one past
+    its last position) of its run of equal keys."""
+    new = np.ones(len(keys), dtype=bool)
+    new[1:] = keys[1:] != keys[:-1]
+    starts = np.flatnonzero(new)
+    ends = np.append(starts[1:], len(keys))
+    run = np.cumsum(new) - 1
+    return run, (ends - starts)[run], ends[run]

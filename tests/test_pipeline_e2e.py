@@ -7,11 +7,14 @@ north-rule gate: dup-pair recall >= 0.99, precision exact, clusters
 deterministic.
 """
 
+import logging
+import re
+
 import pytest
 
 from distill_spark.config import DedupConfig
 from distill_spark.datagen import generate_images, generate_images_pdf
-from distill_spark.operators import dedupe
+from distill_spark.operators import dedupe, lsh
 from distill_spark.oracle import oracle_components, cluster_pairs
 
 CFG = DedupConfig()
@@ -43,8 +46,19 @@ def oracle(small):
     return oracle_components(pdf, CFG)
 
 
-def test_recall_and_precision_vs_oracle(result, oracle):
-    got, _, _ = result
+@pytest.mark.parametrize("lsh_path", ["local", "distributed"])
+def test_recall_and_precision_vs_oracle(small, oracle, lsh_path, monkeypatch, caplog):
+    """dedupe() against the oracle with the MinHash-band and winnow
+    bucket pairs expanded by the one-task kernel, then by the window
+    path (a row cap of 0 sends every non-empty input there)."""
+    if lsh_path == "distributed":
+        monkeypatch.setattr(lsh, "LOCAL_MAX_ROWS", 0)
+    caplog.set_level(logging.DEBUG, logger="distill_spark")
+    df, _ = small
+    got = {r["image_id"]: r["component"] for r in dedupe(df, CFG).assignments.collect()}
+    for what in ("pairs_from_buckets(bucket)", "pairs_and_overflow(fingerprint)"):
+        assert re.search(rf"{re.escape(what)}: \d+ rows -> {lsh_path} path", caplog.text)
+    assert re.search(r"connected_components: \d+ edges -> local path", caplog.text)
     assign_true, _ = oracle
     assert set(got) == set(assign_true), "every image must be assigned"
 
