@@ -211,21 +211,10 @@ def dedupe_checkpointed(
         {k: v for k, v in cfg.__dict__.items() if not k.startswith("_")},
         sort_keys=True, default=str,
     ) + f"|channels={sorted(channels)}|data={data_sig or input_signature(images)}"
-    ham_caches: list[DataFrame] = []
 
     def on_disk(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
-        df = store.run_stage(stage.name, compute, config_sig=csig,
-                             deps=list(stage.deps))
-        if stage.name == "edges":
-            # the Hamming refinement caches fed the edge stages, which
-            # are parquet-backed now
-            for cached in ham_caches:
-                try:
-                    cached.unpersist()
-                except Exception:
-                    log.debug("unpersist of a Hamming cache failed",
-                              exc_info=True)
-        return df
+        return store.run_stage(stage.name, compute, config_sig=csig,
+                               deps=list(stage.deps))
 
-    return run_dedup_graph(images, cfg, on_disk, ham_caches, id_col,
-                           caption_col, phash_col, channels)
+    return run_dedup_graph(images, cfg, on_disk, id_col, caption_col,
+                           phash_col, channels)

@@ -72,25 +72,6 @@ class DedupConfig:
 
     # --- connected components ---
     cc_max_iters: int = 50
-    cc_local_max_edges: int = 20_000_000  # dup graphs at or below this
-                                   # edge count run the CC fixpoint in ONE
-                                   # task (numpy min-label propagation,
-                                   # operators/components._cc_local_labels)
-                                   # instead of the iterative distributed
-                                   # loop — the loop costs ~4 shuffles +
-                                   # a driver round-trip per iteration
-                                   # regardless of size, which dominates
-                                   # small dup graphs. 20M int64-id edges
-                                   # ≈ 1.9 GB of working set in one task
-                                   # — seconds of vectorized numpy;
-                                   # graphs above it, or over the
-                                   # one-task byte budget at their id
-                                   # width (string ids: ~2.8M edges,
-                                   # operators/onetask.py), take the
-                                   # distributed loop.
-                                   # DATA-adaptive (edge count, measured
-                                   # at runtime), not tuned to any core
-                                   # count; identical labels either way.
     cc_reliable_checkpoint: bool = False  # True: per-iteration frontier goes
                                    # through reliable checkpoint() (survives
                                    # executor loss on a real cluster) instead

@@ -33,10 +33,18 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
-from .onetask import fits_one_task, id_bytes
+from .onetask import id_bytes, observed, one_task
 
 log = logging.getLogger("distill_spark")
 
+# Dup graphs of at most this many edges run the CC fixpoint in ONE task
+# (_cc_local_labels) instead of the distributed loop, whose ~4 shuffles +
+# driver round-trip per iteration dominate small graphs. 20M int64-id
+# edges ≈ 1.9 GB of working set — seconds of numpy; graphs above it, or
+# over the one-task byte budget at their id width (string ids: ~2.8M
+# edges), take the loop. Data-adaptive (the edge count is observed at
+# runtime), not tuned to any core count; identical labels either way.
+LOCAL_MAX_EDGES = 20_000_000
 # ids held per edge by _cc_local_labels: a and b in the Arrow batches,
 # their concatenations, the combined array and np.unique's sorted copy
 # and result — ~6 copies of each of the two ids
@@ -46,9 +54,9 @@ _CC_IDS_PER_EDGE = 12
 def _cc_local_labels(
     edges: DataFrame, id_col: str, out_col: str
 ) -> DataFrame:
-    """Single-task CC over a small edge set (<= cfg.cc_local_max_edges
-    edges whose estimated working set, _CC_IDS_PER_EDGE id slots per
-    edge, fits one task: onetask.fits_one_task).
+    """Single-task CC over a small edge set (<= LOCAL_MAX_EDGES edges
+    whose estimated working set, _CC_IDS_PER_EDGE id slots per edge,
+    fits one task: onetask.one_task).
 
     The distributed hash-min loop costs ~4 shuffle stages + one driver
     round-trip PER ITERATION regardless of graph size — on a dup graph
@@ -99,6 +107,17 @@ def _cc_local_labels(
     return edges.select("a", "b").coalesce(1).mapInPandas(kernel, schema=schema)
 
 
+def _without_size_estimate(df: DataFrame) -> DataFrame:
+    """The same rows as a plan leaf with Spark's default size estimate, not
+    the one a checkpoint inherits from the plan it cut. The loop joins each
+    iteration's labels with themselves, so an inherited estimate squares
+    per iteration (a 3.3k-edge graph spent most of 88 s of 22 iterations
+    multiplying ~10^8-digit estimates; 23 s with the reset)."""
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(df._jdf.rdd(), df._jdf.schema()),
+                     spark)
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -110,12 +129,13 @@ def connected_components(
     -> (id_col, out_col) where out_col = min id of the component.
 
     Scale-adaptive (guide §1.2 "the distributed algorithm" + §2.4
-    "remove shuffles outright"): the edge count picks the execution
-    shape at runtime — small graphs (<= cfg.cc_local_max_edges, and
-    within the one-task memory budget at the id column's width) run the
-    exact same min-label fixpoint in ONE task (_cc_local_labels),
-    large graphs run the iterative distributed loop below. Both are
-    deterministic and produce identical labels.
+    "remove shuffles outright"): the edge count, observed while the
+    edges are checkpointed, picks the execution shape at runtime —
+    small graphs (<= LOCAL_MAX_EDGES, and within the one-task memory
+    budget at the id column's width) run the exact same min-label
+    fixpoint in ONE task (_cc_local_labels), large graphs run the
+    iterative distributed loop below. Both are deterministic and
+    produce identical labels.
     """
     if cfg.cc_reliable_checkpoint:
         sc = edges.sparkSession.sparkContext
@@ -134,107 +154,83 @@ def connected_components(
         def _ckpt(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=True)
 
-    # materialize the edge frame once (into the caller's persist when
-    # there is one) and branch on its size
-    from pyspark import StorageLevel
-
-    own_persist = False
-    if edges.storageLevel == StorageLevel.NONE:
-        edges = edges.persist()
-        own_persist = True
-    n_edges = edges.count()
+    edges, n_edges = observed(edges.select("a", "b"))
     edge_bytes = _CC_IDS_PER_EDGE * id_bytes(edges.schema["a"].dataType)
-    if n_edges <= cfg.cc_local_max_edges and fits_one_task(n_edges, edge_bytes):
+    if one_task("connected_components", n_edges, "edges", LOCAL_MAX_EDGES, edge_bytes):
         # one stage instead of ~4 shuffles x iterations; the label
         # table is consumed several times downstream, so cut its
         # (single-task) lineage eagerly — through the reliable
         # checkpoint when the caller configured one
-        labels = _ckpt(_cc_local_labels(edges, id_col, out_col))
-        connected_components.last_iterations = 0
-        log.debug("connected_components: %d edges -> local path, 0 iterations",
-                  n_edges)
-        if own_persist:
-            edges.unpersist()
-        result = labels
-        if nodes is not None:
-            all_nodes = nodes.select(F.col(id_col)).distinct()
-            result = all_nodes.join(result, id_col, "left").select(
-                id_col, F.coalesce(out_col, F.col(id_col)).alias(out_col)
-            )
-        return result
-
-    sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    # the iterative loop runs ONLY over nodes that touch an edge —
-    # singletons (usually the majority) are attached afterwards with a
-    # single left join, keeping every iteration's shuffles proportional
-    # to the duplicate population, not the corpus
-    edge_nodes = sym.select(F.col("u").alias("node")).distinct()
-
-    labels = edge_nodes.withColumn("label", F.col("node"))
-    labels = _ckpt(labels)
-    sym = _ckpt(sym)
-    if own_persist:
-        edges.unpersist()
-
-    iters = 0
-    for _ in range(cfg.cc_max_iters):
-        iters += 1
-        # hash-min: candidate label for v = min label among neighbors
-        nbr = (
-            sym.join(labels.withColumnRenamed("node", "u"), "u")
-            .groupBy("v")
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("v", "node")
+        result, iters = _ckpt(_cc_local_labels(edges, id_col, out_col)), 0
+    else:
+        sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
-        stepped = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
+        # the iterative loop runs ONLY over nodes that touch an edge —
+        # singletons (usually the majority) are attached afterwards with a
+        # single left join, keeping every iteration's shuffles proportional
+        # to the duplicate population, not the corpus
+        edge_nodes = sym.select(F.col("u").alias("node")).distinct()
+
+        labels = _ckpt(edge_nodes.withColumn("label", F.col("node")))
+        sym = _ckpt(sym)
+
+        iters = 0
+        for _ in range(cfg.cc_max_iters):
+            iters += 1
+            # hash-min: candidate label for v = min label among neighbors
+            nbr = (
+                sym.join(labels.withColumnRenamed("node", "u"), "u")
+                .groupBy("v")
+                .agg(F.min("label").alias("nbr_label"))
+                .withColumnRenamed("v", "node")
             )
-        )
-        # pointer jumping: label <- label(label)  (min-labels only shrink)
-        parents = stepped.select(
-            F.col("node").alias("plabel_node"), F.col("label").alias("plabel")
-        )
-        jumped = (
-            stepped.join(
-                parents, stepped["label"] == parents["plabel_node"], "left"
+            stepped = (
+                labels.join(nbr, "node", "left")
+                .select(
+                    "node",
+                    F.col("label").alias("old_label"),
+                    F.least(
+                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
+                    ).alias("label"),
+                )
             )
-            .select(
-                "node",
-                "old_label",
-                F.least(F.col("label"), F.coalesce("plabel", F.col("label"))).alias(
-                    "label"
+            # pointer jumping: label <- label(label)  (min-labels only shrink)
+            parents = stepped.select(
+                F.col("node").alias("plabel_node"), F.col("label").alias("plabel")
+            )
+            jumped = (
+                stepped.join(
+                    parents, stepped["label"] == parents["plabel_node"], "left"
+                )
+                .select(
+                    "node",
+                    "old_label",
+                    F.least(F.col("label"), F.coalesce("plabel", F.col("label"))).alias(
+                        "label"
+                    ),
+                )
+            )
+            # convergence metric rides the checkpoint job (no separate count)
+            obs = Observation()
+            jumped = jumped.observe(
+                obs,
+                F.sum((F.col("label") != F.col("old_label")).cast("long")).alias(
+                    "changed"
                 ),
             )
-        )
-        # convergence metric rides the checkpoint job (no separate count)
-        obs = Observation()
-        jumped = jumped.observe(
-            obs,
-            F.sum((F.col("label") != F.col("old_label")).cast("long")).alias(
-                "changed"
-            ),
-        )
-        labels = _ckpt(jumped.select("node", "label"))
-        changed = obs.get.get("changed") or 0
-        if changed == 0:
-            break
-
+            labels = _without_size_estimate(_ckpt(jumped.select("node", "label")))
+            changed = obs.get.get("changed") or 0
+            if changed == 0:
+                break
+        result = labels.select(F.col("node").alias(id_col),
+                               F.col("label").alias(out_col))
     # observability for scale probes: how many hash-min+jump rounds
     # this graph needed — the serial floor of the pipeline at any
     # cluster size
     connected_components.last_iterations = iters
-    log.debug("connected_components: %d edges -> distributed path, %d iterations",
-              n_edges, iters)
+    log.debug("connected_components: %d iterations", iters)
 
-    result = labels.select(F.col("node").alias(id_col), F.col("label").alias(out_col))
     if nodes is not None:
         all_nodes = nodes.select(F.col(id_col)).distinct()
         result = all_nodes.join(result, id_col, "left").select(

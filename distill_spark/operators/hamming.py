@@ -30,15 +30,17 @@ other). Three ingredients, shared by both execution paths:
      is exact and only reaches data agreeing on ~40+ scattered bits.
 
 Two execution paths, picked at runtime by ONE count of the non-null
-(id, value) rows, observed while the input is checkpointed:
+(id, value) rows, observed while the input is checkpointed
+(onetask.observed):
 
   * LOCAL (rows <= LOCAL_MAX_ROWS and the working set fits one task,
-    onetask.fits_one_task): one mapInPandas task runs multi-index
+    onetask.one_task): one mapInPandas task runs multi-index
     hashing (Norouzi, Punjani & Fleet, CVPR 2012) in numpy — per block,
     sort by block key and scan equal-key runs (_local_pairs). Two
     Spark stages per call: the observed checkpoint and the kernel.
   * DISTRIBUTED (above the cap): the same recursion as per-level Spark
-    window exchanges plus a terminal self-join (_refined_value_pairs).
+    window exchanges, each level an eager localCheckpoint, plus a
+    terminal self-join (_refined_value_pairs).
 
 Both return the same exact pair set.
 
@@ -50,19 +52,16 @@ channel.
 
 from __future__ import annotations
 
-import logging
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
-from .lsh import _allpairs_expr
-from .onetask import CHUNK, fits_one_task, id_bytes, range_pairs, runs
-
-log = logging.getLogger("distill_spark")
+from .lsh import _small_pairs
+from .onetask import CHUNK, id_bytes, observed, one_task, range_pairs, runs
 
 _SCATTER_SEED = 0xD15C0
 
@@ -123,14 +122,12 @@ def _block_bounds(bits: int, n_blocks: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def _refined_value_pairs(
-    vals: DataFrame, k: int, cap: int, max_levels: int,
-    cache_registry: list | None = None,
-) -> DataFrame:
+def _refined_value_pairs(vals: DataFrame, k: int, cap: int,
+                         max_levels: int) -> DataFrame:
     """vals(val: long, distinct) -> VERIFIED value pairs (va < vb,
-    bit_count(va^vb) <= k) with guaranteed recall. Lazy plan — no driver
-    actions; refinement levels that converge early flow empty partitions
-    through near-zero-cost stages.
+    bit_count(va^vb) <= k) with guaranteed recall. Each refinement level
+    runs one eager checkpoint job; a level after the recursion converged
+    checkpoints an empty frame.
 
     The exact Hamming filter runs INSIDE the pair expansion, in the same
     whole-stage-codegen task that explodes the bucket array: a 13-bit
@@ -180,29 +177,20 @@ def _refined_value_pairs(
             """,
             "nbits - s.w AS nbits",
         )
-        # each level's window exchange feeds TWO lazy branches (the
+        # each level's window exchange feeds TWO branches (the
         # small-bucket pair expansion AND the next level's pend), and
-        # the levels compound: without a persist every branch re-derives
-        # the whole prior-level chain, multiplying the exchange's disk
-        # writes per level. Invisible at 1M rows (level 0 converges:
-        # 1M/4096 ≈ 244 ≤ cap) — at 10M EVERY level-0 bucket exceeds the
-        # cap, level 1 is a ~250M-row exchange, and the re-execution
-        # filled the disk (round-5 10M probe). Bounded: ≤ max_levels
-        # persists; callers that pass `cache_registry` (the pipeline,
-        # checkpointed dedupe) collect the handles and unpersist them
-        # once the candidate edges are materialized, so repeated
-        # dedupe() calls in a long-lived session no longer accumulate
-        # cached frames (round-5 advice #1).
-        sized = ex.withColumn("_sz", F.count(F.lit(1)).over(w)).persist()
-        if cache_registry is not None:
-            cache_registry.append(sized)
-        small = sized.filter((F.col("_sz") >= 2) & (F.col("_sz") <= cap))
-        grouped = small.groupBy("key").agg(
-            F.sort_array(F.collect_list("val")).alias("_ids")
-        )
+        # the levels compound: without materializing a level every
+        # branch re-derives the whole prior-level chain, multiplying the
+        # exchange's disk writes per level. Invisible at 1M rows (level
+        # 0 converges: 1M/4096 ≈ 244 ≤ cap) — at 10M EVERY level-0
+        # bucket exceeds the cap, level 1 is a ~250M-row exchange, and
+        # the re-execution filled the disk (round-5 10M probe). An eager
+        # localCheckpoint, not a persist: Spark frees its blocks once
+        # the plan is dropped, so nothing is left for a caller to release.
+        sized = ex.withColumn("_sz", F.count(F.lit(1)).over(w)).localCheckpoint(eager=True)
         level_pairs.append(
-            grouped.select(F.explode(_allpairs_expr()).alias("p"))
-            .select(F.col("p.a").alias("va"), F.col("p.b").alias("vb"))
+            _small_pairs(sized, ["key"], "val", cap)
+            .select(F.col("a").alias("va"), F.col("b").alias("vb"))
             .filter(hamming_dist(F.col("va"), F.col("vb")) <= k)
         )
         pend = sized.filter(F.col("_sz") > cap).drop("_sz")
@@ -353,25 +341,16 @@ def hamming_candidate_pairs(
     The input's (id, value) rows are checkpointed once, their count
     observed in the same job; that count picks the local one-task
     kernel (<= LOCAL_MAX_ROWS rows whose estimated working set fits
-    one task) or the distributed recursion.
-
-    cache_registry: optional list the distributed path's per-level
-    persisted refinement frames are appended to; the caller should
-    unpersist them after the pairs are materialized (they leak until
-    session end otherwise). The local path persists nothing."""
-    obs = Observation()
-    ids = (
+    one task) or the distributed recursion. Neither path persists a
+    frame: every frame either materializes is an eager localCheckpoint."""
+    # `cache_registry` kept for the traced benchmark sequence until a benchmark change drops it
+    ids, rows = observed(
         df.select(F.col(id_col).alias("_hid"), F.col(value_col).alias("val"))
         .filter(F.col("_hid").isNotNull() & F.col("val").isNotNull())
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
-        .localCheckpoint(eager=True)
     )
-    rows = obs.get["rows"]
     row_bytes = 4 * id_bytes(ids.schema["_hid"].dataType) + _ROW_BYTES
-    local = rows <= LOCAL_MAX_ROWS and fits_one_task(rows, row_bytes)
-    log.debug("hamming_candidate_pairs(%s, k=%d): %d rows -> %s path",
-              value_col, k, rows, "local" if local else "distributed")
-    if local:
+    if one_task(f"hamming_candidate_pairs({value_col}, k={k})", rows, "rows",
+                LOCAL_MAX_ROWS, row_bytes):
         return _local_pairs(ids, k, cfg.max_bucket_size, max_levels)
 
     # identical-value pairs (distance 0): expand directly, output-bound
@@ -382,8 +361,7 @@ def hamming_candidate_pairs(
         return same.dropDuplicates(["a", "b"])
 
     vals = ids.select("val").distinct()
-    vp = _refined_value_pairs(vals, k, cfg.max_bucket_size, max_levels,
-                              cache_registry=cache_registry)
+    vp = _refined_value_pairs(vals, k, cfg.max_bucket_size, max_levels)
     cross = (
         vp.join(ids.select(F.col("_hid").alias("_ia"), F.col("val").alias("va")), "va")
         .join(ids.select(F.col("_hid").alias("_ib"), F.col("val").alias("vb")), "vb")

@@ -5,7 +5,8 @@ fingerprints and their refined (fingerprint, window) sub-buckets, or
 hyperplane-LSH (table, bucket) keys. A key is one or more columns of
 any type; ids are of any orderable type. Output: candidate pairs
 (a, b) with a < b. Rows with a null id take no part: they neither pair
-nor count toward their bucket's size.
+nor count toward their bucket's size. A bucket is sized in rows, and an
+id repeated in a bucket pairs only with the bucket's other ids.
 
 The cap rule: a bucket of 2 to `cap` members expands to all its pairs.
 What happens above the cap is chosen per channel by its recall
@@ -28,18 +29,17 @@ contract (north rule: "salted repartitioning breaks hot LSH buckets"):
     sub-fingerprints) without losing pairs.
 
 Two execution paths, picked at runtime by ONE count of the non-null-id
-rows, observed while the input is checkpointed (as in
-hamming.hamming_candidate_pairs):
+rows, observed while the input is checkpointed (onetask.observed):
 
   * LOCAL (rows <= LOCAL_MAX_ROWS and the working set fits one task,
-    onetask.fits_one_task): one coalesce(1).mapInPandas task sorts the
+    onetask.one_task): one coalesce(1).mapInPandas task sorts the
     rows by (key, id), scans runs of equal keys and applies the cap
     rule in numpy (_pair_kernel). A pair several buckets share (an id
     pair in several bands) leaves the task once. pairs_and_overflow
     returns its oversized rows from a second one-task pass over the
     same checkpoint (_overflow_kernel). No shuffle.
   * DISTRIBUTED (above the cap): one window exchange sizes the buckets;
-    small buckets collect_list + explode their sorted member arrays,
+    small buckets collect_set + explode their sorted member arrays,
     and star pairs are emitted row-wise from the same window's min id,
     so an oversized bucket is never collected into one task's list.
 
@@ -48,20 +48,17 @@ Both paths return the same pair set.
 
 from __future__ import annotations
 
-import logging
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
 from . import onetask
-from .onetask import CHUNK, fits_one_task, id_bytes, range_pairs, runs
-
-log = logging.getLogger("distill_spark")
+from .onetask import CHUNK, id_bytes, observed, one_task, range_pairs, runs
 
 # Inputs of at most this many non-null-id rows run the one-task kernel;
 # above it the kernel's serial sort and scan outgrow the distributed
@@ -78,18 +75,6 @@ _ROW_BYTES = 200
 _PAIR_BYTES = 40
 
 
-def _allpairs_expr() -> F.Column:
-    """Expand the sorted member array `_ids` into the ordered pairs
-    (x, y) of every element x and each element after it."""
-    return F.expr(
-        """
-        flatten(transform(_ids, (x, i) ->
-          transform(slice(_ids, i + 2, size(_ids) - i - 1),
-                    y -> struct(x AS a, y AS b))))
-        """
-    )
-
-
 def _key_codes(cols: list[np.ndarray]) -> np.ndarray:
     """One int64 code per row, equal exactly where every key column is
     equal (a null equals a null, as in a Spark grouping)."""
@@ -103,14 +88,15 @@ def _key_codes(cols: list[np.ndarray]) -> np.ndarray:
 def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
                  budget: int):
     """mapInPandas function: every (id, key...) row of the input in one
-    task -> each distinct pair (a, b), a <= b, of the cap rule.
+    task -> each distinct pair (a, b), a < b, of the cap rule.
 
     Ids are factorized in sort order (code order is id order) and the
     rows sorted by (key code, id code), so each bucket is a run of
     sorted ids. A row of a bucket of at most `cap` rows pairs with every
     later row of its run; with `star`, every other row of an oversized
     bucket pairs with the run's first (min) id. The pair count is taken
-    from those run sizes before any pair is built, and pairs are
+    from those run sizes before any pair is built; pairs of an id with
+    itself (an id repeated in a run) are dropped, and the rest are
     deduplicated in stripes of left ids of about `budget` pairs each
     (one stripe unless the pairs outgrow the budget), then leave in
     frames of CHUNK pairs.
@@ -154,7 +140,11 @@ def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
         bounds = np.unique(np.concatenate(([0], cuts, [nid])))
         for s, e in zip(bounds[:-1], bounds[1:]):
             m = (left >= s) & (left < e)
-            codes = [a * nid + sid[rp] for a, rp in range_pairs(left[m], lo[m], cnt[m])]
+            codes = []
+            for a, rp in range_pairs(left[m], lo[m], cnt[m]):
+                b = sid[rp]
+                keep = a != b
+                codes.append(a[keep] * nid + b[keep])
             if not codes:
                 continue
             codes = np.unique(np.concatenate(codes))
@@ -184,22 +174,14 @@ def _overflow_kernel(key_cols: list[str], cap: int):
 
 def _observed(buckets: DataFrame, key_cols: list[str], id_col: str,
               what: str) -> tuple[DataFrame, bool]:
-    """The non-null-id rows, checkpointed with their count observed in
-    the same job, and whether that count picks the local path."""
-    obs = Observation()
-    rows_df = (
-        buckets.filter(F.col(id_col).isNotNull())
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
-        .localCheckpoint(eager=True)
-    )
-    rows = obs.get["rows"]
+    """The non-null-id rows, checkpointed, and whether their count picks
+    the local path."""
+    rows_df, rows = observed(buckets.filter(F.col(id_col).isNotNull()))
     row_bytes = 3 * sum(id_bytes(f.dataType) for f in rows_df.schema.fields) + _ROW_BYTES
     # the rows may take half the task budget; the other half holds the
     # stripe of pairs being deduplicated (_pair_kernel)
-    local = rows <= LOCAL_MAX_ROWS and fits_one_task(rows, 2 * row_bytes)
-    log.debug("%s(%s): %d rows -> %s path", what, ", ".join(key_cols), rows,
-              "local" if local else "distributed")
-    return rows_df, local
+    return rows_df, one_task(f"{what}({', '.join(key_cols)})", rows, "rows",
+                             LOCAL_MAX_ROWS, 2 * row_bytes)
 
 
 def _local_pairs(rows_df: DataFrame, key_cols: list[str], id_col: str,
@@ -215,13 +197,22 @@ def _local_pairs(rows_df: DataFrame, key_cols: list[str], id_col: str,
 
 def _small_pairs(sized: DataFrame, key_cols: list[str], id_col: str,
                  cap: int) -> DataFrame:
-    """All pairs of the buckets of 2 to cap rows of a `_sz`-sized frame."""
+    """All pairs (a, b), a < b, of distinct ids of the buckets of 2 to
+    cap rows of a `_sz`-sized frame: each bucket's sorted id set `_ids`
+    expands to every element x paired with each element after it."""
     grouped = (
         sized.filter((F.col("_sz") >= 2) & (F.col("_sz") <= cap))
         .groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("_ids"))
+        .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("_ids"))
     )
-    return grouped.select(F.explode(_allpairs_expr()).alias("p")).select("p.a", "p.b")
+    pairs = F.expr(
+        """
+        flatten(transform(_ids, (x, i) ->
+          transform(slice(_ids, i + 2, size(_ids) - i - 1),
+                    y -> struct(x AS a, y AS b))))
+        """
+    )
+    return grouped.select(F.explode(pairs).alias("p")).select("p.a", "p.b")
 
 
 def pairs_from_buckets(

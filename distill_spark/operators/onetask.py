@@ -1,21 +1,28 @@
-"""Memory gate and numpy helpers shared by the single-task fast paths.
+"""Path decision and numpy helpers shared by the single-task fast paths.
 
 Connected components (`components._cc_local_labels`), the Hamming
 channel (`hamming._local_pairs`) and bucket-pair expansion
 (`lsh._pair_kernel`) each fold a small input into ONE mapInPandas task.
-Each path states its working set as bytes per input row, in units of
-`id_bytes` for the id columns it holds, and takes the one-task shape
-only while rows x bytes-per-row stays within TASK_BYTES. The pair
-kernels sort rows by a bucket key, scan runs of equal keys (`runs`) and
-expand each run's pairs in bounded chunks (`range_pairs`).
+Each checkpoints its input with the row count observed in the same job
+(`observed`) and states its working set as bytes per row, in units of
+`id_bytes` for the id columns it holds; `one_task` takes the one-task
+shape only while the rows stay within the operator's row cap and rows x
+bytes-per-row within TASK_BYTES. The pair kernels sort rows by a bucket
+key, scan runs of equal keys (`runs`) and expand each run's pairs in
+bounded chunks (`range_pairs`).
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+log = logging.getLogger("distill_spark")
 
 TASK_BYTES = 2 << 30  # working-set budget of one Python worker task
 CHUNK = 1 << 20  # pairs per chunk a pair kernel generates / yields
@@ -28,9 +35,21 @@ def id_bytes(dtype: T.DataType) -> int:
     return 8 if isinstance(dtype, T.IntegralType) else 64
 
 
-def fits_one_task(rows: int, row_bytes: int) -> bool:
-    """True when `rows` rows of `row_bytes` each fit one task's budget."""
-    return rows * row_bytes <= TASK_BYTES
+def observed(df: DataFrame) -> tuple[DataFrame, int]:
+    """(`df` as an eager localCheckpoint, its row count observed in the
+    checkpoint's own job)."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return df, obs.get["rows"]
+
+
+def one_task(what: str, n: int, unit: str, max_n: int, item_bytes: int) -> bool:
+    """True when n <= max_n items of `item_bytes` each fit TASK_BYTES;
+    logged at debug as `what: n unit -> local|distributed path`."""
+    local = n <= max_n and n * item_bytes <= TASK_BYTES
+    log.debug("%s: %d %s -> %s path", what, n, unit,
+              "local" if local else "distributed")
+    return local
 
 
 def range_pairs(

@@ -22,7 +22,10 @@ select representative (selector.go:68-238) -> stats. Our plan:
 The plan is written once, as an ordered list of named stages
 (`dedup_stages`), and run two ways: `dedupe()` builds each stage in
 place, and `checkpoint.dedupe_checkpointed()` sends each one through a
-CheckpointStore so a run resumes after its last completed stage.
+CheckpointStore so a run resumes after its last completed stage. In
+`dedupe()` only the `edges` stage is persisted; every other frame the
+engine materializes is an eager localCheckpoint, which Spark frees by
+itself.
 
 Recall budget: phash + substring channels are recall-1.0 by
 construction AT ANY BUCKET-SIZE DISTRIBUTION — oversized pigeonhole
@@ -77,17 +80,16 @@ class DedupResult:
     stats: DataFrame            # 1-row counts/reduction
     cached: DataFrame | None = None  # the edges stage (int64 ids for
                                 # string-id inputs)
-    aux_cached: tuple = ()      # other persisted internals (signatures,
-                                # Hamming refinement caches)
 
     def unpersist(self) -> None:
-        """Release the caches dedupe() created (edges, signatures and the
-        Hamming refinement caches); long sessions running many dedupe()
-        calls should call this. The signature frame is an eager
-        localCheckpoint, a block-backed RDD rather than a catalog cache:
-        Spark's ContextCleaner frees its blocks once this result object
-        is dropped, and unpersist() is a no-op for it."""
-        for df in (self.cached, self.edges, *self.aux_cached):
+        """Release the one cache dedupe() created, the persisted edges
+        stage; long sessions running many dedupe() calls should call
+        this. Every other frame the engine materializes (signatures,
+        the operators' input checkpoints, Hamming refinement levels, CC
+        labels) is an eager localCheckpoint, a block-backed RDD rather
+        than a catalog cache: Spark's ContextCleaner frees its blocks
+        once no plan refers to it."""
+        for df in (self.cached, self.edges):
             if df is not None:
                 try:
                     df.unpersist()
@@ -138,7 +140,6 @@ def dedup_stages(
     phash_col: str | None,
     channels: tuple[str, ...],
     rep_strategy: str,
-    cache_registry: list[DataFrame],
 ) -> list[Stage]:
     """The dedup stage graph, in run order:
 
@@ -149,8 +150,7 @@ def dedup_stages(
 
     `meta` holds the original ids, `meta_i` the ids the channels run on
     (int64 hashes of string ids) and `idmap` maps one to the other (None
-    for integral ids). Hamming refinement caches are appended to
-    `cache_registry` for the runner to release."""
+    for integral ids)."""
     caption_channels = tuple(c for c in ("minhash", "simhash") if c in channels)
     substring = "substring" in channels
     stages: list[Stage] = []
@@ -181,9 +181,7 @@ def dedup_stages(
             if "simhash" in channels:
                 cands.append(hamming_candidate_pairs(
                     sigs.filter(F.col("simhash").isNotNull()).select(id_col, "simhash"),
-                    "simhash", cfg.simhash_hamming_k, id_col, cfg,
-                    cache_registry=cache_registry,
-                ))
+                    "simhash", cfg.simhash_hamming_k, id_col, cfg))
             return _distinct_pairs(cands)
 
         stages.append(Stage("jaccard_candidates", ("signatures",), jaccard_candidates))
@@ -199,8 +197,7 @@ def dedup_stages(
         # the Hamming channels verify inside their pair expansion
         stages.append(Stage("phash_edges", (), lambda: hamming_candidate_pairs(
             meta_i.select(id_col, phash_col), phash_col, cfg.phash_hamming_k,
-            id_col, cfg, cache_registry=cache_registry,
-        )))
+            id_col, cfg)))
 
     if substring:
         def lcs_edges(sigs: DataFrame) -> DataFrame:
@@ -268,7 +265,6 @@ def run_dedup_graph(
     images: DataFrame,
     cfg: DedupConfig,
     materialize: Callable[[Stage, Callable[[], DataFrame]], DataFrame],
-    cache_registry: list[DataFrame],
     id_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str | None = "phash",
@@ -306,7 +302,7 @@ def run_dedup_graph(
     out: dict[str, DataFrame] = {}
     for stage in dedup_stages(
         meta, meta_i, idmap, cfg, id_col, caption_col, phash_col, channels,
-        rep_strategy or cfg.rep_strategy, cache_registry,
+        rep_strategy or cfg.rep_strategy,
     ):
         out[stage.name] = materialize(
             stage, lambda s=stage: s.fn(*(out[d] for d in s.deps))
@@ -336,7 +332,6 @@ def run_dedup_graph(
         conflicts=conflicts,
         stats=cluster_stats(assignments),
         cached=edges_i,
-        aux_cached=tuple(cache_registry),
     )
 
 
@@ -351,9 +346,9 @@ def dedupe(
     with_conflicts: bool = False,
 ) -> DedupResult:
     """The dedup stage graph built in place: `signatures` is an eager
-    localCheckpoint, `edges` is persisted, every other stage stays lazy.
-    See run_dedup_graph for the output contract."""
-    cache_registry: list[DataFrame] = []
+    localCheckpoint, `edges` is persisted (the one cache, released by
+    DedupResult.unpersist), every other stage stays lazy. See
+    run_dedup_graph for the output contract."""
 
     def in_place(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
         df = compute()
@@ -371,7 +366,6 @@ def dedupe(
             # Truncating the lineage to an RDD scan restores exchange
             # reuse for every downstream shuffle in the pipeline.
             df = df.localCheckpoint(eager=True)
-            cache_registry.append(df)
         elif stage.name == "edges":
             # edges feed CC (which materializes them) AND are part of the
             # result — persist so user actions on result.edges don't
@@ -380,6 +374,6 @@ def dedupe(
         return df
 
     return run_dedup_graph(
-        images, cfg, in_place, cache_registry, id_col, caption_col, phash_col,
+        images, cfg, in_place, id_col, caption_col, phash_col,
         channels, rep_strategy, with_conflicts,
     )

@@ -1,13 +1,15 @@
 """The non-test entry points (the bench driver contract, the benchmark
 package and the scripts) still resolve against the library: every
 `from distill_spark... import name` they contain names something that
-exists, and every `cfg.<attr>` the benchmark reads exists on
-DedupConfig(). Deleting a name one of them uses fails here, not in a
-later benchmark run."""
+exists, every keyword the benchmark passes to such a name is one of its
+parameters, and every `cfg.<attr>` the benchmark reads exists on
+DedupConfig(). Deleting a name, parameter or field one of them uses
+fails here, not in a later benchmark run."""
 
 import ast
 import glob
 import importlib
+import inspect
 import os
 
 import pytest
@@ -72,3 +74,22 @@ def test_perfbench_cfg_reads_exist(path):
              and isinstance(node.value, ast.Name) and node.value.id == "cfg"}
     missing = sorted(a for a in reads if not hasattr(cfg, a))
     assert not missing, f"{os.path.relpath(path, ROOT)} reads missing cfg attrs: {missing}"
+
+
+@pytest.mark.parametrize("path", PERFBENCH, ids=lambda p: os.path.relpath(p, ROOT))
+def test_perfbench_keywords_are_parameters(path):
+    tree = _tree(path)
+    imported = {n: getattr(importlib.import_module(m), n, None)
+                for m, n in _library_imports(tree) if n}
+    imported = {n: obj for n, obj in imported.items() if callable(obj)}
+    bad = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name) \
+                and node.func.id in imported:
+            params = inspect.signature(imported[node.func.id]).parameters
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            bad += [f"{node.func.id}({kw.arg}=) at line {node.lineno}"
+                    for kw in node.keywords
+                    if kw.arg is not None and kw.arg not in params]
+    assert not bad, f"{os.path.relpath(path, ROOT)} passes unknown keywords: {bad}"

@@ -2,7 +2,8 @@
 distributed window path must both return the brute-force pair set of
 the cap rule — all pairs of buckets of 2 to cap members, a star on the
 bucket-min id (pairs_from_buckets) or the member rows
-(pairs_and_overflow) above the cap — with null-id rows taking no part.
+(pairs_and_overflow) above the cap — with null-id rows taking no part
+and an id never paired with itself.
 """
 
 import itertools
@@ -38,7 +39,7 @@ def _reference(rows, cap):
     for members in buckets.values():
         ids = sorted(r[0] for r in members)
         if len(ids) <= cap:
-            small |= {(a, b) for a, b in itertools.combinations(ids, 2)}
+            small |= {(a, b) for a, b in itertools.combinations(ids, 2) if a != b}
         else:
             star |= {(ids[0], b) for b in ids[1:] if b != ids[0]}
             over += members
@@ -65,6 +66,12 @@ def _case(name):
                 for _ in range(80)]
         return (list(dict.fromkeys(rows)), "id string, fingerprint long, subfp string",
                 ["fingerprint", "subfp"], (3, 30))
+    if name == "repeated_ids":
+        # an id repeated in a bucket (a repeated row) pairs only with the
+        # bucket's other ids; the bucket is still sized in rows
+        rows = [(1, 7), (1, 7), (2, 7), (3, 8), (3, 8),
+                (4, 9), (4, 9), (5, 9), (6, 9), (6, 9)]
+        return rows, "id long, bucket long", ["bucket"], (2, 3, 8)
     if name == "nulls_and_singletons":
         rows = [(None if i % 5 == 0 else i, i % 7 if i < 35 else 100 + i) for i in range(50)]
         rows += [(60, None), (61, None), (None, None)]
@@ -74,7 +81,7 @@ def _case(name):
 
 
 CASES = ["tiny_caps", "shared_bands", "two_column_keys", "string_keys",
-         "nulls_and_singletons", "empty"]
+         "repeated_ids", "nulls_and_singletons", "empty"]
 
 
 def _collect(df, path, caplog, what):

@@ -175,7 +175,8 @@ def test_restart_drops_retired_dedup_cfg_keys(spark, tmp_path, caplog):
     with open(ledger) as f:
         rows = [json.loads(line) for line in f]
     for r in rows:
-        r["options"]["dedup_cfg"].update(sig_impl="numpy", persist_shingles=False)
+        r["options"]["dedup_cfg"].update(sig_impl="numpy", persist_shingles=False,
+                                         cc_local_max_edges=10**9)
     with open(ledger, "w") as f:
         f.writelines(json.dumps(r) + "\n" for r in rows)
 
@@ -184,7 +185,8 @@ def test_restart_drops_retired_dedup_cfg_keys(spark, tmp_path, caplog):
         assert proc2.process_next() == job.id
     assert proc2.get(job.id).status == COMPLETED
     msgs = [r.getMessage() for r in caplog.records if r.name == "distill_spark"]
-    assert any("sig_impl" in m and "persist_shingles" in m for m in msgs), msgs
+    assert any("sig_impl" in m and "persist_shingles" in m and "cc_local_max_edges" in m
+               for m in msgs), msgs
 
 
 def test_submit_reserves_slot_atomically(spark, tmp_path):

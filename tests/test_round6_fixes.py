@@ -10,9 +10,11 @@ equivalence/behavior test here:
      strings (verified-by-construction pairs), and the substring
      channel's edges/components are unchanged vs the verify-everything
      formulation.
-  4. hamming cache_registry: the distributed path's per-level persists
-     are handed to the caller and released by DedupResult.unpersist
-     (round-5 advice #1); the local one-task path persists nothing.
+  4. no leaked caches: the distributed Hamming path materializes its
+     refinement levels as eager localCheckpoints, so it leaves no plan
+     in Spark's cache manager and hands nothing to a cache_registry;
+     after DedupResult.unpersist no cached plan is left (round-5
+     advice #1).
   5. versioned stores auto-vacuum after commits (round-5 advice #2).
 """
 
@@ -23,7 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from distill_spark.config import DedupConfig
-from distill_spark.operators import dedupe
+from distill_spark.operators import components, dedupe
 from distill_spark.operators.components import connected_components
 
 
@@ -41,31 +43,27 @@ def _graph_edges(spark, with_strings=False):
     return df
 
 
-def test_cc_local_matches_distributed(spark):
+def test_cc_local_matches_distributed(spark, monkeypatch):
     edges = _graph_edges(spark)
     nodes = spark.range(0, 4500).selectExpr("id as image_id")
     out = {}
-    for tag, cfg in [
-        ("local", DedupConfig(cc_local_max_edges=10**9)),
-        ("dist", DedupConfig(cc_local_max_edges=0)),
-    ]:
-        res = connected_components(edges, nodes=nodes, id_col="image_id", cfg=cfg)
+    for tag, max_edges in [("local", 10**9), ("dist", 0)]:
+        monkeypatch.setattr(components, "LOCAL_MAX_EDGES", max_edges)
+        res = connected_components(edges, nodes=nodes, id_col="image_id")
         out[tag] = sorted((r["image_id"], r["component"]) for r in res.collect())
     assert out["local"] == out["dist"]
     # the local path must not have taken the iterative loop
-    cfg = DedupConfig(cc_local_max_edges=10**9)
-    connected_components(edges, id_col="image_id", cfg=cfg).collect()
+    monkeypatch.setattr(components, "LOCAL_MAX_EDGES", 10**9)
+    connected_components(edges, id_col="image_id").collect()
     assert connected_components.last_iterations == 0
 
 
-def test_cc_local_matches_distributed_string_ids(spark):
+def test_cc_local_matches_distributed_string_ids(spark, monkeypatch):
     edges = _graph_edges(spark, with_strings=True)
     out = {}
-    for tag, cfg in [
-        ("local", DedupConfig(cc_local_max_edges=10**9)),
-        ("dist", DedupConfig(cc_local_max_edges=0)),
-    ]:
-        res = connected_components(edges, id_col="image_id", cfg=cfg)
+    for tag, max_edges in [("local", 10**9), ("dist", 0)]:
+        monkeypatch.setattr(components, "LOCAL_MAX_EDGES", max_edges)
+        res = connected_components(edges, id_col="image_id")
         out[tag] = sorted((r["image_id"], r["component"]) for r in res.collect())
     assert out["local"] == out["dist"]
 
@@ -75,7 +73,7 @@ def test_cc_string_ids_over_byte_budget_take_distributed_loop(spark, monkeypatch
     edge count: under a budget that holds these edges with int64 ids,
     the same graph with string ids takes the distributed loop, with
     the same labels."""
-    from distill_spark.operators import components, onetask
+    from distill_spark.operators import onetask
 
     chains = [(i, i + 1) for s in range(0, 40, 5) for i in range(s, s + 4)]
     longs = spark.createDataFrame(chains, "a long, b long")
@@ -83,11 +81,11 @@ def test_cc_string_ids_over_byte_budget_take_distributed_loop(spark, monkeypatch
                             "format_string('n%03d', b) AS b")
     monkeypatch.setattr(onetask, "TASK_BYTES",
                         len(chains) * components._CC_IDS_PER_EDGE * 8)
-    cfg = DedupConfig(cc_local_max_edges=10**9)
-    connected_components(longs, id_col="image_id", cfg=cfg).collect()
+    monkeypatch.setattr(components, "LOCAL_MAX_EDGES", 10**9)
+    connected_components(longs, id_col="image_id").collect()
     assert connected_components.last_iterations == 0
     got = {r["image_id"]: r["component"] for r in
-           connected_components(strs, id_col="image_id", cfg=cfg).collect()}
+           connected_components(strs, id_col="image_id").collect()}
     assert connected_components.last_iterations > 0
     assert got == {f"n{i:03d}": f"n{i - i % 5:03d}"
                    for s in range(0, 40, 5) for i in range(s, s + 5)}
@@ -185,44 +183,41 @@ def test_substring_edges_unchanged_by_subbucket_shortcut(spark):
     res.unpersist()
 
 
-def test_hamming_cache_registry_released(spark, monkeypatch):
+def _cache_is_empty(spark):
+    """True when Spark's cache manager holds no cached plan."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_hamming_distributed_path_caches_nothing(spark, monkeypatch):
     from distill_spark.operators import hamming
     from distill_spark.operators.hamming import hamming_candidate_pairs
 
     rng = random.Random(5)
     rows = [(i, rng.getrandbits(63)) for i in range(500)]
+    rows += [(500 + i, v ^ (1 << i % 63)) for i, (_, v) in enumerate(rows[:50])]
     df = spark.createDataFrame(rows, "id long, phash long")
-    reg: list = []
-    hamming_candidate_pairs(df, "phash", 4, id_col="id", cfg=DedupConfig(),
-                            cache_registry=reg).count()
-    assert reg == [], "the local path must register no persisted frame"
+    spark.catalog.clearCache()
     monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)  # distributed path
+    reg: list = []
     pairs = hamming_candidate_pairs(df, "phash", 4, id_col="id",
                                     cfg=DedupConfig(), cache_registry=reg)
-    pairs.count()
-    assert reg, "per-level persists must be registered"
-    from pyspark import StorageLevel
-
-    assert all(d.storageLevel != StorageLevel.NONE for d in reg)
-    for d in reg:
-        d.unpersist()
-    assert all(d.storageLevel == StorageLevel.NONE for d in reg)
+    assert pairs.count() >= 50
+    assert reg == [], "nothing is handed to a cache registry"
+    assert _cache_is_empty(spark), "the distributed path must cache no plan"
 
 
-def test_dedupe_releases_hamming_caches(spark, monkeypatch):
+def test_dedupe_unpersist_leaves_no_cached_plan(spark, monkeypatch):
     from distill_spark.datagen import generate_images
     from distill_spark.operators import hamming
-    from pyspark import StorageLevel
 
     monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)  # distributed path
     df, _ = generate_images(spark, n=300, seed=4)
+    spark.catalog.clearCache()
     res = dedupe(df, DedupConfig())
     res.assignments.count()
-    cached = [d for d in res.aux_cached
-              if d.storageLevel != StorageLevel.NONE]
-    assert cached, "pipeline must register its persisted internals"
+    assert not _cache_is_empty(spark), "the edges stage is persisted"
     res.unpersist()
-    assert all(d.storageLevel == StorageLevel.NONE for d in res.aux_cached)
+    assert _cache_is_empty(spark), "unpersist must leave no cached plan"
 
 
 def test_versioned_stores_auto_vacuum(spark, tmp_path):
