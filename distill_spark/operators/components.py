@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DedupConfig, DEFAULT
 from .onetask import id_bytes, observed, one_task
@@ -51,6 +52,35 @@ LOCAL_MAX_EDGES = 20_000_000
 _CC_IDS_PER_EDGE = 12
 
 
+def edge_bytes(id_type: T.DataType) -> int:
+    """Task bytes per edge of cc_labels over ids of `id_type`."""
+    return _CC_IDS_PER_EDGE * id_bytes(id_type)
+
+
+def cc_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Edges (a[i], b[i]) -> (every edge-touching node, the min node of
+    its component), by vectorized min-label propagation + pointer
+    jumping to the fixpoint."""
+    # factorize ids -> dense codes; np.unique sorts ascending, so
+    # code order == id order and min-code == min-id per component
+    uniq, codes = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ca, cb = codes[: len(a)], codes[len(a):]
+    p = np.arange(len(uniq), dtype=np.int64)
+    while True:
+        before = p.copy()
+        m = np.minimum(p[ca], p[cb])
+        np.minimum.at(p, ca, m)
+        np.minimum.at(p, cb, m)
+        while True:  # pointer jumping to the current fixpoint
+            pp = p[p]
+            if np.array_equal(pp, p):
+                break
+            p = pp
+        if np.array_equal(before, p):
+            break
+    return uniq, uniq[p]
+
+
 def _cc_local_labels(
     edges: DataFrame, id_col: str, out_col: str
 ) -> DataFrame:
@@ -64,8 +94,8 @@ def _cc_local_labels(
     clustering phase (measured at sf0.1: ~8-14 s of a ~36 s pipeline
     for 122k edges). Below the edge cap the graph fits comfortably in
     one task (~96 B/edge with int64 ids), so we fold the
-    whole fixpoint into ONE stage: a mapInPandas kernel doing
-    vectorized min-label propagation + pointer jumping in numpy.
+    whole fixpoint into ONE stage: a mapInPandas kernel running
+    cc_labels in numpy.
     Output is IDENTICAL to the loop: (node, min id of its component)
     for every edge-touching node. No collect — the kernel runs in an
     executor task, and the label table it returns is
@@ -74,35 +104,15 @@ def _cc_local_labels(
     schema = f"{id_col} {out_type}, {out_col} {out_type}"
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = False
         a_parts, b_parts = [], []
         for pdf in it:
             if len(pdf):
-                seen = True
                 a_parts.append(pdf["a"].to_numpy())
                 b_parts.append(pdf["b"].to_numpy())
-        if not seen:
+        if not a_parts:
             return
-        a = np.concatenate(a_parts)
-        b = np.concatenate(b_parts)
-        # factorize ids -> dense codes; np.unique sorts ascending, so
-        # code order == id order and min-code == min-id per component
-        uniq, codes = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ca, cb = codes[: len(a)], codes[len(a):]
-        p = np.arange(len(uniq), dtype=np.int64)
-        while True:
-            before = p.copy()
-            m = np.minimum(p[ca], p[cb])
-            np.minimum.at(p, ca, m)
-            np.minimum.at(p, cb, m)
-            while True:  # pointer jumping to the current fixpoint
-                pp = p[p]
-                if np.array_equal(pp, p):
-                    break
-                p = pp
-            if np.array_equal(before, p):
-                break
-        yield pd.DataFrame({id_col: uniq, out_col: uniq[p]})
+        nodes, labels = cc_labels(np.concatenate(a_parts), np.concatenate(b_parts))
+        yield pd.DataFrame({id_col: nodes, out_col: labels})
 
     return edges.select("a", "b").coalesce(1).mapInPandas(kernel, schema=schema)
 
@@ -154,9 +164,9 @@ def connected_components(
         def _ckpt(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=True)
 
-    edges, n_edges = observed(edges.select("a", "b"))
-    edge_bytes = _CC_IDS_PER_EDGE * id_bytes(edges.schema["a"].dataType)
-    if one_task("connected_components", n_edges, "edges", LOCAL_MAX_EDGES, edge_bytes):
+    edges, n = observed(edges.select("a", "b"))
+    if one_task("connected_components", n["rows"], "edges", LOCAL_MAX_EDGES,
+                edge_bytes(edges.schema["a"].dataType)):
         # one stage instead of ~4 shuffles x iterations; the label
         # table is consumed several times downstream, so cut its
         # (single-task) lineage eagerly — through the reliable

@@ -36,7 +36,7 @@ Two execution paths, picked at runtime by ONE count of the non-null
   * LOCAL (rows <= LOCAL_MAX_ROWS and the working set fits one task,
     onetask.one_task): one mapInPandas task runs multi-index
     hashing (Norouzi, Punjani & Fleet, CVPR 2012) in numpy — per block,
-    sort by block key and scan equal-key runs (_local_pairs). Two
+    sort by block key and scan equal-key runs (ball_pairs). Two
     Spark stages per call: the observed checkpoint and the kernel.
   * DISTRIBUTED (above the cap): the same recursion as per-level Spark
     window exchanges, each level an eager localCheckpoint, plus a
@@ -58,6 +58,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DedupConfig, DEFAULT
 from .lsh import _small_pairs
@@ -73,7 +74,7 @@ _SCATTER_SEED = 0xD15C0
 # rows^2 / 2^(64/(k+1)) until buckets overflow the cap).
 LOCAL_MAX_ROWS = 250_000
 # Local-kernel bytes per input row on top of its 4 id slots (see
-# _local_pairs for the breakdown).
+# ball_pairs for the breakdown).
 _ROW_BYTES = 400
 _U = np.uint64
 
@@ -251,20 +252,21 @@ def _value_pairs(u: np.ndarray, k: int, cap: int, max_levels: int) -> np.ndarray
     return np.unique(np.concatenate(found)) if found else np.empty(0, np.int64)
 
 
-def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame:
-    """The exact pair set of hamming_candidate_pairs in ONE mapInPandas
-    task over a materialized (_hid, val) frame — no shuffle, no
-    persist.
+def ball_pairs(ids: np.ndarray, vals: np.ndarray, k: int, cap: int,
+               max_levels: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(id, int64 value) rows -> every pair of distinct ids (a, b), a < b,
+    whose values lie within Hamming distance k, each once, as (a, b)
+    arrays of id values in chunks of about CHUNK pairs.
 
-    The kernel factorizes ids and values (np.unique: code order is id
-    order, so (least, greatest) is taken on codes), keeps the distinct
-    (value, id) rows sorted by value, expands each identical-value
-    group to all its id pairs, runs _value_pairs over the distinct
-    values and expands every verified value pair to its id pairs.
-    Pairs leave in chunks of ~CHUNK rows, so a hot identical-value
-    group streams out. When every id carries one value (an id column
-    that is a key) each id pair arises once by construction; otherwise
-    the pair codes are deduplicated in the task, holding the output.
+    Ids and values are factorized (np.unique: code order is id order,
+    so (least, greatest) is taken on codes); the distinct (value, id)
+    rows are kept sorted by value, each identical-value group expands
+    to all its id pairs, _value_pairs runs over the distinct values and
+    every verified value pair expands to its id pairs. Pairs leave in
+    chunks, so a hot identical-value group streams out. When every id
+    carries one value (an id column that is a key) each id pair arises
+    once by construction; otherwise the pair codes are deduplicated
+    first, holding the output.
 
     Memory per input row, about 4 id slots (onetask.id_bytes: the
     Arrow batch arrays, their concatenation, np.unique's sorted copy
@@ -274,6 +276,54 @@ def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame
     levels. On top: the pair chunks (~10 arrays of CHUNK int64, ~80
     MB) and 8 B per verified value pair. Measured: the value-pair scan
     over 250k distinct random values at k=4 peaks at ~107 MB."""
+    if not len(vals):
+        return
+    uid, icode = np.unique(ids, return_inverse=True)
+    uval, vcode = np.unique(vals, return_inverse=True)
+    nid, nval = len(uid), len(uval)
+    # distinct (value, id) rows, sorted by value code then id code
+    vrow, irow = np.divmod(np.unique(vcode * nid + icode), nid)
+    del icode, vcode
+    gstart = np.searchsorted(vrow, np.arange(nval))
+    gsize = np.append(gstart[1:], len(vrow)) - gstart
+
+    def position_pairs():
+        pos = np.arange(len(vrow))
+        yield from range_pairs(pos, pos + 1, gstart[vrow] + gsize[vrow] - pos - 1)
+        if k == 0:
+            return
+        va, vb = np.divmod(_value_pairs(uval.view(np.uint64), k, cap,
+                                        max_levels), nval)
+        # rows = (value pair, member of va's group) x vb's group
+        for q, lp in range_pairs(np.arange(len(va)), gstart[va], gsize[va]):
+            yield from range_pairs(lp, gstart[vb[q]], gsize[vb[q]])
+
+    def code_pairs():
+        for lp, rp in position_pairs():
+            ia, ib = irow[lp], irow[rp]
+            yield np.minimum(ia, ib), np.maximum(ia, ib)
+
+    chunks = code_pairs()
+    if len(vrow) > nid:  # an id with several values: dedupe first
+        codes = [a[a != b] * nid + b[a != b] for a, b in chunks]
+        if not codes:
+            return
+        codes = np.unique(np.concatenate(codes))
+        chunks = (np.divmod(codes[s:s + CHUNK], nid)
+                  for s in range(0, len(codes), CHUNK))
+    for a, b in chunks:
+        yield uid[a], uid[b]
+
+
+def row_bytes(id_type: T.DataType) -> int:
+    """Task bytes per (id, value) input row of ball_pairs."""
+    return 4 * id_bytes(id_type) + _ROW_BYTES
+
+
+def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame:
+    """The exact pair set of hamming_candidate_pairs in ONE mapInPandas
+    task over a materialized (_hid, val) frame (ball_pairs) — no
+    shuffle, no persist."""
     id_type = ids.schema["_hid"].dataType.simpleString()
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -281,44 +331,12 @@ def _local_pairs(ids: DataFrame, k: int, cap: int, max_levels: int) -> DataFrame
         for pdf in it:
             id_parts.append(pdf["_hid"].to_numpy())
             val_parts.append(pdf["val"].to_numpy(np.int64))
-        if not sum(len(v) for v in val_parts):
+        if not id_parts:
             return
-        uid, icode = np.unique(np.concatenate(id_parts), return_inverse=True)
-        uval, vcode = np.unique(np.concatenate(val_parts), return_inverse=True)
+        ids_, vals = np.concatenate(id_parts), np.concatenate(val_parts)
         del id_parts, val_parts
-        nid, nval = len(uid), len(uval)
-        # distinct (value, id) rows, sorted by value code then id code
-        vrow, irow = np.divmod(np.unique(vcode * nid + icode), nid)
-        del icode, vcode
-        gstart = np.searchsorted(vrow, np.arange(nval))
-        gsize = np.append(gstart[1:], len(vrow)) - gstart
-
-        def position_pairs():
-            pos = np.arange(len(vrow))
-            yield from range_pairs(pos, pos + 1, gstart[vrow] + gsize[vrow] - pos - 1)
-            if k == 0:
-                return
-            va, vb = np.divmod(_value_pairs(uval.view(np.uint64), k, cap,
-                                            max_levels), nval)
-            # rows = (value pair, member of va's group) x vb's group
-            for q, lp in range_pairs(np.arange(len(va)), gstart[va], gsize[va]):
-                yield from range_pairs(lp, gstart[vb[q]], gsize[vb[q]])
-
-        def code_pairs():
-            for lp, rp in position_pairs():
-                ia, ib = irow[lp], irow[rp]
-                yield np.minimum(ia, ib), np.maximum(ia, ib)
-
-        chunks = code_pairs()
-        if len(vrow) > nid:  # an id with several values: dedupe in task
-            codes = [a[a != b] * nid + b[a != b] for a, b in chunks]
-            if not codes:
-                return
-            codes = np.unique(np.concatenate(codes))
-            chunks = (np.divmod(codes[s:s + CHUNK], nid)
-                      for s in range(0, len(codes), CHUNK))
-        for a, b in chunks:
-            yield pd.DataFrame({"a": uid[a], "b": uid[b]})
+        for a, b in ball_pairs(ids_, vals, k, cap, max_levels):
+            yield pd.DataFrame({"a": a, "b": b})
 
     return ids.coalesce(1).mapInPandas(kernel, schema=f"a {id_type}, b {id_type}")
 
@@ -344,13 +362,12 @@ def hamming_candidate_pairs(
     one task) or the distributed recursion. Neither path persists a
     frame: every frame either materializes is an eager localCheckpoint."""
     # `cache_registry` kept for the traced benchmark sequence until a benchmark change drops it
-    ids, rows = observed(
+    ids, n = observed(
         df.select(F.col(id_col).alias("_hid"), F.col(value_col).alias("val"))
         .filter(F.col("_hid").isNotNull() & F.col("val").isNotNull())
     )
-    row_bytes = 4 * id_bytes(ids.schema["_hid"].dataType) + _ROW_BYTES
-    if one_task(f"hamming_candidate_pairs({value_col}, k={k})", rows, "rows",
-                LOCAL_MAX_ROWS, row_bytes):
+    if one_task(f"hamming_candidate_pairs({value_col}, k={k})", n["rows"], "rows",
+                LOCAL_MAX_ROWS, row_bytes(ids.schema["_hid"].dataType)):
         return _local_pairs(ids, k, cfg.max_bucket_size, max_levels)
 
     # identical-value pairs (distance 0): expand directly, output-bound

@@ -34,10 +34,10 @@ rows, observed while the input is checkpointed (onetask.observed):
   * LOCAL (rows <= LOCAL_MAX_ROWS and the working set fits one task,
     onetask.one_task): one coalesce(1).mapInPandas task sorts the
     rows by (key, id), scans runs of equal keys and applies the cap
-    rule in numpy (_pair_kernel). A pair several buckets share (an id
+    rule in numpy (bucket_pairs). A pair several buckets share (an id
     pair in several bands) leaves the task once. pairs_and_overflow
     returns its oversized rows from a second one-task pass over the
-    same checkpoint (_overflow_kernel). No shuffle.
+    same checkpoint (oversized). No shuffle.
   * DISTRIBUTED (above the cap): one window exchange sizes the buckets;
     small buckets collect_set + explode their sorted member arrays,
     and star pairs are emitted row-wise from the same window's min id,
@@ -55,6 +55,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DedupConfig, DEFAULT
 from . import onetask
@@ -68,7 +69,7 @@ from .onetask import CHUNK, id_bytes, observed, one_task, range_pairs, runs
 # (tracemalloc), within the 248 B per row the gate below assumes.
 LOCAL_MAX_ROWS = 2_000_000
 # Kernel bytes per input row on top of 3 slots per column (see
-# _pair_kernel for the breakdown).
+# bucket_pairs for the breakdown).
 _ROW_BYTES = 200
 # Bytes per pair while a stripe of pairs is deduplicated: the pair
 # codes, their concatenation, np.unique's sorted copy and result.
@@ -85,10 +86,11 @@ def _key_codes(cols: list[np.ndarray]) -> np.ndarray:
     return code
 
 
-def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
-                 budget: int):
-    """mapInPandas function: every (id, key...) row of the input in one
-    task -> each distinct pair (a, b), a < b, of the cap rule.
+def bucket_pairs(ids: np.ndarray, keys: list[np.ndarray], cap: int, star: bool,
+                 budget: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Every (id, key...) row -> each distinct pair (a, b), a < b, of the
+    cap rule, as (a, b) arrays of id values in chunks of at most CHUNK
+    pairs.
 
     Ids are factorized in sort order (code order is id order) and the
     rows sorted by (key code, id code), so each bucket is a run of
@@ -98,14 +100,64 @@ def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
     from those run sizes before any pair is built; pairs of an id with
     itself (an id repeated in a run) are dropped, and the rest are
     deduplicated in stripes of left ids of about `budget` pairs each
-    (one stripe unless the pairs outgrow the budget), then leave in
-    frames of CHUNK pairs.
+    (one stripe unless the pairs outgrow the budget).
 
     Memory per input row, about 3 slots per column (onetask.id_bytes:
     the Arrow batch, the concatenated frame, factorize's uniques) plus
     _ROW_BYTES = 200 B: ~24 int64 arrays for codes, sort order, run
     bookkeeping and pair sources. On top: one stripe, _PAIR_BYTES per
-    pair, and the frame being yielded."""
+    pair, and the chunk being handed out."""
+    if not len(ids):
+        return
+    icode, uid = pd.factorize(ids, sort=True)
+    kc = _key_codes(keys)
+    nid = len(uid)
+    order = np.argsort(kc * nid + icode)
+    sid = icode[order]
+    _, size, end = runs(kc[order])
+    del icode, kc, order
+    pos = np.arange(len(sid))
+    # pair sources: row r yields (left[r], sid[lo[r] + t]), t < cnt[r]
+    small = size <= cap
+    left, lo, cnt = sid[small], pos[small] + 1, (end - pos - 1)[small]
+    if star:
+        hub = sid[end - size]
+        spoke = ~small & (sid != hub)
+        left = np.concatenate([left, hub[spoke]])
+        lo = np.concatenate([lo, pos[spoke]])
+        cnt = np.concatenate([cnt, np.ones(int(spoke.sum()), np.int64)])
+    # pairs per left id, cumulated: stripe cuts keep each stripe
+    # within budget + the pairs of its first id
+    cum = np.bincount(left, weights=cnt, minlength=nid).cumsum()
+    if cum[-1] == 0:
+        return
+    cuts = np.searchsorted(cum, np.arange(budget, cum[-1], budget), side="right")
+    bounds = np.unique(np.concatenate(([0], cuts, [nid])))
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        m = (left >= s) & (left < e)
+        codes = []
+        for a, rp in range_pairs(left[m], lo[m], cnt[m]):
+            b = sid[rp]
+            keep = a != b
+            codes.append(a[keep] * nid + b[keep])
+        if not codes:
+            continue
+        codes = np.unique(np.concatenate(codes))
+        for c in range(0, len(codes), CHUNK):
+            a, b = np.divmod(codes[c:c + CHUNK], nid)
+            yield uid[a], uid[b]
+
+
+def oversized(keys: list[np.ndarray], cap: int) -> np.ndarray:
+    """Per (key...) row: whether its bucket holds more than `cap` rows."""
+    kc = _key_codes(keys)
+    return np.bincount(kc)[kc] > cap
+
+
+def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
+                 budget: int):
+    """mapInPandas function: every (id, key...) row of the input in one
+    task -> bucket_pairs, in frames of CHUNK pairs."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [pdf for pdf in it if len(pdf)]
@@ -113,44 +165,10 @@ def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
             return
         pdf = pd.concat(parts, ignore_index=True)
         del parts
-        icode, uid = pd.factorize(pdf[id_col].to_numpy(), sort=True)
-        kc = _key_codes([pdf[k].to_numpy() for k in key_cols])
+        ids, keys = pdf[id_col].to_numpy(), [pdf[k].to_numpy() for k in key_cols]
         del pdf
-        nid = len(uid)
-        order = np.argsort(kc * nid + icode)
-        sid = icode[order]
-        _, size, end = runs(kc[order])
-        del icode, kc, order
-        pos = np.arange(len(sid))
-        # pair sources: row r yields (left[r], sid[lo[r] + t]), t < cnt[r]
-        small = size <= cap
-        left, lo, cnt = sid[small], pos[small] + 1, (end - pos - 1)[small]
-        if star:
-            hub = sid[end - size]
-            spoke = ~small & (sid != hub)
-            left = np.concatenate([left, hub[spoke]])
-            lo = np.concatenate([lo, pos[spoke]])
-            cnt = np.concatenate([cnt, np.ones(int(spoke.sum()), np.int64)])
-        # pairs per left id, cumulated: stripe cuts keep each stripe
-        # within budget + the pairs of its first id
-        cum = np.bincount(left, weights=cnt, minlength=nid).cumsum()
-        if cum[-1] == 0:
-            return
-        cuts = np.searchsorted(cum, np.arange(budget, cum[-1], budget), side="right")
-        bounds = np.unique(np.concatenate(([0], cuts, [nid])))
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            m = (left >= s) & (left < e)
-            codes = []
-            for a, rp in range_pairs(left[m], lo[m], cnt[m]):
-                b = sid[rp]
-                keep = a != b
-                codes.append(a[keep] * nid + b[keep])
-            if not codes:
-                continue
-            codes = np.unique(np.concatenate(codes))
-            for c in range(0, len(codes), CHUNK):
-                a, b = np.divmod(codes[c:c + CHUNK], nid)
-                yield pd.DataFrame({"a": uid[a], "b": uid[b]})
+        for a, b in bucket_pairs(ids, keys, cap, star, budget):
+            yield pd.DataFrame({"a": a, "b": b})
 
     return kernel
 
@@ -165,8 +183,7 @@ def _overflow_kernel(key_cols: list[str], cap: int):
         if not batches:
             return
         tbl = pa.Table.from_batches(batches)
-        kc = _key_codes([tbl.column(k).to_numpy() for k in key_cols])
-        big = np.bincount(kc)[kc] > cap
+        big = oversized([tbl.column(k).to_numpy() for k in key_cols], cap)
         yield from tbl.filter(pa.array(big)).to_batches(max_chunksize=CHUNK)
 
     return kernel
@@ -176,12 +193,17 @@ def _observed(buckets: DataFrame, key_cols: list[str], id_col: str,
               what: str) -> tuple[DataFrame, bool]:
     """The non-null-id rows, checkpointed, and whether their count picks
     the local path."""
-    rows_df, rows = observed(buckets.filter(F.col(id_col).isNotNull()))
-    row_bytes = 3 * sum(id_bytes(f.dataType) for f in rows_df.schema.fields) + _ROW_BYTES
-    # the rows may take half the task budget; the other half holds the
-    # stripe of pairs being deduplicated (_pair_kernel)
-    return rows_df, one_task(f"{what}({', '.join(key_cols)})", rows, "rows",
-                             LOCAL_MAX_ROWS, 2 * row_bytes)
+    rows_df, n = observed(buckets.filter(F.col(id_col).isNotNull()))
+    return rows_df, one_task(f"{what}({', '.join(key_cols)})", n["rows"], "rows",
+                             LOCAL_MAX_ROWS,
+                             row_bytes([f.dataType for f in rows_df.schema.fields]))
+
+
+def row_bytes(types: list[T.DataType]) -> int:
+    """Task bytes per input row of bucket_pairs over columns of `types`.
+    The rows may take half the task budget; the other half holds the
+    stripe of pairs being deduplicated."""
+    return 2 * (3 * sum(id_bytes(t) for t in types) + _ROW_BYTES)
 
 
 def _local_pairs(rows_df: DataFrame, key_cols: list[str], id_col: str,

@@ -47,6 +47,14 @@ def band_buckets(
     other hashed key. Dropping the 4-byte band column cut the exchange
     ~20% with identical verified output.
     """
+    return sig.selectExpr(
+        id_col, f"explode({band_keys_sql(minhash_col, cfg)}) AS bucket"
+    )
+
+
+def band_keys_sql(minhash_col: str = "minhash", cfg: DedupConfig = DEFAULT) -> str:
+    """SQL text of the array of a row's `bands` bucket keys, band_buckets'
+    `bucket` values in band order."""
     r = cfg.rows_per_band
     # one SQL string instead of bands x (r + 2) Column objects: the
     # Column-API formulation cost ~200 py4j round-trips (~0.6 s of
@@ -58,6 +66,4 @@ def band_buckets(
         )
         for j in range(cfg.bands)
     )
-    return sig.selectExpr(
-        id_col, f"explode(array({bands})) AS bucket"
-    )
+    return f"array({bands})"

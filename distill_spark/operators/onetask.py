@@ -1,15 +1,18 @@
 """Path decision and numpy helpers shared by the single-task fast paths.
 
-Connected components (`components._cc_local_labels`), the Hamming
-channel (`hamming._local_pairs`) and bucket-pair expansion
-(`lsh._pair_kernel`) each fold a small input into ONE mapInPandas task.
-Each checkpoints its input with the row count observed in the same job
+Connected components (`components.cc_labels`), the Hamming channel
+(`hamming.ball_pairs`) and bucket-pair expansion (`lsh.bucket_pairs`)
+are pure numpy kernels, arrays in and arrays out. Each operator folds a
+small input into ONE mapInPandas task that runs its kernel; it
+checkpoints its input with the row count observed in the same job
 (`observed`) and states its working set as bytes per row, in units of
 `id_bytes` for the id columns it holds; `one_task` takes the one-task
 shape only while the rows stay within the operator's row cap and rows x
-bytes-per-row within TASK_BYTES. The pair kernels sort rows by a bucket
-key, scan runs of equal keys (`runs`) and expand each run's pairs in
-bounded chunks (`range_pairs`).
+bytes-per-row within TASK_BYTES (`fits`). `dedupe()` runs the same
+kernels in sequence in one task for the whole graph when every operator
+would take its one-task path (pipeline._one_task_graph). The pair
+kernels sort rows by a bucket key, scan runs of equal keys (`runs`) and
+expand each run's pairs in bounded chunks (`range_pairs`).
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ import logging
 from typing import Iterator
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,18 +38,24 @@ def id_bytes(dtype: T.DataType) -> int:
     return 8 if isinstance(dtype, T.IntegralType) else 64
 
 
-def observed(df: DataFrame) -> tuple[DataFrame, int]:
-    """(`df` as an eager localCheckpoint, its row count observed in the
-    checkpoint's own job)."""
+def observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict[str, int]]:
+    """(`df` as an eager localCheckpoint, {"rows": its row count, name:
+    value of each aggregate in `aggs`}), all observed in the
+    checkpoint's own job; a null aggregate (no rows) reads 0."""
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-    return df, obs.get["rows"]
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                    *(c.alias(k) for k, c in aggs.items())).localCheckpoint(eager=True)
+    return df, {k: v or 0 for k, v in obs.get.items()}
+
+
+def fits(n: int, max_n: int, item_bytes: int) -> bool:
+    """n <= max_n items of `item_bytes` each fit TASK_BYTES."""
+    return n <= max_n and n * item_bytes <= TASK_BYTES
 
 
 def one_task(what: str, n: int, unit: str, max_n: int, item_bytes: int) -> bool:
-    """True when n <= max_n items of `item_bytes` each fit TASK_BYTES;
-    logged at debug as `what: n unit -> local|distributed path`."""
-    local = n <= max_n and n * item_bytes <= TASK_BYTES
+    """fits(), logged at debug as `what: n unit -> local|distributed path`."""
+    local = fits(n, max_n, item_bytes)
     log.debug("%s: %d %s -> %s path", what, n, unit,
               "local" if local else "distributed")
     return local

@@ -22,10 +22,23 @@ select representative (selector.go:68-238) -> stats. Our plan:
 The plan is written once, as an ordered list of named stages
 (`dedup_stages`), and run two ways: `dedupe()` builds each stage in
 place, and `checkpoint.dedupe_checkpointed()` sends each one through a
-CheckpointStore so a run resumes after its last completed stage. In
-`dedupe()` only the `edges` stage is persisted; every other frame the
-engine materializes is an eager localCheckpoint, which Spark frees by
-itself.
+CheckpointStore so a run resumes after its last completed stage.
+
+In `dedupe()` the graph checkpoints `signatures` eagerly and observes,
+in that checkpoint's own job, the counts every one-task operator path
+is decided on: rows, band rows, fingerprint rows, and shingle and
+caption bytes. When each folded operator would take its own one-task
+path at those counts and their summed working set fits one task, ONE
+coalesce(1).mapInArrow task runs candidates -> verify -> edges ->
+connected components over the signatures with the operators' own numpy
+kernels (`_graph_kernel`) and emits the int64 edges plus the component
+of every edge-touching node; assignments and representatives are joins
+on its output, and nothing is persisted. Otherwise, or when the task
+stops at a gate it can only check as it goes (the edge count against
+the CC caps, the held candidate pairs against the task budget), the
+per-operator stages run from the same signature checkpoint and only the
+`edges` stage is persisted (DedupResult.unpersist). One debug line on
+the `distill_spark` logger names the path taken.
 
 Recall budget: phash + substring channels are recall-1.0 by
 construction AT ANY BUCKET-SIZE DISTRIBUTION — oversized pigeonhole
@@ -51,18 +64,25 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import DedupConfig, DEFAULT
-from .minhash import band_buckets
+from . import components, hamming, lsh, onetask
+from .minhash import band_buckets, band_keys_sql
 from .signatures import with_signatures
-from .lsh import pairs_from_buckets, pairs_and_overflow
-from .hamming import hamming_candidate_pairs
-from .winnow import refine_oversized
-from .verify import verify_jaccard, verify_lcs, conflict_band
-from .components import connected_components
+from .lsh import bucket_pairs, oversized, pairs_from_buckets, pairs_and_overflow
+from .hamming import ball_pairs, hamming_candidate_pairs
+from .winnow import refine_oversized, refine_rows
+from .verify import (conflict_band, jaccard, lcs_keep, verify_jaccard,
+                     verify_lcs)
+from .components import cc_labels, connected_components
 from .select import representatives, cluster_stats
 
 log = logging.getLogger("distill_spark")
@@ -79,12 +99,15 @@ class DedupResult:
     conflicts: DataFrame | None # band pairs (a, b, jaccard)
     stats: DataFrame            # 1-row counts/reduction
     cached: DataFrame | None = None  # the edges stage (int64 ids for
-                                # string-id inputs)
+                                # string-id inputs); on the one-task
+                                # graph, a view of its checkpoint
 
     def unpersist(self) -> None:
-        """Release the one cache dedupe() created, the persisted edges
-        stage; long sessions running many dedupe() calls should call
-        this. Every other frame the engine materializes (signatures,
+        """Release the one cache dedupe() can create, the edges stage
+        persisted on the per-operator path; long sessions running many
+        dedupe() calls should call this. The one-task graph persists
+        nothing, so there it releases nothing. Every other frame the
+        engine materializes (signatures, the one-task graph's output,
         the operators' input checkpoints, Hamming refinement levels, CC
         labels) is an eager localCheckpoint, a block-backed RDD rather
         than a catalog cache: Spark's ContextCleaner frees its blocks
@@ -140,6 +163,7 @@ def dedup_stages(
     phash_col: str | None,
     channels: tuple[str, ...],
     rep_strategy: str,
+    sig_src: DataFrame | None = None,
 ) -> list[Stage]:
     """The dedup stage graph, in run order:
 
@@ -150,7 +174,10 @@ def dedup_stages(
 
     `meta` holds the original ids, `meta_i` the ids the channels run on
     (int64 hashes of string ids) and `idmap` maps one to the other (None
-    for integral ids)."""
+    for integral ids). The signature pass reads `sig_src` (default
+    meta_i: the same rows, possibly under an observation)."""
+    if sig_src is None:
+        sig_src = meta_i
     caption_channels = tuple(c for c in ("minhash", "simhash") if c in channels)
     substring = "substring" in channels
     stages: list[Stage] = []
@@ -163,7 +190,7 @@ def dedup_stages(
         if substring:
             parts += ("winnow",)
         stages.append(Stage("signatures", (), lambda: with_signatures(
-            meta_i, caption_col, id_col, cfg, parts=parts)))
+            sig_src, caption_col, id_col, cfg, parts=parts)))
 
     if caption_channels:
         def jaccard_candidates(sigs: DataFrame) -> DataFrame:
@@ -255,10 +282,309 @@ def dedup_stages(
         )
 
     stages.append(Stage("assignments", ("edges",), assignments))
-    stages.append(Stage("representatives", ("assignments",), lambda a: representatives(
-        a, images=meta, strategy=rep_strategy, id_col=id_col, caption_col=caption_col,
-    )))
+    stages.append(Stage("representatives", ("assignments",), lambda a: _representatives(
+        a, meta, rep_strategy, id_col, caption_col)))
     return stages
+
+
+def _representatives(assignments: DataFrame, meta: DataFrame, strategy: str,
+                     id_col: str, caption_col: str) -> DataFrame:
+    """select.representatives of the assignments; for min_id, whose
+    representative is the component's name (its min original id), the
+    rows whose id IS their component, with no window."""
+    if strategy == "min_id":
+        return assignments.join(meta, id_col).filter(F.col(id_col) == F.col("component"))
+    return representatives(assignments, images=meta, strategy=strategy,
+                           id_col=id_col, caption_col=caption_col)
+
+
+# pairs per verify call of the one-task graph: bounds the flat shingle
+# arrays of a Jaccard call and the window-set memo of an LCS call, as an
+# Arrow batch bounds them on the per-operator path
+_VERIFY_CHUNK = 10_000
+# task bytes per input row of the one-task graph beyond its value
+# bytes: ids, dense codes, row-pair bookkeeping and the pandas/Python
+# objects of one row
+_GRAPH_ROW_BYTES = 512
+
+
+class _OverBudget(Exception):
+    """A gate of the one-task graph failed; the message names it."""
+
+
+def _expand(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(i repeated cnt[i] times, lo[i] + t for every t < cnt[i])."""
+    idx = np.repeat(np.arange(len(cnt)), cnt)
+    first = np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return idx, np.repeat(lo, cnt) + np.arange(len(idx)) - first
+
+
+def _row_pairs(ca: np.ndarray, cb: np.ndarray, row_code: np.ndarray):
+    """For code pairs (ca[q], cb[q]): (q, ra, rb) for every row ra of
+    code ca[q] and rb of code cb[q] — a pair frame joined to a
+    feature frame on both sides, where an id may own several rows."""
+    order = np.argsort(row_code, kind="stable")
+    sc = row_code[order]
+    lo_a = np.searchsorted(sc, ca)
+    lo_b = np.searchsorted(sc, cb)
+    q, pa_ = _expand(lo_a, np.searchsorted(sc, ca, "right") - lo_a)
+    j, pb = _expand(lo_b[q], (np.searchsorted(sc, cb, "right") - lo_b)[q])
+    return q[j], order[pa_[j]], order[pb]
+
+
+def _verified(cand: np.ndarray, n: int, row_code: np.ndarray, test) -> np.ndarray:
+    """The codes a * n + b of `cand` with some row pair (ra, rb) for which
+    test(ra chunk, rb chunk) holds."""
+    q, ra, rb = _row_pairs(*np.divmod(cand, n), row_code)
+    ok = np.zeros(len(q), bool)
+    for s in range(0, len(q), _VERIFY_CHUNK):
+        ok[s:s + _VERIFY_CHUNK] = test(ra[s:s + _VERIFY_CHUNK], rb[s:s + _VERIFY_CHUNK])
+    return cand[np.unique(q[ok])]
+
+
+def _gather(chunks, n: int, budget: int) -> np.ndarray:
+    """Each pair of (a, b) code chunks once, as sorted codes a * n + b;
+    stops past `budget` held pairs."""
+    codes, held = [], 0
+    for a, b in chunks:
+        held += len(a)
+        if held > budget:
+            raise _OverBudget("candidates over budget")
+        codes.append(a.astype(np.int64) * n + b)
+    return np.unique(np.concatenate(codes)) if codes else np.empty(0, np.int64)
+
+
+def _numbers(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(valid mask, values with nulls read as 0) of a numeric column."""
+    col = col.combine_chunks()
+    return (col.is_valid().to_numpy(zero_copy_only=False),
+            pc.fill_null(col, 0).to_numpy(zero_copy_only=False))
+
+
+def _list_rows(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(row of every element, flat elements) of a list column."""
+    col = col.combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy(zero_copy_only=False)
+    return (np.repeat(np.arange(len(col)), lens),
+            col.flatten().to_numpy(zero_copy_only=False))
+
+
+def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
+                  pair_budget: int, max_edges: int, edge_item_bytes: int,
+                  task_bytes: int):
+    """mapInArrow function of the one-task graph. Input: one row per
+    signature row (`_sig` true: `_id`, shingles, bands, simhash, fps)
+    and one per input row (`_id`, `_orig`, `_cap`, `_ph`), only the
+    columns the channels read. Output (`schema`): the edges (a, b),
+    a < b, in `_id` space; (node, comp) for every edge-touching input
+    row, comp the min original id of its component; or, when a gate
+    fails, one row whose `bail` names it.
+
+    Each channel runs the operator's own kernel on dense id codes (code
+    order is id order): bucket_pairs for bands and fingerprints,
+    ball_pairs for simhash and phash, refine_rows for oversized
+    fingerprints, jaccard and lcs_keep for verification, cc_labels for
+    the components. Caps are read where the task is planned and passed
+    in, so a caller's setting holds in the Python worker too."""
+    k_sim, k_ph = cfg.simhash_hamming_k, cfg.phash_hamming_k
+    cap, fp_cap = cfg.max_bucket_size, cfg.max_fp_bucket_size
+
+    def edges_and_labels(tbl: pa.Table):
+        is_sig = tbl.column("_sig").is_valid()
+        sig = tbl.filter(is_sig)
+        meta = tbl.filter(pc.invert(is_sig))
+        sig_id = sig.column("_id").to_numpy()
+        meta_id = meta.column("_id").to_numpy()
+        uid = np.unique(np.concatenate([sig_id, meta_id]))
+        n = len(uid)
+        sig_code = np.searchsorted(uid, sig_id)
+        meta_code = np.searchsorted(uid, meta_id)
+        caps = meta.column("_cap").to_pylist() if "_cap" in meta.column_names else None
+        edges = np.empty(0, np.int64)
+
+        def add(new: np.ndarray) -> None:
+            nonlocal edges
+            edges = np.union1d(edges, new)
+            if len(edges) > max_edges or len(edges) * edge_item_bytes > task_bytes:
+                raise _OverBudget("edges over cap")
+
+        def hamming_pairs(col: pa.ChunkedArray, codes: np.ndarray, k: int) -> np.ndarray:
+            ok, vals = _numbers(col)
+            # max_levels 3: hamming_candidate_pairs' default, as its callers use
+            return _gather(ball_pairs(codes[ok], vals[ok].astype(np.int64), k, cap, 3),
+                           n, pair_budget)
+
+        if "shingles" in sig.column_names:
+            cand = np.empty(0, np.int64)
+            if "bands" in sig.column_names:
+                row, bucket = _list_rows(sig.column("bands"))
+                cand = _gather(bucket_pairs(sig_code[row], [bucket], cap, True,
+                                            pair_budget), n, pair_budget)
+            if "simhash" in sig.column_names:
+                cand = np.union1d(cand, hamming_pairs(sig.column("simhash"), sig_code, k_sim))
+            row, vals = _list_rows(sig.column("shingles"))
+            per_row = np.split(vals, np.searchsorted(row, np.arange(1, sig.num_rows)))
+            add(_verified(cand, n, sig_code, lambda ra, rb: jaccard(
+                [per_row[r] for r in ra], [per_row[r] for r in rb]) >= cfg.jaccard_threshold))
+        if "_ph" in meta.column_names:
+            add(hamming_pairs(meta.column("_ph"), meta_code, k_ph))
+        if "fps" in sig.column_names:
+            row, fp = _list_rows(sig.column("fps"))
+            fp_id = sig_code[row]
+            small = _gather(bucket_pairs(fp_id, [fp], fp_cap, False, pair_budget),
+                            n, pair_budget)
+            big = oversized([fp], fp_cap)
+            # refine_oversized: each caption row of an oversized member
+            # id with the id's distinct oversized fingerprints
+            order = np.argsort(fp_id[big], kind="stable")
+            mid, mfp = fp_id[big][order], fp[big][order]
+            ids, first = np.unique(mid, return_index=True)
+            last = np.append(first[1:], len(mid))
+            rows = np.flatnonzero(np.isin(meta_code, ids))
+            g = np.searchsorted(ids, meta_code[rows])
+            rid, rfp, rsub = refine_rows(
+                meta_code[rows], [np.unique(mfp[first[i]:last[i]]) for i in g],
+                [caps[r] for r in rows], cfg)
+            add(_gather(bucket_pairs(
+                np.asarray(rid, np.int64),
+                [np.asarray(rfp, np.int64), np.asarray(rsub, object)],
+                fp_cap, True, pair_budget), n, pair_budget))
+            add(_verified(small, n, meta_code, lambda ra, rb: lcs_keep(
+                [caps[r] for r in ra], [caps[r] for r in rb],
+                cfg.lcs_min_len, cfg.lowercase)))
+
+        ea, eb = np.divmod(edges, n)
+        nodes, labels = cc_labels(ea, eb)
+        if not string_ids:
+            return uid[ea], uid[eb], uid[nodes], uid[labels]
+        # name each component by the min original id of its rows (ranks
+        # of the sorted distinct ids); one label row per input row of an
+        # edge-touching node that has an original id
+        touch = np.flatnonzero(np.isin(meta_code, nodes))
+        rank, orig = pd.factorize(
+            meta.column("_orig").take(pa.array(touch)).to_numpy(zero_copy_only=False),
+            sort=True)
+        comp = np.searchsorted(nodes, labels[np.searchsorted(nodes, meta_code[touch])])
+        keep = rank >= 0
+        best = np.full(len(nodes), len(orig))
+        np.minimum.at(best, comp[keep], rank[keep])
+        return uid[ea], uid[eb], orig[rank[keep]], orig[best[comp[keep]]]
+
+    def batch(cols: dict) -> pa.RecordBatch:
+        size = len(next(iter(cols.values())))
+        return pa.RecordBatch.from_arrays(
+            [pa.array(cols[f.name], f.type) if f.name in cols else pa.nulls(size, f.type)
+             for f in schema], schema=schema)
+
+    def kernel(it):
+        batches = [b for b in it if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches).combine_chunks()
+        del batches
+        try:
+            a, b, node, comp = edges_and_labels(tbl)
+        except _OverBudget as e:
+            yield batch({"bail": [str(e)]})
+            return
+        for s in range(0, len(a), onetask.CHUNK):
+            yield batch({"a": a[s:s + onetask.CHUNK], "b": b[s:s + onetask.CHUNK]})
+        for s in range(0, len(node), onetask.CHUNK):
+            yield batch({"node": node[s:s + onetask.CHUNK],
+                         "comp": comp[s:s + onetask.CHUNK]})
+
+    return kernel
+
+
+def _one_task_path(counts: dict, cfg: DedupConfig, id_type: T.DataType) -> str | None:
+    """None when every operator the one-task graph folds would take its
+    own one-task path at the signature checkpoint's counts and their
+    summed working set fits one task; else the first gate that fails."""
+    lsh_bytes = lsh.row_bytes([T.LongType(), T.LongType()])  # (id, key) rows
+    ham_bytes = hamming.row_bytes(id_type)
+    band_rows = counts["minhash_rows"] * cfg.bands
+    rows = counts["rows"]
+    if not onetask.fits(band_rows, lsh.LOCAL_MAX_ROWS, lsh_bytes):
+        return "band rows over cap"
+    if not onetask.fits(counts["fp_rows"], lsh.LOCAL_MAX_ROWS, lsh_bytes):
+        return "fingerprint rows over cap"
+    if not onetask.fits(rows, hamming.LOCAL_MAX_ROWS, ham_bytes):
+        return "rows over cap"
+    # the kernels' working sets, summed (two Hamming channels), plus the
+    # input held throughout: 8 B values twice (Arrow and numpy) and
+    # captions three times (Arrow, Python str, the lowered copy)
+    need = ((band_rows + counts["fp_rows"]) * lsh_bytes + 2 * rows * ham_bytes
+            + 16 * (band_rows + counts["fp_rows"] + counts["shingles"])
+            + 3 * counts["caption_bytes"] + rows * _GRAPH_ROW_BYTES)
+    if need > onetask.TASK_BYTES:
+        return "working set over budget"
+    return None
+
+
+def _one_task_graph(
+    sigs: DataFrame, counts: dict, meta: DataFrame, meta_i: DataFrame,
+    idmap: DataFrame | None, cfg: DedupConfig, id_col: str, caption_col: str,
+    phash_col: str | None, channels: tuple[str, ...], rep_strategy: str,
+    with_conflicts: bool,
+) -> dict[str, DataFrame] | None:
+    """The edges, assignments and representatives stages from one
+    coalesce(1).mapInArrow task over the signature checkpoint `sigs`
+    and the input rows (_graph_kernel), or None — logged either way —
+    when a gate sends the graph to its per-operator stages. Conflicts
+    band the Jaccard candidates, which only those stages keep."""
+    id_type = meta_i.schema[id_col].dataType
+    why = ("conflicts requested" if with_conflicts
+           else _one_task_path(counts, cfg, id_type))
+    if why is None:
+        cols = [F.col(id_col).alias("_id"), F.lit(True).alias("_sig")]
+        if "minhash" in channels or "simhash" in channels:
+            cols.append("shingles")
+        if "minhash" in channels:
+            cols.append(F.expr(
+                f"IF(minhash IS NULL, NULL, {band_keys_sql('minhash', cfg)})").alias("bands"))
+        if "simhash" in channels:
+            cols.append("simhash")
+        if "substring" in channels:
+            cols.append("fps")
+        rows_i = ([F.xxhash64(id_col).alias("_id"), F.col(id_col).alias("_orig")]
+                  if idmap is not None else [F.col(id_col).alias("_id")])
+        if "substring" in channels:
+            rows_i.append(F.col(caption_col).alias("_cap"))
+        if "phash" in channels and phash_col is not None:
+            rows_i.append(F.col(phash_col).alias("_ph"))
+        src = sigs.select(*cols).unionByName(meta.select(*rows_i),
+                                             allowMissingColumns=True)
+        label_type = meta.schema[id_col].dataType
+        schema = T.StructType([
+            T.StructField("a", id_type), T.StructField("b", id_type),
+            T.StructField("node", label_type), T.StructField("comp", label_type),
+            T.StructField("bail", T.StringType()),
+        ])
+        kernel = _graph_kernel(
+            cfg, idmap is not None, to_arrow_schema(schema),
+            onetask.TASK_BYTES // (2 * lsh._PAIR_BYTES), components.LOCAL_MAX_EDGES,
+            components.edge_bytes(T.LongType()), onetask.TASK_BYTES)
+        obs = Observation()
+        out = (src.filter(F.col("_id").isNotNull()).coalesce(1)
+               .mapInArrow(kernel, schema)
+               .observe(obs, F.max("bail").alias("bail"))
+               .localCheckpoint(eager=True))
+        why = obs.get["bail"]
+    log.debug("dedup graph: %d rows -> %s", counts["rows"],
+              "one-task path" if why is None else f"per-operator path ({why})")
+    if why is not None:
+        return None
+    edges = out.filter(F.col("a").isNotNull()).select("a", "b")
+    labels = out.filter(F.col("node").isNotNull()).select(
+        F.col("node").alias(id_col), F.col("comp").alias("component"))
+    nodes = meta.select(id_col)
+    if idmap is None:
+        nodes = nodes.distinct()  # connected_components' node set
+    assignments = nodes.join(F.broadcast(labels), id_col, "left").select(
+        id_col, F.coalesce("component", F.col(id_col)).alias("component"))
+    return {"edges": edges, "assignments": assignments,
+            "representatives": _representatives(assignments, meta, rep_strategy,
+                                                id_col, caption_col)}
 
 
 def run_dedup_graph(
@@ -271,10 +597,16 @@ def run_dedup_graph(
     channels: tuple[str, ...] = CHANNELS,
     rep_strategy: str | None = None,
     with_conflicts: bool = False,
+    fuse: bool = False,
 ) -> DedupResult:
     """Run `dedup_stages` in order and assemble the DedupResult. Each
     stage's frame is `materialize(stage, compute)`, where compute()
     builds the stage from its dependencies' frames.
+
+    With `fuse`, the graph itself checkpoints the signatures (observing
+    the counts the one-task paths are decided on) and tries the one-task
+    graph (_one_task_graph); when it runs, its edges, assignments and
+    representatives replace those stages.
 
     Contract: assignments and representatives do not depend on the id
     mapping — components are labeled by their min ORIGINAL id. `edges`
@@ -299,14 +631,27 @@ def run_dedup_graph(
     else:
         meta_i, idmap = meta, None
 
+    rep_strategy = rep_strategy or cfg.rep_strategy
+    cap_obs = Observation()
+    sig_src = (meta_i.observe(cap_obs, F.sum(F.octet_length(caption_col)).alias("bytes"))
+               if fuse else None)
     out: dict[str, DataFrame] = {}
     for stage in dedup_stages(
         meta, meta_i, idmap, cfg, id_col, caption_col, phash_col, channels,
-        rep_strategy or cfg.rep_strategy,
+        rep_strategy, sig_src,
     ):
         out[stage.name] = materialize(
             stage, lambda s=stage: s.fn(*(out[d] for d in s.deps))
         )
+        if stage.name == "signatures" and fuse:
+            out["signatures"], counts = _signature_checkpoint(out["signatures"], id_col)
+            counts["caption_bytes"] = cap_obs.get["bytes"] or 0
+            fused = _one_task_graph(
+                out["signatures"], counts, meta, meta_i, idmap, cfg, id_col,
+                caption_col, phash_col, channels, rep_strategy, with_conflicts)
+            if fused is not None:
+                out.update(fused)
+                break
 
     edges_i, assignments = out["edges"], out["assignments"]
     conflicts = None
@@ -335,6 +680,38 @@ def run_dedup_graph(
     )
 
 
+def _signature_checkpoint(sigs: DataFrame, id_col: str) -> tuple[DataFrame, dict]:
+    """The signature frame as an eager localCheckpoint, with the counts
+    the one-task paths are decided on observed in the same job: rows,
+    rows with a minhash and fingerprints of the non-null-id rows, and
+    shingles.
+
+    The signature frame feeds many consumers (banding, the simhash
+    pigeonhole, jaccard verify, winnowing, the one-task graph).
+    localCheckpoint, not persist+count, for two reasons found in the
+    round-6 stage timelines: (a) a lazy persist's ~5 independent AQE
+    consumer subtrees race to build the cache and each re-runs the full
+    Arrow signature scan; (b) far worse, AQE NEVER reuses an exchange
+    whose lineage contains a Python map node — mapInPandas does not
+    canonicalize, so two branches consuming the same bucket exchange
+    each re-executed it EVEN THROUGH a materialized cache. Truncating
+    the lineage to an RDD scan restores exchange reuse for every
+    downstream shuffle in the pipeline."""
+    keyed = F.col(id_col).isNotNull()
+
+    def total(col: str, value) -> Column:
+        if col not in sigs.columns:
+            return F.lit(0)
+        return F.sum(F.when(keyed & F.col(col).isNotNull(), value).otherwise(0))
+
+    return onetask.observed(
+        sigs,
+        minhash_rows=total("minhash", 1),
+        fp_rows=total("fps", F.size("fps")),
+        shingles=total("shingles", F.size("shingles")),
+    )
+
+
 def dedupe(
     images: DataFrame,
     cfg: DedupConfig = DEFAULT,
@@ -345,28 +722,15 @@ def dedupe(
     rep_strategy: str | None = None,
     with_conflicts: bool = False,
 ) -> DedupResult:
-    """The dedup stage graph built in place: `signatures` is an eager
-    localCheckpoint, `edges` is persisted (the one cache, released by
-    DedupResult.unpersist), every other stage stays lazy. See
+    """The dedup stage graph built in place, on the one-task graph when
+    the input fits one task (module docstring); on the per-operator
+    path `edges` is persisted (the one cache, released by
+    DedupResult.unpersist) and every other stage stays lazy. See
     run_dedup_graph for the output contract."""
 
     def in_place(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
         df = compute()
-        if stage.name == "signatures":
-            # the signature frame feeds many consumers (banding, the
-            # recursive simhash pigeonhole, jaccard verify, winnowing).
-            # localCheckpoint, not persist+count, for two reasons found
-            # in the round-6 stage timelines: (a) a lazy persist's ~5
-            # independent AQE consumer subtrees race to build the cache
-            # and each re-runs the full Arrow signature scan; (b) far
-            # worse, AQE NEVER reuses an exchange whose lineage contains
-            # a Python map node — mapInPandas does not canonicalize, so
-            # two branches consuming the same bucket exchange each
-            # re-executed it EVEN THROUGH a materialized cache.
-            # Truncating the lineage to an RDD scan restores exchange
-            # reuse for every downstream shuffle in the pipeline.
-            df = df.localCheckpoint(eager=True)
-        elif stage.name == "edges":
+        if stage.name == "edges":
             # edges feed CC (which materializes them) AND are part of the
             # result — persist so user actions on result.edges don't
             # re-run the whole candidate+verify DAG
@@ -375,5 +739,5 @@ def dedupe(
 
     return run_dedup_graph(
         images, cfg, in_place, id_col, caption_col, phash_col,
-        channels, rep_strategy, with_conflicts,
+        channels, rep_strategy, with_conflicts, fuse=True,
     )

@@ -14,7 +14,7 @@ and folded into the one signature pass in signatures.py).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -77,6 +77,61 @@ def with_fingerprints(
     return df.mapInPandas(batch, schema=schema)
 
 
+def refine_rows(ids: Sequence, fps: Sequence, captions: Sequence,
+                cfg: DedupConfig = DEFAULT) -> tuple[list, list, list]:
+    """Per row (id, oversized fingerprints, caption): every distinct
+    (fingerprint, L-char window) of the caption whose window fully
+    contains an occurrence of a k-gram hashing to the fingerprint, as
+    (ids, fingerprints, windows) lists — refine_oversized's rows."""
+    K, L, lower = cfg.winnow_kgram, cfg.lcs_min_len, cfg.lowercase
+    B = np.uint64(1099511628211)
+    pwK = B ** np.arange(K - 1, -1, -1, dtype=np.uint64)
+    oids: list = []
+    ofps: list = []
+    osub: list = []
+    for rid, row_fps, cap in zip(ids, fps, captions):
+        s = cap or ""
+        if lower:
+            s = s.lower()
+        b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
+        if len(b) < K:
+            continue
+        # one k-gram hash pass per caption, shared by all its fps
+        gh = (
+            np.lib.stride_tricks.sliding_window_view(b, K).astype(np.uint64)
+            * pwK
+        ).sum(axis=1)
+        noncont = (b & 0xC0) != 0x80
+        charidx = np.cumsum(noncont) - 1  # char index of each byte
+        nchars = int(charidx[-1]) + 1
+        if nchars < L:
+            continue
+        # all occurrence positions of ANY of this doc's oversized
+        # fingerprints in one vectorized membership test
+        fps_u = np.array(
+            [int(f) & 0xFFFFFFFFFFFFFFFF for f in row_fps], dtype=np.uint64
+        )
+        pos_all = np.flatnonzero(np.isin(gh, fps_u))
+        if len(pos_all) == 0:
+            continue
+        seen: set = set()
+        for p in pos_all:
+            fp = int(gh[p].astype(np.int64))
+            c0 = int(charidx[p])
+            c1 = int(charidx[p + K - 1])
+            lo = max(0, c1 - L + 1)
+            hi = min(c0, nchars - L)
+            for st in range(lo, hi + 1):
+                w = s[st : st + L]
+                if (fp, w) in seen:
+                    continue
+                seen.add((fp, w))
+                oids.append(rid)
+                ofps.append(fp)
+                osub.append(w)
+    return oids, ofps, osub
+
+
 def refine_oversized(
     members: DataFrame,
     captions: DataFrame,
@@ -129,7 +184,6 @@ def refine_oversized(
     single-task Python (measured 12.9 s at sf0.1 — the hot 10%-of-
     corpus bucket refined in one task).
     """
-    K, L, lower = cfg.winnow_kgram, cfg.lcs_min_len, cfg.lowercase
     from pyspark.sql import types as T
 
     grouped = members.groupBy(id_col).agg(
@@ -147,52 +201,9 @@ def refine_oversized(
     )
 
     def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B = np.uint64(1099511628211)
-        pwK = B ** np.arange(K - 1, -1, -1, dtype=np.uint64)
         for pdf in it:
-            oids: list = []
-            ofps: list = []
-            osub: list = []
-            for rid, fps, cap in zip(pdf[id_col], pdf["_fps"], pdf[caption_col]):
-                s = cap or ""
-                if lower:
-                    s = s.lower()
-                b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-                if len(b) < K:
-                    continue
-                # one k-gram hash pass per caption, shared by all its fps
-                gh = (
-                    np.lib.stride_tricks.sliding_window_view(b, K).astype(np.uint64)
-                    * pwK
-                ).sum(axis=1)
-                noncont = (b & 0xC0) != 0x80
-                charidx = np.cumsum(noncont) - 1  # char index of each byte
-                nchars = int(charidx[-1]) + 1
-                if nchars < L:
-                    continue
-                # all occurrence positions of ANY of this doc's oversized
-                # fingerprints in one vectorized membership test
-                fps_u = np.array(
-                    [int(f) & 0xFFFFFFFFFFFFFFFF for f in fps], dtype=np.uint64
-                )
-                pos_all = np.flatnonzero(np.isin(gh, fps_u))
-                if len(pos_all) == 0:
-                    continue
-                seen: set = set()
-                for p in pos_all:
-                    fp = int(gh[p].astype(np.int64))
-                    c0 = int(charidx[p])
-                    c1 = int(charidx[p + K - 1])
-                    lo = max(0, c1 - L + 1)
-                    hi = min(c0, nchars - L)
-                    for st in range(lo, hi + 1):
-                        w = s[st : st + L]
-                        if (fp, w) in seen:
-                            continue
-                        seen.add((fp, w))
-                        oids.append(rid)
-                        ofps.append(fp)
-                        osub.append(w)
+            oids, ofps, osub = refine_rows(pdf[id_col], pdf["_fps"],
+                                           pdf[caption_col], cfg)
             yield pd.DataFrame(
                 {
                     id_col: pd.array(oids, dtype=id_pd_dtype),

@@ -14,7 +14,7 @@ import pytest
 
 from distill_spark.config import DedupConfig
 from distill_spark.datagen import generate_images, generate_images_pdf
-from distill_spark.operators import dedupe, lsh
+from distill_spark.operators import dedupe, hamming, lsh
 from distill_spark.oracle import oracle_components, cluster_pairs
 
 CFG = DedupConfig()
@@ -46,19 +46,29 @@ def oracle(small):
     return oracle_components(pdf, CFG)
 
 
-@pytest.mark.parametrize("lsh_path", ["local", "distributed"])
+@pytest.mark.parametrize("lsh_path", ["graph", "local", "distributed"])
 def test_recall_and_precision_vs_oracle(small, oracle, lsh_path, monkeypatch, caplog):
-    """dedupe() against the oracle with the MinHash-band and winnow
-    bucket pairs expanded by the one-task kernel, then by the window
-    path (a row cap of 0 sends every non-empty input there)."""
-    if lsh_path == "distributed":
+    """dedupe() against the oracle on the one-task graph, then on the
+    per-operator stages with the MinHash-band and winnow bucket pairs
+    expanded by the one-task kernel, then by the window path. A Hamming
+    row cap of 0 forces the per-operator stages; an lsh row cap of 0
+    also sends every non-empty bucket input to the window path."""
+    if lsh_path == "local":
+        monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)
+    elif lsh_path == "distributed":
         monkeypatch.setattr(lsh, "LOCAL_MAX_ROWS", 0)
     caplog.set_level(logging.DEBUG, logger="distill_spark")
     df, _ = small
     got = {r["image_id"]: r["component"] for r in dedupe(df, CFG).assignments.collect()}
-    for what in ("pairs_from_buckets(bucket)", "pairs_and_overflow(fingerprint)"):
-        assert re.search(rf"{re.escape(what)}: \d+ rows -> {lsh_path} path", caplog.text)
-    assert re.search(r"connected_components: \d+ edges -> local path", caplog.text)
+    if lsh_path == "graph":
+        assert f"dedup graph: {N} rows -> one-task path" in caplog.text
+        assert "pairs_from_buckets" not in caplog.text
+    else:
+        assert f"dedup graph: {N} rows -> per-operator path" in caplog.text
+        for what in ("pairs_from_buckets(bucket)", "pairs_and_overflow(fingerprint)"):
+            assert re.search(rf"{re.escape(what)}: \d+ rows -> {lsh_path} path",
+                             caplog.text)
+        assert re.search(r"connected_components: \d+ edges -> local path", caplog.text)
     assign_true, _ = oracle
     assert set(got) == set(assign_true), "every image must be assigned"
 
