@@ -36,4 +36,27 @@ Layout:
   streaming/            foreachBatch-style incremental ingest
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _keep_zip_directories() -> None:
+    """Inside a PySpark worker, stop importlib.invalidate_caches() from
+    re-reading every zip archive on sys.path. The worker calls it before
+    every task, and on interpreters whose zipimporter.invalidate_caches
+    re-reads its archive's directory at once (it first appeared in 3.10)
+    each of the worker's ~16 importers over pyspark.zip and py4j re-reads
+    its whole archive: ~0.28 s per task. The no-op restores the behaviour
+    from before 3.10; an archive added to sys.path later still gets a
+    fresh importer, which reads its directory when it is created."""
+    if "pyspark.worker" not in sys.modules:
+        return
+    import zipimport
+
+    meth = getattr(zipimport.zipimporter, "invalidate_caches", None)
+    if meth is not None and "_read_directory" in meth.__code__.co_names:
+        zipimport.zipimporter.invalidate_caches = lambda self: None
+
+
+_keep_zip_directories()

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .operators.signatures import with_signatures
+from .operators import onetask
 from .operators.probe import greedy_accept, probe_edges
 from .operators.verify import jaccard_col
 from .tableio import auto_vacuum, open_table
@@ -247,12 +248,15 @@ class MemoryStore:
             & (F.col("expires_at").isNull() | (F.col("expires_at") > now))
         )
 
-        sig_new = with_signatures(entries.select("id", "text"), "text", "id",
-                                  self.cfg, parts=("shingles", "minhash")).persist()
+        sig_new, counts = onetask.observed(with_signatures(
+            entries.select("id", "text"), "text", "id", self.cfg,
+            parts=("shingles", "minhash")))
         # materialize the edges NOW (store path not yet mutated): one
-        # probe at the conflict floor serves dups and conflicts
+        # probe at the conflict floor serves dups and conflicts; the
+        # table's row count bounds the live rows
         edges = probe_edges(sig_new, live, self.cfg, self.conflict_jaccard,
-                            "store_batch dup/conflict edges")
+                            "store_batch dup/conflict edges", counts["rows"],
+                            self._table.row_count())
         dup_edges = [e for e in edges if e.jaccard >= self.dup_jaccard]
         conflict_rows = [e for e in edges if e.old and e.jaccard < self.dup_jaccard]
         rejected = greedy_accept(dup_edges)
@@ -347,7 +351,6 @@ class MemoryStore:
             duplicates=dup_local,
             conflicts=conf_local.select("new_id", "existing_id", "jaccard"),
         )
-        sig_new.unpersist()
         return result
 
     # -------------------------------------------------------------- recall

@@ -10,9 +10,13 @@ checkpoints its input with the row count observed in the same job
 shape only while the rows stay within the operator's row cap and rows x
 bytes-per-row within TASK_BYTES (`fits`). `dedupe()` runs the same
 kernels in sequence in one task for the whole graph when every operator
-would take its one-task path (pipeline._one_task_graph). The pair
-kernels sort rows by a bucket key, scan runs of equal keys (`runs`) and
-expand each run's pairs in bounded chunks (`range_pairs`).
+would take its one-task path (pipeline._one_task_graph), and the
+write-time probe does the same for a batch against the stored rows
+(probe._probe_kernel). The pair kernels sort rows by a bucket key, scan
+runs of equal keys (`runs`) and expand each run's pairs in bounded
+chunks (`range_pairs`); the fused kernels read Arrow columns
+(`list_rows`, `lanes`), verify every row pair of a candidate id pair
+(`row_pairs`) and stop at a failed gate (`OverBudget`).
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ import logging
 from typing import Iterator
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,6 +35,14 @@ log = logging.getLogger("distill_spark")
 
 TASK_BYTES = 2 << 30  # working-set budget of one Python worker task
 CHUNK = 1 << 20  # pairs per chunk a pair kernel generates / yields
+# row pairs per verify call of a fused kernel: bounds the flat shingle
+# arrays of a Jaccard call and the window-set memo of an LCS call, as an
+# Arrow batch bounds them on the per-operator path
+VERIFY_CHUNK = 10_000
+
+
+class OverBudget(Exception):
+    """A gate of a fused one-task kernel failed; the message names it."""
 
 
 def id_bytes(dtype: T.DataType) -> int:
@@ -90,3 +104,49 @@ def runs(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     ends = np.append(starts[1:], len(keys))
     run = np.cumsum(new) - 1
     return run, (ends - starts)[run], ends[run]
+
+
+def _expand(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(i repeated cnt[i] times, lo[i] + t for every t < cnt[i])."""
+    idx = np.repeat(np.arange(len(cnt)), cnt)
+    first = np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return idx, np.repeat(lo, cnt) + np.arange(len(idx)) - first
+
+
+def row_pairs(ca: np.ndarray, cb: np.ndarray, row_code: np.ndarray):
+    """For code pairs (ca[q], cb[q]): (q, ra, rb) for every row ra of
+    code ca[q] and rb of code cb[q] — a pair frame joined to a
+    feature frame on both sides, where an id may own several rows."""
+    order = np.argsort(row_code, kind="stable")
+    sc = row_code[order]
+    lo_a = np.searchsorted(sc, ca)
+    lo_b = np.searchsorted(sc, cb)
+    q, pa_ = _expand(lo_a, np.searchsorted(sc, ca, "right") - lo_a)
+    j, pb = _expand(lo_b[q], (np.searchsorted(sc, cb, "right") - lo_b)[q])
+    return q[j], order[pa_[j]], order[pb]
+
+
+def list_rows(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(row of every element, flat elements) of a list column."""
+    col = col.combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy(zero_copy_only=False)
+    return (np.repeat(np.arange(len(col)), lens),
+            col.flatten().to_numpy(zero_copy_only=False))
+
+
+def lanes(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(rows holding a list, (those rows, list length) matrix) of a list
+    column whose non-null lists all have one length (minhash lanes)."""
+    col = col.combine_chunks()
+    rows = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return rows, flat.reshape(len(rows), -1) if len(rows) else flat.reshape(0, 0)
+
+
+def record_batch(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
+    """A batch of `schema` from the columns in `cols`; every other
+    field all null."""
+    size = len(next(iter(cols.values())))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type) if f.name in cols else pa.nulls(size, f.type)
+         for f in schema], schema=schema)

@@ -75,7 +75,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import DedupConfig, DEFAULT
 from . import components, hamming, lsh, onetask
-from .minhash import band_buckets, band_keys_sql
+from .minhash import band_buckets, band_keys
 from .signatures import with_signatures
 from .lsh import bucket_pairs, oversized, pairs_from_buckets, pairs_and_overflow
 from .hamming import ball_pairs, hamming_candidate_pairs
@@ -298,47 +298,20 @@ def _representatives(assignments: DataFrame, meta: DataFrame, strategy: str,
                            id_col=id_col, caption_col=caption_col)
 
 
-# pairs per verify call of the one-task graph: bounds the flat shingle
-# arrays of a Jaccard call and the window-set memo of an LCS call, as an
-# Arrow batch bounds them on the per-operator path
-_VERIFY_CHUNK = 10_000
 # task bytes per input row of the one-task graph beyond its value
 # bytes: ids, dense codes, row-pair bookkeeping and the pandas/Python
 # objects of one row
 _GRAPH_ROW_BYTES = 512
 
 
-class _OverBudget(Exception):
-    """A gate of the one-task graph failed; the message names it."""
-
-
-def _expand(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(i repeated cnt[i] times, lo[i] + t for every t < cnt[i])."""
-    idx = np.repeat(np.arange(len(cnt)), cnt)
-    first = np.repeat(np.cumsum(cnt) - cnt, cnt)
-    return idx, np.repeat(lo, cnt) + np.arange(len(idx)) - first
-
-
-def _row_pairs(ca: np.ndarray, cb: np.ndarray, row_code: np.ndarray):
-    """For code pairs (ca[q], cb[q]): (q, ra, rb) for every row ra of
-    code ca[q] and rb of code cb[q] — a pair frame joined to a
-    feature frame on both sides, where an id may own several rows."""
-    order = np.argsort(row_code, kind="stable")
-    sc = row_code[order]
-    lo_a = np.searchsorted(sc, ca)
-    lo_b = np.searchsorted(sc, cb)
-    q, pa_ = _expand(lo_a, np.searchsorted(sc, ca, "right") - lo_a)
-    j, pb = _expand(lo_b[q], (np.searchsorted(sc, cb, "right") - lo_b)[q])
-    return q[j], order[pa_[j]], order[pb]
-
-
 def _verified(cand: np.ndarray, n: int, row_code: np.ndarray, test) -> np.ndarray:
     """The codes a * n + b of `cand` with some row pair (ra, rb) for which
     test(ra chunk, rb chunk) holds."""
-    q, ra, rb = _row_pairs(*np.divmod(cand, n), row_code)
+    q, ra, rb = onetask.row_pairs(*np.divmod(cand, n), row_code)
     ok = np.zeros(len(q), bool)
-    for s in range(0, len(q), _VERIFY_CHUNK):
-        ok[s:s + _VERIFY_CHUNK] = test(ra[s:s + _VERIFY_CHUNK], rb[s:s + _VERIFY_CHUNK])
+    step = onetask.VERIFY_CHUNK
+    for s in range(0, len(q), step):
+        ok[s:s + step] = test(ra[s:s + step], rb[s:s + step])
     return cand[np.unique(q[ok])]
 
 
@@ -349,7 +322,7 @@ def _gather(chunks, n: int, budget: int) -> np.ndarray:
     for a, b in chunks:
         held += len(a)
         if held > budget:
-            raise _OverBudget("candidates over budget")
+            raise onetask.OverBudget("candidates over budget")
         codes.append(a.astype(np.int64) * n + b)
     return np.unique(np.concatenate(codes)) if codes else np.empty(0, np.int64)
 
@@ -361,19 +334,11 @@ def _numbers(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
             pc.fill_null(col, 0).to_numpy(zero_copy_only=False))
 
 
-def _list_rows(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
-    """(row of every element, flat elements) of a list column."""
-    col = col.combine_chunks()
-    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy(zero_copy_only=False)
-    return (np.repeat(np.arange(len(col)), lens),
-            col.flatten().to_numpy(zero_copy_only=False))
-
-
 def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
                   pair_budget: int, max_edges: int, edge_item_bytes: int,
                   task_bytes: int):
     """mapInArrow function of the one-task graph. Input: one row per
-    signature row (`_sig` true: `_id`, shingles, bands, simhash, fps)
+    signature row (`_sig` true: `_id`, shingles, minhash, simhash, fps)
     and one per input row (`_id`, `_orig`, `_cap`, `_ph`), only the
     columns the channels read. Output (`schema`): the edges (a, b),
     a < b, in `_id` space; (node, comp) for every edge-touching input
@@ -381,7 +346,8 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
     fails, one row whose `bail` names it.
 
     Each channel runs the operator's own kernel on dense id codes (code
-    order is id order): bucket_pairs for bands and fingerprints,
+    order is id order): band_keys and bucket_pairs for the MinHash bands,
+    bucket_pairs for fingerprints,
     ball_pairs for simhash and phash, refine_rows for oversized
     fingerprints, jaccard and lcs_keep for verification, cc_labels for
     the components. Caps are read where the task is planned and passed
@@ -406,7 +372,7 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
             nonlocal edges
             edges = np.union1d(edges, new)
             if len(edges) > max_edges or len(edges) * edge_item_bytes > task_bytes:
-                raise _OverBudget("edges over cap")
+                raise onetask.OverBudget("edges over cap")
 
         def hamming_pairs(col: pa.ChunkedArray, codes: np.ndarray, k: int) -> np.ndarray:
             ok, vals = _numbers(col)
@@ -416,20 +382,21 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
 
         if "shingles" in sig.column_names:
             cand = np.empty(0, np.int64)
-            if "bands" in sig.column_names:
-                row, bucket = _list_rows(sig.column("bands"))
-                cand = _gather(bucket_pairs(sig_code[row], [bucket], cap, True,
-                                            pair_budget), n, pair_budget)
+            if "minhash" in sig.column_names:
+                rows, lanes = onetask.lanes(sig.column("minhash"))
+                cand = _gather(bucket_pairs(
+                    np.repeat(sig_code[rows], cfg.bands), [band_keys(lanes, cfg).ravel()],
+                    cap, True, pair_budget), n, pair_budget)
             if "simhash" in sig.column_names:
                 cand = np.union1d(cand, hamming_pairs(sig.column("simhash"), sig_code, k_sim))
-            row, vals = _list_rows(sig.column("shingles"))
+            row, vals = onetask.list_rows(sig.column("shingles"))
             per_row = np.split(vals, np.searchsorted(row, np.arange(1, sig.num_rows)))
             add(_verified(cand, n, sig_code, lambda ra, rb: jaccard(
                 [per_row[r] for r in ra], [per_row[r] for r in rb]) >= cfg.jaccard_threshold))
         if "_ph" in meta.column_names:
             add(hamming_pairs(meta.column("_ph"), meta_code, k_ph))
         if "fps" in sig.column_names:
-            row, fp = _list_rows(sig.column("fps"))
+            row, fp = onetask.list_rows(sig.column("fps"))
             fp_id = sig_code[row]
             small = _gather(bucket_pairs(fp_id, [fp], fp_cap, False, pair_budget),
                             n, pair_budget)
@@ -470,12 +437,6 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
         np.minimum.at(best, comp[keep], rank[keep])
         return uid[ea], uid[eb], orig[rank[keep]], orig[best[comp[keep]]]
 
-    def batch(cols: dict) -> pa.RecordBatch:
-        size = len(next(iter(cols.values())))
-        return pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], f.type) if f.name in cols else pa.nulls(size, f.type)
-             for f in schema], schema=schema)
-
     def kernel(it):
         batches = [b for b in it if b.num_rows]
         if not batches:
@@ -484,16 +445,23 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
         del batches
         try:
             a, b, node, comp = edges_and_labels(tbl)
-        except _OverBudget as e:
-            yield batch({"bail": [str(e)]})
+        except onetask.OverBudget as e:
+            yield onetask.record_batch({"bail": [str(e)]}, schema)
             return
         for s in range(0, len(a), onetask.CHUNK):
-            yield batch({"a": a[s:s + onetask.CHUNK], "b": b[s:s + onetask.CHUNK]})
+            yield onetask.record_batch(
+                {"a": a[s:s + onetask.CHUNK], "b": b[s:s + onetask.CHUNK]}, schema)
         for s in range(0, len(node), onetask.CHUNK):
-            yield batch({"node": node[s:s + onetask.CHUNK],
-                         "comp": comp[s:s + onetask.CHUNK]})
+            yield onetask.record_batch({"node": node[s:s + onetask.CHUNK],
+                                        "comp": comp[s:s + onetask.CHUNK]}, schema)
 
     return kernel
+
+
+def _hashed_id(id_col: str) -> Column:
+    """The int64 id of a string id; null for a null id, whose xxhash64
+    would be the hash seed, 42."""
+    return F.when(F.col(id_col).isNotNull(), F.xxhash64(id_col))
 
 
 def _one_task_path(counts: dict, cfg: DedupConfig, id_type: T.DataType) -> str | None:
@@ -511,10 +479,12 @@ def _one_task_path(counts: dict, cfg: DedupConfig, id_type: T.DataType) -> str |
     if not onetask.fits(rows, hamming.LOCAL_MAX_ROWS, ham_bytes):
         return "rows over cap"
     # the kernels' working sets, summed (two Hamming channels), plus the
-    # input held throughout: 8 B values twice (Arrow and numpy) and
-    # captions three times (Arrow, Python str, the lowered copy)
+    # input held throughout: per band row its minhash lanes, key and
+    # band_keys' hash temporaries (64 B), other 8 B values twice (Arrow
+    # and numpy) and captions three times (Arrow, Python str, the
+    # lowered copy)
     need = ((band_rows + counts["fp_rows"]) * lsh_bytes + 2 * rows * ham_bytes
-            + 16 * (band_rows + counts["fp_rows"] + counts["shingles"])
+            + 64 * band_rows + 16 * (counts["fp_rows"] + counts["shingles"])
             + 3 * counts["caption_bytes"] + rows * _GRAPH_ROW_BYTES)
     if need > onetask.TASK_BYTES:
         return "working set over budget"
@@ -540,13 +510,12 @@ def _one_task_graph(
         if "minhash" in channels or "simhash" in channels:
             cols.append("shingles")
         if "minhash" in channels:
-            cols.append(F.expr(
-                f"IF(minhash IS NULL, NULL, {band_keys_sql('minhash', cfg)})").alias("bands"))
+            cols.append("minhash")
         if "simhash" in channels:
             cols.append("simhash")
         if "substring" in channels:
             cols.append("fps")
-        rows_i = ([F.xxhash64(id_col).alias("_id"), F.col(id_col).alias("_orig")]
+        rows_i = ([_hashed_id(id_col).alias("_id"), F.col(id_col).alias("_orig")]
                   if idmap is not None else [F.col(id_col).alias("_id")])
         if "substring" in channels:
             rows_i.append(F.col(caption_col).alias("_cap"))
@@ -624,10 +593,11 @@ def run_dedup_graph(
     # — nothing to materialize. A hash collision falsely merges two ids
     # with probability ~N^2/2^65 (~3e-8 at 1M rows), the budget the
     # engine already accepts for hashed shingles. Integral ids are used
-    # as they are.
+    # as they are. A null id stays null (_hashed_id), so every channel
+    # drops it for either id type.
     if isinstance(meta.schema[id_col].dataType, T.StringType):
-        meta_i = meta.withColumn(id_col, F.xxhash64(F.col(id_col)))
-        idmap = meta.select(id_col, F.xxhash64(F.col(id_col)).alias("__iid"))
+        meta_i = meta.withColumn(id_col, _hashed_id(id_col))
+        idmap = meta.select(id_col, _hashed_id(id_col).alias("__iid"))
     else:
         meta_i, idmap = meta, None
 

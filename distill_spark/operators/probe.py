@@ -1,26 +1,52 @@
 """Write-time dedup probe shared by MemoryStore.store_batch,
 SessionStore.push and streaming ingest: the reference's per-entry
 `findSimilar` probe (SURVEY J3), its conflict band (J4) and session
-push probe (J5) as one batched join plus the id-order greedy
-(oracle.oracle_ingest's rule). Callers key new rows so that string id
-order is their arrival order."""
+push probe (J5), plus the id-order greedy (oracle.oracle_ingest's
+rule). Callers key new rows so that string id order is their arrival
+order.
+
+`probe_edges` has two paths with one result. It decides between them
+on row counts the caller already holds, so the decision runs no job:
+the new rows' count observed in their own checkpoint, and the stored
+rows' count from table metadata (VersionedTable.row_count, parquet
+footers).
+
+  * ONE TASK (band rows of new + stored within lsh.LOCAL_MAX_ROWS and
+    their working set within onetask.TASK_BYTES): one
+    coalesce(1).mapInArrow task over new ∪ stored computes every row's
+    band keys in numpy (minhash.band_keys), pairs each new row with
+    every stored row and every smaller new id in its buckets, and
+    verifies each pair's Jaccard (verify.jaccard). It stops at a gate
+    it can only check as it goes, held candidate pairs or held bytes,
+    and reports it through an Observation.
+  * BAND JOIN (a count gate or an in-task gate failed): the new rows'
+    band buckets joined to the stored and new rows' buckets, then a
+    shingle attach and jaccard_col.
+
+One debug line on the `distill_spark` logger names the path taken."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import logging
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import DedupConfig
-from .minhash import band_buckets
-from .verify import jaccard_col
+from . import lsh, onetask
+from .minhash import band_buckets, band_keys
+from .verify import jaccard, jaccard_col
+
+log = logging.getLogger("distill_spark")
 
 
-def guarded_collect(df: DataFrame, max_rows: int, what: str) -> list:
-    """Collect with a loud failure instead of a silent driver OOM
-    (pattern from operators/rerank.py): fetch max_rows+1 and raise if
-    the limit is hit. For output-bound edge lists that are small in any
-    sane input but unbounded in theory."""
-    rows = df.limit(max_rows + 1).collect()
+def _check_guard(rows: list, max_rows: int, what: str) -> list:
     if len(rows) > max_rows:
         raise ValueError(
             f"{what} produced more than {max_rows} rows for a driver-side "
@@ -31,22 +57,159 @@ def guarded_collect(df: DataFrame, max_rows: int, what: str) -> list:
     return rows
 
 
+def guarded_collect(df: DataFrame, max_rows: int, what: str) -> list:
+    """Collect with a loud failure instead of a silent driver OOM
+    (pattern from operators/rerank.py): fetch max_rows+1 and raise if
+    the limit is hit. For output-bound edge lists that are small in any
+    sane input but unbounded in theory."""
+    return _check_guard(df.limit(max_rows + 1).collect(), max_rows, what)
+
+
 def probe_edges(new: DataFrame, stored: DataFrame, cfg: DedupConfig,
-                floor: float, what: str) -> list:
+                floor: float, what: str, new_rows: int,
+                stored_rows: int | None) -> list:
     """Rows (n, o, old, jaccard) with exact shingle Jaccard >= floor.
 
     `new` and `stored` are (id, shingles, minhash) frames (extra columns
-    are ignored; a null minhash never matches). Each row pairs a new id
-    n with a stored id (old=True) or with a smaller new id (old=False,
-    o < n); an id present on both sides attaches once per side.
+    are ignored; a null minhash never matches, a null id never pairs).
+    Each row pairs a new id n with a stored id (old=True) or with a
+    smaller new id (old=False, o < n); an id present on both sides
+    attaches once per side, and an id with several rows on a side
+    yields one row per row pair that passes.
 
-    `new` must already be persisted: it feeds the bucket side, the
-    intra side and the shingle attach, and an unpersisted signature pass
-    would run once per consumer. The collect fails loudly past
-    cfg.extra["dup_edges_max"] (default 1,000,000) stored + intra rows;
-    `what` names it in the error."""
+    `new` must be an eager materialization (onetask.observed) and
+    `new_rows` its row count: it feeds the one-task union, or the bucket
+    side, the intra side and the shingle attach of the band join, and
+    both a lazy signature pass and coalesce(1) over it would recompute
+    it. `stored_rows` bounds the stored rows (None: unknown, which takes
+    the band join). The collect fails loudly past
+    cfg.extra["dup_edges_max"] (default 1,000,000) rows; `what` names it
+    in the error and in the debug line."""
     new = new.select("id", "shingles", "minhash")
     stored = stored.select("id", "shingles", "minhash")
+    max_rows = int(cfg.extra.get("dup_edges_max", 1_000_000))
+    why = _count_gate(new, cfg, new_rows, stored_rows)
+    if why is None:
+        rows, why = _one_task(new, stored, cfg, floor, max_rows)
+    log.debug("probe (%s): %d new + %s stored rows -> %s", what, new_rows,
+              stored_rows, "one-task path" if why is None else f"band join ({why})")
+    if why is None:
+        return _check_guard(rows, max_rows, what)
+    return guarded_collect(_band_join(new, stored, cfg, floor), max_rows, what)
+
+
+def _band_row_bytes(id_type: T.DataType) -> int:
+    return lsh.row_bytes([id_type, T.LongType()])
+
+
+def _count_gate(new: DataFrame, cfg: DedupConfig, new_rows: int,
+                stored_rows: int | None) -> str | None:
+    """None when the one-task path may run at these counts; else the
+    gate that fails."""
+    if stored_rows is None:
+        return "stored rows unknown"
+    if not onetask.fits((new_rows + stored_rows) * cfg.bands, lsh.LOCAL_MAX_ROWS,
+                        _band_row_bytes(new.schema["id"].dataType)):
+        return "band rows over cap"
+    return None
+
+
+def _one_task(new: DataFrame, stored: DataFrame, cfg: DedupConfig, floor: float,
+              max_rows: int) -> tuple[list, str | None]:
+    """(_probe_kernel's rows, None), or ([], the in-task gate that failed)."""
+    id_type = new.schema["id"].dataType
+    schema = T.StructType([
+        T.StructField("n", id_type), T.StructField("o", id_type),
+        T.StructField("old", T.BooleanType()), T.StructField("jaccard", T.DoubleType()),
+        T.StructField("bail", T.StringType()),
+    ])
+    kernel = _probe_kernel(
+        cfg, floor, to_arrow_schema(schema),
+        onetask.TASK_BYTES // (2 * lsh._PAIR_BYTES), max_rows,
+        _band_row_bytes(id_type), onetask.TASK_BYTES)
+    obs = Observation()
+    rows = (stored.withColumn("_old", F.lit(True))
+            .unionByName(new.withColumn("_old", F.lit(False)))
+            .coalesce(1).mapInArrow(kernel, schema)
+            .observe(obs, F.max("bail").alias("bail"))
+            .select("n", "o", "old", "jaccard").collect())
+    why = obs.get["bail"]
+    return (rows, None) if why is None else ([], why)
+
+
+def _probe_kernel(cfg: DedupConfig, floor: float, schema: pa.Schema,
+                  pair_budget: int, max_rows: int, band_row_bytes: int,
+                  task_bytes: int):
+    """mapInArrow function of the one-task probe. Input: every new
+    (`_old` false) and stored (`_old` true) row, (id, shingles,
+    minhash). Output (`schema`): band_join's rows, at most max_rows + 1
+    of them, or one row whose `bail` names the gate that failed. Budgets
+    are read where the task is planned and passed in, so a caller's
+    setting holds in the Python worker too."""
+
+    def edges(tbl: pa.Table) -> dict:
+        tbl = tbl.filter(pc.is_valid(tbl.column("id")))
+        rows, lanes = onetask.lanes(tbl.column("minhash"))
+        if tbl.nbytes + len(rows) * cfg.bands * band_row_bytes > task_bytes:
+            raise onetask.OverBudget("working set over budget")
+        old = tbl.column("_old").to_numpy(zero_copy_only=False)
+        code, uid = pd.factorize(tbl.column("id").to_numpy(zero_copy_only=False),
+                                 sort=True)
+        nid = len(uid)
+        # every (band key, row) sorted by key: a bucket is a run, and each
+        # new row pairs with every row of its run
+        key = band_keys(lanes, cfg).ravel()
+        order = np.argsort(key, kind="stable")
+        brow = np.repeat(rows, cfg.bands)[order]
+        _, size, end = onetask.runs(key[order])
+        left = np.flatnonzero(~old[brow])
+        if size[left].sum() > pair_budget:
+            raise onetask.OverBudget("candidates over budget")
+        cand = [np.empty(0, np.int64)]
+        for a, b in onetask.range_pairs(left, (end - size)[left], size[left]):
+            n, o, o_old = code[brow[a]], code[brow[b]], old[brow[b]]
+            keep = o_old | (o < n)
+            cand.append((n[keep] * nid + o[keep]) * 2 + o_old[keep])
+        side = np.unique(np.concatenate(cand))
+        cn, co = np.divmod(side >> 1, nid)
+        # every row pair of a candidate: n's new rows x o's rows on its
+        # side; a row with null shingles attaches nowhere (jaccard_col
+        # of a null is null)
+        has_sh = tbl.column("shingles").is_valid().to_numpy(zero_copy_only=False)
+        q, ra, rb = onetask.row_pairs(cn * 2, co * 2 + (side & 1),
+                                      np.where(has_sh, code * 2 + old, -1))
+        sh_row, sh = onetask.list_rows(tbl.column("shingles"))
+        per_row = np.split(sh, np.searchsorted(sh_row, np.arange(1, tbl.num_rows)))
+        jac = np.empty(len(q), np.float64)
+        step = onetask.VERIFY_CHUNK
+        for s in range(0, len(q), step):
+            jac[s:s + step] = jaccard([per_row[r] for r in ra[s:s + step]],
+                                      [per_row[r] for r in rb[s:s + step]])
+        ok = np.flatnonzero(jac >= floor)[:max_rows + 1]
+        return {"n": uid[cn[q[ok]]], "o": uid[co[q[ok]]],
+                "old": (side[q[ok]] & 1).astype(bool), "jaccard": jac[ok]}
+
+    def kernel(it):
+        batches = [b for b in it if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches).combine_chunks()
+        del batches
+        try:
+            out = edges(tbl)
+        except onetask.OverBudget as e:
+            yield onetask.record_batch({"bail": [str(e)]}, schema)
+            return
+        if len(out["n"]):
+            yield onetask.record_batch(out, schema)
+
+    return kernel
+
+
+def _band_join(new: DataFrame, stored: DataFrame, cfg: DedupConfig,
+               floor: float) -> DataFrame:
+    """The distributed probe: the new rows' band buckets joined to the
+    stored and new rows' buckets, then the shingles of both sides."""
     bb_n = band_buckets(new.filter(F.col("minhash").isNotNull()),
                         "minhash", "id", cfg)
     bb_o = band_buckets(stored.filter(F.col("minhash").isNotNull()),
@@ -62,7 +225,7 @@ def probe_edges(new: DataFrame, stored: DataFrame, cfg: DedupConfig,
     )
     sides = stored.withColumn("old", F.lit(True)).unionByName(
         new.withColumn("old", F.lit(False)))
-    verified = (
+    return (
         cand.join(new.select(F.col("id").alias("n"),
                              F.col("shingles").alias("sh_n")), "n")
         .join(sides.select(F.col("id").alias("o"), "old",
@@ -71,8 +234,6 @@ def probe_edges(new: DataFrame, stored: DataFrame, cfg: DedupConfig,
         .filter(F.col("jaccard") >= floor)
         .select("n", "o", "old", "jaccard")
     )
-    return guarded_collect(
-        verified, int(cfg.extra.get("dup_edges_max", 1_000_000)), what)
 
 
 def greedy_accept(edges) -> dict:

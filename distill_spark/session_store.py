@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
+from .operators import onetask
 from .operators.probe import greedy_accept, guarded_collect, probe_edges
 from .operators.signatures import with_signatures
 from .tableio import auto_vacuum, open_table
@@ -487,12 +488,12 @@ class SessionStore:
             [(i, e["content"]) for i, e in zip(ids, batch)],
             "id string, content string",
         )
-        sig_new = with_signatures(bdf, "content", "id", self.cfg,
-                                  parts=("shingles", "minhash")).persist()
+        sig_new, counts = onetask.observed(with_signatures(
+            bdf, "content", "id", self.cfg, parts=("shingles", "minhash")))
+        # the table's row count bounds this session's stored rows
         rejected = greedy_accept(probe_edges(
             sig_new, stored, self.cfg, sess.dedup_jaccard,
-            "session push dedup edges"))
-        sig_new.unpersist()
+            "session push dedup edges", counts["rows"], self._table.row_count()))
         result.deduplicated += len(rejected)
         return [e for i, e in zip(ids, batch) if i not in rejected]
 

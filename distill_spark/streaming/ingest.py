@@ -9,9 +9,14 @@ Streaming `foreachBatch` with idempotent sink commits — NOT
 watermarked windowing.
 
 Incremental contract per micro-batch:
-  1. signatures of the incoming batch (map-side Arrow pass)
+  1. signatures of the incoming batch (map-side Arrow pass), checkpointed
+     with the batch's row count observed in the same job
+     (onetask.observed)
   2. the write-time probe (operators/probe.py) of the batch against the
-     ACCUMULATED signature state and itself: one band join, one collect.
+     ACCUMULATED signature state and itself, decided on that count and
+     the state's row count from its parquet footers: one Arrow task over
+     batch ∪ state when they fit one, else the distributed band join;
+     one collect either way.
   3. its id-order greedy -> dup rows dropped, novel rows appended to
      state. The state holds accepted rows only, each its own component,
      so a dup's component is the row it matched: assignments/ is never
@@ -40,10 +45,12 @@ import time
 import uuid
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT
+from ..operators import onetask
 from ..operators.probe import greedy_accept, probe_edges
 from ..operators.signatures import with_signatures
 
@@ -100,6 +107,16 @@ class DedupeState:
     def signatures(self) -> DataFrame:
         return self._read("signatures", _SIG_SCHEMA)
 
+    def signature_rows(self) -> int:
+        """Rows of signatures(), from the parquet footers of the
+        published batches (no Spark job)."""
+        total = 0
+        for root, dirs, names in os.walk(self._p("signatures")):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            total += sum(pq.read_metadata(os.path.join(root, f)).num_rows
+                         for f in names if f.endswith(".parquet"))
+        return total
+
     def assignments(self) -> DataFrame:
         return self._read("assignments", _ASSIGN_SCHEMA)
 
@@ -144,18 +161,19 @@ def incremental_dedupe_batch(
     )
     if id_col != "image_id":
         sigs = sigs.withColumnRenamed(id_col, "image_id")
-    sigs = sigs.persist()
-    n_in = sigs.count()
+    sigs, counts = onetask.observed(sigs)
+    n_in = counts["rows"]
 
     edges = probe_edges(
         sigs.withColumnRenamed("image_id", "id"),
         state.signatures().withColumnRenamed("image_id", "id"),
         cfg, cfg.jaccard_threshold, "incremental dedup edges",
+        n_in, state.signature_rows(),
     )
     comp = greedy_accept(edges)  # rejected id -> component (module doc, 3.)
 
     # map-only publish: the rejected ids go to the JVM as one Arrow
-    # frame, broadcast onto the persisted batch signatures
+    # frame, broadcast onto the checkpointed batch signatures
     rej_df = state.spark.createDataFrame(
         pd.DataFrame({"image_id": list(comp), "component": list(comp.values())}),
         _ASSIGN_SCHEMA,
@@ -179,7 +197,6 @@ def incremental_dedupe_batch(
     }
     with open(os.path.join(state.path, f"_metrics_{batch_id}.json"), "w") as f:
         json.dump(metrics, f)
-    sigs.unpersist()
     return metrics
 
 

@@ -1,43 +1,96 @@
-"""A ceiling on the Spark jobs one warm dedupe() unit runs.
+"""Ceilings on the Spark jobs of warm units of work.
 
-At small inputs a dedupe() call is mostly per-job fixed cost, and job
-counts do not vary between runs on the same input, so a ceiling catches
-an added barrier or read-back that a timing benchmark cannot resolve.
-The unit is the benchmark's: dedupe(), assignments.toPandas() and
-representatives.count(), on a fixed planted table of 2,000 rows, once
-warm. The ceiling is the count the unit runs on the one-task graph; a
-change that adds a job raises it here and says why, one that removes a
-job lowers it.
+At small inputs a dedupe() call or an ingest batch is mostly per-job
+fixed cost, and job counts do not vary between runs on the same input,
+so a ceiling catches an added barrier or read-back that a timing
+benchmark cannot resolve. The units, each run once warm on a fixed
+planted table of 2,000 rows:
+
+  * dedupe(), assignments.toPandas() and representatives.count() (the
+    planted benchmark's unit), on the one-task graph;
+  * one incremental_dedupe_batch against a state holding an earlier
+    batch (the ingest benchmark's unit): the signature checkpoint, the
+    one-task probe and the publish;
+  * one MemoryStore.store_batch against a store holding an earlier
+    batch.
+
+A ceiling is the count the unit runs today; a change that adds a job
+raises it here and says why, one that removes a job lowers it.
 """
 
+import pytest
+from pyspark.sql import functions as F
+
 from distill_spark.datagen import generate_images
+from distill_spark.memory import MemoryStore
 from distill_spark.operators import dedupe
+from distill_spark.streaming.ingest import DedupeState, incremental_dedupe_batch
 
 MAX_JOBS = 8
+MAX_INGEST_JOBS = 6
+MAX_STORE_JOBS = 9
 
 
-def _unit(sc, df, group: str) -> int:
-    """Jobs one unit ran under job group `group`."""
+def _jobs(sc, group: str, unit) -> int:
+    """Jobs `unit()` ran under job group `group`."""
     sc.setJobGroup(group, group)
     try:
-        res = dedupe(df)
-        res.assignments.toPandas()
-        res.representatives.count()
-        res.unpersist()
+        unit()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_warm_dedupe_unit_job_ceiling(spark):
+@pytest.fixture(scope="module")
+def planted(spark):
     df, _ = generate_images(spark, n=2000, seed=11)
     df = df.select("image_id", "caption", "phash").cache()
     df.count()
+    yield df
+    df.unpersist()
+
+
+def _thirds(df):
+    """The table split in three batches by id hash."""
+    part = F.abs(F.xxhash64("image_id")) % 3
+    return [df.filter(part == i) for i in range(3)]
+
+
+def test_warm_dedupe_unit_job_ceiling(spark, planted):
+    def unit():
+        res = dedupe(planted)
+        res.assignments.toPandas()
+        res.representatives.count()
+        res.unpersist()
+
     sc = spark.sparkContext
-    try:
-        _unit(sc, df, "fixed-cost:warm")
-        jobs = _unit(sc, df, "fixed-cost:unit")
-    finally:
-        df.unpersist()
+    _jobs(sc, "fixed-cost:warm", unit)
+    jobs = _jobs(sc, "fixed-cost:unit", unit)
     assert jobs <= MAX_JOBS, f"a warm dedupe() unit ran {jobs} jobs (ceiling {MAX_JOBS})"
+
+
+def test_warm_ingest_batch_job_ceiling(spark, planted, tmp_path):
+    sc = spark.sparkContext
+    b0, b1, b2 = _thirds(planted.select("image_id", "caption"))
+    _jobs(sc, "fixed-cost:ingest-warm",
+          lambda: incremental_dedupe_batch(DedupeState(spark, str(tmp_path / "w")), b2, 0))
+    state = DedupeState(spark, str(tmp_path / "s"))
+    incremental_dedupe_batch(state, b0, 0)
+    jobs = _jobs(sc, "fixed-cost:ingest",
+                 lambda: incremental_dedupe_batch(state, b1, 1))
+    assert jobs <= MAX_INGEST_JOBS, (
+        f"a warm ingest batch ran {jobs} jobs (ceiling {MAX_INGEST_JOBS})")
+
+
+def test_warm_store_batch_job_ceiling(spark, planted, tmp_path):
+    sc = spark.sparkContext
+    b0, b1, b2 = _thirds(planted.select(F.col("image_id").alias("id"),
+                                        F.col("caption").alias("text")))
+    _jobs(sc, "fixed-cost:store-warm",
+          lambda: MemoryStore(spark, str(tmp_path / "w")).store_batch(b2))
+    store = MemoryStore(spark, str(tmp_path / "s"))
+    store.store_batch(b0)
+    jobs = _jobs(sc, "fixed-cost:store", lambda: store.store_batch(b1))
+    assert jobs <= MAX_STORE_JOBS, (
+        f"a warm store_batch ran {jobs} jobs (ceiling {MAX_STORE_JOBS})")

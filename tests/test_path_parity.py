@@ -199,3 +199,27 @@ def test_numpy_jaccard_matches_jaccard_col(spark, elem):
     assert got[0] == 0.7 and got[0] >= thr
     assert got[1] < thr and jvm[1] < thr
     assert got[2] == 1.0 and got[3] == 0.0
+
+
+@pytest.mark.parametrize("path", ["one-task", "per-operator"])
+def test_null_string_id_forms_no_edge(spark, monkeypatch, path):
+    """A null string id takes part in no channel, as a null integral id
+    does not: a null-id row that duplicates `a` by caption and `c` by
+    phash does not join them, and the edges and the other rows'
+    components are those of the table without it."""
+    cap = "amber basil cedar delta ember fjord grove haze"
+    rows = [("a", cap, 0), ("b", cap + " iris", 1 << 40), (None, cap, -1),
+            ("c", "jade kite lumen moss nova opal", -1)]
+    if path == "per-operator":
+        monkeypatch.setattr(lsh, "LOCAL_MAX_ROWS", 0)
+
+    def run(rows):
+        df = spark.createDataFrame(rows, "image_id string, caption string, phash bigint")
+        (edges, assignments, _), line = _run(df)
+        assert line.endswith(f"-> {path} path" if path == "one-task"
+                             else "-> per-operator path (band rows over cap)"), line
+        return edges, {k: v for (k, v), _ in assignments.items() if k is not None}
+
+    edges, comp = run(rows)
+    assert (edges, comp) == run([r for r in rows if r[0] is not None])
+    assert comp["a"] == comp["b"] == "a" and comp["c"] == "c"
