@@ -76,21 +76,22 @@ _ROW_BYTES = 200
 _PAIR_BYTES = 40
 
 
-def _key_codes(cols: list[np.ndarray]) -> np.ndarray:
-    """One int64 code per row, equal exactly where every key column is
-    equal (a null equals a null, as in a Spark grouping)."""
-    code = np.zeros(len(cols[0]), np.int64)
+def key_codes(cols: list[np.ndarray]) -> np.ndarray:
+    """One dense int64 code per row, equal exactly where every key column
+    is equal (a null equals a null, as in a Spark grouping): the bucket
+    key of bucket_pairs and oversized."""
+    code = None
     for col in cols:
-        c, u = pd.factorize(col)  # null -> -1
-        code = pd.factorize(code * (len(u) + 1) + c + 1)[0]
-    return code
+        c, u = pd.factorize(col, use_na_sentinel=False)
+        code = c if code is None else pd.factorize(code * len(u) + c)[0]
+    return code.astype(np.int64, copy=False)
 
 
-def bucket_pairs(ids: np.ndarray, keys: list[np.ndarray], cap: int, star: bool,
+def bucket_pairs(ids: np.ndarray, kc: np.ndarray, cap: int, star: bool,
                  budget: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
-    """Every (id, key...) row -> each distinct pair (a, b), a < b, of the
-    cap rule, as (a, b) arrays of id values in chunks of at most CHUNK
-    pairs.
+    """Every (id, bucket) row, the bucket given as its key_codes `kc` ->
+    each distinct pair (a, b), a < b, of the cap rule, as (a, b) arrays
+    of id values in chunks of at most CHUNK pairs.
 
     Ids are factorized in sort order (code order is id order) and the
     rows sorted by (key code, id code), so each bucket is a run of
@@ -110,7 +111,6 @@ def bucket_pairs(ids: np.ndarray, keys: list[np.ndarray], cap: int, star: bool,
     if not len(ids):
         return
     icode, uid = pd.factorize(ids, sort=True)
-    kc = _key_codes(keys)
     nid = len(uid)
     order = np.argsort(kc * nid + icode)
     sid = icode[order]
@@ -148,9 +148,9 @@ def bucket_pairs(ids: np.ndarray, keys: list[np.ndarray], cap: int, star: bool,
             yield uid[a], uid[b]
 
 
-def oversized(keys: list[np.ndarray], cap: int) -> np.ndarray:
-    """Per (key...) row: whether its bucket holds more than `cap` rows."""
-    kc = _key_codes(keys)
+def oversized(kc: np.ndarray, cap: int) -> np.ndarray:
+    """Per row of bucket key_codes `kc`: whether its bucket holds more
+    than `cap` rows."""
     return np.bincount(kc)[kc] > cap
 
 
@@ -167,7 +167,7 @@ def _pair_kernel(key_cols: list[str], id_col: str, cap: int, star: bool,
         del parts
         ids, keys = pdf[id_col].to_numpy(), [pdf[k].to_numpy() for k in key_cols]
         del pdf
-        for a, b in bucket_pairs(ids, keys, cap, star, budget):
+        for a, b in bucket_pairs(ids, key_codes(keys), cap, star, budget):
             yield pd.DataFrame({"a": a, "b": b})
 
     return kernel
@@ -183,7 +183,7 @@ def _overflow_kernel(key_cols: list[str], cap: int):
         if not batches:
             return
         tbl = pa.Table.from_batches(batches)
-        big = oversized([tbl.column(k).to_numpy() for k in key_cols], cap)
+        big = oversized(key_codes([tbl.column(k).to_numpy() for k in key_cols]), cap)
         yield from tbl.filter(pa.array(big)).to_batches(max_chunksize=CHUNK)
 
     return kernel

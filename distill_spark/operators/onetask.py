@@ -144,9 +144,11 @@ def lanes(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def record_batch(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
-    """A batch of `schema` from the columns in `cols`; every other
-    field all null."""
+    """A batch of `schema` from the columns in `cols` (Arrow arrays of
+    the field's type, or values to convert); every other field all
+    null."""
     size = len(next(iter(cols.values())))
     return pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], f.type) if f.name in cols else pa.nulls(size, f.type)
-         for f in schema], schema=schema)
+        [pa.nulls(size, f.type) if f.name not in cols
+         else cols[f.name] if isinstance(cols[f.name], pa.Array)
+         else pa.array(cols[f.name], f.type) for f in schema], schema=schema)

@@ -24,21 +24,26 @@ The plan is written once, as an ordered list of named stages
 place, and `checkpoint.dedupe_checkpointed()` sends each one through a
 CheckpointStore so a run resumes after its last completed stage.
 
-In `dedupe()` the graph checkpoints `signatures` eagerly and observes,
-in that checkpoint's own job, the counts every one-task operator path
-is decided on: rows, band rows, fingerprint rows, and shingle and
-caption bytes. When each folded operator would take its own one-task
-path at those counts and their summed working set fits one task, ONE
-coalesce(1).mapInArrow task runs candidates -> verify -> edges ->
-connected components over the signatures with the operators' own numpy
-kernels (`_graph_kernel`) and emits the int64 edges plus the component
-of every edge-touching node; assignments and representatives are joins
-on its output, and nothing is persisted. Otherwise, or when the task
-stops at a gate it can only check as it goes (the edge count against
-the CC caps, the held candidate pairs against the task budget), the
-per-operator stages run from the same signature checkpoint and only the
-`edges` stage is persisted (DedupResult.unpersist). One debug line on
-the `distill_spark` logger names the path taken.
+In `dedupe()` the signature pass also carries the caption, the phash
+and, for string ids, the original id of every input row, one row per
+input row; the graph checkpoints it eagerly and observes, in that
+checkpoint's own job, the counts every one-task operator path is
+decided on: rows, band rows, fingerprint rows, and shingle and caption
+bytes. When each folded operator would take its own one-task path at
+those counts and their summed working set fits one task, ONE
+coalesce(1).mapInArrow task over that checkpoint alone runs candidates
+-> verify -> edges -> connected components -> component names with the
+operators' own numpy kernels (`_graph_kernel`) and emits the finished
+result: the edges in int64 and in original ids, one assignment row per
+distinct id and, for min_id, the representative rows. That output is
+checkpointed once and every result frame is a projection of it (a
+non-min_id representatives keeps its window); nothing is persisted.
+Otherwise, or when the task stops at a gate it can only check as it
+goes (the edge count against the CC caps, the held candidate pairs
+against the task budget), the per-operator stages run from the same
+signature checkpoint and only the `edges` stage is persisted
+(DedupResult.unpersist). One debug line on the `distill_spark` logger
+names the path taken.
 
 Recall budget: phash + substring channels are recall-1.0 by
 construction AT ANY BUCKET-SIZE DISTRIBUTION — oversized pigeonhole
@@ -77,7 +82,8 @@ from ..config import DedupConfig, DEFAULT
 from . import components, hamming, lsh, onetask
 from .minhash import band_buckets, band_keys
 from .signatures import with_signatures
-from .lsh import bucket_pairs, oversized, pairs_from_buckets, pairs_and_overflow
+from .lsh import (bucket_pairs, key_codes, oversized, pairs_from_buckets,
+                  pairs_and_overflow)
 from .hamming import ball_pairs, hamming_candidate_pairs
 from .winnow import refine_oversized, refine_rows
 from .verify import (conflict_band, jaccard, lcs_keep, verify_jaccard,
@@ -92,8 +98,14 @@ CHANNELS = ("minhash", "simhash", "phash", "substring")
 
 @dataclass
 class DedupResult:
-    assignments: DataFrame      # (image_id, component)
-    representatives: DataFrame  # one row per component
+    """The frames of one dedupe() run. On the one-task graph every frame
+    but a windowed (non-min_id) representatives is a projection of the
+    graph task's one checkpoint, so reading one runs one job; on the
+    per-operator path they are lazy plans over the persisted edges."""
+    assignments: DataFrame      # (image_id, component), one row per
+                                # distinct id (a null id: see dedup_stages)
+    representatives: DataFrame  # one row per component; for min_id every
+                                # input row of the component's name
     edges: DataFrame            # a spanning set of the verified dup pairs
                                 # (a, b); star hubs follow hashed-id order
     conflicts: DataFrame | None # band pairs (a, b, jaccard)
@@ -164,6 +176,7 @@ def dedup_stages(
     channels: tuple[str, ...],
     rep_strategy: str,
     sig_src: DataFrame | None = None,
+    keep: tuple[str, ...] = (),
 ) -> list[Stage]:
     """The dedup stage graph, in run order:
 
@@ -175,7 +188,12 @@ def dedup_stages(
     `meta` holds the original ids, `meta_i` the ids the channels run on
     (int64 hashes of string ids) and `idmap` maps one to the other (None
     for integral ids). The signature pass reads `sig_src` (default
-    meta_i: the same rows, possibly under an observation)."""
+    meta_i: the same rows, possibly under an observation) and carries
+    its `keep` columns through (with_signatures).
+
+    `assignments` holds one row per distinct id; a null id, which no
+    channel reads, gets a (null, null) row: one per input row for string
+    ids, one in all for integral ids."""
     if sig_src is None:
         sig_src = meta_i
     caption_channels = tuple(c for c in ("minhash", "simhash") if c in channels)
@@ -190,7 +208,7 @@ def dedup_stages(
         if substring:
             parts += ("winnow",)
         stages.append(Stage("signatures", (), lambda: with_signatures(
-            sig_src, caption_col, id_col, cfg, parts=parts)))
+            sig_src, caption_col, id_col, cfg, parts=parts, keep=keep)))
 
     if caption_channels:
         def jaccard_candidates(sigs: DataFrame) -> DataFrame:
@@ -275,9 +293,13 @@ def dedup_stages(
         edge_assign = cc.join(names, "__icomp").select(
             id_col, F.col("__comp_name").alias("component")
         )
+        # one row per distinct id, as connected_components gives integral
+        # ids; a null id keeps one row per input row
+        ids = meta.select(id_col)
+        nodes = ids.filter(F.col(id_col).isNotNull()).distinct().unionByName(
+            ids.filter(F.col(id_col).isNull()))
         return (
-            meta.select(id_col)
-            .join(edge_assign, id_col, "left")
+            nodes.join(edge_assign, id_col, "left")
             .select(id_col, F.coalesce("component", F.col(id_col)).alias("component"))
         )
 
@@ -334,38 +356,52 @@ def _numbers(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
             pc.fill_null(col, 0).to_numpy(zero_copy_only=False))
 
 
-def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
-                  pair_budget: int, max_edges: int, edge_item_bytes: int,
-                  task_bytes: int):
+# the original string id, as the one-task graph's signature pass carries it
+_ORIG = "__orig"
+# row kinds of the one-task graph's output
+_EDGE, _ASSIGNMENT, _REPRESENTATIVE = 0, 1, 2
+
+
+def _graph_kernel(cfg: DedupConfig, channels: tuple[str, ...], string_ids: bool,
+                  min_id: bool, schema: pa.Schema, pair_budget: int, max_edges: int,
+                  edge_item_bytes: int, task_bytes: int):
     """mapInArrow function of the one-task graph. Input: one row per
-    signature row (`_sig` true: `_id`, shingles, minhash, simhash, fps)
-    and one per input row (`_id`, `_orig`, `_cap`, `_ph`), only the
-    columns the channels read. Output (`schema`): the edges (a, b),
-    a < b, in `_id` space; (node, comp) for every edge-touching input
-    row, comp the min original id of its component; or, when a gate
-    fails, one row whose `bail` names it.
+    input row, read from the signature checkpoint alone: `_id` (the
+    int64 id the channels run on), the signature columns the channels
+    read (shingles, minhash, simhash, fps), `_cap` (caption), `_ph`
+    (phash, when the input has one) and, for string ids, `_orig` (the
+    original id).
+
+    Output (`schema`), the finished result, one `kind` per row:
+      _EDGE            a < b in `_id` space and, for string ids, the
+                       same edge in original ids (`oa` = least, `ob`);
+      _ASSIGNMENT      (node, comp) once per distinct input id, comp the
+                       min original id of its component (itself for a
+                       singleton); a null id keeps a (null, null) row,
+                       one per input row for string ids and one in all
+                       for integral ids, as the per-operator path gives;
+      _REPRESENTATIVE  with `min_id`, every input row whose id names its
+                       component: (node, comp, cap, ph);
+    or, when a gate fails, one row whose `bail` names it.
 
     Each channel runs the operator's own kernel on dense id codes (code
     order is id order): band_keys and bucket_pairs for the MinHash bands,
-    bucket_pairs for fingerprints,
-    ball_pairs for simhash and phash, refine_rows for oversized
-    fingerprints, jaccard and lcs_keep for verification, cc_labels for
-    the components. Caps are read where the task is planned and passed
+    bucket_pairs for fingerprints, ball_pairs for simhash and phash,
+    refine_rows for oversized fingerprints, jaccard and lcs_keep for
+    verification, cc_labels for the components. Caps are read where the task is planned and passed
     in, so a caller's setting holds in the Python worker too."""
     k_sim, k_ph = cfg.simhash_hamming_k, cfg.phash_hamming_k
     cap, fp_cap = cfg.max_bucket_size, cfg.max_fp_bucket_size
+    caption_channels = "minhash" in channels or "simhash" in channels
+    label_type = schema.field("node").type
 
-    def edges_and_labels(tbl: pa.Table):
-        is_sig = tbl.column("_sig").is_valid()
-        sig = tbl.filter(is_sig)
-        meta = tbl.filter(pc.invert(is_sig))
-        sig_id = sig.column("_id").to_numpy()
-        meta_id = meta.column("_id").to_numpy()
-        uid = np.unique(np.concatenate([sig_id, meta_id]))
+    def run(tbl: pa.Table) -> dict[int, dict]:
+        valid = tbl.column("_id").is_valid()
+        nulls = tbl.num_rows - pc.sum(valid).as_py()
+        tbl = tbl.filter(valid)
+        uid, code = np.unique(tbl.column("_id").to_numpy(), return_inverse=True)
         n = len(uid)
-        sig_code = np.searchsorted(uid, sig_id)
-        meta_code = np.searchsorted(uid, meta_id)
-        caps = meta.column("_cap").to_pylist() if "_cap" in meta.column_names else None
+        caps = tbl.column("_cap").to_pylist() if "substring" in channels else None
         edges = np.empty(0, np.int64)
 
         def add(new: np.ndarray) -> None:
@@ -374,68 +410,89 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
             if len(edges) > max_edges or len(edges) * edge_item_bytes > task_bytes:
                 raise onetask.OverBudget("edges over cap")
 
-        def hamming_pairs(col: pa.ChunkedArray, codes: np.ndarray, k: int) -> np.ndarray:
+        def hamming_pairs(col: pa.ChunkedArray, k: int) -> np.ndarray:
             ok, vals = _numbers(col)
             # max_levels 3: hamming_candidate_pairs' default, as its callers use
-            return _gather(ball_pairs(codes[ok], vals[ok].astype(np.int64), k, cap, 3),
+            return _gather(ball_pairs(code[ok], vals[ok].astype(np.int64), k, cap, 3),
                            n, pair_budget)
 
-        if "shingles" in sig.column_names:
+        if caption_channels and n:
             cand = np.empty(0, np.int64)
-            if "minhash" in sig.column_names:
-                rows, lanes = onetask.lanes(sig.column("minhash"))
+            if "minhash" in channels:
+                rows, lanes = onetask.lanes(tbl.column("minhash"))
                 cand = _gather(bucket_pairs(
-                    np.repeat(sig_code[rows], cfg.bands), [band_keys(lanes, cfg).ravel()],
+                    np.repeat(code[rows], cfg.bands),
+                    key_codes([band_keys(lanes, cfg).ravel()]),
                     cap, True, pair_budget), n, pair_budget)
-            if "simhash" in sig.column_names:
-                cand = np.union1d(cand, hamming_pairs(sig.column("simhash"), sig_code, k_sim))
-            row, vals = onetask.list_rows(sig.column("shingles"))
-            per_row = np.split(vals, np.searchsorted(row, np.arange(1, sig.num_rows)))
-            add(_verified(cand, n, sig_code, lambda ra, rb: jaccard(
+            if "simhash" in channels:
+                cand = np.union1d(cand, hamming_pairs(tbl.column("simhash"), k_sim))
+            row, vals = onetask.list_rows(tbl.column("shingles"))
+            per_row = np.split(vals, np.searchsorted(row, np.arange(1, tbl.num_rows)))
+            add(_verified(cand, n, code, lambda ra, rb: jaccard(
                 [per_row[r] for r in ra], [per_row[r] for r in rb]) >= cfg.jaccard_threshold))
-        if "_ph" in meta.column_names:
-            add(hamming_pairs(meta.column("_ph"), meta_code, k_ph))
-        if "fps" in sig.column_names:
-            row, fp = onetask.list_rows(sig.column("fps"))
-            fp_id = sig_code[row]
-            small = _gather(bucket_pairs(fp_id, [fp], fp_cap, False, pair_budget),
+        if "phash" in channels and "_ph" in tbl.column_names:
+            add(hamming_pairs(tbl.column("_ph"), k_ph))
+        if "substring" in channels and n:
+            row, fp = onetask.list_rows(tbl.column("fps"))
+            fp_id, fp_key = code[row], key_codes([fp])
+            small = _gather(bucket_pairs(fp_id, fp_key, fp_cap, False, pair_budget),
                             n, pair_budget)
-            big = oversized([fp], fp_cap)
+            big = oversized(fp_key, fp_cap)
             # refine_oversized: each caption row of an oversized member
             # id with the id's distinct oversized fingerprints
             order = np.argsort(fp_id[big], kind="stable")
             mid, mfp = fp_id[big][order], fp[big][order]
             ids, first = np.unique(mid, return_index=True)
             last = np.append(first[1:], len(mid))
-            rows = np.flatnonzero(np.isin(meta_code, ids))
-            g = np.searchsorted(ids, meta_code[rows])
+            rows = np.flatnonzero(np.isin(code, ids))
+            g = np.searchsorted(ids, code[rows])
             rid, rfp, rsub = refine_rows(
-                meta_code[rows], [np.unique(mfp[first[i]:last[i]]) for i in g],
+                code[rows], [np.unique(mfp[first[i]:last[i]]) for i in g],
                 [caps[r] for r in rows], cfg)
-            add(_gather(bucket_pairs(
-                np.asarray(rid, np.int64),
-                [np.asarray(rfp, np.int64), np.asarray(rsub, object)],
-                fp_cap, True, pair_budget), n, pair_budget))
-            add(_verified(small, n, meta_code, lambda ra, rb: lcs_keep(
+            add(_gather(bucket_pairs(rid, key_codes([rfp, rsub]), fp_cap, True,
+                                     pair_budget), n, pair_budget))
+            add(_verified(small, n, code, lambda ra, rb: lcs_keep(
                 [caps[r] for r in ra], [caps[r] for r in rb],
                 cfg.lcs_min_len, cfg.lowercase)))
 
         ea, eb = np.divmod(edges, n)
         nodes, labels = cc_labels(ea, eb)
-        if not string_ids:
-            return uid[ea], uid[eb], uid[nodes], uid[labels]
-        # name each component by the min original id of its rows (ranks
-        # of the sorted distinct ids); one label row per input row of an
-        # edge-touching node that has an original id
-        touch = np.flatnonzero(np.isin(meta_code, nodes))
-        rank, orig = pd.factorize(
-            meta.column("_orig").take(pa.array(touch)).to_numpy(zero_copy_only=False),
-            sort=True)
-        comp = np.searchsorted(nodes, labels[np.searchsorted(nodes, meta_code[touch])])
-        keep = rank >= 0
-        best = np.full(len(nodes), len(orig))
-        np.minimum.at(best, comp[keep], rank[keep])
-        return uid[ea], uid[eb], orig[rank[keep]], orig[best[comp[keep]]]
+        comp = np.arange(n)
+        comp[nodes] = labels
+        # the original ids, ranked (rank order is id order): a string id's
+        # own rank, an integral id's code
+        if string_ids:
+            rank, names = pd.factorize(
+                tbl.column("_orig").to_numpy(zero_copy_only=False), sort=True)
+        else:
+            rank, names = code, uid
+        # each component is named by the min rank of its rows
+        name = np.full(n, len(names))
+        np.minimum.at(name, comp[code], rank)
+        name = name[comp]
+        out = {_EDGE: {"a": uid[ea], "b": uid[eb]}}
+        if string_ids:
+            code_rank = np.full(n, len(names))
+            np.minimum.at(code_rank, code, rank)
+            ra, rb = code_rank[ea], code_rank[eb]
+            out[_EDGE].update(oa=names[np.minimum(ra, rb)], ob=names[np.maximum(ra, rb)])
+        rank_code = np.empty(len(names), np.int64)
+        rank_code[rank] = code
+        null_rows = nulls if string_ids else min(nulls, 1)
+
+        def with_nulls(values: np.ndarray) -> pa.Array:
+            return pa.concat_arrays([pa.array(values, label_type),
+                                     pa.nulls(null_rows, label_type)])
+
+        out[_ASSIGNMENT] = {"node": with_nulls(names),
+                            "comp": with_nulls(names[name[rank_code]])}
+        if min_id:
+            reps = np.flatnonzero(rank == name[code])
+            out[_REPRESENTATIVE] = {
+                "node": names[rank[reps]], "comp": names[rank[reps]],
+                **{c[1:]: tbl.column(c).take(reps).combine_chunks()
+                   for c in ("_cap", "_ph") if c in tbl.column_names}}
+        return out
 
     def kernel(it):
         batches = [b for b in it if b.num_rows]
@@ -444,16 +501,16 @@ def _graph_kernel(cfg: DedupConfig, string_ids: bool, schema: pa.Schema,
         tbl = pa.Table.from_batches(batches).combine_chunks()
         del batches
         try:
-            a, b, node, comp = edges_and_labels(tbl)
+            out = run(tbl)
         except onetask.OverBudget as e:
             yield onetask.record_batch({"bail": [str(e)]}, schema)
             return
-        for s in range(0, len(a), onetask.CHUNK):
-            yield onetask.record_batch(
-                {"a": a[s:s + onetask.CHUNK], "b": b[s:s + onetask.CHUNK]}, schema)
-        for s in range(0, len(node), onetask.CHUNK):
-            yield onetask.record_batch({"node": node[s:s + onetask.CHUNK],
-                                        "comp": comp[s:s + onetask.CHUNK]}, schema)
+        for kind, cols in out.items():
+            size = len(next(iter(cols.values())))
+            for s in range(0, size, onetask.CHUNK):
+                chunk = {k: v[s:s + onetask.CHUNK] for k, v in cols.items()}
+                chunk["kind"] = np.full(min(onetask.CHUNK, size - s), kind, np.int8)
+                yield onetask.record_batch(chunk, schema)
 
     return kernel
 
@@ -492,49 +549,45 @@ def _one_task_path(counts: dict, cfg: DedupConfig, id_type: T.DataType) -> str |
 
 
 def _one_task_graph(
-    sigs: DataFrame, counts: dict, meta: DataFrame, meta_i: DataFrame,
-    idmap: DataFrame | None, cfg: DedupConfig, id_col: str, caption_col: str,
-    phash_col: str | None, channels: tuple[str, ...], rep_strategy: str,
-    with_conflicts: bool,
-) -> dict[str, DataFrame] | None:
-    """The edges, assignments and representatives stages from one
-    coalesce(1).mapInArrow task over the signature checkpoint `sigs`
-    and the input rows (_graph_kernel), or None — logged either way —
-    when a gate sends the graph to its per-operator stages. Conflicts
-    band the Jaccard candidates, which only those stages keep."""
-    id_type = meta_i.schema[id_col].dataType
+    sigs: DataFrame, counts: dict, meta: DataFrame, cfg: DedupConfig, id_col: str,
+    caption_col: str, phash_col: str | None, channels: tuple[str, ...],
+    rep_strategy: str, with_conflicts: bool,
+) -> DedupResult | None:
+    """The DedupResult from one coalesce(1).mapInArrow task over the
+    signature checkpoint `sigs` alone (_graph_kernel), or None — logged
+    either way — when a gate sends the graph to its per-operator stages.
+    `sigs` carries, besides the signatures, the caption, the phash and,
+    for string ids, the original id (`_ORIG`) of every input row. The
+    task's output is checkpointed once, and every result frame but a
+    windowed (non-min_id) representatives is a projection of it.
+    Conflicts band the Jaccard candidates, which only the per-operator
+    stages keep."""
+    id_type = sigs.schema[id_col].dataType
     why = ("conflicts requested" if with_conflicts
            else _one_task_path(counts, cfg, id_type))
+    label_type = meta.schema[id_col].dataType
+    string_ids = isinstance(label_type, T.StringType)
     if why is None:
-        cols = [F.col(id_col).alias("_id"), F.lit(True).alias("_sig")]
-        if "minhash" in channels or "simhash" in channels:
-            cols.append("shingles")
-        if "minhash" in channels:
-            cols.append("minhash")
-        if "simhash" in channels:
-            cols.append("simhash")
-        if "substring" in channels:
-            cols.append("fps")
-        rows_i = ([_hashed_id(id_col).alias("_id"), F.col(id_col).alias("_orig")]
-                  if idmap is not None else [F.col(id_col).alias("_id")])
-        if "substring" in channels:
-            rows_i.append(F.col(caption_col).alias("_cap"))
-        if "phash" in channels and phash_col is not None:
-            rows_i.append(F.col(phash_col).alias("_ph"))
-        src = sigs.select(*cols).unionByName(meta.select(*rows_i),
-                                             allowMissingColumns=True)
-        label_type = meta.schema[id_col].dataType
-        schema = T.StructType([
-            T.StructField("a", id_type), T.StructField("b", id_type),
-            T.StructField("node", label_type), T.StructField("comp", label_type),
-            T.StructField("bail", T.StringType()),
-        ])
+        cols = [F.col(id_col).alias("_id"),
+                *(c for c in ("shingles", "minhash", "simhash", "fps") if c in sigs.columns),
+                F.col(caption_col).alias("_cap")]
+        fields = [T.StructField("kind", T.ByteType()),
+                  T.StructField("a", id_type), T.StructField("b", id_type)]
+        if string_ids:
+            cols.append(F.col(_ORIG).alias("_orig"))
+            fields += [T.StructField("oa", label_type), T.StructField("ob", label_type)]
+        fields += [T.StructField("node", label_type), T.StructField("comp", label_type),
+                   T.StructField("cap", T.StringType())]
+        if phash_col is not None:
+            cols.append(F.col(phash_col).alias("_ph"))
+            fields.append(T.StructField("ph", meta.schema[phash_col].dataType))
+        schema = T.StructType(fields + [T.StructField("bail", T.StringType())])
         kernel = _graph_kernel(
-            cfg, idmap is not None, to_arrow_schema(schema),
+            cfg, channels, string_ids, rep_strategy == "min_id", to_arrow_schema(schema),
             onetask.TASK_BYTES // (2 * lsh._PAIR_BYTES), components.LOCAL_MAX_EDGES,
             components.edge_bytes(T.LongType()), onetask.TASK_BYTES)
         obs = Observation()
-        out = (src.filter(F.col("_id").isNotNull()).coalesce(1)
+        out = (sigs.select(*cols).coalesce(1)
                .mapInArrow(kernel, schema)
                .observe(obs, F.max("bail").alias("bail"))
                .localCheckpoint(eager=True))
@@ -543,17 +596,28 @@ def _one_task_graph(
               "one-task path" if why is None else f"per-operator path ({why})")
     if why is not None:
         return None
-    edges = out.filter(F.col("a").isNotNull()).select("a", "b")
-    labels = out.filter(F.col("node").isNotNull()).select(
-        F.col("node").alias(id_col), F.col("comp").alias("component"))
-    nodes = meta.select(id_col)
-    if idmap is None:
-        nodes = nodes.distinct()  # connected_components' node set
-    assignments = nodes.join(F.broadcast(labels), id_col, "left").select(
-        id_col, F.coalesce("component", F.col(id_col)).alias("component"))
-    return {"edges": edges, "assignments": assignments,
-            "representatives": _representatives(assignments, meta, rep_strategy,
-                                                id_col, caption_col)}
+
+    def rows(kind: int, *cols: Column) -> DataFrame:
+        return out.filter(F.col("kind") == kind).select(*cols)
+
+    edges_i = rows(_EDGE, F.col("a"), F.col("b"))
+    assignments = rows(_ASSIGNMENT, F.col("node").alias(id_col),
+                       F.col("comp").alias("component"))
+    if rep_strategy == "min_id":
+        reps = rows(_REPRESENTATIVE, F.col("node").alias(id_col),
+                    F.col("comp").alias("component"), F.col("cap").alias(caption_col),
+                    *([F.col("ph").alias(phash_col)] if phash_col is not None else []))
+    else:
+        reps = _representatives(assignments, meta, rep_strategy, id_col, caption_col)
+    return DedupResult(
+        assignments=assignments,
+        representatives=reps,
+        edges=(rows(_EDGE, F.col("oa").alias("a"), F.col("ob").alias("b"))
+               if string_ids else edges_i),
+        conflicts=None,
+        stats=cluster_stats(assignments),
+        cached=edges_i,
+    )
 
 
 def run_dedup_graph(
@@ -572,10 +636,12 @@ def run_dedup_graph(
     stage's frame is `materialize(stage, compute)`, where compute()
     builds the stage from its dependencies' frames.
 
-    With `fuse`, the graph itself checkpoints the signatures (observing
-    the counts the one-task paths are decided on) and tries the one-task
-    graph (_one_task_graph); when it runs, its edges, assignments and
-    representatives replace those stages.
+    With `fuse`, the signature pass also carries the caption, the phash
+    and, for string ids, the original id of every row (with_signatures'
+    `keep`); the graph itself checkpoints the signatures (observing the
+    counts the one-task paths are decided on) and tries the one-task
+    graph (_one_task_graph), whose DedupResult, when it runs, is the
+    result.
 
     Contract: assignments and representatives do not depend on the id
     mapping — components are labeled by their min ORIGINAL id. `edges`
@@ -597,18 +663,25 @@ def run_dedup_graph(
     # drops it for either id type.
     if isinstance(meta.schema[id_col].dataType, T.StringType):
         meta_i = meta.withColumn(id_col, _hashed_id(id_col))
-        idmap = meta.select(id_col, _hashed_id(id_col).alias("__iid"))
+        idmap = meta.select(id_col, _hashed_id(id_col).alias("__iid")).distinct()
     else:
         meta_i, idmap = meta, None
 
     rep_strategy = rep_strategy or cfg.rep_strategy
     cap_obs = Observation()
-    sig_src = (meta_i.observe(cap_obs, F.sum(F.octet_length(caption_col)).alias("bytes"))
-               if fuse else None)
+    sig_src, keep = None, ()
+    if fuse:
+        sig_src, keep = meta_i, tuple(cols[1:])
+        if idmap is not None:
+            sig_src = meta.withColumn(_ORIG, F.col(id_col)).withColumn(
+                id_col, _hashed_id(id_col))
+            keep += (_ORIG,)
+        sig_src = sig_src.observe(
+            cap_obs, F.sum(F.octet_length(caption_col)).alias("bytes"))
     out: dict[str, DataFrame] = {}
     for stage in dedup_stages(
         meta, meta_i, idmap, cfg, id_col, caption_col, phash_col, channels,
-        rep_strategy, sig_src,
+        rep_strategy, sig_src, keep,
     ):
         out[stage.name] = materialize(
             stage, lambda s=stage: s.fn(*(out[d] for d in s.deps))
@@ -617,11 +690,10 @@ def run_dedup_graph(
             out["signatures"], counts = _signature_checkpoint(out["signatures"], id_col)
             counts["caption_bytes"] = cap_obs.get["bytes"] or 0
             fused = _one_task_graph(
-                out["signatures"], counts, meta, meta_i, idmap, cfg, id_col,
-                caption_col, phash_col, channels, rep_strategy, with_conflicts)
+                out["signatures"], counts, meta, cfg, id_col, caption_col,
+                phash_col, channels, rep_strategy, with_conflicts)
             if fused is not None:
-                out.update(fused)
-                break
+                return fused
 
     edges_i, assignments = out["edges"], out["assignments"]
     conflicts = None

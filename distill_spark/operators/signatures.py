@@ -1,6 +1,6 @@
 """One-pass vectorized signature computation (Arrow-batched numpy).
 
-Computes per caption, in a single mapInPandas pass with shared
+Computes per caption, in a single mapInArrow pass with shared
 tokenization: token hashes, shingle-set hashes, the num_perm MinHash
 signature, and the 64-bit SimHash — entirely map-side, NO shuffle.
 This replaces the explode -> groupBy(id).agg(128 x min) formulation:
@@ -38,9 +38,10 @@ import re
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import DedupConfig, DEFAULT
 from .minhash import permutation_params, _P
@@ -120,17 +121,36 @@ def _short_shingle(tok_h: np.ndarray) -> np.uint64:
     return np.uint64(h)
 
 
+def _list_array(counts: np.ndarray, values: np.ndarray,
+                null: np.ndarray | None = None) -> pa.Array:
+    """A list column of `counts[i]` consecutive `values` per row (null
+    where `null`)."""
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(values),
+        mask=None if null is None else pa.array(null))
+
+
 def with_signatures(
     df: DataFrame,
     caption_col: str = "caption",
     id_col: str = "image_id",
     cfg: DedupConfig = DEFAULT,
     parts: tuple[str, ...] = ("shingles", "minhash", "simhash"),
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, caption, ...) -> (id, [shingles], [minhash], [simhash]).
+    """(id, caption, ...) -> (id, [shingles], [minhash], [simhash],
+    [fps], *keep): one row per input row.
 
     Rows whose caption yields no tokens get empty shingles / null
     signatures (they can only be exact-dups, handled elsewhere).
+    `keep` names further columns of `df` that ride the same pass
+    unchanged, after the signature columns, so one frame can carry
+    both (the one-task dedup graph reads its whole input this way).
+    The pass is a mapInArrow: the id and the kept columns go back to
+    the JVM as the Arrow arrays they arrived as, so a nullable bigint
+    keeps every bit (pandas would read it as float64).
     """
     a_arr, b_arr = permutation_params(cfg)
     A = np.array(a_arr, dtype=np.uint64)
@@ -161,7 +181,9 @@ def with_signatures(
         fields.append(T.StructField("simhash", T.LongType()))
     if want_fp:
         fields.append(T.StructField("fps", T.ArrayType(T.LongType())))
+    fields += [df.schema[c] for c in keep]
     schema = T.StructType(fields)
+    arrow_schema = to_arrow_schema(schema)
 
     # fast tokenizer: one C-level regex pass over the whole batch joined
     # with '\x01' (itself a separator under the default split pattern).
@@ -197,12 +219,12 @@ def with_signatures(
             counts[i] = len(ts)
         return toks, counts
 
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batch(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         bit_idx = np.arange(bits, dtype=np.uint64)
         two_pow = (np.uint64(1) << bit_idx).astype(np.uint64)
-        for pdf in it:
-            n = len(pdf)
-            caps = [(c or "") for c in pdf[caption_col]]
+        for rb in it:
+            n = rb.num_rows
+            caps = [(c or "") for c in rb.column(caption_col).to_pylist()]
             if lower:
                 caps = [c.lower() for c in caps]
             tokens, nt = _tokenize_batch(caps)
@@ -271,20 +293,15 @@ def with_signatures(
                         full[a0:a1] = sh_flat[src:src + cnt]
                         src += cnt
                 sh_flat = full
-            out: dict[str, list] = {id_col: list(pdf[id_col])}
+            # every list column is built from its flat values and per-row
+            # offsets; no per-row Python list is made
+            out: dict[str, pa.Array] = {}
 
             if want_sh:
-                shs: list = []
-                for i in range(n):
-                    shs.append(
-                        sh_flat[seg_starts[i]:seg_starts[i + 1]]
-                        .astype(np.int64)
-                        .tolist()
-                    )
-                out["shingles"] = shs
+                out["shingles"] = _list_array(seg_counts, sh_flat.astype(np.int64))
 
             if want_mh:
-                mhs: list = [None] * n
+                mh_parts: list = []
                 nonempty = np.flatnonzero(seg_counts > 0)
                 # chunk caption groups so (num_perm x chunk) stays cache-sized
                 gi = 0
@@ -312,13 +329,16 @@ def with_signatures(
                         out_lanes = mins.astype(np.uint32).view(np.int32)
                     else:
                         out_lanes = mins.astype(np.int64)
-                    for col, i in enumerate(grp):
-                        mhs[int(i)] = out_lanes[:, col].tolist()
+                    mh_parts.append(out_lanes.T.ravel())
                     gi = gj
-                out["minhash"] = mhs
+                out["minhash"] = _list_array(
+                    np.where(seg_counts > 0, len(A), 0),
+                    np.concatenate(mh_parts) if mh_parts
+                    else np.empty(0, np.int32 if lane32 else np.int64),
+                    null=seg_counts == 0)
 
             if want_sim:
-                sims: list = [None] * n
+                sims = np.zeros(n, dtype=np.int64)
                 has_tok = np.flatnonzero(nt > 0)
                 if len(th_all) and has_tok.size:
                     # bit matrix via unpackbits on the little-endian byte
@@ -339,13 +359,8 @@ def with_signatures(
                     sums = 2 * ones.astype(np.int64) - nt[has_tok][:, None]
                     bitsv = (sums > 0).astype(np.uint64)
                     packed = (bitsv * two_pow[None, :]).sum(axis=1)
-                    packed64 = packed.astype(np.int64)
-                    for row, i in enumerate(has_tok):
-                        sims[int(i)] = int(packed64[row])
-                # nullable Int64, NOT a plain list: pandas would coerce
-                # int+None to float64 and silently destroy low bits of
-                # values above 2^53
-                out["simhash"] = pd.array(sims, dtype="Int64")
+                    sims[has_tok] = packed.astype(np.int64)
+                out["simhash"] = pa.array(sims, mask=nt == 0)
 
             if want_fp:
                 # winnowing fingerprints, batch-segmented over the same
@@ -357,8 +372,8 @@ def with_signatures(
                 # every Python stage pays the JVM->Python boundary; the
                 # substring channel's fingerprints ride the one
                 # signature pass instead of paying their own)
-                empty_i = np.empty(0, dtype=np.int64)
-                fpl: list = [empty_i] * n
+                fp_counts = np.zeros(n, dtype=np.int64)
+                sel_val = np.empty(0, dtype=np.int64)
                 enc = [c.encode("utf-8") for c in caps]
                 ok_doc = np.array(
                     [len(c) >= LW and len(e) >= KW + WW - 1
@@ -400,20 +415,17 @@ def with_signatures(
                     m_owner = np.repeat(np.arange(len(lens)), n_w)
                     order = np.lexsort((minc, m_owner))
                     ms, mo = minc[order], m_owner[order]
-                    keep = np.ones(len(ms), dtype=bool)
-                    keep[1:] = (ms[1:] != ms[:-1]) | (mo[1:] != mo[:-1])
-                    sel_val = ms[keep].astype(np.int64)
-                    sel_own = mo[keep]
-                    bounds = np.zeros(len(lens) + 1, dtype=np.int64)
-                    bounds[1:] = np.cumsum(np.bincount(sel_own,
-                                                       minlength=len(lens)))
-                    for seg, orig in enumerate(keep_idx):
-                        fpl[int(orig)] = sel_val[bounds[seg]:bounds[seg + 1]]
-                out["fps"] = fpl
+                    first = np.ones(len(ms), dtype=bool)
+                    first[1:] = (ms[1:] != ms[:-1]) | (mo[1:] != mo[:-1])
+                    sel_val = ms[first].astype(np.int64)
+                    fp_counts[keep_idx] = np.bincount(mo[first], minlength=len(lens))
+                out["fps"] = _list_array(fp_counts, sel_val)
 
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(f.name) if f.name not in out else out[f.name]
+                 for f in arrow_schema], schema=arrow_schema)
 
-    src = df.select(id_col, caption_col)
+    src = df.select(id_col, caption_col, *(c for c in keep if c != caption_col))
     # scan-parallelism floor (guide §2.5 input skew / §6 split sizing):
     # this is the pipeline's heaviest Python stage, and its parallelism
     # is otherwise capped by the input's split count — a table with few
@@ -425,4 +437,4 @@ def with_signatures(
     n_par = src.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < n_par:
         src = src.repartition(n_par, id_col)
-    return src.mapInPandas(batch, schema=schema)
+    return src.mapInArrow(batch, schema=schema)

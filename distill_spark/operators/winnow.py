@@ -78,58 +78,66 @@ def with_fingerprints(
 
 
 def refine_rows(ids: Sequence, fps: Sequence, captions: Sequence,
-                cfg: DedupConfig = DEFAULT) -> tuple[list, list, list]:
+                cfg: DedupConfig = DEFAULT) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Per row (id, oversized fingerprints, caption): every distinct
     (fingerprint, L-char window) of the caption whose window fully
     contains an occurrence of a k-gram hashing to the fingerprint, as
-    (ids, fingerprints, windows) lists — refine_oversized's rows."""
+    (ids, int64 fingerprints, window strings) arrays in row order, then
+    occurrence order, then window start — refine_oversized's rows.
+
+    Vectorized across rows: one k-gram hash pass over all captions'
+    utf-8 bytes, one membership test of every k-gram against its own
+    row's fingerprints, and the window starts of every occurrence
+    expanded in numpy. Only the distinct windows are sliced, from the
+    joined captions."""
     K, L, lower = cfg.winnow_kgram, cfg.lcs_min_len, cfg.lowercase
-    B = np.uint64(1099511628211)
-    pwK = B ** np.arange(K - 1, -1, -1, dtype=np.uint64)
-    oids: list = []
-    ofps: list = []
-    osub: list = []
-    for rid, row_fps, cap in zip(ids, fps, captions):
-        s = cap or ""
-        if lower:
-            s = s.lower()
-        b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-        if len(b) < K:
-            continue
-        # one k-gram hash pass per caption, shared by all its fps
-        gh = (
-            np.lib.stride_tricks.sliding_window_view(b, K).astype(np.uint64)
-            * pwK
-        ).sum(axis=1)
-        noncont = (b & 0xC0) != 0x80
-        charidx = np.cumsum(noncont) - 1  # char index of each byte
-        nchars = int(charidx[-1]) + 1
-        if nchars < L:
-            continue
-        # all occurrence positions of ANY of this doc's oversized
-        # fingerprints in one vectorized membership test
-        fps_u = np.array(
-            [int(f) & 0xFFFFFFFFFFFFFFFF for f in row_fps], dtype=np.uint64
-        )
-        pos_all = np.flatnonzero(np.isin(gh, fps_u))
-        if len(pos_all) == 0:
-            continue
-        seen: set = set()
-        for p in pos_all:
-            fp = int(gh[p].astype(np.int64))
-            c0 = int(charidx[p])
-            c1 = int(charidx[p + K - 1])
-            lo = max(0, c1 - L + 1)
-            hi = min(c0, nchars - L)
-            for st in range(lo, hi + 1):
-                w = s[st : st + L]
-                if (fp, w) in seen:
-                    continue
-                seen.add((fp, w))
-                oids.append(rid)
-                ofps.append(fp)
-                osub.append(w)
-    return oids, ofps, osub
+    caps = [(c or "").lower() if lower else (c or "") for c in captions]
+    enc = [c.encode("utf-8") for c in caps]
+    n = len(caps)
+    lens = np.fromiter(map(len, enc), np.int64, n)
+    n_g = np.maximum(lens - K + 1, 0)  # k-grams per row
+    n_fp = np.fromiter(map(len, fps), np.int64, n)
+    if not n_g.sum() or not n_fp.sum():
+        return np.asarray(ids)[:0], np.empty(0, np.int64), np.empty(0, object)
+    b = np.frombuffer(b"".join(enc), dtype=np.uint8)
+    pwK = np.uint64(1099511628211) ** np.arange(K - 1, -1, -1, dtype=np.uint64)
+    gh_all = (np.lib.stride_tricks.sliding_window_view(b, K).astype(np.uint64)
+              * pwK).sum(axis=1)
+    b_start = np.cumsum(lens) - lens
+    row = np.repeat(np.arange(n), n_g)
+    g = np.repeat(b_start, n_g) + np.arange(len(row)) - np.repeat(np.cumsum(n_g) - n_g, n_g)
+    gh = gh_all[g]  # the k-grams inside each row, by global byte position
+    # every k-gram that hashes to one of its own row's fingerprints
+    fp_u = np.concatenate([np.asarray(f, np.int64) for f in fps]).view(np.uint64)
+    ufp = np.unique(fp_u)
+    f_idx = np.minimum(np.searchsorted(ufp, gh), len(ufp) - 1)
+    known = ufp[f_idx] == gh
+    hit = np.flatnonzero(known)[np.isin(
+        row[known] * len(ufp) + f_idx[known],
+        np.repeat(np.arange(n), n_fp) * len(ufp) + np.searchsorted(ufp, fp_u))]
+    if not len(hit):
+        return np.asarray(ids)[:0], np.empty(0, np.int64), np.empty(0, object)
+    # char index of every byte (captions start on char boundaries), and
+    # the L-char windows [lo, hi] of each occurrence's row containing it
+    char_of = np.cumsum((b & 0xC0) != 0x80) - 1
+    n_chars = np.fromiter(map(len, caps), np.int64, n)
+    c_start = np.cumsum(n_chars) - n_chars
+    r = row[hit]
+    c0 = char_of[g[hit]] - c_start[r]
+    c1 = char_of[g[hit] + K - 1] - c_start[r]
+    lo = np.maximum(c1 - L + 1, 0)
+    cnt = np.maximum(np.minimum(c0, n_chars[r] - L) - lo + 1, 0)
+    h = np.repeat(np.arange(len(hit)), cnt)
+    start = c_start[r][h] + np.repeat(lo, cnt) + np.arange(len(h)) - np.repeat(
+        np.cumsum(cnt) - cnt, cnt)  # window start in the joined captions
+    # each distinct window sliced once; equal strings get one code
+    wins, w_inv = np.unique(start, return_inverse=True)
+    joined = "".join(caps)
+    w_code, w_str = pd.factorize(np.array([joined[s:s + L] for s in wins], dtype=object))
+    w_code = w_code[w_inv]
+    keep = ~pd.DataFrame({"r": r[h], "f": f_idx[hit][h], "w": w_code}).duplicated().to_numpy()
+    return (np.asarray(ids)[r[h][keep]], gh[hit][h][keep].view(np.int64),
+            np.asarray(w_str, dtype=object)[w_code[keep]])
 
 
 def refine_oversized(

@@ -7,7 +7,9 @@ benchmark cannot resolve. The units, each run once warm on a fixed
 planted table of 2,000 rows:
 
   * dedupe(), assignments.toPandas() and representatives.count() (the
-    planted benchmark's unit), on the one-task graph;
+    planted benchmark's unit), on the one-task graph, and on the
+    per-operator stages (`lsh.LOCAL_MAX_ROWS` = 0), which no declared
+    benchmark workload runs;
   * one incremental_dedupe_batch against a state holding an earlier
     batch (the ingest benchmark's unit): the signature checkpoint, the
     one-task probe and the publish;
@@ -23,10 +25,11 @@ from pyspark.sql import functions as F
 
 from distill_spark.datagen import generate_images
 from distill_spark.memory import MemoryStore
-from distill_spark.operators import dedupe
+from distill_spark.operators import dedupe, lsh
 from distill_spark.streaming.ingest import DedupeState, incremental_dedupe_batch
 
-MAX_JOBS = 8
+MAX_JOBS = 4
+MAX_PER_OPERATOR_JOBS = 38
 MAX_INGEST_JOBS = 6
 MAX_STORE_JOBS = 9
 
@@ -57,17 +60,28 @@ def _thirds(df):
     return [df.filter(part == i) for i in range(3)]
 
 
-def test_warm_dedupe_unit_job_ceiling(spark, planted):
+def _warm_dedupe_unit_jobs(sc, df, group: str) -> int:
     def unit():
-        res = dedupe(planted)
+        res = dedupe(df)
         res.assignments.toPandas()
         res.representatives.count()
         res.unpersist()
 
-    sc = spark.sparkContext
-    _jobs(sc, "fixed-cost:warm", unit)
-    jobs = _jobs(sc, "fixed-cost:unit", unit)
+    _jobs(sc, f"{group}-warm", unit)
+    return _jobs(sc, group, unit)
+
+
+def test_warm_dedupe_unit_job_ceiling(spark, planted):
+    jobs = _warm_dedupe_unit_jobs(spark.sparkContext, planted, "fixed-cost:unit")
     assert jobs <= MAX_JOBS, f"a warm dedupe() unit ran {jobs} jobs (ceiling {MAX_JOBS})"
+
+
+def test_warm_per_operator_dedupe_unit_job_ceiling(spark, planted, monkeypatch):
+    monkeypatch.setattr(lsh, "LOCAL_MAX_ROWS", 0)
+    jobs = _warm_dedupe_unit_jobs(spark.sparkContext, planted, "fixed-cost:per-op")
+    assert jobs <= MAX_PER_OPERATOR_JOBS, (
+        f"a warm per-operator dedupe() unit ran {jobs} jobs "
+        f"(ceiling {MAX_PER_OPERATOR_JOBS})")
 
 
 def test_warm_ingest_batch_job_ceiling(spark, planted, tmp_path):

@@ -1,5 +1,6 @@
 """Path parity of dedupe(): the one-task graph against the per-operator
-stages, and the numpy Jaccard against the JVM one.
+stages and against dedupe_checkpointed(), and the numpy Jaccard against
+the JVM one.
 
 The one-task graph folds candidates, verification and connected
 components into one numpy task; the per-operator path runs each
@@ -10,12 +11,14 @@ sub-shingle captions; shared substrings of exactly L-1 and L chars;
 non-ASCII text; phash pairs at distance k and k+1; repeated ids;
 all-equal rows; a caption pair at Jaccard exactly 0.70) and runs each
 at tiny bucket caps, so the star, overflow and refine paths all run.
-A row cap of 0 (`lsh.LOCAL_MAX_ROWS`) forces the per-operator path.
+A row cap of 0 (`lsh.LOCAL_MAX_ROWS`) forces the per-operator path;
+dedupe_checkpointed() never takes the one-task graph.
 """
 
 import logging
 import random
 import string
+import tempfile
 from collections import Counter
 
 import numpy as np
@@ -24,6 +27,7 @@ from hypothesis import HealthCheck, Phase, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from distill_spark.checkpoint import CheckpointStore, dedupe_checkpointed
 from distill_spark.config import DedupConfig
 from distill_spark.operators import components, dedupe, lsh
 from distill_spark.operators.verify import jaccard, jaccard_col
@@ -113,6 +117,16 @@ class _Lines(logging.Handler):
         self.lines.append(record.getMessage())
 
 
+def _outputs(res):
+    """(edges, assignments, representatives) of a DedupResult as
+    multisets."""
+    try:
+        return tuple(Counter(tuple(r) for r in frame.collect())
+                     for frame in (res.cached, res.assignments, res.representatives))
+    finally:
+        res.unpersist()
+
+
 def _run(df):
     """(dedupe() outputs as multisets, the dedup graph log line)."""
     log = logging.getLogger("distill_spark")
@@ -120,10 +134,7 @@ def _run(df):
     log.addHandler(lines)
     log.setLevel(logging.DEBUG)
     try:
-        res = dedupe(df, CFG)
-        out = tuple(Counter(tuple(r) for r in frame.collect())
-                    for frame in (res.cached, res.assignments, res.representatives))
-        res.unpersist()
+        out = _outputs(dedupe(df, CFG))
     finally:
         log.removeHandler(lines)
         log.setLevel(level)
@@ -139,6 +150,9 @@ def _run(df):
           suppress_health_check=list(HealthCheck))
 @given(tables())
 def test_one_task_graph_matches_per_operator_path(spark, table):
+    """On each table, the one-task graph equals the per-operator path on
+    edges, assignments and representatives, and dedupe_checkpointed()
+    on assignments and representatives."""
     rows, string_ids = table
     id_type = "string" if string_ids else "bigint"
     df = spark.createDataFrame(rows, f"image_id {id_type}, caption string, phash bigint")
@@ -153,6 +167,30 @@ def test_one_task_graph_matches_per_operator_path(spark, table):
     assert "-> per-operator path (band rows over cap)" in line, line
     for what, got, want in zip(("edges", "assignments", "representatives"), fused, per_op):
         assert got == want, f"{what} differ between the paths"
+    with tempfile.TemporaryDirectory() as d:
+        staged = _outputs(dedupe_checkpointed(df, CheckpointStore(d, spark), CFG))
+    for what, got, want in zip(("assignments", "representatives"), fused[1:], staged[1:]):
+        assert got == want, f"{what} differ between dedupe() and dedupe_checkpointed()"
+
+
+@pytest.mark.parametrize("path", ["one-task", "per-operator"])
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_repeated_id_is_assigned_once(spark, monkeypatch, path, id_type):
+    """An id that repeats gets one assignment row, on either path and for
+    either id type; representatives(min_id) keep every input row of the
+    component's name."""
+    cap = "amber basil cedar delta ember fjord grove haze"
+    ids = ["a", "a", "b", "c"] if id_type == "string" else [1, 1, 2, 3]
+    rows = [(i, cap, n) for n, i in enumerate(ids)]
+    if path == "per-operator":
+        monkeypatch.setattr(lsh, "LOCAL_MAX_ROWS", 0)
+    df = spark.createDataFrame(rows, f"image_id {id_type}, caption string, phash bigint")
+    (_, assignments, reps), line = _run(df)
+    assert line.endswith(f"-> {path} path" if path == "one-task"
+                         else "-> per-operator path (band rows over cap)"), line
+    name = ids[0]
+    assert assignments == Counter({(i, name): 1 for i in ids})
+    assert reps == Counter({(name, name, cap, 0): 1, (name, name, cap, 1): 1})
 
 
 def test_graph_falls_back_when_edges_exceed_cap(spark, monkeypatch):
