@@ -212,9 +212,11 @@ def dedupe_checkpointed(
         sort_keys=True, default=str,
     ) + f"|channels={sorted(channels)}|data={data_sig or input_signature(images)}"
 
-    def on_disk(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
-        return store.run_stage(stage.name, compute, config_sig=csig,
-                               deps=list(stage.deps))
+    def on_disk(stage: Stage, compute: Callable[[], DataFrame],
+                eager: bool) -> tuple[DataFrame, int]:
+        df = store.run_stage(stage.name, compute, config_sig=csig,
+                             deps=list(stage.deps))
+        return df, store.ledger[stage.name]["rows"]
 
     return run_dedup_graph(images, cfg, on_disk, id_col, caption_col,
                            phash_col, channels)

@@ -72,10 +72,11 @@ class DedupConfig:
 
     # --- connected components ---
     cc_max_iters: int = 50
-    cc_reliable_checkpoint: bool = False  # True: per-iteration frontier goes
-                                   # through reliable checkpoint() (survives
-                                   # executor loss on a real cluster) instead
-                                   # of localCheckpoint(); needs checkpoint_dir
+    cc_reliable_checkpoint: bool = False  # True: every eager materialization
+                                   # of the dedup engine (onetask.observed),
+                                   # not only CC's, is a reliable checkpoint()
+                                   # (survives executor loss on a real
+                                   # cluster); needs checkpoint_dir
     checkpoint_dir: str | None = None  # HDFS/S3 dir for reliable checkpoints
 
     extra: dict = field(default_factory=dict)

@@ -250,7 +250,7 @@ class MemoryStore:
 
         sig_new, counts = onetask.observed(with_signatures(
             entries.select("id", "text"), "text", "id", self.cfg,
-            parts=("shingles", "minhash")))
+            parts=("shingles", "minhash")), self.cfg)
         # materialize the edges NOW (store path not yet mutated): one
         # probe at the conflict floor serves dups and conflicts; the
         # table's row count bounds the live rows

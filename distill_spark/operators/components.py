@@ -9,17 +9,16 @@ algorithm: iterative hash-min label propagation with pointer jumping
 rounds). Deterministic: component id = min member id (total order on
 string ids).
 
-Per-iteration checkpointing cuts lineage (SURVEY.md §7.3 risk (b):
-CC lineage blowup) and materializes the frontier. Default is
-localCheckpoint() (executor-local blocks — fastest, but an executor
-loss on a real cluster kills the truncated lineage); set
-cfg.cc_reliable_checkpoint=True (+ cfg.checkpoint_dir) for reliable
-checkpoint() to HDFS/S3 on cluster runs. The convergence probe
-is folded into the SAME job via df.observe() (a CollectMetrics node
-evaluated during the checkpoint action), so each iteration costs ONE
-job instead of checkpoint + count — the iteration count is the serial
-floor of the whole pipeline, and halving the per-iteration job count
-directly buys scaling efficiency at high parallelism.
+Every frame CC materializes (the local label table, the loop's edges,
+initial labels and each iteration's labels) goes through
+onetask.observed, whose checkpoint cuts the lineage (SURVEY.md §7.3
+risk (b): CC lineage blowup). The convergence probe is an aggregate of
+the SAME job (a CollectMetrics node evaluated during the checkpoint
+action), so each iteration costs ONE job instead of checkpoint + count —
+the iteration count is the serial floor of the whole pipeline. A loop
+that reaches cfg.cc_max_iters with labels still changing raises. A
+caller that has materialized the edges passes their row count and CC
+takes them as given. Nothing is persisted.
 """
 
 from __future__ import annotations
@@ -29,7 +28,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -84,22 +83,12 @@ def cc_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def _cc_local_labels(
     edges: DataFrame, id_col: str, out_col: str
 ) -> DataFrame:
-    """Single-task CC over a small edge set (<= LOCAL_MAX_EDGES edges
-    whose estimated working set, _CC_IDS_PER_EDGE id slots per edge,
-    fits one task: onetask.one_task).
-
-    The distributed hash-min loop costs ~4 shuffle stages + one driver
-    round-trip PER ITERATION regardless of graph size — on a dup graph
-    of a few hundred thousand edges that fixed cost dominates the whole
-    clustering phase (measured at sf0.1: ~8-14 s of a ~36 s pipeline
-    for 122k edges). Below the edge cap the graph fits comfortably in
-    one task (~96 B/edge with int64 ids), so we fold the
-    whole fixpoint into ONE stage: a mapInPandas kernel running
-    cc_labels in numpy.
-    Output is IDENTICAL to the loop: (node, min id of its component)
-    for every edge-touching node. No collect — the kernel runs in an
-    executor task, and the label table it returns is
-    O(edge-touching nodes)."""
+    """Single-task CC: cc_labels in ONE mapInPandas task, for an edge set
+    that passed the one-task gate (LOCAL_MAX_EDGES), instead of the
+    loop's ~4 shuffle stages + driver round-trip per iteration (at sf0.1
+    that fixed cost was ~8-14 s of a ~36 s pipeline for 122k edges).
+    Output is IDENTICAL to the loop: (node, min id of its component) for
+    every edge-touching node, computed in an executor task (no collect)."""
     out_type = edges.schema["a"].dataType.simpleString()
     schema = f"{id_col} {out_type}, {out_col} {out_type}"
 
@@ -114,7 +103,7 @@ def _cc_local_labels(
         nodes, labels = cc_labels(np.concatenate(a_parts), np.concatenate(b_parts))
         yield pd.DataFrame({id_col: nodes, out_col: labels})
 
-    return edges.select("a", "b").coalesce(1).mapInPandas(kernel, schema=schema)
+    return edges.coalesce(1).mapInPandas(kernel, schema=schema)
 
 
 def _without_size_estimate(df: DataFrame) -> DataFrame:
@@ -134,44 +123,32 @@ def connected_components(
     id_col: str = "image_id",
     out_col: str = "component",
     cfg: DedupConfig = DEFAULT,
+    rows: int | None = None,
 ) -> DataFrame:
     """edges(a, b) [+ optional nodes(id_col) incl. singletons]
     -> (id_col, out_col) where out_col = min id of the component.
 
     Scale-adaptive (guide §1.2 "the distributed algorithm" + §2.4
-    "remove shuffles outright"): the edge count, observed while the
-    edges are checkpointed, picks the execution shape at runtime —
-    small graphs (<= LOCAL_MAX_EDGES, and within the one-task memory
-    budget at the id column's width) run the exact same min-label
-    fixpoint in ONE task (_cc_local_labels), large graphs run the
-    iterative distributed loop below. Both are deterministic and
-    produce identical labels.
+    "remove shuffles outright"): the edge count picks the execution
+    shape at runtime — small graphs (<= LOCAL_MAX_EDGES, and within the
+    one-task memory budget at the id column's width) run the exact same
+    min-label fixpoint in ONE task (_cc_local_labels), large graphs run
+    the iterative distributed loop below. Both are deterministic and
+    produce identical labels. `rows` is the count of an `edges` frame
+    the caller has materialized; without it CC checkpoints and counts
+    the edges itself.
     """
-    if cfg.cc_reliable_checkpoint:
-        sc = edges.sparkSession.sparkContext
-        if cfg.checkpoint_dir:
-            sc.setCheckpointDir(cfg.checkpoint_dir)
-        elif sc.getCheckpointDir() is None:
-            raise ValueError(
-                "cc_reliable_checkpoint=True needs cfg.checkpoint_dir "
-                "(or a SparkContext checkpoint dir) — reliable checkpoints "
-                "write to HDFS/S3, there is no default location"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    edges, n = observed(edges.select("a", "b"))
-    if one_task("connected_components", n["rows"], "edges", LOCAL_MAX_EDGES,
+    edges = edges.select("a", "b")
+    if rows is None:
+        edges, n = observed(edges, cfg)
+        rows = n["rows"]
+    if one_task("connected_components", rows, "edges", LOCAL_MAX_EDGES,
                 edge_bytes(edges.schema["a"].dataType)):
         # one stage instead of ~4 shuffles x iterations; the label
         # table is consumed several times downstream, so cut its
-        # (single-task) lineage eagerly — through the reliable
-        # checkpoint when the caller configured one
-        result, iters = _ckpt(_cc_local_labels(edges, id_col, out_col)), 0
+        # (single-task) lineage eagerly
+        result, _ = observed(_cc_local_labels(edges, id_col, out_col), cfg)
+        iters = 0
     else:
         sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
             edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -182,11 +159,15 @@ def connected_components(
         # to the duplicate population, not the corpus
         edge_nodes = sym.select(F.col("u").alias("node")).distinct()
 
-        labels = _ckpt(edge_nodes.withColumn("label", F.col("node")))
-        sym = _ckpt(sym)
+        labels, _ = observed(edge_nodes.withColumn("label", F.col("node")), cfg)
+        sym, _ = observed(sym, cfg)
 
-        iters = 0
-        for _ in range(cfg.cc_max_iters):
+        iters, changed = 0, None
+        while changed != 0:
+            if iters == cfg.cc_max_iters:
+                raise RuntimeError(
+                    f"connected_components: {changed} labels still changing "
+                    f"after cc_max_iters={cfg.cc_max_iters} iterations")
             iters += 1
             # hash-min: candidate label for v = min label among neighbors
             nbr = (
@@ -209,30 +190,15 @@ def connected_components(
             parents = stepped.select(
                 F.col("node").alias("plabel_node"), F.col("label").alias("plabel")
             )
-            jumped = (
-                stepped.join(
-                    parents, stepped["label"] == parents["plabel_node"], "left"
-                )
-                .select(
-                    "node",
-                    "old_label",
-                    F.least(F.col("label"), F.coalesce("plabel", F.col("label"))).alias(
-                        "label"
-                    ),
-                )
-            )
+            label = F.least(F.col("label"), F.coalesce("plabel", F.col("label")))
+            jumped = stepped.join(
+                parents, stepped["label"] == parents["plabel_node"], "left"
+            ).select("node", label.alias("label"),
+                     (label != F.col("old_label")).alias("moved"))
             # convergence metric rides the checkpoint job (no separate count)
-            obs = Observation()
-            jumped = jumped.observe(
-                obs,
-                F.sum((F.col("label") != F.col("old_label")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-            labels = _without_size_estimate(_ckpt(jumped.select("node", "label")))
-            changed = obs.get.get("changed") or 0
-            if changed == 0:
-                break
+            labels, n = observed(jumped, cfg, changed=F.sum(F.col("moved").cast("long")))
+            labels = _without_size_estimate(labels.select("node", "label"))
+            changed = n["changed"] or 0
         result = labels.select(F.col("node").alias(id_col),
                                F.col("label").alias(out_col))
     # observability for scale probes: how many hash-min+jump rounds

@@ -39,8 +39,8 @@ Two execution paths, picked at runtime by ONE count of the non-null
     sort by block key and scan equal-key runs (ball_pairs). Two
     Spark stages per call: the observed checkpoint and the kernel.
   * DISTRIBUTED (above the cap): the same recursion as per-level Spark
-    window exchanges, each level an eager localCheckpoint, plus a
-    terminal self-join (_refined_value_pairs).
+    window exchanges, each level an eager checkpoint (onetask.observed),
+    plus a terminal self-join (_refined_value_pairs).
 
 Both return the same exact pair set.
 
@@ -123,12 +123,12 @@ def _block_bounds(bits: int, n_blocks: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def _refined_value_pairs(vals: DataFrame, k: int, cap: int,
-                         max_levels: int) -> DataFrame:
+def _refined_value_pairs(vals: DataFrame, k: int, max_levels: int,
+                         cfg: DedupConfig) -> DataFrame:
     """vals(val: long, distinct) -> VERIFIED value pairs (va < vb,
     bit_count(va^vb) <= k) with guaranteed recall. Each refinement level
-    runs one eager checkpoint job; a level after the recursion converged
-    checkpoints an empty frame.
+    runs one eager checkpoint job (onetask.observed); a level after the
+    recursion converged checkpoints an empty frame.
 
     The exact Hamming filter runs INSIDE the pair expansion, in the same
     whole-stage-codegen task that explodes the bucket array: a 13-bit
@@ -138,7 +138,7 @@ def _refined_value_pairs(vals: DataFrame, k: int, cap: int,
     at generation cuts the shuffled volume to the true-pair count."""
     from pyspark.sql import Window
 
-    nb = k + 1
+    nb, cap = k + 1, cfg.max_bucket_size
     # bucket key: a FOLDED 8-byte hash of the (level, block, bits)
     # path instead of a growing ':'-joined string — a hash collision
     # merely MERGES two buckets, which only ADDS candidate pairs
@@ -186,9 +186,8 @@ def _refined_value_pairs(vals: DataFrame, k: int, cap: int,
         # 0 converges: 1M/4096 ≈ 244 ≤ cap) — at 10M EVERY level-0
         # bucket exceeds the cap, level 1 is a ~250M-row exchange, and
         # the re-execution filled the disk (round-5 10M probe). An eager
-        # localCheckpoint, not a persist: Spark frees its blocks once
-        # the plan is dropped, so nothing is left for a caller to release.
-        sized = ex.withColumn("_sz", F.count(F.lit(1)).over(w)).localCheckpoint(eager=True)
+        # checkpoint, not a persist: nothing is left for a caller to release.
+        sized, _ = observed(ex.withColumn("_sz", F.count(F.lit(1)).over(w)), cfg)
         level_pairs.append(
             _small_pairs(sized, ["key"], "val", cap)
             .select(F.col("a").alias("va"), F.col("b").alias("vb"))
@@ -360,11 +359,12 @@ def hamming_candidate_pairs(
     observed in the same job; that count picks the local one-task
     kernel (<= LOCAL_MAX_ROWS rows whose estimated working set fits
     one task) or the distributed recursion. Neither path persists a
-    frame: every frame either materializes is an eager localCheckpoint."""
+    frame: every frame either materializes goes through onetask.observed,
+    an eager checkpoint."""
     # `cache_registry` kept for the traced benchmark sequence until a benchmark change drops it
     ids, n = observed(
         df.select(F.col(id_col).alias("_hid"), F.col(value_col).alias("val"))
-        .filter(F.col("_hid").isNotNull() & F.col("val").isNotNull())
+        .filter(F.col("_hid").isNotNull() & F.col("val").isNotNull()), cfg
     )
     if one_task(f"hamming_candidate_pairs({value_col}, k={k})", n["rows"], "rows",
                 LOCAL_MAX_ROWS, row_bytes(ids.schema["_hid"].dataType)):
@@ -378,7 +378,7 @@ def hamming_candidate_pairs(
         return same.dropDuplicates(["a", "b"])
 
     vals = ids.select("val").distinct()
-    vp = _refined_value_pairs(vals, k, cfg.max_bucket_size, max_levels)
+    vp = _refined_value_pairs(vals, k, max_levels, cfg)
     cross = (
         vp.join(ids.select(F.col("_hid").alias("_ia"), F.col("val").alias("va")), "va")
         .join(ids.select(F.col("_hid").alias("_ib"), F.col("val").alias("vb")), "vb")

@@ -190,10 +190,10 @@ def _overflow_kernel(key_cols: list[str], cap: int):
 
 
 def _observed(buckets: DataFrame, key_cols: list[str], id_col: str,
-              what: str) -> tuple[DataFrame, bool]:
+              what: str, cfg: DedupConfig) -> tuple[DataFrame, bool]:
     """The non-null-id rows, checkpointed, and whether their count picks
     the local path."""
-    rows_df, n = observed(buckets.filter(F.col(id_col).isNotNull()))
+    rows_df, n = observed(buckets.filter(F.col(id_col).isNotNull()), cfg)
     return rows_df, one_task(f"{what}({', '.join(key_cols)})", n["rows"], "rows",
                              LOCAL_MAX_ROWS,
                              row_bytes([f.dataType for f in rows_df.schema.fields]))
@@ -264,7 +264,7 @@ def pairs_from_buckets(
     if cap is None:
         cap = cfg.max_bucket_size
     rows_df, local = _observed(buckets.select(id_col, *key_cols), key_cols,
-                               id_col, "pairs_from_buckets")
+                               id_col, "pairs_from_buckets", cfg)
     if local:
         return _local_pairs(rows_df, key_cols, id_col, cap, star=True)
     w = Window.partitionBy(*key_cols)
@@ -295,7 +295,7 @@ def pairs_and_overflow(
     share one window exchange."""
     if cap is None:
         cap = cfg.max_bucket_size
-    rows_df, local = _observed(buckets, key_cols, id_col, "pairs_and_overflow")
+    rows_df, local = _observed(buckets, key_cols, id_col, "pairs_and_overflow", cfg)
     if local:
         overflow = rows_df.coalesce(1).mapInArrow(
             _overflow_kernel(key_cols, cap), rows_df.schema

@@ -1,22 +1,26 @@
-"""Path decision and numpy helpers shared by the single-task fast paths.
+"""The one eager materialization of the dedup engine, and the path
+decision and numpy helpers shared by the single-task fast paths.
+
+`observed` checkpoints a frame eagerly (local, or reliable with
+cfg.cc_reliable_checkpoint), observing its row count and any other
+aggregates in the same job. No frame of the engine is persisted.
 
 Connected components (`components.cc_labels`), the Hamming channel
 (`hamming.ball_pairs`) and bucket-pair expansion (`lsh.bucket_pairs`)
 are pure numpy kernels, arrays in and arrays out. Each operator folds a
 small input into ONE mapInPandas task that runs its kernel; it
-checkpoints its input with the row count observed in the same job
-(`observed`) and states its working set as bytes per row, in units of
-`id_bytes` for the id columns it holds; `one_task` takes the one-task
-shape only while the rows stay within the operator's row cap and rows x
-bytes-per-row within TASK_BYTES (`fits`). `dedupe()` runs the same
-kernels in sequence in one task for the whole graph when every operator
-would take its one-task path (pipeline._one_task_graph), and the
-write-time probe does the same for a batch against the stored rows
-(probe._probe_kernel). The pair kernels sort rows by a bucket key, scan
-runs of equal keys (`runs`) and expand each run's pairs in bounded
-chunks (`range_pairs`); the fused kernels read Arrow columns
-(`list_rows`, `lanes`), verify every row pair of a candidate id pair
-(`row_pairs`) and stop at a failed gate (`OverBudget`).
+materializes its input through `observed` and states its working set as
+bytes per row, in units of `id_bytes` for the id columns it holds;
+`one_task` takes the one-task shape only while the rows stay within the
+operator's row cap and rows x bytes-per-row within TASK_BYTES (`fits`).
+`dedupe()` runs the same kernels in sequence in one task for the whole
+graph when every operator would take its one-task path
+(pipeline._one_task_graph), and the write-time probe does the same for
+a batch against the stored rows (probe._probe_kernel). The pair kernels
+sort rows by a bucket key, scan runs of equal keys (`runs`) and expand
+each run's pairs in bounded chunks (`range_pairs`); the fused kernels
+read Arrow columns (`list_rows`, `lanes`), verify every row pair of a
+candidate id pair (`row_pairs`) and stop at a failed gate (`OverBudget`).
 """
 
 from __future__ import annotations
@@ -30,6 +34,8 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..config import DedupConfig
 
 log = logging.getLogger("distill_spark")
 
@@ -52,14 +58,27 @@ def id_bytes(dtype: T.DataType) -> int:
     return 8 if isinstance(dtype, T.IntegralType) else 64
 
 
-def observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict[str, int]]:
-    """(`df` as an eager localCheckpoint, {"rows": its row count, name:
-    value of each aggregate in `aggs`}), all observed in the
-    checkpoint's own job; a null aggregate (no rows) reads 0."""
+def observed(df: DataFrame, cfg: DedupConfig,
+             **aggs: Column) -> tuple[DataFrame, dict]:
+    """(`df` as an eager checkpoint, {"rows": its row count, name: value
+    of each aggregate in `aggs`}), all observed in the checkpoint's own
+    job; a null aggregate (a sum or max over no rows) reads None. The
+    checkpoint is reliable under cfg.checkpoint_dir (or the
+    SparkContext's) when cfg.cc_reliable_checkpoint is set, else local."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                    *(c.alias(k) for k, c in aggs.items())).localCheckpoint(eager=True)
-    return df, {k: v or 0 for k, v in obs.get.items()}
+                    *(c.alias(k) for k, c in aggs.items()))
+    if cfg.cc_reliable_checkpoint:
+        sc = df.sparkSession.sparkContext
+        if cfg.checkpoint_dir:
+            sc.setCheckpointDir(cfg.checkpoint_dir)
+        elif sc.getCheckpointDir() is None:
+            raise ValueError("cc_reliable_checkpoint=True needs cfg.checkpoint_dir "
+                             "(or a SparkContext checkpoint dir): there is no default")
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint(eager=True)
+    return df, obs.get
 
 
 def fits(n: int, max_n: int, item_bytes: int) -> bool:

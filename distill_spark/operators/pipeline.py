@@ -37,13 +37,16 @@ operators' own numpy kernels (`_graph_kernel`) and emits the finished
 result: the edges in int64 and in original ids, one assignment row per
 distinct id and, for min_id, the representative rows. That output is
 checkpointed once and every result frame is a projection of it (a
-non-min_id representatives keeps its window); nothing is persisted.
-Otherwise, or when the task stops at a gate it can only check as it
-goes (the edge count against the CC caps, the held candidate pairs
-against the task budget), the per-operator stages run from the same
-signature checkpoint and only the `edges` stage is persisted
-(DedupResult.unpersist). One debug line on the `distill_spark` logger
-names the path taken.
+non-min_id representatives keeps its window). Otherwise, or when the
+task stops at a gate it can only check as it goes (the edge count
+against the CC caps, the held candidate pairs against the task budget),
+the per-operator stages run from the same signature checkpoint. One
+debug line on the `distill_spark` logger names the path taken.
+
+A stage is materialized iff two or more consumers read it or its row
+count decides a path (`_materialized`: signatures, edges, assignments);
+`dedupe()` does it through onetask.observed, as the operators do their
+own frames, and persists nothing.
 
 Recall budget: phash + substring channels are recall-1.0 by
 construction AT ANY BUCKET-SIZE DISTRIBUTION — oversized pigeonhole
@@ -65,6 +68,7 @@ risk (c)).
 from __future__ import annotations
 
 import logging
+from collections import Counter
 from dataclasses import dataclass
 from functools import reduce
 from typing import Callable
@@ -73,7 +77,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -101,7 +105,8 @@ class DedupResult:
     """The frames of one dedupe() run. On the one-task graph every frame
     but a windowed (non-min_id) representatives is a projection of the
     graph task's one checkpoint, so reading one runs one job; on the
-    per-operator path they are lazy plans over the persisted edges."""
+    per-operator path they are plans over the checkpointed `edges` and
+    `assignments` stages. No frame is persisted."""
     assignments: DataFrame      # (image_id, component), one row per
                                 # distinct id (a null id: see dedup_stages)
     representatives: DataFrame  # one row per component; for min_id every
@@ -110,27 +115,13 @@ class DedupResult:
                                 # (a, b); star hubs follow hashed-id order
     conflicts: DataFrame | None # band pairs (a, b, jaccard)
     stats: DataFrame            # 1-row counts/reduction
-    cached: DataFrame | None = None  # the edges stage (int64 ids for
-                                # string-id inputs); on the one-task
-                                # graph, a view of its checkpoint
+    cached: DataFrame | None = None  # the edges stage in channel ids
+                                # (int64 for string ids)
 
     def unpersist(self) -> None:
-        """Release the one cache dedupe() can create, the edges stage
-        persisted on the per-operator path; long sessions running many
-        dedupe() calls should call this. The one-task graph persists
-        nothing, so there it releases nothing. Every other frame the
-        engine materializes (signatures, the one-task graph's output,
-        the operators' input checkpoints, Hamming refinement levels, CC
-        labels) is an eager localCheckpoint, a block-backed RDD rather
-        than a catalog cache: Spark's ContextCleaner frees its blocks
-        once no plan refers to it."""
-        for df in (self.cached, self.edges):
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    log.debug("unpersist of a dedupe() frame failed",
-                              exc_info=True)
+        """A no-op kept for existing callers: dedupe() persists nothing.
+        Spark's ContextCleaner frees a local checkpoint's blocks once no
+        plan refers to it (onetask.observed)."""
 
 
 @dataclass(frozen=True)
@@ -175,6 +166,7 @@ def dedup_stages(
     phash_col: str | None,
     channels: tuple[str, ...],
     rep_strategy: str,
+    rows: dict[str, int],
     sig_src: DataFrame | None = None,
     keep: tuple[str, ...] = (),
 ) -> list[Stage]:
@@ -189,7 +181,8 @@ def dedup_stages(
     (int64 hashes of string ids) and `idmap` maps one to the other (None
     for integral ids). The signature pass reads `sig_src` (default
     meta_i: the same rows, possibly under an observation) and carries
-    its `keep` columns through (with_signatures).
+    its `keep` columns through (with_signatures). Connected components
+    reads the edges' row count from `rows`, which the graph fills in.
 
     `assignments` holds one row per distinct id; a null id, which no
     channel reads, gets a (null, null) row: one per input row for string
@@ -281,14 +274,15 @@ def dedup_stages(
     def assignments(edges: DataFrame) -> DataFrame:
         if idmap is None:
             return connected_components(
-                edges, nodes=meta.select(id_col), id_col=id_col, cfg=cfg
-            )
+                edges, nodes=meta.select(id_col), id_col=id_col, cfg=cfg,
+                rows=rows["edges"])
         # CC over edge-touching nodes only, in int space; only the
         # (small, dup-population-sized) edge-touching assignments are
         # mapped back with joins, and the singleton majority gets its
         # component via one broadcastable left join
         cc = connected_components(edges, nodes=None, id_col="__iid",
-                                  out_col="__icomp", cfg=cfg).join(idmap, "__iid")
+                                  out_col="__icomp", cfg=cfg,
+                                  rows=rows["edges"]).join(idmap, "__iid")
         names = cc.groupBy("__icomp").agg(F.min(id_col).alias("__comp_name"))
         edge_assign = cc.join(names, "__icomp").select(
             id_col, F.col("__comp_name").alias("component")
@@ -586,12 +580,10 @@ def _one_task_graph(
             cfg, channels, string_ids, rep_strategy == "min_id", to_arrow_schema(schema),
             onetask.TASK_BYTES // (2 * lsh._PAIR_BYTES), components.LOCAL_MAX_EDGES,
             components.edge_bytes(T.LongType()), onetask.TASK_BYTES)
-        obs = Observation()
-        out = (sigs.select(*cols).coalesce(1)
-               .mapInArrow(kernel, schema)
-               .observe(obs, F.max("bail").alias("bail"))
-               .localCheckpoint(eager=True))
-        why = obs.get["bail"]
+        out, n = onetask.observed(
+            sigs.select(*cols).coalesce(1).mapInArrow(kernel, schema), cfg,
+            bail=F.max("bail"))
+        why = n["bail"]
     log.debug("dedup graph: %d rows -> %s", counts["rows"],
               "one-task path" if why is None else f"per-operator path ({why})")
     if why is not None:
@@ -620,10 +612,24 @@ def _one_task_graph(
     )
 
 
+def _materialized(stages: list[Stage], with_conflicts: bool) -> set[str]:
+    """The stages read by two or more consumers (later stages, the
+    result frames, stats, conflicts) or whose row count decides a path
+    (signatures: the one-task graph; edges: connected components)."""
+    reads = Counter(d for s in stages for d in s.deps)
+    # the result's edges, assignments (and stats over them), representatives
+    reads.update(("edges", "assignments", "assignments", "representatives"))
+    if with_conflicts:
+        reads.update(("signatures", "jaccard_candidates"))
+    return {s.name for s in stages
+            if reads[s.name] >= 2 or s.name in ("signatures", "edges")}
+
+
 def run_dedup_graph(
     images: DataFrame,
     cfg: DedupConfig,
-    materialize: Callable[[Stage, Callable[[], DataFrame]], DataFrame],
+    materialize: Callable[[Stage, Callable[[], DataFrame], bool],
+                          tuple[DataFrame, int | None]],
     id_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str | None = "phash",
@@ -633,8 +639,9 @@ def run_dedup_graph(
     fuse: bool = False,
 ) -> DedupResult:
     """Run `dedup_stages` in order and assemble the DedupResult. Each
-    stage's frame is `materialize(stage, compute)`, where compute()
-    builds the stage from its dependencies' frames.
+    stage's (frame, row count or None) is `materialize(stage, compute,
+    eager)`: compute() builds the stage from its dependencies' frames;
+    `eager` (_materialized) asks for it materialized, with its count.
 
     With `fuse`, the signature pass also carries the caption, the phash
     and, for string ids, the original id of every row (with_signatures'
@@ -668,7 +675,6 @@ def run_dedup_graph(
         meta_i, idmap = meta, None
 
     rep_strategy = rep_strategy or cfg.rep_strategy
-    cap_obs = Observation()
     sig_src, keep = None, ()
     if fuse:
         sig_src, keep = meta_i, tuple(cols[1:])
@@ -676,24 +682,26 @@ def run_dedup_graph(
             sig_src = meta.withColumn(_ORIG, F.col(id_col)).withColumn(
                 id_col, _hashed_id(id_col))
             keep += (_ORIG,)
-        sig_src = sig_src.observe(
-            cap_obs, F.sum(F.octet_length(caption_col)).alias("bytes"))
     out: dict[str, DataFrame] = {}
-    for stage in dedup_stages(
-        meta, meta_i, idmap, cfg, id_col, caption_col, phash_col, channels,
-        rep_strategy, sig_src, keep,
-    ):
-        out[stage.name] = materialize(
-            stage, lambda s=stage: s.fn(*(out[d] for d in s.deps))
-        )
+    rows: dict[str, int] = {}
+    stages = dedup_stages(meta, meta_i, idmap, cfg, id_col, caption_col,
+                          phash_col, channels, rep_strategy, rows, sig_src, keep)
+    eager = _materialized(stages, with_conflicts)
+    for stage in stages:
+        def compute(s: Stage = stage) -> DataFrame:
+            return s.fn(*(out[d] for d in s.deps))
+
         if stage.name == "signatures" and fuse:
-            out["signatures"], counts = _signature_checkpoint(out["signatures"], id_col)
-            counts["caption_bytes"] = cap_obs.get["bytes"] or 0
+            out["signatures"], counts = _signature_checkpoint(
+                compute(), cfg, id_col, caption_col)
             fused = _one_task_graph(
                 out["signatures"], counts, meta, cfg, id_col, caption_col,
                 phash_col, channels, rep_strategy, with_conflicts)
             if fused is not None:
                 return fused
+            continue
+        out[stage.name], rows[stage.name] = materialize(stage, compute,
+                                                        stage.name in eager)
 
     edges_i, assignments = out["edges"], out["assignments"]
     conflicts = None
@@ -722,15 +730,16 @@ def run_dedup_graph(
     )
 
 
-def _signature_checkpoint(sigs: DataFrame, id_col: str) -> tuple[DataFrame, dict]:
-    """The signature frame as an eager localCheckpoint, with the counts
-    the one-task paths are decided on observed in the same job: rows,
-    rows with a minhash and fingerprints of the non-null-id rows, and
-    shingles.
+def _signature_checkpoint(sigs: DataFrame, cfg: DedupConfig, id_col: str,
+                          caption_col: str) -> tuple[DataFrame, dict]:
+    """The signature frame (which carries the captions) as an eager
+    checkpoint, with the counts the one-task paths are decided on
+    observed in the same job: rows, caption bytes, and minhash rows,
+    fingerprints and shingles of the non-null-id rows.
 
     The signature frame feeds many consumers (banding, the simhash
     pigeonhole, jaccard verify, winnowing, the one-task graph).
-    localCheckpoint, not persist+count, for two reasons found in the
+    A checkpoint, not persist+count, for two reasons found in the
     round-6 stage timelines: (a) a lazy persist's ~5 independent AQE
     consumer subtrees race to build the cache and each re-runs the full
     Arrow signature scan; (b) far worse, AQE NEVER reuses an exchange
@@ -746,12 +755,14 @@ def _signature_checkpoint(sigs: DataFrame, id_col: str) -> tuple[DataFrame, dict
             return F.lit(0)
         return F.sum(F.when(keyed & F.col(col).isNotNull(), value).otherwise(0))
 
-    return onetask.observed(
-        sigs,
+    sigs, counts = onetask.observed(
+        sigs, cfg,
+        caption_bytes=F.sum(F.octet_length(caption_col)),
         minhash_rows=total("minhash", 1),
         fp_rows=total("fps", F.size("fps")),
         shingles=total("shingles", F.size("shingles")),
     )
+    return sigs, {k: v or 0 for k, v in counts.items()}  # a sum over no rows
 
 
 def dedupe(
@@ -765,19 +776,17 @@ def dedupe(
     with_conflicts: bool = False,
 ) -> DedupResult:
     """The dedup stage graph built in place, on the one-task graph when
-    the input fits one task (module docstring); on the per-operator
-    path `edges` is persisted (the one cache, released by
-    DedupResult.unpersist) and every other stage stays lazy. See
-    run_dedup_graph for the output contract."""
+    the input fits one task (module docstring); on the per-operator path
+    the stages the graph materializes are eager checkpoints
+    (onetask.observed) and the others stay lazy. See run_dedup_graph
+    for the output contract."""
 
-    def in_place(stage: Stage, compute: Callable[[], DataFrame]) -> DataFrame:
-        df = compute()
-        if stage.name == "edges":
-            # edges feed CC (which materializes them) AND are part of the
-            # result — persist so user actions on result.edges don't
-            # re-run the whole candidate+verify DAG
-            df = df.persist()
-        return df
+    def in_place(stage: Stage, compute: Callable[[], DataFrame],
+                 eager: bool) -> tuple[DataFrame, int | None]:
+        if not eager:
+            return compute(), None
+        df, n = onetask.observed(compute(), cfg)
+        return df, n["rows"]
 
     return run_dedup_graph(
         images, cfg, in_place, id_col, caption_col, phash_col,

@@ -489,7 +489,7 @@ class SessionStore:
             "id string, content string",
         )
         sig_new, counts = onetask.observed(with_signatures(
-            bdf, "content", "id", self.cfg, parts=("shingles", "minhash")))
+            bdf, "content", "id", self.cfg, parts=("shingles", "minhash")), self.cfg)
         # the table's row count bounds this session's stored rows
         rejected = greedy_accept(probe_edges(
             sig_new, stored, self.cfg, sess.dedup_jaccard,

@@ -161,7 +161,7 @@ def incremental_dedupe_batch(
     )
     if id_col != "image_id":
         sigs = sigs.withColumnRenamed(id_col, "image_id")
-    sigs, counts = onetask.observed(sigs)
+    sigs, counts = onetask.observed(sigs, cfg)
     n_in = counts["rows"]
 
     edges = probe_edges(

@@ -29,7 +29,7 @@ from distill_spark.operators import dedupe, lsh
 from distill_spark.streaming.ingest import DedupeState, incremental_dedupe_batch
 
 MAX_JOBS = 4
-MAX_PER_OPERATOR_JOBS = 38
+MAX_PER_OPERATOR_JOBS = 33
 MAX_INGEST_JOBS = 6
 MAX_STORE_JOBS = 9
 

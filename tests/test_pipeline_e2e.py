@@ -126,12 +126,17 @@ def test_oracle_merges_planted_groups():
         assert len(roots) == 1
 
 
-def test_cc_reliable_checkpoint_flag(spark, tmp_path):
-    """cfg.cc_reliable_checkpoint switches the CC frontier from
-    localCheckpoint to reliable checkpoint(): same result, and the
-    checkpoint dir actually receives RDD checkpoint data."""
+def test_cc_reliable_checkpoint_flag(spark, tmp_path, monkeypatch):
+    """cfg.cc_reliable_checkpoint sends EVERY eager materialization
+    through a reliable checkpoint() under checkpoint_dir: with
+    localCheckpoint made to fail, dedupe() on the one-task graph, on the
+    per-operator path (window, Hamming-level and CC-loop checkpoints
+    included) and dedupe_checkpointed() all run, write checkpoint data
+    and give the flag-off assignments."""
     import os
 
+    from distill_spark.checkpoint import CheckpointStore, dedupe_checkpointed
+    from distill_spark.operators import components
     from distill_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -144,20 +149,39 @@ def test_cc_reliable_checkpoint_flag(spark, tmp_path):
             connected_components(
                 edges, cfg=DedupConfig(cc_reliable_checkpoint=True)
             )
-    base = {
-        r["image_id"]: r["component"]
-        for r in connected_components(edges, cfg=DedupConfig()).collect()
-    }
+    df, _ = generate_images(spark, n=300, seed=4)
+    df = df.select("image_id", "caption", "phash")
 
-    ckdir = str(tmp_path / "ck")
-    cfg = DedupConfig(cc_reliable_checkpoint=True, checkpoint_dir=ckdir)
-    rel = {
-        r["image_id"]: r["component"]
-        for r in connected_components(edges, cfg=cfg).collect()
-    }
-    assert rel == base == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    found = [f for _, _, fs in os.walk(ckdir) for f in fs]
-    assert found, "reliable checkpoint wrote nothing to checkpoint_dir"
+    def assigned(res):
+        return sorted(tuple(r) for r in res.assignments.collect())
+
+    base = assigned(dedupe(df, DedupConfig()))
+
+    def no_local(*_, **__):
+        raise AssertionError("localCheckpoint ran with cc_reliable_checkpoint")
+
+    monkeypatch.setattr(type(df), "localCheckpoint", no_local)
+
+    def reliable(name):
+        ckdir = str(tmp_path / name)
+        return ckdir, DedupConfig(cc_reliable_checkpoint=True, checkpoint_dir=ckdir)
+
+    def per_operator():
+        for mod, cap in ((lsh, "LOCAL_MAX_ROWS"), (hamming, "LOCAL_MAX_ROWS"),
+                         (components, "LOCAL_MAX_EDGES")):
+            monkeypatch.setattr(mod, cap, 0)
+
+    runs = [
+        ("one-task", lambda cfg: dedupe(df, cfg)),
+        ("per-operator", lambda cfg: (per_operator(), dedupe(df, cfg))[1]),
+        ("checkpointed", lambda cfg: dedupe_checkpointed(
+            df, CheckpointStore(str(tmp_path / "stages"), spark), cfg)),
+    ]
+    for name, run in runs:
+        ckdir, cfg = reliable(name)
+        assert assigned(run(cfg)) == base, name
+        found = [f for _, _, fs in os.walk(ckdir) for f in fs]
+        assert found, f"{name}: reliable checkpoint wrote nothing to checkpoint_dir"
 
 
 def test_int_ids_output_identical_to_string_path(spark):

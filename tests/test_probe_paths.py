@@ -136,7 +136,7 @@ def _forced_band_join(*args):
 def test_one_task_probe_matches_band_join(spark, case):
     new_rows, stored_rows, floor, lane_bits = case
     cfg = replace(DedupConfig(), minhash_lane_bits=lane_bits)
-    new, counts = onetask.observed(_signatures(spark, new_rows, cfg))
+    new, counts = onetask.observed(_signatures(spark, new_rows, cfg), cfg)
     stored = _signatures(spark, stored_rows, cfg)
     args = (new, counts["rows"], stored, len(stored_rows), cfg, floor)
     edges, accepted, line = _probe(*args)
@@ -154,7 +154,7 @@ def test_probe_falls_back_when_candidates_exceed_budget(spark, monkeypatch):
     new_rows = [("n1", cap), ("n2", cap + " iris"), ("n3", "jade kite lumen moss")]
     stored_rows = [("s1", cap), ("s2", "nova opal pine iris jade")]
     cfg = replace(DedupConfig(), minhash_lane_bits=64)
-    new, counts = onetask.observed(_signatures(spark, new_rows, cfg))
+    new, counts = onetask.observed(_signatures(spark, new_rows, cfg), cfg)
     args = (new, counts["rows"], _signatures(spark, stored_rows, cfg), 2, cfg,
             cfg.jaccard_threshold)
     edges, _, line = _probe(*args)

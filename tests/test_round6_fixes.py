@@ -11,10 +11,10 @@ equivalence/behavior test here:
      channel's edges/components are unchanged vs the verify-everything
      formulation.
   4. no leaked caches: the distributed Hamming path materializes its
-     refinement levels as eager localCheckpoints, so it leaves no plan
-     in Spark's cache manager and hands nothing to a cache_registry;
-     after DedupResult.unpersist no cached plan is left (round-5
-     advice #1).
+     refinement levels as eager checkpoints, so it leaves no plan in
+     Spark's cache manager and hands nothing to a cache_registry;
+     dedupe() persists nothing on either path (round-5 advice #1).
+     The distributed CC loop raises when cc_max_iters runs out.
   5. versioned stores auto-vacuum after commits (round-5 advice #2).
 """
 
@@ -206,18 +206,45 @@ def test_hamming_distributed_path_caches_nothing(spark, monkeypatch):
     assert _cache_is_empty(spark), "the distributed path must cache no plan"
 
 
-def test_dedupe_unpersist_leaves_no_cached_plan(spark, monkeypatch):
+def test_dedupe_unpersist_leaves_no_cached_plan(spark, monkeypatch, caplog):
+    """dedupe() persists nothing on either path: Spark's cache manager
+    is empty after its frames are read, and still after unpersist()."""
+    import logging
+
     from distill_spark.datagen import generate_images
     from distill_spark.operators import hamming
 
-    monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)  # distributed path
     df, _ = generate_images(spark, n=300, seed=4)
     spark.catalog.clearCache()
-    res = dedupe(df, DedupConfig())
-    res.assignments.count()
-    assert not _cache_is_empty(spark), "the edges stage is persisted"
-    res.unpersist()
-    assert _cache_is_empty(spark), "unpersist must leave no cached plan"
+    for path in ("one-task path", "per-operator path"):
+        if path == "per-operator path":
+            monkeypatch.setattr(hamming, "LOCAL_MAX_ROWS", 0)
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="distill_spark"):
+            res = dedupe(df, DedupConfig())
+        assert any(r.getMessage().startswith("dedup graph: 300 rows -> " + path)
+                   for r in caplog.records)
+        res.assignments.count()
+        res.edges.count()
+        res.representatives.count()
+        assert _cache_is_empty(spark), f"dedupe() cached a plan ({path})"
+        res.unpersist()
+        assert _cache_is_empty(spark), f"unpersist cached a plan ({path})"
+
+
+def test_cc_loop_raises_when_max_iters_runs_out(spark, monkeypatch):
+    """A distributed CC loop cut by cfg.cc_max_iters before its labels
+    stop changing raises, naming the setting; it does not return labels
+    that are not a fixpoint. A 41-node path needs 6 iterations."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "a long, b long")
+    monkeypatch.setattr(components, "LOCAL_MAX_EDGES", 0)
+    labels = {r["component"] for r in
+              connected_components(edges, cfg=DedupConfig()).collect()}
+    assert labels == {0}
+    assert connected_components.last_iterations > 1
+    with pytest.raises(RuntimeError,
+                       match=r"\d+ labels still changing after cc_max_iters=1 "):
+        connected_components(edges, cfg=DedupConfig(cc_max_iters=1)).collect()
 
 
 def test_versioned_stores_auto_vacuum(spark, tmp_path):
