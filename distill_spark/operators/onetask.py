@@ -16,7 +16,8 @@ operator's row cap and rows x bytes-per-row within TASK_BYTES (`fits`).
 `dedupe()` runs the same kernels in sequence in one task for the whole
 graph when every operator would take its one-task path
 (pipeline._one_task_graph), and the write-time probe does the same for
-a batch against the stored rows (probe._probe_kernel). The pair kernels
+a batch against the stored rows (probe.probe_rows; streaming ingest
+adds the batch's signatures and its greedy to that task). The pair kernels
 sort rows by a bucket key, scan runs of equal keys (`runs`) and expand
 each run's pairs in bounded chunks (`range_pairs`); the fused kernels
 read Arrow columns (`list_rows`, `lanes`), verify every row pair of a
@@ -71,7 +72,7 @@ def observed(df: DataFrame, cfg: DedupConfig,
     if cfg.cc_reliable_checkpoint:
         sc = df.sparkSession.sparkContext
         if cfg.checkpoint_dir:
-            sc.setCheckpointDir(cfg.checkpoint_dir)
+            _use_checkpoint_dir(sc, cfg.checkpoint_dir)
         elif sc.getCheckpointDir() is None:
             raise ValueError("cc_reliable_checkpoint=True needs cfg.checkpoint_dir "
                              "(or a SparkContext checkpoint dir): there is no default")
@@ -79,6 +80,20 @@ def observed(df: DataFrame, cfg: DedupConfig,
     else:
         df = df.localCheckpoint(eager=True)
     return df, obs.get
+
+
+def _use_checkpoint_dir(sc, path: str) -> None:
+    """Point the context's reliable checkpoints under `path`, unless they
+    already go there: setCheckpointDir makes a new random subdirectory
+    on every call, so one run keeps one."""
+    current = sc.getCheckpointDir()
+    if current is not None:
+        hadoop = sc._jvm.org.apache.hadoop.fs.Path
+        want = hadoop(path)
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+        if hadoop(current).getParent().equals(want):
+            return
+    sc.setCheckpointDir(path)
 
 
 def fits(n: int, max_n: int, item_bytes: int) -> bool:

@@ -35,7 +35,7 @@ batch.
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -152,6 +152,48 @@ def with_signatures(
     the JVM as the Arrow arrays they arrived as, so a nullable bigint
     keeps every bit (pandas would read it as float64).
     """
+    lane32 = cfg.minhash_lane_bits == 32
+    fields = [T.StructField(id_col, df.schema[id_col].dataType)]
+    if "shingles" in parts:
+        fields.append(T.StructField("shingles", T.ArrayType(T.LongType())))
+    if "minhash" in parts:
+        fields.append(T.StructField(
+            "minhash",
+            T.ArrayType(T.IntegerType() if lane32 else T.LongType()),
+        ))
+    if "simhash" in parts:
+        fields.append(T.StructField("simhash", T.LongType()))
+    if "winnow" in parts:
+        fields.append(T.StructField("fps", T.ArrayType(T.LongType())))
+    fields += [df.schema[c] for c in keep]
+    schema = T.StructType(fields)
+
+    src = df.select(id_col, caption_col, *(c for c in keep if c != caption_col))
+    # scan-parallelism floor (guide §2.5 input skew / §6 split sizing):
+    # this is the pipeline's heaviest Python stage, and its parallelism
+    # is otherwise capped by the input's split count — a table with few
+    # row groups (e.g. the 100k bench table: 7 non-empty splits) runs it
+    # ~7-wide on 32 cores. When the planned scan has fewer partitions
+    # than the cluster's cores, one cheap hash repartition of the
+    # (id, caption) projection unlocks full-width execution; inputs
+    # with enough splits (any real at-scale table) skip the shuffle.
+    n_par = src.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < n_par:
+        src = src.repartition(n_par, id_col)
+    return src.mapInArrow(
+        signature_kernel(cfg, caption_col, parts, to_arrow_schema(schema)),
+        schema=schema)
+
+
+def signature_kernel(
+    cfg: DedupConfig, caption_col: str, parts: tuple[str, ...],
+    arrow_schema: pa.Schema,
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """with_signatures' batch function: Arrow batches holding
+    `caption_col` -> batches of `arrow_schema`, whose `parts` columns
+    are computed from the caption and whose other columns are the input
+    batch's columns of the same name, passed through. The one-task
+    ingest task calls it on its new rows directly."""
     a_arr, b_arr = permutation_params(cfg)
     A = np.array(a_arr, dtype=np.uint64)
     Bb = np.array(b_arr, dtype=np.uint64)
@@ -167,23 +209,8 @@ def with_signatures(
 
     want_fp = "winnow" in parts
     KW, WW, LW = cfg.winnow_kgram, cfg.winnow_window, cfg.lcs_min_len
-
     lane32 = cfg.minhash_lane_bits == 32
-    fields = [T.StructField(id_col, df.schema[id_col].dataType)]
-    if want_sh:
-        fields.append(T.StructField("shingles", T.ArrayType(T.LongType())))
-    if want_mh:
-        fields.append(T.StructField(
-            "minhash",
-            T.ArrayType(T.IntegerType() if lane32 else T.LongType()),
-        ))
-    if want_sim:
-        fields.append(T.StructField("simhash", T.LongType()))
-    if want_fp:
-        fields.append(T.StructField("fps", T.ArrayType(T.LongType())))
-    fields += [df.schema[c] for c in keep]
-    schema = T.StructType(fields)
-    arrow_schema = to_arrow_schema(schema)
+
 
     # fast tokenizer: one C-level regex pass over the whole batch joined
     # with '\x01' (itself a separator under the default split pattern).
@@ -425,16 +452,4 @@ def with_signatures(
                 [rb.column(f.name) if f.name not in out else out[f.name]
                  for f in arrow_schema], schema=arrow_schema)
 
-    src = df.select(id_col, caption_col, *(c for c in keep if c != caption_col))
-    # scan-parallelism floor (guide §2.5 input skew / §6 split sizing):
-    # this is the pipeline's heaviest Python stage, and its parallelism
-    # is otherwise capped by the input's split count — a table with few
-    # row groups (e.g. the 100k bench table: 7 non-empty splits) runs it
-    # ~7-wide on 32 cores. When the planned scan has fewer partitions
-    # than the cluster's cores, one cheap hash repartition of the
-    # (id, caption) projection unlocks full-width execution; inputs
-    # with enough splits (any real at-scale table) skip the shuffle.
-    n_par = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < n_par:
-        src = src.repartition(n_par, id_col)
-    return src.mapInArrow(batch, schema=schema)
+    return batch

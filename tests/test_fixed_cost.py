@@ -11,8 +11,10 @@ planted table of 2,000 rows:
     per-operator stages (`lsh.LOCAL_MAX_ROWS` = 0), which no declared
     benchmark workload runs;
   * one incremental_dedupe_batch against a state holding an earlier
-    batch (the ingest benchmark's unit): the signature checkpoint, the
-    one-task probe and the publish;
+    batch (the ingest benchmark's unit): one Arrow task computes the
+    signatures, the probe and the greedy, and the driver writes the
+    outputs; and the same batch on the fallback (`lsh.LOCAL_MAX_ROWS` =
+    0): the signature checkpoint, the band join and two Spark writes;
   * one MemoryStore.store_batch against a store holding an earlier
     batch.
 
@@ -30,7 +32,8 @@ from distill_spark.streaming.ingest import DedupeState, incremental_dedupe_batch
 
 MAX_JOBS = 4
 MAX_PER_OPERATOR_JOBS = 33
-MAX_INGEST_JOBS = 6
+MAX_INGEST_JOBS = 1
+MAX_FALLBACK_INGEST_JOBS = 10
 MAX_STORE_JOBS = 9
 
 
@@ -84,17 +87,28 @@ def test_warm_per_operator_dedupe_unit_job_ceiling(spark, planted, monkeypatch):
         f"(ceiling {MAX_PER_OPERATOR_JOBS})")
 
 
-def test_warm_ingest_batch_job_ceiling(spark, planted, tmp_path):
+def _warm_ingest_batch_jobs(spark, df, tmp_path, group: str) -> int:
     sc = spark.sparkContext
-    b0, b1, b2 = _thirds(planted.select("image_id", "caption"))
-    _jobs(sc, "fixed-cost:ingest-warm",
+    b0, b1, b2 = _thirds(df.select("image_id", "caption"))
+    _jobs(sc, f"{group}-warm",
           lambda: incremental_dedupe_batch(DedupeState(spark, str(tmp_path / "w")), b2, 0))
     state = DedupeState(spark, str(tmp_path / "s"))
     incremental_dedupe_batch(state, b0, 0)
-    jobs = _jobs(sc, "fixed-cost:ingest",
-                 lambda: incremental_dedupe_batch(state, b1, 1))
+    return _jobs(sc, group, lambda: incremental_dedupe_batch(state, b1, 1))
+
+
+def test_warm_ingest_batch_job_ceiling(spark, planted, tmp_path):
+    jobs = _warm_ingest_batch_jobs(spark, planted, tmp_path, "fixed-cost:ingest")
     assert jobs <= MAX_INGEST_JOBS, (
         f"a warm ingest batch ran {jobs} jobs (ceiling {MAX_INGEST_JOBS})")
+
+
+def test_warm_fallback_ingest_batch_job_ceiling(spark, planted, tmp_path, monkeypatch):
+    monkeypatch.setattr(lsh, "LOCAL_MAX_ROWS", 0)
+    jobs = _warm_ingest_batch_jobs(spark, planted, tmp_path, "fixed-cost:ingest-fallback")
+    assert jobs <= MAX_FALLBACK_INGEST_JOBS, (
+        f"a warm fallback ingest batch ran {jobs} jobs "
+        f"(ceiling {MAX_FALLBACK_INGEST_JOBS})")
 
 
 def test_warm_store_batch_job_ceiling(spark, planted, tmp_path):

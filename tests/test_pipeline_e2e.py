@@ -132,7 +132,8 @@ def test_cc_reliable_checkpoint_flag(spark, tmp_path, monkeypatch):
     localCheckpoint made to fail, dedupe() on the one-task graph, on the
     per-operator path (window, Hamming-level and CC-loop checkpoints
     included) and dedupe_checkpointed() all run, write checkpoint data
-    and give the flag-off assignments."""
+    into one subdirectory of checkpoint_dir and give the flag-off
+    assignments."""
     import os
 
     from distill_spark.checkpoint import CheckpointStore, dedupe_checkpointed
@@ -182,6 +183,10 @@ def test_cc_reliable_checkpoint_flag(spark, tmp_path, monkeypatch):
         assert assigned(run(cfg)) == base, name
         found = [f for _, _, fs in os.walk(ckdir) for f in fs]
         assert found, f"{name}: reliable checkpoint wrote nothing to checkpoint_dir"
+        # the context's checkpoint dir is set once per checkpoint_dir,
+        # not once per materialization (each set makes a new subdirectory)
+        subdirs = os.listdir(ckdir)
+        assert len(subdirs) == 1, f"{name}: {len(subdirs)} checkpoint subdirectories"
 
 
 def test_int_ids_output_identical_to_string_path(spark):
